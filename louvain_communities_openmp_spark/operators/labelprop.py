@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
 
@@ -30,104 +31,67 @@ class LabelPropResult:
 def _labelprop_local(
     edges: DataFrame, bound: int, max_iter: int
 ) -> LabelPropResult | None:
-    """Driver-side numpy finish for small graphs (≤ ``bound`` directed
-    edges) — the Louvain-auto-style representation swap (louvain.py
-    small_graph_edges): below the bound, the full synchronous fixpoint
-    costs less in numpy than one distributed round's fixed overhead.
-
-    The round body is the exact transcription of the distributed round
-    (per-src Σw by neighbor label, argmax with (max wt, min label)
+    """Serial finish (operators/serial.py) under ``bound`` directed
+    edges. The round body is the exact transcription of the distributed
+    round (per-src Σw by neighbor label, argmax with (max wt, min label)
     tie-break, isolated vertices keep their own label), so per-round
-    label states, the final frame, and the iteration count are
-    identical to the distributed path's (pinned by
+    label states, the final frame, and the iteration count are identical
+    to the distributed path's (pinned by
     tests/test_components_fastpath.py). Weight sums associate in a
     different order than Spark's partial aggregates — indistinguishable
     whenever weight sums are exact (integer-valued w, as everywhere in
     the engine's query surface), the same precondition the distributed
     path already needs for stable cross-run results.
 
-    Returns None above the bound (LIMIT probe: under the bound the
-    probe already IS the edge set, so no extra pass is paid).
+    Returns None above the bound or on an empty graph.
     """
     import numpy as np
     import pandas as pd
 
-    tbl = edges.select("src", "dst", "w").limit(bound + 1).toArrow()
-    if tbl.num_rows > bound or tbl.num_rows == 0:
-        return None
-    src = tbl.column("src").to_numpy().astype(np.int64, copy=False)
-    dst = tbl.column("dst").to_numpy().astype(np.int64, copy=False)
-    w = tbl.column("w").to_numpy().astype(np.float64, copy=False)
-    # vertex set: unique(src) suffices on symmetric tables (saves the
-    # 2E concat sort); dst-subset check guards the general case
-    ids = np.unique(src)
-    dp = np.searchsorted(ids, dst)
-    covered = (dp < len(ids)) & (ids[np.minimum(dp, len(ids) - 1)] == dst)
-    if not bool(covered.all()):
-        ids = np.unique(np.concatenate([src, dst]))
-        dp = np.searchsorted(ids, dst)
-    n = len(ids)
-    sp = np.searchsorted(ids, src)
-    keep = sp != dp  # self-loops ignored (matches the e filter)
-    sp, dp, w = sp[keep], dp[keep], w[keep]
-    lab = np.arange(n, dtype=np.int64)  # label positions == value order
-    # native rounds (oracle/_cmove.py labelprop_rounds): one stable
-    # sort builds the CSR, then each synchronous round is a single
-    # O(E) stamp-walk instead of a per-round O(E log E) sort
     from ..oracle._cmove import labelprop_rounds_c
 
-    order = np.argsort(sp, kind="stable")
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    indptr[1:] = np.cumsum(np.bincount(sp, minlength=n))
-    it_c = labelprop_rounds_c(
-        indptr, np.ascontiguousarray(dp[order]),
-        np.ascontiguousarray(w[order]), lab, max_iter,
+    arrs = collect_bounded(edges, ["src", "dst", "w"], bound)
+    if arrs is None or len(arrs[0]) == 0:
+        return None
+    # self-loops ignored (matches the e filter)
+    g = edge_csr(*arrs, drop_loops=True)
+    ids, sp, dp, w = g.ids, g.src, g.dst, g.w
+    lab = np.arange(len(ids), dtype=np.int64)  # label positions == value order
+    # native rounds (oracle/_cmove.py labelprop_rounds): each
+    # synchronous round is a single O(E) stamp-walk over the CSR
+    it = labelprop_rounds_c(g.indptr, dp, w, lab, max_iter)
+    if it is None:
+        it = _labelprop_rounds_numpy(sp, dp, w, lab, max_iter)
+    out = pd.DataFrame({"id": ids, "label": ids[lab]})
+    return LabelPropResult(
+        edges.sparkSession.createDataFrame(out, "id long, label long"), it
     )
-    if it_c is not None:
-        out = pd.DataFrame({"id": ids, "label": ids[lab]})
-        return LabelPropResult(
-            edges.sparkSession.createDataFrame(out, "id long, label long"),
-            it_c,
-        )
+
+
+def _labelprop_rounds_numpy(sp, dp, w, lab, max_iter: int) -> int:
+    """The numpy twin of the native rounds, for hosts without a C
+    compiler: same rounds, same count, ``lab`` mutated in place."""
+    import numpy as np
+
+    n = len(lab)
     it = 0
     while it < max_iter:
-        # scored: Σw per (src, neighbor-label); key packs (sp, nl) so
-        # one sort groups both levels with nl ascending within src —
-        # the first max-wt group per src is then the (max wt, min
-        # label) argmax, the distributed max_by tie-break
-        key = sp * n + lab[dp]
-        order = np.argsort(key, kind="stable")
-        ks, ws = key[order], w[order]
-        grp = np.empty(len(ks), dtype=bool)
-        if len(ks):
-            grp[0] = True
-            np.not_equal(ks[1:], ks[:-1], out=grp[1:])
-            starts = np.flatnonzero(grp)
-            sums = np.add.reduceat(ws, starts)
-            gsrc = ks[starts] // n
-            gnl = ks[starts] % n
-            seg = np.empty(len(gsrc), dtype=bool)
-            seg[0] = True
-            np.not_equal(gsrc[1:], gsrc[:-1], out=seg[1:])
-            seg_starts = np.flatnonzero(seg)
-            wmax = np.maximum.reduceat(sums, seg_starts)
-            counts = np.diff(np.r_[seg_starts, len(gsrc)])
-            is_max = sums == np.repeat(wmax, counts)
-            posn = np.where(is_max, np.arange(len(sums)), len(sums))
-            first = np.minimum.reduceat(posn, seg_starts)
-            new = lab.copy()
-            new[gsrc[seg_starts]] = gnl[first]
-        else:
-            new = lab.copy()
         it += 1
+        # Σw per (src, neighbor label), added in row order like the
+        # native stamp-walk
+        key, inv = np.unique(sp * n + lab[dp], return_inverse=True)
+        sums = np.bincount(inv, weights=w, minlength=len(key))
+        gsrc, gnl = key // n, key % n
+        # the first group per src in (src, -wt, label) order is the
+        # (max wt, min label) argmax, the distributed max_by tie-break
+        o = np.lexsort((gnl, -sums, gsrc))
+        first = o[np.diff(gsrc[o], prepend=-1) != 0]
+        new = lab.copy()
+        new[gsrc[first]] = gnl[first]
         if bool(np.array_equal(new, lab)):
             break
-        lab = new
-    out = pd.DataFrame({"id": ids, "label": ids[lab]})
-    spark = edges.sparkSession
-    return LabelPropResult(
-        spark.createDataFrame(out, "id long, label long"), it
-    )
+        lab[:] = new
+    return it
 
 
 def label_propagation(

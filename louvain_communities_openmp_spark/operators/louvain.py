@@ -56,6 +56,7 @@ from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
 from .properties import modularity as modularity_op
 from .properties import total_weight_m, vertex_weights
+from .serial import collect_bounded, edge_csr
 
 
 @dataclass
@@ -168,20 +169,17 @@ def _exact_kernel_factory(opts: LouvainOptions):
                 {"id": pd.Series(dtype="int64"), "com": pd.Series(dtype="int64")}
             )
             return
-        src = pdf["src"].to_numpy(dtype=np.int64)
-        dst = pdf["dst"].to_numpy(dtype=np.int64)
-        ids = np.unique(np.concatenate([src, dst]))
         # order-preserving dense remap: identical indexing to the
         # reference on already-dense inputs
+        g = edge_csr(pdf["src"].to_numpy(dtype=np.int64),
+                     pdf["dst"].to_numpy(dtype=np.int64), sort=False)
         r = louvain_seq_fast(
-            np.searchsorted(ids, src),
-            np.searchsorted(ids, dst),
-            pdf["w"].to_numpy(dtype=np.float64),
+            g.src, g.dst, pdf["w"].to_numpy(dtype=np.float64),
             resolution=res, tolerance=tol, tolerance_drop=drop,
             max_iterations=li, max_passes=lp, aggregation_tolerance=at,
         )
         yield pd.DataFrame(
-            {"id": ids.astype("int64"), "com": np.asarray(r.membership, dtype="int64")}
+            {"id": g.ids, "com": np.asarray(r.membership, dtype="int64")}
         )
 
     return kernel
@@ -1292,52 +1290,26 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     q_fast: float | None = None  # driver-computed Q (pure-serial solve)
     while p < opts.max_passes:
         E = opts.tolerance / (opts.tolerance_drop ** p)
-        n_edges = edges.count()
         # ---- auto fast path: solve the coarsened remainder in the
         # driver with the vectorized sequential kernel (reference
-        # semantics; no per-iteration Spark round-trips)
-        if opts.mode == "auto" and n_edges <= opts.small_graph_edges:
+        # semantics; no per-iteration Spark round-trips). The bounded
+        # collect doubles as the edge count: under the bound it IS the
+        # edge set, so no separate count job runs
+        arrs = None
+        if opts.mode == "auto":
+            t0 = time.time()
+            arrs = collect_bounded(edges, ["src", "dst", "w"], opts.small_graph_edges)
+        n_edges = len(arrs[0]) if arrs is not None else edges.count()
+        if arrs is not None:
             import numpy as np
 
-            t0 = time.time()
-            # plain Arrow-direct collect (no distributed orderBy: the
-            # range exchange + its sampling pass cost more than the
-            # driver-side packed-key radix argsort below at the ≤4M-edge
-            # bound — measured 0.9s vs 0.35s at sf0.1). toArrow →
-            # zero-copy numpy columns skips the pandas block-manager
-            # consolidation that costs seconds at ~2M rows.
-            tbl = edges.select("src", "dst", "w").toArrow()
-            src_a = tbl.column("src").to_numpy().astype(np.int64, copy=False)
-            dst_a = tbl.column("dst").to_numpy().astype(np.int64, copy=False)
-            w_arr = tbl.column("w").to_numpy().astype(np.float64, copy=False)
-            if len(src_a) == 0 or float(w_arr.sum()) <= 0.0:
+            if n_edges == 0 or float(arrs[2].sum()) <= 0.0:
                 # empty/zero-weight graph: the old m_total <= 0 contract
                 return LouvainResult(
                     spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
                 )
-            # vertex set: unique(src) suffices on the engine's symmetric
-            # tables (every vertex appears as a source — saves sorting
-            # the 2E concat); a dst-subset check guards the general
-            # case with the full unique as fallback
-            ids = np.unique(src_a)
-            pos_d = np.searchsorted(ids, dst_a)
-            covered = (pos_d < len(ids)) & (
-                ids[np.minimum(pos_d, len(ids) - 1)] == dst_a
-            )
-            if not bool(covered.all()):
-                ids = np.unique(np.concatenate([src_a, dst_a]))
-                pos_d = np.searchsorted(ids, dst_a)
-            pos_s = np.searchsorted(ids, src_a)
-            # (src, dst)-sort via a packed-key stable argsort (radix-
-            # class, single key). The w-minor ordering only matters when
-            # duplicate (src, dst) rows exist (the kernel's max-w
-            # collapse policy); fall back to the full lexsort then.
-            key = pos_s * np.int64(len(ids)) + pos_d
-            order = np.argsort(key, kind="stable")
-            ks = key[order]
-            if len(ks) > 1 and bool((ks[1:] == ks[:-1]).any()):
-                order = np.lexsort((w_arr, pos_d, pos_s))
-            pos_s, pos_d, w_arr = pos_s[order], pos_d[order], w_arr[order]
+            g = edge_csr(*arrs)
+            ids, pos_s, pos_d, w_arr = g.ids, g.src, g.dst, g.w
             init_arr = None
             init_aff_arr = None
             if p == 0 and opts.initial_membership is not None:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .properties import vertex_weights
+from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
 
@@ -30,6 +31,51 @@ class PageRankResult:
     ranks: DataFrame  # (id long, rank double)
     iterations: int
     err: float
+
+
+def _transitions(edges: DataFrame, vt: DataFrame, use_bc: bool) -> DataFrame:
+    """Persisted transition edges src → dst with probability mass
+    p = w/vtot(src). Two regimes, same answer (see labelprop.py): when
+    V fits a broadcast, partitioned on the AGGREGATION key (dst) and
+    ranks broadcast into the src join — zero-exchange iterations; above
+    the gate, on the JOIN key (src) so only the vertex-sized ranks frame
+    and the map-side-combined contribution aggregate move per round."""
+    return (
+        edges.join(vt.withColumnRenamed("id", "src"), "src")
+        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
+        .repartition("dst" if use_bc else "src")
+        .persist()
+    )
+
+
+def _contributions(trans: DataFrame, ranks: DataFrame, use_bc: bool) -> DataFrame:
+    """(id, c): Σ rank(src)·p over the in-edges of each dst."""
+    rs = ranks.withColumnRenamed("id", "src")
+    return (
+        trans.join(F.broadcast(rs) if use_bc else rs, "src")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
+    )
+
+
+def _has_out(trans: DataFrame) -> DataFrame:
+    """Persisted (id, _h) marker of the vertices WITH out-edges."""
+    return (
+        trans.select("src").distinct()
+        .withColumnRenamed("src", "id")
+        .withColumn("_h", F.lit(True))
+        .persist()
+    )
+
+
+def _dangling_mass(ranks: DataFrame, has_out: DataFrame) -> float:
+    """The rank sitting on vertices without out-edges."""
+    return float(
+        ranks.join(has_out, "id", "left")
+        .agg(F.sum(F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)))
+        .first()[0]
+        or 0.0
+    )
 
 
 def pagerank(
@@ -57,31 +103,14 @@ def pagerank(
     if n == 0:
         return PageRankResult(spark.createDataFrame([], "id long, rank double"), 0, 0.0)
     vt = vertex_weights(edges)
-    # normalized transition edges: src → dst with probability mass
-    # w/vtot. Two regimes, same answer (see labelprop.py): when V fits
-    # a broadcast, partition the static table on the AGGREGATION key
-    # (dst) and broadcast ranks into the src join — zero-exchange
-    # iterations; above the gate, partition on the JOIN key (src) so
-    # only the vertex-sized ranks frame and the map-side-combined
-    # contribution aggregate move per round.
     use_bc = n <= 5_000_000
-    trans = (
-        edges.join(vt.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
+    trans = _transitions(edges, vt, use_bc)
     trans.count()
     # static marker of vertices WITH out-edges; dangling mass at t is
     # then an aggregate over ranks_t alone — fused below into the same
     # action as the error norm (one aggregate pass per iteration
     # instead of a separate anti-join job, halving driver round-trips)
-    has_out = (
-        trans.select("src").distinct()
-        .withColumnRenamed("src", "id")
-        .withColumn("_h", F.lit(True))
-        .persist()
-    )
+    has_out = _has_out(trans)
     # dangling mass of the uniform start vector: (n − |src|)/n · 1/n
     # (recomputed below from the seeded vector when warm-starting)
     dangling = (n - has_out.count()) / n
@@ -95,28 +124,14 @@ def pagerank(
         ranks = seeded.select(
             "id", (F.col("rank") / F.lit(float(total))).alias("rank")
         ).localCheckpoint(eager=True)
-        dangling = float(
-            ranks.join(has_out, "id", "left")
-            .agg(
-                F.sum(
-                    F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)
-                )
-            )
-            .first()[0]
-            or 0.0
-        )
+        dangling = _dangling_mass(ranks, has_out)
     else:
         ranks = verts.select(
             "id", F.lit(1.0 / n).alias("rank")
         ).localCheckpoint(eager=True)
     it, err = 0, float("inf")
     while it < max_iter and err >= tol:
-        rs = ranks.withColumnRenamed("id", "src")
-        contrib = (
-            trans.join(F.broadcast(rs) if use_bc else rs, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-        )
+        contrib = _contributions(trans, ranks, use_bc)
         base = (1.0 - alpha) / n + alpha * dangling / n
         new_ranks = (
             verts.join(contrib, "id", "left")
@@ -145,36 +160,78 @@ def pagerank(
     return PageRankResult(ranks, it, float(err))
 
 
+def _pagerank_fixed_local(
+    edges: DataFrame, alpha: float, iters: int, bound: int
+) -> DataFrame | None:
+    """Driver-side finish under ``bound`` directed edges (the
+    serial-finish seam, operators/serial.py): the same recurrence as
+    the distributed rounds below over numpy arrays. The vertex set is
+    the src ids; contributions to dst-only ids are dropped; duplicate
+    rows and self-loops count. Sums associate in a different order than
+    Spark's partial aggregates (drift ~1e-16, far inside the 7dp
+    rounding, which Spark still applies). Returns None above the bound,
+    and on an empty graph or a zero out-weight, which the distributed
+    plan reports as it always has."""
+    import numpy as np
+    import pandas as pd
+
+    arrs = collect_bounded(edges, ["src", "dst", "w"], bound)
+    if arrs is None or len(arrs[0]) == 0:
+        return None
+    g = edge_csr(*arrs, sort=False)
+    n_pos = len(g.ids)
+    vtot = np.bincount(g.src, weights=g.w, minlength=n_pos)
+    is_v = np.bincount(g.src, minlength=n_pos) > 0
+    if not bool((vtot[is_v] != 0).all()):
+        return None
+    n = int(is_v.sum())
+    p = g.w / vtot[g.src]
+    rank = np.full(n_pos, 1.0 / n)
+    for _ in range(iters):
+        c = np.bincount(g.dst, weights=rank[g.src] * p, minlength=n_pos)
+        rank = (1.0 - alpha) / n + alpha * c
+    out = pd.DataFrame({"id": g.ids[is_v], "rank": rank[is_v]})
+    return edges.sparkSession.createDataFrame(out, "id long, rank double")
+
+
 def pagerank_fixed(
-    edges: DataFrame, alpha: float = 0.85, iters: int = 3
+    edges: DataFrame,
+    alpha: float = 0.85,
+    iters: int = 3,
+    small_graph_edges: int = 4_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank without dangling redistribution —
     intended for sink-free (symmetric) graphs, where it equals the
     converging variant truncated at `iters`. Exists so the computation
     is expressible as unrolled ANSI SQL for cross-engine verification.
-    Returns (id, rank) with rank rounded to 7dp."""
+    Returns (id, rank) with rank rounded to 7dp. At most
+    ``small_graph_edges`` edges run on the driver (0 forces the
+    distributed plan)."""
+    ranks = (_pagerank_fixed_local(edges, alpha, iters, small_graph_edges)
+             if small_graph_edges > 0 else None)
+    if ranks is None:
+        ranks = _pagerank_fixed_dist(edges, alpha, iters)
+    return ranks.select("id", F.round("rank", 7).alias("rank"))
+
+
+def _pagerank_fixed_dist(edges: DataFrame, alpha: float, iters: int) -> DataFrame:
     vt = vertex_weights(edges).persist()
     n = vt.count()
     use_bc = n <= 5_000_000
-    trans = (
-        edges.join(vt.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
+    trans = _transitions(edges, vt, use_bc)
     ranks = vt.select("id", F.lit(1.0 / n).alias("rank"))
     for _ in range(iters):
-        rs = ranks.withColumnRenamed("id", "src")
-        contrib = (
-            trans.join(F.broadcast(rs) if use_bc else rs, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-        )
+        contrib = _contributions(trans, ranks, use_bc)
         ranks = vt.select("id").join(contrib, "id", "left").select(
             "id",
             (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("rank"),
         )
-    return ranks.select("id", F.round("rank", 7).alias("rank"))
+    # materialize the vertex-sized result before releasing the caches
+    # it reads (as pagerank_dangling_fixed does)
+    ranks = ranks.localCheckpoint(eager=True)
+    trans.unpersist()
+    vt.unpersist()
+    return ranks
 
 
 def personalized_pagerank_fixed(
@@ -201,12 +258,7 @@ def personalized_pagerank_fixed(
     """
     vt = vertex_weights(edges).persist()
     use_bc = vt.count() <= 5_000_000
-    trans = (
-        edges.join(vt.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
+    trans = _transitions(edges, vt, use_bc)
     s = seeds.select("id").distinct()
     n_seeds = s.count()
     if n_seeds == 0:
@@ -217,12 +269,7 @@ def personalized_pagerank_fixed(
     ).persist()
     ranks = base.select("id", F.col("s").alias("rank"))
     for _ in range(iters):
-        rs = ranks.withColumnRenamed("id", "src")
-        contrib = (
-            trans.join(F.broadcast(rs) if use_bc else rs, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-        )
+        contrib = _contributions(trans, ranks, use_bc)
         ranks = base.join(contrib, "id", "left").select(
             "id",
             (
@@ -230,6 +277,9 @@ def personalized_pagerank_fixed(
                 + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
             ).alias("rank"),
         )
+    ranks = ranks.localCheckpoint(eager=True)
+    for cached in (trans, base, vt):
+        cached.unpersist()
     return ranks.select("id", F.round("rank", 7).alias("rank"))
 
 
@@ -259,29 +309,14 @@ def pagerank_dangling_fixed(
         return edges.sparkSession.createDataFrame([], "id long, rank double")
     vt = vertex_weights(edges)
     use_bc = n <= 5_000_000
-    trans = (
-        edges.join(vt.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
-    has_out = (
-        trans.select("src").distinct()
-        .withColumnRenamed("src", "id")
-        .withColumn("_h", F.lit(True))
-        .persist()
-    )
+    trans = _transitions(edges, vt, use_bc)
+    has_out = _has_out(trans)
     dangling = (n - has_out.count()) / n
     ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
         eager=True
     )
     for it in range(iters):
-        rs = ranks.withColumnRenamed("id", "src")
-        contrib = (
-            trans.join(F.broadcast(rs) if use_bc else rs, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-        )
+        contrib = _contributions(trans, ranks, use_bc)
         base = (1.0 - alpha) / n + alpha * dangling / n
         ranks = (
             verts.join(contrib, "id", "left")
@@ -294,18 +329,7 @@ def pagerank_dangling_fixed(
             .localCheckpoint(eager=True)
         )
         if it < iters - 1:
-            dangling = float(
-                ranks.join(has_out, "id", "left")
-                .agg(
-                    F.sum(
-                        F.when(F.col("_h").isNull(), F.col("rank")).otherwise(
-                            0.0
-                        )
-                    )
-                )
-                .first()[0]
-                or 0.0
-            )
+            dangling = _dangling_mass(ranks, has_out)
     trans.unpersist()
     has_out.unpersist()
     verts.unpersist()

@@ -62,78 +62,11 @@ def community_count(membership: DataFrame) -> int:
     return membership.select("com").distinct().count()
 
 
-def _modularity_local(
-    edges: DataFrame,
-    membership: DataFrame,
-    resolution: float,
-    m: float | None,
-    bound: int,
-) -> float | None:
-    """Driver-side finish for small graphs (≤ ``bound`` directed edges,
-    LIMIT probe — the louvain.py small_graph_edges pattern): the
-    double-join + aggregate collapses to numpy bincounts over arrays
-    collected once. Exact inner-join semantics (rows whose src OR dst
-    lacks a membership row are dropped, communities grouped by csrc);
-    summation-order drift ~1e-15 like the fused aggregate below.
-    Returns None above the bound."""
-    import numpy as np
-
-    tbl = edges.select("src", "dst", "w").limit(bound + 1).toArrow()
-    if tbl.num_rows > bound:
-        return None
-    if tbl.num_rows == 0:
-        return 0.0
-    mem = membership.select("id", "com").toPandas()
-    mid = mem["id"].to_numpy(dtype=np.int64)
-    mcom = mem["com"].to_numpy(dtype=np.int64)
-    order = np.argsort(mid, kind="stable")
-    mid, mcom = mid[order], mcom[order]
-    src = tbl.column("src").to_numpy().astype(np.int64, copy=False)
-    dst = tbl.column("dst").to_numpy().astype(np.int64, copy=False)
-    w = tbl.column("w").to_numpy().astype(np.float64, copy=False)
-
-    def lookup(a):
-        pos = np.searchsorted(mid, a)
-        ok = (pos < len(mid)) & (mid[np.minimum(pos, max(len(mid) - 1, 0))] == a) if len(mid) else np.zeros(len(a), dtype=bool)
-        return pos, ok
-
-    ps, oks = lookup(src)
-    pdst, okd = lookup(dst)
-    keep = oks & okd  # inner joins on both endpoints
-    if not bool(keep.any()):
-        return 0.0
-    cs = mcom[ps[keep]]
-    cd = mcom[pdst[keep]]
-    wk = w[keep]
-    # community index via the VERTEX-sized label domain (unique over
-    # mcom), not a sort of the edge-sized cs array
-    clab = np.unique(mcom)
-    cidx = np.searchsorted(clab, cs)
-    ctot = np.bincount(cidx, weights=wk, minlength=len(clab))
-    same = cs == cd
-    cin = np.bincount(cidx[same], weights=wk[same], minlength=len(clab))
-    if m is None:
-        st = float(ctot.sum())
-        if st <= 0.0:
-            return 0.0
-        return float(
-            float(cin.sum()) / st
-            - resolution * float((ctot * ctot).sum()) / (st * st)
-        )
-    if m <= 0:
-        return 0.0
-    two_m = 2.0 * m
-    return float(
-        (cin / two_m - resolution * (ctot / two_m) ** 2).sum()
-    )
-
-
 def modularity(
     edges: DataFrame,
     membership: DataFrame,
     resolution: float = 1.0,
     m: float | None = None,
-    small_graph_edges: int = 4_000_000,
 ) -> float:
     """Q = Σ_c [cin_c/(2M) − R·(ctot_c/(2M))²].
 
@@ -141,18 +74,12 @@ def modularity(
     (modularityCommunity). One declarative plan: edges ⋈ membership(src)
     ⋈ membership(dst) → per-community (cin, ctot) → closed-form sum.
     ``membership(id, com)`` must cover every vertex with out-edges.
+
+    Partial membership: the joins are inner, so an edge whose src or
+    dst has no membership row drops out of cin and ctot. Without an
+    explicit ``m``, M is then the join-surviving weight (Σctot/2), not
+    the full edge weight; pass ``m`` to score against the whole graph.
     """
-    # measured-optimal serial finish (louvain.py small_graph_edges
-    # pattern): below the bound the whole evaluation is two bincounts
-    # over one collected pass — and, unlike the join plan, pays no
-    # whole-stage-codegen JIT, which dominates this sub-second query
-    # when the suite's other stages have evicted its generated class
-    if small_graph_edges > 0:
-        q_local = _modularity_local(
-            edges, membership, resolution, m, small_graph_edges
-        )
-        if q_local is not None:
-            return q_local
     ms = membership.select(F.col("id").alias("src"), F.col("com").alias("csrc"))
     md = membership.select(F.col("id").alias("dst"), F.col("com").alias("cdst"))
     per_com = (

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .serial import collect_bounded, edge_csr, pair_order
 from .transforms import vertices
 
 
@@ -100,19 +101,15 @@ def _triangles(o: DataFrame) -> DataFrame:
 
 
 def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
-    """Driver-side native finish for small graphs (≤ ``bound``
-    CANONICAL src<dst pairs ≈ 2·bound directed edges) — the same
-    measured-optimal representation swap as louvain/components/
-    labelprop (louvain.py small_graph_edges): the whole count is one
-    numpy orientation pass plus a C sorted-merge sweep
+    """Serial finish (operators/serial.py) under ``bound`` CANONICAL
+    src<dst pairs ≈ 2·bound directed edges: one numpy orientation pass
+    plus a C sorted-merge sweep
     (oracle/_cmove.py triangle_count_csr), the exact transcription of
     the distributed plan (degree-(deg,id) orientation, sorted
     adjacency, per-edge intersection), so the total is identical —
     pinned by tests/test_components_fastpath.py.
 
-    Returns None above the bound or when no native kernel is available
-    (LIMIT probe: under the bound the probe already IS the canonical
-    edge set, so no extra pass is paid).
+    Returns None above the bound or when no native kernel is available.
     """
     import numpy as np
 
@@ -120,36 +117,28 @@ def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
 
     if get_local_move() is None:
         return None
-    tbl = (
-        edges.select("src", "dst")
-        .where(F.col("src") < F.col("dst"))
-        .limit(bound + 1)
-        .toArrow()
+    arrs = collect_bounded(
+        edges.where(F.col("src") < F.col("dst")), ["src", "dst"], bound
     )
-    if tbl.num_rows > bound:
+    if arrs is None:
         return None
-    if tbl.num_rows == 0:
+    if len(arrs[0]) == 0:
         return 0
-    s = tbl.column("src").to_numpy().astype(np.int64, copy=False)
-    d = tbl.column("dst").to_numpy().astype(np.int64, copy=False)
-    ids = np.unique(np.concatenate([s, d]))
-    V = len(ids)
-    sp = np.searchsorted(ids, s)
-    dp = np.searchsorted(ids, d)
-    key = np.unique(sp * np.int64(V) + dp)  # the _canonical distinct
-    sp, dp = key // V, key % V
+    g = edge_csr(*arrs)
+    V = len(g.ids)
+    # the _canonical distinct: drop repeats of a (src, dst) row, which
+    # the (src, dst) order makes adjacent
+    first = np.r_[True, (g.src[1:] != g.src[:-1]) | (g.dst[1:] != g.dst[:-1])]
+    sp, dp = g.src[first], g.dst[first]
     deg = np.bincount(sp, minlength=V) + np.bincount(dp, minlength=V)
     # orient low-(deg, id) → high; position order == id order, and
     # sp < dp already holds, so the deg-tie case keeps fwd
     fwd = (deg[sp] < deg[dp]) | (deg[sp] == deg[dp])
     u = np.where(fwd, sp, dp)
     v = np.where(fwd, dp, sp)
-    okey = u * np.int64(V) + v
-    okey.sort()  # distinct by construction → sorted adjacency per u
-    uu, vv = okey // V, okey % V
-    indptr = np.zeros(V + 1, dtype=np.int64)
-    indptr[1:] = np.cumsum(np.bincount(uu, minlength=V))
-    return triangle_count_csr_c(indptr, np.ascontiguousarray(vv))
+    # distinct by construction → sorted adjacency per u
+    perm, indptr = pair_order(u, v, V)
+    return triangle_count_csr_c(indptr, v[perm])
 
 
 def triangle_count_total(

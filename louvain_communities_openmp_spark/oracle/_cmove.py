@@ -1,4 +1,6 @@
-"""Native (C) local-move sweep for the sequential Louvain kernel.
+"""Native (C) kernels for the serial finishes: the sequential Louvain
+local-move sweep, label-propagation rounds, the triangle sweep and the
+(src, dst) counting sort of the CSR prologue.
 
 The local-move phase of ``louvain_seq_fast`` is an inherently
 sequential sweep (asynchronous vcom/ctot updates in ascending vertex
@@ -201,9 +203,49 @@ int64_t triangle_count_csr(
     }
     return total;
 }
+
+/* Stable counting sort of m edge rows by (src, dst), both positions in
+   [0, n): one pass by dst, then a stable pass by src, so perm is the
+   permutation np.argsort(src * n + dst, kind="stable") returns, in
+   O(m + n). Also writes the CSR row offsets indptr (n + 1). Returns 0,
+   or -1 on allocation failure. */
+int64_t csr_order(
+    const int64_t *src, const int64_t *dst, int64_t m, int64_t n,
+    int64_t *perm, int64_t *indptr)
+{
+    int64_t *cnt = (int64_t *) calloc((size_t) n + 1, sizeof(int64_t));
+    int64_t *tmp = (int64_t *) malloc((size_t) (m ? m : 1) * sizeof(int64_t));
+    if (!cnt || !tmp) { free(cnt); free(tmp); return -1; }
+    for (int64_t i = 0; i < m; i++) cnt[dst[i] + 1]++;
+    for (int64_t v = 0; v < n; v++) cnt[v + 1] += cnt[v];
+    for (int64_t i = 0; i < m; i++) tmp[cnt[dst[i]]++] = i;
+    for (int64_t v = 0; v <= n; v++) indptr[v] = 0;
+    for (int64_t i = 0; i < m; i++) indptr[src[i] + 1]++;
+    for (int64_t v = 0; v < n; v++) indptr[v + 1] += indptr[v];
+    for (int64_t v = 0; v < n; v++) cnt[v] = indptr[v];
+    for (int64_t k = 0; k < m; k++) {
+        const int64_t i = tmp[k];
+        perm[cnt[src[i]]++] = i;
+    }
+    free(cnt); free(tmp);
+    return 0;
+}
 """
 
 _CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off"]
+
+_I64, _F64 = ctypes.c_int64, ctypes.c_double
+_PI64, _PF64 = ctypes.POINTER(_I64), ctypes.POINTER(_F64)
+# argument types of every entry point, in the order of its C signature
+_SIGNATURES = {
+    "louvain_local_move": [
+        _PI64, _PI64, _PF64, _I64, _PI64, _PF64,
+        ctypes.POINTER(ctypes.c_int8), _PF64, _F64, _F64, _I64, _F64, _PI64,
+    ],
+    "labelprop_rounds": [_PI64, _PI64, _PF64, _I64, _PI64, _I64],
+    "triangle_count_csr": [_PI64, _PI64, _I64],
+    "csr_order": [_PI64, _PI64, _I64, _I64, _PI64, _PI64],
+}
 
 _lib = None
 _tried = False
@@ -240,44 +282,31 @@ def get_local_move():
             )
             os.rename(tmp, so)  # atomic: concurrent builders race safely
         lib = ctypes.CDLL(so)
-        fn = lib.louvain_local_move
-        fn.restype = ctypes.c_int64
-        fn.argtypes = [
-            ctypes.POINTER(ctypes.c_int64),   # indptr
-            ctypes.POINTER(ctypes.c_int64),   # indices
-            ctypes.POINTER(ctypes.c_double),  # weights
-            ctypes.c_int64,                   # n
-            ctypes.POINTER(ctypes.c_int64),   # vcom
-            ctypes.POINTER(ctypes.c_double),  # ctot
-            ctypes.POINTER(ctypes.c_int8),    # vaff
-            ctypes.POINTER(ctypes.c_double),  # vtot
-            ctypes.c_double,                  # M
-            ctypes.c_double,                  # R
-            ctypes.c_int64,                   # L
-            ctypes.c_double,                  # E
-            ctypes.POINTER(ctypes.c_int64),   # out_processed
-        ]
-        lp = lib.labelprop_rounds
-        lp.restype = ctypes.c_int64
-        lp.argtypes = [
-            ctypes.POINTER(ctypes.c_int64),   # indptr
-            ctypes.POINTER(ctypes.c_int64),   # indices
-            ctypes.POINTER(ctypes.c_double),  # weights
-            ctypes.c_int64,                   # n
-            ctypes.POINTER(ctypes.c_int64),   # lab
-            ctypes.c_int64,                   # max_iter
-        ]
-        tc = lib.triangle_count_csr
-        tc.restype = ctypes.c_int64
-        tc.argtypes = [
-            ctypes.POINTER(ctypes.c_int64),   # indptr
-            ctypes.POINTER(ctypes.c_int64),   # indices
-            ctypes.c_int64,                   # n
-        ]
+        for name, argtypes in _SIGNATURES.items():
+            fn = getattr(lib, name)
+            fn.restype = _I64
+            fn.argtypes = argtypes
         _lib = lib
-        return fn
+        return lib.louvain_local_move
     except Exception:
         return None
+
+
+def _native(*arrays):
+    """The loaded library when it is available and every (array, dtype)
+    pair is a C-contiguous array of that dtype, else None."""
+    if get_local_move() is None:
+        return None
+    for a, dt in arrays:
+        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
+            return None
+    return _lib
+
+
+def _ptr(a):
+    import numpy as np
+
+    return a.ctypes.data_as(ctypes.POINTER(np.ctypeslib.as_ctypes_type(a.dtype)))
 
 
 def local_move_c(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
@@ -290,25 +319,16 @@ def local_move_c(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
     """
     import numpy as np
 
-    fn = get_local_move()
-    if fn is None:
-        return None
-    n = len(indptr) - 1
-    for a, dt in ((indptr, np.int64), (indices, np.int64),
+    lib = _native((indptr, np.int64), (indices, np.int64),
                   (weights, np.float64), (vcom, np.int64),
-                  (ctot, np.float64), (vaff, np.int8), (vtot, np.float64)):
-        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
-            return None
+                  (ctot, np.float64), (vaff, np.int8), (vtot, np.float64))
+    if lib is None:
+        return None
     processed = ctypes.c_int64(0)
-    p = lambda a, t: a.ctypes.data_as(ctypes.POINTER(t))  # noqa: E731
-    iters = fn(
-        p(indptr, ctypes.c_int64), p(indices, ctypes.c_int64),
-        p(weights, ctypes.c_double), ctypes.c_int64(n),
-        p(vcom, ctypes.c_int64), p(ctot, ctypes.c_double),
-        p(vaff, ctypes.c_int8), p(vtot, ctypes.c_double),
-        ctypes.c_double(M), ctypes.c_double(R),
-        ctypes.c_int64(L), ctypes.c_double(E),
-        ctypes.byref(processed),
+    iters = lib.louvain_local_move(
+        _ptr(indptr), _ptr(indices), _ptr(weights), len(indptr) - 1,
+        _ptr(vcom), _ptr(ctot), _ptr(vaff), _ptr(vtot),
+        M, R, L, E, ctypes.byref(processed),
     )
     if iters < 0:
         return None
@@ -321,14 +341,10 @@ def triangle_count_csr_c(indptr, indices):
     native kernel is unavailable."""
     import numpy as np
 
-    if get_local_move() is None or _lib is None:
+    lib = _native((indptr, np.int64), (indices, np.int64))
+    if lib is None:
         return None
-    for a in (indptr, indices):
-        if a.dtype != np.int64 or not a.flags["C_CONTIGUOUS"]:
-            return None
-    n = len(indptr) - 1
-    p = lambda a: a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))  # noqa: E731
-    return int(_lib.triangle_count_csr(p(indptr), p(indices), ctypes.c_int64(n)))
+    return int(lib.triangle_count_csr(_ptr(indptr), _ptr(indices), len(indptr) - 1))
 
 
 def labelprop_rounds_c(indptr, indices, weights, lab, max_iter):
@@ -339,19 +355,34 @@ def labelprop_rounds_c(indptr, indices, weights, lab, max_iter):
     """
     import numpy as np
 
-    if get_local_move() is None or _lib is None:
+    lib = _native((indptr, np.int64), (indices, np.int64),
+                  (weights, np.float64), (lab, np.int64))
+    if lib is None:
         return None
-    n = len(indptr) - 1
-    for a, dt in ((indptr, np.int64), (indices, np.int64),
-                  (weights, np.float64), (lab, np.int64)):
-        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
-            return None
-    p = lambda a, t: a.ctypes.data_as(ctypes.POINTER(t))  # noqa: E731
-    it = _lib.labelprop_rounds(
-        p(indptr, ctypes.c_int64), p(indices, ctypes.c_int64),
-        p(weights, ctypes.c_double), ctypes.c_int64(n),
-        p(lab, ctypes.c_int64), ctypes.c_int64(max_iter),
+    it = lib.labelprop_rounds(
+        _ptr(indptr), _ptr(indices), _ptr(weights), len(indptr) - 1,
+        _ptr(lab), max_iter,
     )
     if it < 0:
         return None
     return int(it)
+
+
+def csr_order_c(src, dst, n):
+    """Stable (src, dst) order of edge rows over positions in [0, n)
+    by a native counting sort. Returns (perm, indptr) — perm equals
+    ``np.argsort(src * n + dst, kind="stable")`` — or None when the
+    native kernel is unavailable (caller falls back to that argsort).
+    """
+    import numpy as np
+
+    lib = _native((src, np.int64), (dst, np.int64))
+    if lib is None:
+        return None
+    if len(src) and (min(src.min(), dst.min()) < 0 or max(src.max(), dst.max()) >= n):
+        raise ValueError(f"edge positions outside [0, {n})")
+    perm = np.empty(len(src), dtype=np.int64)
+    indptr = np.empty(n + 1, dtype=np.int64)
+    if lib.csr_order(_ptr(src), _ptr(dst), len(src), n, _ptr(perm), _ptr(indptr)) < 0:
+        return None
+    return perm, indptr

@@ -46,6 +46,19 @@ def test_dense_ids_are_dense_and_sorted(spark):
     assert [r["url"] for r in ids] == sorted(f"u{i:03d}" for i in range(97))
 
 
+def test_dense_ids_collect_path_matches_scalable_plan(spark):
+    # duplicates, non-ASCII code points and a shuffled arrival order:
+    # the driver sort must assign exactly the range-partitioned ids
+    vals = [f"https://h{i % 13}.example/p{i}" for i in range(300)]
+    vals += ["https://ä.example/", "https://Z.example/", "https://a.example/"] * 4
+    df = spark.createDataFrame([(v,) for v in vals[::-1]], "url string").repartition(7)
+    fast = dense_ids(df, "url")
+    plan = dense_ids(df, "url", collect_bound=0)
+    rows = sorted(tuple(r) for r in fast.collect())
+    assert rows == sorted(tuple(r) for r in plan.collect())
+    assert [i for _, i in rows] == list(range(len(set(vals))))
+
+
 def test_pages_roundtrip_recovers_graph(spark):
     """pages built from karate edges → extraction → same edge set."""
     planted = edges_from_list(spark, karate())
