@@ -70,24 +70,41 @@ def _labelprop_local(
 
 def _labelprop_rounds_numpy(sp, dp, w, lab, max_iter: int) -> int:
     """The numpy twin of the native rounds, for hosts without a C
-    compiler: same rounds, same count, ``lab`` mutated in place."""
+    compiler: same rounds, same count, ``lab`` updated in place."""
     import numpy as np
 
     n = len(lab)
     it = 0
     while it < max_iter:
+        # scored: Σw per (src, neighbor-label); key packs (sp, nl) so
+        # one sort groups both levels with nl ascending within src —
+        # the first max-wt group per src is then the (max wt, min
+        # label) argmax, the distributed max_by tie-break
+        key = sp * n + lab[dp]
+        order = np.argsort(key, kind="stable")
+        ks, ws = key[order], w[order]
+        grp = np.empty(len(ks), dtype=bool)
+        if len(ks):
+            grp[0] = True
+            np.not_equal(ks[1:], ks[:-1], out=grp[1:])
+            starts = np.flatnonzero(grp)
+            sums = np.add.reduceat(ws, starts)
+            gsrc = ks[starts] // n
+            gnl = ks[starts] % n
+            seg = np.empty(len(gsrc), dtype=bool)
+            seg[0] = True
+            np.not_equal(gsrc[1:], gsrc[:-1], out=seg[1:])
+            seg_starts = np.flatnonzero(seg)
+            wmax = np.maximum.reduceat(sums, seg_starts)
+            counts = np.diff(np.r_[seg_starts, len(gsrc)])
+            is_max = sums == np.repeat(wmax, counts)
+            posn = np.where(is_max, np.arange(len(sums)), len(sums))
+            first = np.minimum.reduceat(posn, seg_starts)
+            new = lab.copy()
+            new[gsrc[seg_starts]] = gnl[first]
+        else:
+            new = lab.copy()
         it += 1
-        # Σw per (src, neighbor label), added in row order like the
-        # native stamp-walk
-        key, inv = np.unique(sp * n + lab[dp], return_inverse=True)
-        sums = np.bincount(inv, weights=w, minlength=len(key))
-        gsrc, gnl = key // n, key % n
-        # the first group per src in (src, -wt, label) order is the
-        # (max wt, min label) argmax, the distributed max_by tie-break
-        o = np.lexsort((gnl, -sums, gsrc))
-        first = o[np.diff(gsrc[o], prepend=-1) != 0]
-        new = lab.copy()
-        new[gsrc[first]] = gnl[first]
         if bool(np.array_equal(new, lab)):
             break
         lab[:] = new

@@ -56,7 +56,7 @@ from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
 from .properties import modularity as modularity_op
 from .properties import total_weight_m, vertex_weights
-from .serial import collect_bounded, edge_csr
+from .serial import collect_columns, edge_csr
 
 
 @dataclass
@@ -1290,19 +1290,20 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     q_fast: float | None = None  # driver-computed Q (pure-serial solve)
     while p < opts.max_passes:
         E = opts.tolerance / (opts.tolerance_drop ** p)
+        n_edges = edges.count()
         # ---- auto fast path: solve the coarsened remainder in the
         # driver with the vectorized sequential kernel (reference
-        # semantics; no per-iteration Spark round-trips). The bounded
-        # collect doubles as the edge count: under the bound it IS the
-        # edge set, so no separate count job runs
-        arrs = None
-        if opts.mode == "auto":
-            t0 = time.time()
-            arrs = collect_bounded(edges, ["src", "dst", "w"], opts.small_graph_edges)
-        n_edges = len(arrs[0]) if arrs is not None else edges.count()
-        if arrs is not None:
+        # semantics; no per-iteration Spark round-trips)
+        if opts.mode == "auto" and n_edges <= opts.small_graph_edges:
             import numpy as np
 
+            t0 = time.time()
+            # plain Arrow-direct collect (no distributed orderBy: the
+            # range exchange + its sampling pass cost more than the
+            # driver-side O(E) prologue at the ≤4M-edge bound). The
+            # count, not a LIMIT probe, decides: over the bound a probe
+            # would move bound + 1 rows to the driver only to drop them
+            arrs = collect_columns(edges, ["src", "dst", "w"])
             if n_edges == 0 or float(arrs[2].sum()) <= 0.0:
                 # empty/zero-weight graph: the old m_total <= 0 contract
                 return LouvainResult(

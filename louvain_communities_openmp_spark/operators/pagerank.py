@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .properties import vertex_weights
-from .serial import collect_bounded, edge_csr
+from .serial import collect_columns, edge_csr
 from .transforms import vertices
 
 
@@ -160,10 +160,15 @@ def pagerank(
     return PageRankResult(ranks, it, float(err))
 
 
+# directed edges up to which pagerank_fixed finishes on the driver (the
+# bound its serial-finish siblings default to)
+_SERIAL_EDGES = 4_000_000
+
+
 def _pagerank_fixed_local(
-    edges: DataFrame, alpha: float, iters: int, bound: int
+    edges: DataFrame, alpha: float, iters: int
 ) -> DataFrame | None:
-    """Driver-side finish under ``bound`` directed edges (the
+    """Driver-side finish under ``_SERIAL_EDGES`` directed edges (the
     serial-finish seam, operators/serial.py): the same recurrence as
     the distributed rounds below over numpy arrays. The vertex set is
     the src ids; contributions to dst-only ids are dropped; duplicate
@@ -171,14 +176,15 @@ def _pagerank_fixed_local(
     Spark's partial aggregates (drift ~1e-16, far inside the 7dp
     rounding, which Spark still applies). Returns None above the bound,
     and on an empty graph or a zero out-weight, which the distributed
-    plan reports as it always has."""
+    plan reports as it always has. An edge count decides, so a graph
+    over the bound pays one count job, not a discarded collect."""
     import numpy as np
     import pandas as pd
 
-    arrs = collect_bounded(edges, ["src", "dst", "w"], bound)
-    if arrs is None or len(arrs[0]) == 0:
+    m = edges.count()
+    if m == 0 or m > _SERIAL_EDGES:
         return None
-    g = edge_csr(*arrs, sort=False)
+    g = edge_csr(*collect_columns(edges, ["src", "dst", "w"]), sort=False)
     n_pos = len(g.ids)
     vtot = np.bincount(g.src, weights=g.w, minlength=n_pos)
     is_v = np.bincount(g.src, minlength=n_pos) > 0
@@ -198,17 +204,13 @@ def pagerank_fixed(
     edges: DataFrame,
     alpha: float = 0.85,
     iters: int = 3,
-    small_graph_edges: int = 4_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank without dangling redistribution —
     intended for sink-free (symmetric) graphs, where it equals the
     converging variant truncated at `iters`. Exists so the computation
     is expressible as unrolled ANSI SQL for cross-engine verification.
-    Returns (id, rank) with rank rounded to 7dp. At most
-    ``small_graph_edges`` edges run on the driver (0 forces the
-    distributed plan)."""
-    ranks = (_pagerank_fixed_local(edges, alpha, iters, small_graph_edges)
-             if small_graph_edges > 0 else None)
+    Returns (id, rank) with rank rounded to 7dp."""
+    ranks = _pagerank_fixed_local(edges, alpha, iters)
     if ranks is None:
         ranks = _pagerank_fixed_dist(edges, alpha, iters)
     return ranks.select("id", F.round("rank", 7).alias("rank"))

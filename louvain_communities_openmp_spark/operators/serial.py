@@ -2,10 +2,11 @@
 
 Under an operator's edge bound the whole computation is cheaper on the
 driver than one distributed round — the reference's representation
-swap to a CSR rebuilt per pass (louvain.hxx:1174-1176). Every serial
-finish collects through ``collect_bounded`` (a LIMIT probe that IS the
-collect under the bound and short-circuits over it) and maps ids
-through ``edge_csr``: ``id - lo`` when the ids are contiguous, as the
+swap to a CSR rebuilt per pass (louvain.hxx:1174-1176). A serial finish
+collects through ``collect_bounded`` (a LIMIT probe that IS the collect
+under the bound and short-circuits over it) or, where an edge count
+decides the path, through ``collect_columns`` after the count; it maps
+ids through ``edge_csr``: ``id - lo`` when the ids are contiguous, as the
 engine's tables are, else a sorted-unique map; the (src, dst) order
 comes from an O(E + V) counting sort (oracle/_cmove.py ``csr_order``).
 """
@@ -18,17 +19,27 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 
-def collect_bounded(df: DataFrame, cols: list[str], bound: int) -> list | None:
+def _numpy_columns(tbl, cols: list[str]) -> list:
+    arrs = [tbl.column(c).to_numpy() for c in cols]
+    return [a.astype(np.float64 if a.dtype.kind == "f" else np.int64, copy=False) for a in arrs]
+
+
+def collect_columns(df: DataFrame, cols: list[str]) -> list:
     """The columns ``cols`` of ``df`` as numpy arrays (int64, or float64
-    for floating columns), or None when ``df`` has more than ``bound``
-    rows."""
+    for floating columns). Arrow-direct: no pandas block consolidation.
+    Only for a frame already known to be under a bound."""
+    return _numpy_columns(df.select(*cols).toArrow(), cols)
+
+
+def collect_bounded(df: DataFrame, cols: list[str], bound: int) -> list | None:
+    """``collect_columns`` of ``df``, or None when ``df`` has more than
+    ``bound`` rows."""
     # LIMIT takes a Java int
     bound = min(bound, 2**31 - 2)
     tbl = df.select(*cols).limit(bound + 1).toArrow()
     if tbl.num_rows > bound:
         return None
-    arrs = [tbl.column(c).to_numpy() for c in cols]
-    return [a.astype(np.float64 if a.dtype.kind == "f" else np.int64, copy=False) for a in arrs]
+    return _numpy_columns(tbl, cols)
 
 
 @dataclass

@@ -1,6 +1,4 @@
-"""Native (C) kernels for the serial finishes: the sequential Louvain
-local-move sweep, label-propagation rounds, the triangle sweep and the
-(src, dst) counting sort of the CSR prologue.
+"""Native (C) local-move sweep for the sequential Louvain kernel.
 
 The local-move phase of ``louvain_seq_fast`` is an inherently
 sequential sweep (asynchronous vcom/ctot updates in ascending vertex
@@ -234,19 +232,6 @@ int64_t csr_order(
 
 _CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off"]
 
-_I64, _F64 = ctypes.c_int64, ctypes.c_double
-_PI64, _PF64 = ctypes.POINTER(_I64), ctypes.POINTER(_F64)
-# argument types of every entry point, in the order of its C signature
-_SIGNATURES = {
-    "louvain_local_move": [
-        _PI64, _PI64, _PF64, _I64, _PI64, _PF64,
-        ctypes.POINTER(ctypes.c_int8), _PF64, _F64, _F64, _I64, _F64, _PI64,
-    ],
-    "labelprop_rounds": [_PI64, _PI64, _PF64, _I64, _PI64, _I64],
-    "triangle_count_csr": [_PI64, _PI64, _I64],
-    "csr_order": [_PI64, _PI64, _I64, _I64, _PI64, _PI64],
-}
-
 _lib = None
 _tried = False
 
@@ -282,31 +267,54 @@ def get_local_move():
             )
             os.rename(tmp, so)  # atomic: concurrent builders race safely
         lib = ctypes.CDLL(so)
-        for name, argtypes in _SIGNATURES.items():
-            fn = getattr(lib, name)
-            fn.restype = _I64
-            fn.argtypes = argtypes
+        fn = lib.louvain_local_move
+        fn.restype = ctypes.c_int64
+        fn.argtypes = [
+            ctypes.POINTER(ctypes.c_int64),   # indptr
+            ctypes.POINTER(ctypes.c_int64),   # indices
+            ctypes.POINTER(ctypes.c_double),  # weights
+            ctypes.c_int64,                   # n
+            ctypes.POINTER(ctypes.c_int64),   # vcom
+            ctypes.POINTER(ctypes.c_double),  # ctot
+            ctypes.POINTER(ctypes.c_int8),    # vaff
+            ctypes.POINTER(ctypes.c_double),  # vtot
+            ctypes.c_double,                  # M
+            ctypes.c_double,                  # R
+            ctypes.c_int64,                   # L
+            ctypes.c_double,                  # E
+            ctypes.POINTER(ctypes.c_int64),   # out_processed
+        ]
+        lp = lib.labelprop_rounds
+        lp.restype = ctypes.c_int64
+        lp.argtypes = [
+            ctypes.POINTER(ctypes.c_int64),   # indptr
+            ctypes.POINTER(ctypes.c_int64),   # indices
+            ctypes.POINTER(ctypes.c_double),  # weights
+            ctypes.c_int64,                   # n
+            ctypes.POINTER(ctypes.c_int64),   # lab
+            ctypes.c_int64,                   # max_iter
+        ]
+        tc = lib.triangle_count_csr
+        tc.restype = ctypes.c_int64
+        tc.argtypes = [
+            ctypes.POINTER(ctypes.c_int64),   # indptr
+            ctypes.POINTER(ctypes.c_int64),   # indices
+            ctypes.c_int64,                   # n
+        ]
+        co = lib.csr_order
+        co.restype = ctypes.c_int64
+        co.argtypes = [
+            ctypes.POINTER(ctypes.c_int64),   # src
+            ctypes.POINTER(ctypes.c_int64),   # dst
+            ctypes.c_int64,                   # m
+            ctypes.c_int64,                   # n
+            ctypes.POINTER(ctypes.c_int64),   # perm
+            ctypes.POINTER(ctypes.c_int64),   # indptr
+        ]
         _lib = lib
-        return lib.louvain_local_move
+        return fn
     except Exception:
         return None
-
-
-def _native(*arrays):
-    """The loaded library when it is available and every (array, dtype)
-    pair is a C-contiguous array of that dtype, else None."""
-    if get_local_move() is None:
-        return None
-    for a, dt in arrays:
-        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
-            return None
-    return _lib
-
-
-def _ptr(a):
-    import numpy as np
-
-    return a.ctypes.data_as(ctypes.POINTER(np.ctypeslib.as_ctypes_type(a.dtype)))
 
 
 def local_move_c(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
@@ -319,16 +327,25 @@ def local_move_c(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
     """
     import numpy as np
 
-    lib = _native((indptr, np.int64), (indices, np.int64),
-                  (weights, np.float64), (vcom, np.int64),
-                  (ctot, np.float64), (vaff, np.int8), (vtot, np.float64))
-    if lib is None:
+    fn = get_local_move()
+    if fn is None:
         return None
+    n = len(indptr) - 1
+    for a, dt in ((indptr, np.int64), (indices, np.int64),
+                  (weights, np.float64), (vcom, np.int64),
+                  (ctot, np.float64), (vaff, np.int8), (vtot, np.float64)):
+        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
+            return None
     processed = ctypes.c_int64(0)
-    iters = lib.louvain_local_move(
-        _ptr(indptr), _ptr(indices), _ptr(weights), len(indptr) - 1,
-        _ptr(vcom), _ptr(ctot), _ptr(vaff), _ptr(vtot),
-        M, R, L, E, ctypes.byref(processed),
+    p = lambda a, t: a.ctypes.data_as(ctypes.POINTER(t))  # noqa: E731
+    iters = fn(
+        p(indptr, ctypes.c_int64), p(indices, ctypes.c_int64),
+        p(weights, ctypes.c_double), ctypes.c_int64(n),
+        p(vcom, ctypes.c_int64), p(ctot, ctypes.c_double),
+        p(vaff, ctypes.c_int8), p(vtot, ctypes.c_double),
+        ctypes.c_double(M), ctypes.c_double(R),
+        ctypes.c_int64(L), ctypes.c_double(E),
+        ctypes.byref(processed),
     )
     if iters < 0:
         return None
@@ -341,10 +358,14 @@ def triangle_count_csr_c(indptr, indices):
     native kernel is unavailable."""
     import numpy as np
 
-    lib = _native((indptr, np.int64), (indices, np.int64))
-    if lib is None:
+    if get_local_move() is None or _lib is None:
         return None
-    return int(lib.triangle_count_csr(_ptr(indptr), _ptr(indices), len(indptr) - 1))
+    for a in (indptr, indices):
+        if a.dtype != np.int64 or not a.flags["C_CONTIGUOUS"]:
+            return None
+    n = len(indptr) - 1
+    p = lambda a: a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))  # noqa: E731
+    return int(_lib.triangle_count_csr(p(indptr), p(indices), ctypes.c_int64(n)))
 
 
 def labelprop_rounds_c(indptr, indices, weights, lab, max_iter):
@@ -355,13 +376,18 @@ def labelprop_rounds_c(indptr, indices, weights, lab, max_iter):
     """
     import numpy as np
 
-    lib = _native((indptr, np.int64), (indices, np.int64),
-                  (weights, np.float64), (lab, np.int64))
-    if lib is None:
+    if get_local_move() is None or _lib is None:
         return None
-    it = lib.labelprop_rounds(
-        _ptr(indptr), _ptr(indices), _ptr(weights), len(indptr) - 1,
-        _ptr(lab), max_iter,
+    n = len(indptr) - 1
+    for a, dt in ((indptr, np.int64), (indices, np.int64),
+                  (weights, np.float64), (lab, np.int64)):
+        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
+            return None
+    p = lambda a, t: a.ctypes.data_as(ctypes.POINTER(t))  # noqa: E731
+    it = _lib.labelprop_rounds(
+        p(indptr, ctypes.c_int64), p(indices, ctypes.c_int64),
+        p(weights, ctypes.c_double), ctypes.c_int64(n),
+        p(lab, ctypes.c_int64), ctypes.c_int64(max_iter),
     )
     if it < 0:
         return None
@@ -376,13 +402,20 @@ def csr_order_c(src, dst, n):
     """
     import numpy as np
 
-    lib = _native((src, np.int64), (dst, np.int64))
-    if lib is None:
+    if get_local_move() is None or _lib is None:
         return None
+    for a in (src, dst):
+        if a.dtype != np.int64 or not a.flags["C_CONTIGUOUS"]:
+            return None
     if len(src) and (min(src.min(), dst.min()) < 0 or max(src.max(), dst.max()) >= n):
         raise ValueError(f"edge positions outside [0, {n})")
     perm = np.empty(len(src), dtype=np.int64)
     indptr = np.empty(n + 1, dtype=np.int64)
-    if lib.csr_order(_ptr(src), _ptr(dst), len(src), n, _ptr(perm), _ptr(indptr)) < 0:
+    p = lambda a: a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))  # noqa: E731
+    rc = _lib.csr_order(
+        p(src), p(dst), ctypes.c_int64(len(src)), ctypes.c_int64(n),
+        p(perm), p(indptr),
+    )
+    if rc < 0:
         return None
     return perm, indptr
