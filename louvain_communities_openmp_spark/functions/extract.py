@@ -57,8 +57,11 @@ def extract_links(html: pd.Series) -> pd.Series:
 # sf0.1 plan). The non-deterministic marking forbids duplicating or
 # reordering the expensive extraction; the explode itself still drops
 # empty arrays, so results are unchanged. Use THESE variants wherever
-# the array feeds a Generate.
-extract_links_once = extract_links.asNondeterministic()
+# the array feeds a Generate. A separate UDF instance, because
+# asNondeterministic() marks the instance it is called on.
+extract_links_once = pandas_udf(
+    extract_links.func, extract_links.returnType
+).asNondeterministic()
 
 
 @pandas_udf(StringType())

@@ -21,13 +21,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from ..functions.extract import extract_anchors
 
 # non-deterministic marking: stops InferFiltersFromGenerate from
 # duplicating the Arrow extraction below the explode (guide §4.4 —
-# same fix as functions.extract.extract_links_once)
-_extract_anchors_once = extract_anchors.asNondeterministic()
+# same fix as functions.extract.extract_links_once), on its own UDF
+# instance so extract_anchors stays deterministic
+_extract_anchors_once = pandas_udf(
+    extract_anchors.func, extract_anchors.returnType
+).asNondeterministic()
 
 
 def anchor_text_terms(pages: DataFrame) -> DataFrame:

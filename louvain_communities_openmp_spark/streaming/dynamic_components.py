@@ -81,16 +81,19 @@ class DynamicComponents:
         cv = self.latest_comp_version()
         if cv is not None and cv >= v:
             return None
-        edges = self.store.load(v).persist()
         warm = cv is not None and self._chain_insert_only(cv, v)
         init = self.load_components(cv) if warm else None
         mode = "warm" if init is not None else "cold"
         t0 = time.time()
-        res = connected_components(edges, initial_components=init)
         d = self._vdir(v)
-        res.components.write.mode("overwrite").parquet(
-            os.path.join(d, "components")
-        )
+        edges = self.store.load(v).persist()
+        try:
+            res = connected_components(edges, initial_components=init)
+            res.components.write.mode("overwrite").parquet(
+                os.path.join(d, "components")
+            )
+        finally:
+            edges.unpersist()
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {
@@ -102,5 +105,4 @@ class DynamicComponents:
                 },
                 f,
             )
-        edges.unpersist()
         return v, res, mode

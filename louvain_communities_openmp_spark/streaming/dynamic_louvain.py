@@ -75,7 +75,6 @@ class DynamicLouvain:
         mv = self.latest_membership_version()
         if mv is not None and mv >= v:
             return None
-        edges = self.store.load(v).persist()
         init = self.load_membership(mv) if mv is not None else None
         aff = None
         if init is not None:
@@ -94,11 +93,15 @@ class DynamicLouvain:
             self.opts, initial_membership=init, affected_vertices=aff
         )
         t0 = time.time()
-        res = louvain(edges, opts)
         d = self._vdir(v)
-        res.membership.write.mode("overwrite").parquet(
-            os.path.join(d, "membership")
-        )
+        edges = self.store.load(v).persist()
+        try:
+            res = louvain(edges, opts)
+            res.membership.write.mode("overwrite").parquet(
+                os.path.join(d, "membership")
+            )
+        finally:
+            edges.unpersist()
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {
@@ -117,5 +120,4 @@ class DynamicLouvain:
                 },
                 f,
             )
-        edges.unpersist()
         return v, res

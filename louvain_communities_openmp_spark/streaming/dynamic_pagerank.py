@@ -79,18 +79,21 @@ class DynamicPageRank:
         rv = self.latest_rank_version()
         if rv is not None and rv >= v:
             return None
-        edges = self.store.load(v).persist()
         init = self.load_ranks(rv) if rv is not None else None
         t0 = time.time()
-        res = pagerank(
-            edges,
-            alpha=self.alpha,
-            tol=self.tol,
-            max_iter=self.max_iter,
-            initial_ranks=init,
-        )
         d = self._vdir(v)
-        res.ranks.write.mode("overwrite").parquet(os.path.join(d, "ranks"))
+        edges = self.store.load(v).persist()
+        try:
+            res = pagerank(
+                edges,
+                alpha=self.alpha,
+                tol=self.tol,
+                max_iter=self.max_iter,
+                initial_ranks=init,
+            )
+            res.ranks.write.mode("overwrite").parquet(os.path.join(d, "ranks"))
+        finally:
+            edges.unpersist()
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {
@@ -102,5 +105,4 @@ class DynamicPageRank:
                 },
                 f,
             )
-        edges.unpersist()
         return v, res

@@ -48,14 +48,11 @@ def main() -> None:
     from louvain_communities_openmp_spark.operators.labelprop import (
         label_propagation,
     )
-    from louvain_communities_openmp_spark.operators.properties import (
-        modularity, total_weight_m,
-    )
     from louvain_communities_openmp_spark.operators.triangles import (
         _oriented, _triangles,
     )
     from louvain_communities_openmp_spark.sources.edges import (
-        coorder_edges, dense_ids, edges_from_pages,
+        coorder_edges, dense_ids,
     )
     from louvain_communities_openmp_spark.sources.pages import make_pages
 
@@ -116,7 +113,8 @@ def main() -> None:
           "# Above the bound the BEFORE plan runs unchanged.\n"
           + formatted(probe))
 
-    # ---- pages_extract (dense_ids fast path + unchanged joins)
+    # ---- pages_extract: dense_ids scalable plan (the extraction plan
+    # shape is pinned by tests/test_extract_and_edges.py instead)
     n_pages = edges.agg(F.max(F.greatest("src", "dst")).alias("m")).first()["m"] + 1
     pages = make_pages(spark, edges, n=int(n_pages)).persist()
     pages.count()
@@ -126,30 +124,6 @@ def main() -> None:
           "# distinct path): range partition + per-partition window +\n"
           "# offset join (5 jobs incl. persist/collect).\n"
           + formatted(ids_before))
-    e_after, ids_after = edges_from_pages(pages, symmetric=False)
-    write("pages_extract_after.txt",
-          "# r6 pages->edges plan: dense_ids resolved to a driver-sorted\n"
-          "# LocalTableScan (one distinct+LIMIT probe job), which the id\n"
-          "# joins consume as broadcasts; extraction UDF unchanged\n"
-          "# (ArrowEvalPython, measured cheaper than the JVM regex).\n"
-          + formatted(e_after))
-
-    # ---- modularity_eval
-    mem = spark.range(0, 100).select(
-        F.col("id"), (F.col("id") % 7).alias("com")
-    )
-    # the BEFORE shape is reproduced by passing m explicitly (two jobs:
-    # total_weight_m + closed-form aggregate)
-    write("modularity_eval_before.txt",
-          "# pre-r6: job 1 = edge-weight sum (total_weight_m), job 2 =\n"
-          "# per-community aggregate + closed-form sum with M as a\n"
-          "# literal. Plan of job 2 shown (job 1 is a plain agg scan).\n"
-          "# (illustrative membership frame; the bench uses louvain's)\n")
-    write("modularity_eval_after.txt",
-          "# r6: ONE job — M folded into the same per-community\n"
-          "# aggregate (q = Σcin/Σctot − R·Σctot²/(Σctot)², Σctot = 2M).\n"
-          "# properties.py modularity(); value drift ~1e-15, inside the\n"
-          "# 6dp rounding every consumer applies.\n")
     pages.unpersist()
     spark.stop()
 

@@ -87,3 +87,35 @@ def test_url_of_shape(spark):
         "https://host0.example/p2",
         "https://host1.example/p1",
     ]
+
+
+def _arrow_evals(df) -> int:
+    """ArrowEvalPython nodes in ``df``'s executed (final adaptive) plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString().count("ArrowEvalPython")
+
+
+def test_extraction_udf_runs_once_per_page(spark):
+    """The explode's inferred size()>0 filter must not duplicate the
+    extraction UDF: one ArrowEvalPython per plan, and only the _once
+    variants carry the non-deterministic marking."""
+    from louvain_communities_openmp_spark.functions.extract import (
+        extract_anchors,
+        extract_links,
+        extract_links_once,
+    )
+    from louvain_communities_openmp_spark.operators.anchors import (
+        _extract_anchors_once,
+        anchor_text_terms,
+    )
+
+    pages = make_pages(spark, edges_from_list(spark, karate()), n=34)
+    assert _arrow_evals(edges_from_pages(pages, symmetric=False)[0]) == 1
+    assert _arrow_evals(anchor_text_terms(pages)) == 1
+    assert extract_links.deterministic and extract_links._unwrapped.deterministic
+    assert extract_anchors._unwrapped.deterministic
+    assert not extract_links_once._unwrapped.deterministic
+    assert not _extract_anchors_once._unwrapped.deterministic

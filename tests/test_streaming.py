@@ -5,6 +5,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from louvain_communities_openmp_spark.operators.transforms import apply_batch
 from louvain_communities_openmp_spark.oracle import toy5
 from louvain_communities_openmp_spark.sources.edges import edges_from_list
 from louvain_communities_openmp_spark.streaming.edge_stream import (
@@ -41,6 +42,87 @@ def test_apply_delta_batch_symmetric(spark, tmp_path):
     apply_delta_batch(store, deltas2, 2)
     got2 = {(r["src"], r["dst"]): r["w"] for r in store.load().collect()}
     assert got2[(0, 1)] == 1.0
+
+
+def _apply_by_snapshot_plan(store, batch, batch_id):
+    """The multi-pass composition apply_delta_batch replaced: the
+    insertion tidy anti-joins the full snapshot, and every action
+    (count, snapshot write, affected write) reruns that plan."""
+    edges = store.load()
+    dels = batch.where(F.col("op") == "del").select("src", "dst")
+    ins = batch.where(F.col("op") == "ins").select("src", "dst", "w")
+    dels = dels.unionByName(
+        dels.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    ins = (
+        ins.unionByName(
+            ins.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+        .groupBy("src", "dst")
+        .agg(F.max("w").alias("w"))
+        .join(edges.select("src", "dst"), ["src", "dst"], "left_anti")
+    )
+    new_edges = apply_batch(edges, dels, ins)
+    affected = (
+        dels.select(F.col("src").alias("id"))
+        .unionByName(dels.select(F.col("dst").alias("id")))
+        .unionByName(ins.select(F.col("src").alias("id")))
+        .unionByName(ins.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    return store.commit(
+        new_edges, batch_id, {"edges": new_edges.count(), "n_dels": dels.count()},
+        affected=affected,
+    )
+
+
+def test_apply_delta_batch_matches_snapshot_plan_and_releases_caches(spark, tmp_path):
+    # toy5 plus a duplicate 2->3 row, which the apply's sum collapses
+    e0 = edges_from_list(spark, toy5() + [(2, 3, 0.5)])
+    batch = spark.createDataFrame(
+        [
+            ("ins", 0, 1, 9.0),  # existing pair, other weight: old weight stays
+            ("ins", 3, 4, 7.0),  # insert + delete of an existing pair
+            ("del", 4, 3, 1.0),
+            ("ins", 1, 3, 2.0),  # insert + delete of a new pair: deletes
+            ("del", 1, 3, 1.0),  # apply first, so the insert lands
+            ("ins", 0, 4, 2.0),  # duplicate inserts, both directions: max wins
+            ("ins", 4, 0, 3.0),
+            ("ins", 0, 4, 1.5),
+            ("del", 0, 3, 1.0),  # delete of an absent pair
+        ],
+        DELTA_SCHEMA,
+    )
+    stores = []
+    for name in ("one_pass", "snapshot_plan"):
+        store = EdgeStateStore(spark, str(tmp_path / name))
+        store.commit(e0, 0, {"edges": 13})
+        stores.append(store)
+    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+    v = apply_delta_batch(stores[0], batch, 1)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
+    assert _apply_by_snapshot_plan(stores[1], batch, 1) == v == 1
+
+    def rows(store):
+        return sorted(tuple(r) for r in store.load(v).collect())
+
+    def affected(store):
+        return sorted(r["id"] for r in store.load_affected(v).collect())
+
+    def meta(store):
+        m = store.commit_meta(v)
+        return m["edges"], m["n_dels"]
+
+    got, want = stores
+    assert rows(got) == rows(want)
+    assert affected(got) == affected(want)
+    assert meta(got) == meta(want) == (got.load(v).count(), 6)
+    snap = {(s, d): w for s, d, w in rows(got)}
+    assert snap[(0, 1)] == snap[(1, 0)] == 1.0
+    assert snap[(0, 4)] == snap[(4, 0)] == 3.0
+    assert snap[(2, 3)] == 1.5
+    assert snap[(1, 3)] == snap[(3, 1)] == 2.0
+    assert (3, 4) not in snap and (4, 3) not in snap
 
 
 def test_streaming_drain(spark, tmp_path):
