@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from contextlib import contextmanager
 
 
 def _sentinel() -> float:
@@ -22,6 +23,19 @@ def _sentinel() -> float:
     t0 = time.time()
     np.sort(a)
     return round(time.time() - t0, 3)
+
+
+@contextmanager
+def _forced_dist():
+    """Run the distributed rounds: serial-finish bound patched to 0."""
+    from louvain_communities_openmp_spark.operators import serial
+
+    saved = serial.SERIAL_EDGES
+    serial.SERIAL_EDGES = 0
+    try:
+        yield
+    finally:
+        serial.SERIAL_EDGES = saved
 
 
 def main() -> None:
@@ -70,18 +84,18 @@ def main() -> None:
             edges, LouvainOptions(mode="dist", max_passes=1)
         ),
         "components": lambda: connected_components(edges).components.count(),
-        "components_forced_dist": lambda: connected_components(
-            edges, small_graph_edges=0
-        ).components.count(),
+        "components_forced_dist": _forced_dist()(
+            lambda: connected_components(edges).components.count()
+        ),
         "labelprop4": lambda: label_propagation(
             edges, max_iter=4
         ).labels.count(),
-        "labelprop4_forced_dist": lambda: label_propagation(
-            edges, max_iter=4, small_graph_edges=0
-        ).labels.count(),
+        "labelprop4_forced_dist": _forced_dist()(
+            lambda: label_propagation(edges, max_iter=4).labels.count()
+        ),
         "triangles": lambda: triangle_count_total(edges),
-        "triangles_forced_dist": lambda: triangle_count_total(
-            edges, small_graph_edges=0
+        "triangles_forced_dist": _forced_dist()(
+            lambda: triangle_count_total(edges)
         ),
         "pages_extract": lambda: edges_from_pages(pages, symmetric=False)[
             0

@@ -28,6 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
@@ -83,9 +84,7 @@ def _components_local(
 def connected_components(
     edges: DataFrame,
     max_iter: int = 200,
-    broadcast_vertices: int = 5_000_000,
     initial_components: DataFrame | None = None,
-    small_graph_edges: int = 4_000_000,
 ) -> ComponentsResult:
     """``initial_components`` (id, comp) warm-starts the label arrays —
     valid whenever the provided labels are a REFINEMENT upper bound of
@@ -97,8 +96,8 @@ def connected_components(
     Vertices absent from the frame seed as singletons."""
     # serial finish under the bound (operators/serial.py); above it
     # the distributed rounds below run unchanged
-    if initial_components is None and small_graph_edges > 0:
-        local = _components_local(edges, small_graph_edges, max_iter)
+    if initial_components is None:
+        local = _components_local(edges, serial.SERIAL_EDGES, max_iter)
         if local is not None:
             return local
     # Two regimes, same answer (see labelprop.py for the full rationale):
@@ -109,7 +108,7 @@ def connected_components(
     #   only the vertex-sized frontier and the map-side-combined min
     #   aggregate move per round.
     verts = vertices(edges)
-    use_bc = verts.count() <= broadcast_vertices
+    use_bc = verts.count() <= serial.BROADCAST_VERTICES
     e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))

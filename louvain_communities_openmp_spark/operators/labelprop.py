@@ -18,6 +18,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
@@ -111,43 +112,62 @@ def _labelprop_rounds_numpy(sp, dp, w, lab, max_iter: int) -> int:
     return it
 
 
-def label_propagation(
-    edges: DataFrame,
-    max_iter: int = 10,
-    broadcast_vertices: int = 5_000_000,
-    debug_plans: list | None = None,
-    small_graph_edges: int = 4_000_000,
-) -> LabelPropResult:
+def _round(e: DataFrame, labels: DataFrame, use_bc: bool) -> DataFrame:
+    """One synchronous round's new labels (id, new_label) for every
+    vertex with a non-loop out-edge in ``e``, the static edge table
+    ``label_propagation`` partitions and caches once."""
+    nbr = labels.select(
+        F.col("id").alias("dst"), F.col("label").alias("nl")
+    )
+    scored = (
+        e.join(F.broadcast(nbr) if use_bc else nbr, "dst")
+        .groupBy("src", "nl")
+        .agg(F.sum("w").alias("wt"))
+    )
+    # argmax with (max wt, min label) tie-break: max_by on a struct
+    # ordered by (wt, -nl) — deterministic (reference-style first-max
+    # made order-free, SURVEY §7.3 / louvain.hxx:454-464 analog)
+    return scored.groupBy(F.col("src").alias("id")).agg(
+        F.max_by("nl", F.struct(F.col("wt"), (-F.col("nl")).alias("neg"))).alias("new_label")
+    )
+
+
+def _static_edges(edges: DataFrame, use_bc: bool) -> DataFrame:
+    """The per-round edge table, self-loops dropped, partitioned for
+    the regime (see label_propagation) and persisted."""
+    return (
+        edges.select("src", "dst", "w")
+        .where(F.col("src") != F.col("dst"))
+        .repartition("src" if use_bc else "dst")
+        .persist()
+    )
+
+
+def label_propagation(edges: DataFrame, max_iter: int = 10) -> LabelPropResult:
     # Two regimes, same answer (gate mirrors Louvain's broadcast_vertices):
     #
-    # - V ≤ broadcast_vertices: partition the static edge table on the
+    # - V ≤ BROADCAST_VERTICES: partition the static edge table on the
     #   AGGREGATION key (src) and BROADCAST the vertex-sized labels
     #   frame into the dst join. The round is then exchange-FREE: the
     #   broadcast join preserves e's src partitioning, which satisfies
     #   both groupBy(src, nl) and groupBy(src) downstream — without the
     #   broadcast, the post-join groupBy(src, nl) re-shuffles the
     #   edge-sized scored table every round (map-side combine can't
-    #   collapse it while neighbor labels are still diverse).
-    # - V > broadcast_vertices (the 100 TB regime): labels can't ship
+    #   collapse it while neighbor labels are still diverse). Pinned by
+    #   tests/test_companions.py over ``_round``.
+    # - V > BROADCAST_VERTICES (the 100 TB regime): labels can't ship
     #   to every executor; partition e on the JOIN key (dst) so the
     #   per-round exchange is the vertex-sized labels frame plus the
     #   map-side-combined scored aggregate.
     #
     # Before either: the measured-optimal serial finish under the same
-    # edge bound as louvain.py (debug_plans forces the distributed
-    # rounds — that hook exists to pin their plan shape).
-    if debug_plans is None and small_graph_edges > 0:
-        local = _labelprop_local(edges, small_graph_edges, max_iter)
-        if local is not None:
-            return local
+    # edge bound as louvain.py (operators/serial.py).
+    local = _labelprop_local(edges, serial.SERIAL_EDGES, max_iter)
+    if local is not None:
+        return local
     verts = vertices(edges)
-    use_bc = verts.count() <= broadcast_vertices
-    e = (
-        edges.select("src", "dst", "w")
-        .where(F.col("src") != F.col("dst"))
-        .repartition("src" if use_bc else "dst")
-        .persist()
-    )
+    use_bc = verts.count() <= serial.BROADCAST_VERTICES
+    e = _static_edges(edges, use_bc)
     # eager localCheckpoint per round: truncates lineage AND avoids the
     # unpersist-cascade (unpersisting a parent invalidates caches built
     # on it, which silently re-runs the whole chain on later rounds)
@@ -158,28 +178,7 @@ def label_propagation(
     )
     it = 0
     while it < max_iter:
-        nbr = labels.select(
-            F.col("id").alias("dst"), F.col("label").alias("nl")
-        )
-        scored = (
-            e.join(F.broadcast(nbr) if use_bc else nbr, "dst")
-            .groupBy("src", "nl")
-            .agg(F.sum("w").alias("wt"))
-        )
-        # argmax with (max wt, min label) tie-break: max_by on a struct
-        # ordered by (wt, -nl) — deterministic (reference-style first-max
-        # made order-free, SURVEY §7.3 / louvain.hxx:454-464 analog)
-        best = scored.groupBy(F.col("src").alias("id")).agg(
-            F.max_by("nl", F.struct(F.col("wt"), (-F.col("nl")).alias("neg"))).alias("new_label")
-        )
-        if debug_plans is not None:
-            # test hook: execute the round body standalone and record
-            # its physical plan so the exchange-free property of the
-            # broadcast regime stays pinned by pytest
-            best.count()
-            debug_plans.append(
-                best._jdf.queryExecution().executedPlan().toString()
-            )
+        best = _round(e, labels, use_bc)
         merged = (
             labels.join(best, "id", "left")
             .select(

@@ -3,13 +3,13 @@
 Re-expresses the reference's algorithm (louvain.hxx) as iterative
 DataFrame super-steps + a CSR-blocked vectorized kernel. Two modes:
 
-- ``exact``: the *sequential reference semantics* end-to-end. The edge
-  table flows through a single-partition ``mapInPandas`` kernel that
-  runs the faithful oracle (ascending-id sweep, immediate updates,
-  first-max tie-break, community-0 quirk — oracle/louvain_seq.py, each
-  rule cited to louvain.hxx there). Distributed plumbing, sequential
-  semantics — this is the test-scale mode that satisfies "community
-  assignments exact vs the reference's sequential Louvain".
+- ``exact``: the *sequential reference semantics* end-to-end: the
+  serial finish below on the whole input, with no size bound — one
+  Arrow collect, the ``edge_csr`` prologue (operators/serial.py) and
+  the faithful oracle (ascending-id sweep, immediate updates, first-max
+  tie-break, community-0 quirk — oracle/louvain_seq.py, each rule cited
+  to louvain.hxx there). This is the test-scale mode that satisfies
+  "community assignments exact vs the reference's sequential Louvain".
 
 - ``dist``: the scale mode (the analog of louvainMoveOmpW,
   louvain.hxx:587-609). The edge table is hash-bucketed by src once
@@ -33,10 +33,10 @@ DataFrame super-steps + a CSR-blocked vectorized kernel. Two modes:
   ascending-community order (louvain.hxx:923-928), dendrogram flatten
   via one hash join per pass (louvain.hxx:825-829).
 
-- ``auto``: dist passes while the graph is large, then finishes with
-  the exact kernel once the coarsened graph fits comfortably in one
-  task (the reference itself swaps graph representations between
-  passes, louvain.hxx:1174-1176).
+- ``auto``: dist passes while the graph is large, then the same serial
+  finish once the coarsened graph is at most ``serial.SERIAL_EDGES``
+  directed edges (the reference itself swaps graph representations
+  between passes, louvain.hxx:1174-1176).
 
 Every pass checkpoints coarsened edges + flattened membership +
 metrics/lineage to a RunDir, so any pass is resumable (north rule).
@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -54,9 +54,10 @@ from pyspark.sql import functions as F
 
 from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
+from . import serial
 from .properties import modularity as modularity_op
 from .properties import total_weight_m, vertex_weights
-from .serial import collect_columns, edge_csr
+from .serial import collect_bounded, collect_columns, edge_csr
 
 
 @dataclass
@@ -78,30 +79,12 @@ class LouvainOptions:
     # asynchrony converges like the sequential reference instead of
     # oscillating through gated synchronous rounds.
     block_vertices: int = 2048
-    # auto mode: at or below this many (directed) edges the coarsened
-    # remainder is solved in the driver with the vectorized sequential
-    # kernel (~50 MB of arrays at the default) — the analog of the
-    # reference's representation swap between passes
-    # (louvain.hxx:1174-1176). Pass 0 of any at-scale graph stays
-    # distributed; only the contracted tail collapses inward.
-    # Threshold picked by measurement (scripts/sweep_small_graph.py,
-    # sf0.1 = 2.7M directed edges, interleaved min-of-2, see
-    # SWEEP_SMALL_GRAPH.json): 4M (all-serial at this size) → 17.3s
-    # total; 2M → 24.4s; 1M/500k/200k → 33-36s. The dict-walk serial
-    # kernel runs ~1µs/edge, so a 4M-edge remainder costs ~4s in the
-    # driver while distributed rounds on the same remainder cost
-    # ~1-2s per iteration × tens of iterations — the crossover the
-    # round-3 verdict asked to lower actually sits HIGHER than the
-    # old default. At 100 TB pass 0 stays distributed regardless
-    # (edges ≫ threshold); this only controls when the contracted
-    # tail (≤ ~100 MB as arrays) collapses into the driver, the
-    # analog of the reference's representation swap.
-    small_graph_edges: int = 4_000_000
     # broadcast membership/vtot/ctot into the annotation joins while
     # the vertex count is at most this (~20 bytes/row ⇒ ≲100 MB
     # broadcast); larger graphs fall back to co-partitioned shuffle
-    # joins. Coarsened passes always qualify.
-    broadcast_vertices: int = 5_000_000
+    # joins. Coarsened passes always qualify. Warm-start frames are
+    # collected under the same bound.
+    broadcast_vertices: int = serial.BROADCAST_VERTICES
     run_dir: str | None = None
     resume: bool = False
     # dynamic/warm-start Louvain (L10): seed pass-0 membership from a
@@ -156,48 +139,13 @@ _EMPTY_OWNED = pd.DataFrame(
 )
 
 
-def _exact_kernel_factory(opts: LouvainOptions):
-    res, tol, drop = opts.resolution, opts.tolerance, opts.tolerance_drop
-    li, lp, at = opts.max_iterations, opts.max_passes, opts.aggregation_tolerance
-
-    def kernel(batches):
-        import numpy as np
-
-        pdf = pd.concat(list(batches), ignore_index=True)
-        if len(pdf) == 0:
-            yield pd.DataFrame(
-                {"id": pd.Series(dtype="int64"), "com": pd.Series(dtype="int64")}
-            )
-            return
-        # order-preserving dense remap: identical indexing to the
-        # reference on already-dense inputs
-        g = edge_csr(pdf["src"].to_numpy(dtype=np.int64),
-                     pdf["dst"].to_numpy(dtype=np.int64), sort=False)
-        r = louvain_seq_fast(
-            g.src, g.dst, pdf["w"].to_numpy(dtype=np.float64),
-            resolution=res, tolerance=tol, tolerance_drop=drop,
-            max_iterations=li, max_passes=lp, aggregation_tolerance=at,
-        )
-        yield pd.DataFrame(
-            {"id": g.ids, "com": np.asarray(r.membership, dtype="int64")}
-        )
-
-    return kernel
-
-
 def louvain_exact(edges: DataFrame, opts: LouvainOptions | None = None) -> DataFrame:
-    """Sequential-reference-semantics Louvain through distributed plumbing.
-
-    Ids need not be dense: the kernel remaps through ascending-id order
-    (order-preserving, so on dense inputs it is bit-identical to the
-    reference's indexing). Returned community ids are dense ranks.
-    """
-    opts = opts or LouvainOptions()
-    return (
-        edges.select("src", "dst", "w")
-        .repartition(1)
-        .mapInPandas(_exact_kernel_factory(opts), MEMBERSHIP_SCHEMA)
-    )
+    """Sequential-reference-semantics Louvain membership: ``louvain`` in
+    ``mode="exact"``. Ids need not be dense: the kernel remaps through
+    ascending-id order (order-preserving, so on dense inputs it is
+    bit-identical to the reference's indexing). Returned community ids
+    are dense ranks."""
+    return louvain(edges, replace(opts or LouvainOptions(), mode="exact")).membership
 
 
 def _mix64(x: int) -> int:
@@ -831,19 +779,73 @@ def _file_state_kernel_factory(
     return kernel
 
 
+def _block_caches(spark) -> bool:
+    """Whether the dist rounds read their edges from per-pass npz block
+    caches (_write_block_cache, _write_raw_block_cache). Only in local
+    mode, where every task shares the driver's filesystem; a cluster
+    runs the cluster-shaped kernels (_bcast_state_kernel_factory,
+    _cogroup_kernel_factory) instead."""
+    return spark.sparkContext.master.startswith("local")
+
+
+def _warm_start(ids, opts: LouvainOptions):
+    """(labels, frontier) for the ascending vertex ids ``ids`` from
+    ``opts.initial_membership`` and ``opts.affected_vertices``
+    (louvainInitializeFromW, louvain.hxx:305-318; frontier-seeded
+    DYNAMIC marking, louvain.hxx:305-389 + 1009).
+
+    Provided labels are kept as int64 values. Vertices the membership
+    does not mention get FRESH singleton labels max + 1 + arange in
+    ascending-id order (over the provided labels of this vertex set):
+    own-id labels would collide with provided labels and silently merge
+    the vertex into an unrelated community. The frontier is a mask of
+    the affected ids present here (ids outside the vertex set cannot be
+    scanned), or None without ``affected_vertices``. Both frames are
+    collected under ``opts.broadcast_vertices`` rows; over it this
+    raises ValueError."""
+    import numpy as np
+
+    n = len(ids)
+
+    def matched(df, cols):
+        arrs = collect_bounded(df, cols, opts.broadcast_vertices)
+        if arrs is None:
+            raise ValueError(
+                f"louvain warm start: more than {opts.broadcast_vertices} "
+                f"rows of ({', '.join(cols)}) to collect"
+            )
+        pos = np.searchsorted(ids, arrs[0])
+        ok = (pos < n) & (ids[np.minimum(pos, n - 1)] == arrs[0])
+        return pos[ok], [a[ok] for a in arrs[1:]]
+
+    pos, (prov,) = matched(opts.initial_membership, ["id", "com"])
+    com = np.empty(n, dtype=np.int64)
+    com[pos] = prov
+    absent = np.ones(n, dtype=bool)
+    absent[pos] = False
+    base = int(prov.max()) + 1 if len(prov) else 0
+    com[absent] = base + np.arange(int(absent.sum()), dtype=np.int64)
+    if opts.affected_vertices is None:
+        return com, None
+    pos, _ = matched(opts.affected_vertices, ["id"])
+    aff = np.zeros(n, dtype=bool)
+    aff[pos] = True
+    return com, aff
+
+
 def _driver_rounds(
     spark,
     edges_b: DataFrame,
-    vtot_pdf: pd.DataFrame,
-    initial_membership: DataFrame | None,
+    ids,
+    vt,
+    warm: bool,
     opts: LouvainOptions,
     m_total: float,
     E: float,
     gate: int,
     p: int,
     dbg,
-    blocks_pass: int = 0,
-    affected: DataFrame | None = None,
+    blocks_pass: int,
 ):
     """Local-move iterations with the vertex state held on the DRIVER
     as numpy arrays — the Spark analog of the reference's shared
@@ -864,52 +866,27 @@ def _driver_rounds(
     Only used while V ≤ ``broadcast_vertices`` (default 5M ⇒ ~200 MB
     of driver state — the same bound the broadcast-join formulation
     had); above that the cogroup/routing path takes over and nothing
-    vertex-sized ever materializes on the driver.
+    vertex-sized ever materializes on the driver. ``ids``/``vt`` are
+    the collected vtot frame; ``warm`` seeds pass 0 (_warm_start).
 
     Returns (membership DataFrame, iterations, Σ gains, #communities,
     per-round wall times — the localMove phase split, main.cxx:70-76).
     """
     import numpy as np
 
-    order = np.argsort(vtot_pdf["id"].to_numpy(), kind="stable")
-    ids = vtot_pdf["id"].to_numpy(dtype=np.int64)[order]
-    vt = vtot_pdf["vtot"].to_numpy(dtype=np.float64)[order]
+    order = np.argsort(ids, kind="stable")
+    ids, vt = ids[order], vt[order]
     n = len(ids)
-    if initial_membership is not None:
-        # warm start (louvainInitializeFromW, louvain.hxx:305-318):
-        # provided membership, absent vertices as singletons; ctot is
-        # re-accumulated from the CURRENT vtot every round
+    vaff = None
+    if warm:
+        # ctot is re-accumulated from the CURRENT vtot every round
         # (louvainUpdateWeightsFromU semantics, louvain.hxx:330-389)
-        im = initial_membership.select("id", "com").toPandas()
-        iid = im["id"].to_numpy(dtype=np.int64)
-        pos = np.searchsorted(ids, iid)
-        ok = (pos < n) & (ids[np.minimum(pos, n - 1)] == iid)
-        com = np.full(n, -1, dtype=np.int64)
-        prov = im["com"].to_numpy(dtype=np.int64)[ok]
-        com[pos[ok]] = prov
-        # absent vertices: FRESH singleton labels outside the provided
-        # range (mirrors the local-finish remap above; own-id labels
-        # would collide with dense-renumbered provided labels and
-        # silently merge the vertex into an unrelated community)
-        absent = com < 0
-        base = int(prov.max()) + 1 if len(prov) else 0
-        com[absent] = base + np.arange(int(absent.sum()), dtype=np.int64)
+        com, vaff = _warm_start(ids, opts)
         clab = np.unique(com)
     else:
         com = ids.copy()  # init singletons (louvain.hxx:621)
         clab = ids
-    if affected is not None and initial_membership is not None:
-        # frontier-seeded DYNAMIC marking (louvain.hxx:305-389 +
-        # DYNAMIC louvain.hxx:1009): only endpoints of changed edges
-        # start marked; the kernel flags neighbors of any move, so the
-        # frontier grows exactly where communities actually shift. A
-        # cold start must flood (no membership to trust elsewhere).
-        av = affected.select("id").toPandas()["id"].to_numpy(dtype=np.int64)
-        pos = np.searchsorted(ids, av)
-        ok = (pos < n) & (ids[np.minimum(pos, n - 1)] == av)
-        vaff = np.zeros(n, dtype=bool)
-        vaff[pos[ok]] = True
-    else:
+    if vaff is None:
         vaff = np.ones(n, dtype=bool)  # all marked (static fm)
     processed = 0  # vertex scans performed — DYNAMIC work metric
     iters = 0
@@ -924,7 +901,7 @@ def _driver_rounds(
     # cross the JVM→Python boundary again this pass
     cache_dir = None
     idx_df = None
-    if blocks_pass and sc.master.startswith("local"):
+    if _block_caches(spark):
         import tempfile
 
         cache_dir = tempfile.mkdtemp(prefix="louvain_blocks_")
@@ -1241,6 +1218,76 @@ def _compose(ucom: DataFrame | None, mem: DataFrame) -> DataFrame:
     return ucom.join(lvl, "com").select("id", F.col("_c2").alias("com"))
 
 
+def _serial_finish(
+    edges: DataFrame, opts: LouvainOptions, p: int = 0, warm: bool = False
+) -> LouvainResult:
+    """Solve ``edges`` on the driver with the sequential kernel from
+    pass ``p`` on — the analog of the reference's representation swap
+    (louvain.hxx:1174-1176). ``mode="exact"`` runs it on the whole
+    input; auto runs it once a pass's graph is within
+    ``serial.SERIAL_EDGES``. ``warm`` seeds pass 0 from the warm-start
+    fields (_warm_start). The membership is over the ids of ``edges``
+    and the modularity is its Q over ``edges``; an empty or zero-weight
+    graph returns an empty result with an empty pass_log."""
+    import numpy as np
+
+    t0 = time.time()
+    spark = edges.sparkSession
+    # plain Arrow-direct collect (no distributed orderBy: the range
+    # exchange + its sampling pass cost more than the driver-side O(E)
+    # prologue at the ≤4M-edge bound)
+    arrs = collect_columns(edges, ["src", "dst", "w"])
+    if len(arrs[0]) == 0 or float(arrs[2].sum()) <= 0.0:
+        return LouvainResult(
+            spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
+        )
+    g = edge_csr(*arrs)
+    init_com = init_aff = None
+    if warm:
+        com, aff = _warm_start(g.ids, opts)
+        # the kernel takes dense labels: provided labels in value
+        # order, then the fresh singletons in ascending-id order
+        init_com = np.unique(com, return_inverse=True)[1]
+        if aff is not None:
+            init_aff = np.flatnonzero(aff)
+    r = louvain_seq_fast(
+        g.src,
+        g.dst,
+        g.w,
+        resolution=opts.resolution,
+        tolerance=opts.tolerance / (opts.tolerance_drop ** p),
+        tolerance_drop=opts.tolerance_drop,
+        max_iterations=opts.max_iterations,
+        max_passes=opts.max_passes - p,
+        aggregation_tolerance=opts.aggregation_tolerance,
+        init_com=init_com,
+        init_aff=init_aff,
+    )
+    com = np.asarray(r.membership, dtype=np.int64)
+    mem = spark.createDataFrame(
+        pd.DataFrame({"id": g.ids, "com": com}), MEMBERSHIP_SCHEMA
+    )
+    # Q as a driver-side aggregate over the arrays already in hand (the
+    # modularity_op formula; summation-order drift is ~1e-15, six orders
+    # inside the g_louvain twin's 1e-9 gate), instead of the membership
+    # double-join + aggregate job
+    cu = com[g.src]
+    same = cu == com[g.dst]
+    two_m = float(g.w.sum())
+    cin = np.bincount(cu[same], weights=g.w[same], minlength=len(g.ids))
+    ctot = np.bincount(cu, weights=g.w, minlength=len(g.ids))
+    q = float((cin / two_m - opts.resolution * (ctot / two_m) ** 2).sum())
+    return LouvainResult(mem, q, r.passes, r.iterations, [{
+        "pass": p, "mode": "local_finish", "edges": len(arrs[0]),
+        "local_passes": r.passes,
+        # vertex scans actually performed across the serial passes —
+        # the work metric frontier-seeded marking (affected_vertices)
+        # is judged by
+        "processed": sum(e.get("processed", 0) for e in r.pass_log),
+        "t_local": round(time.time() - t0, 3),
+    }])
+
+
 def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResult:
     """Run Louvain over a symmetric edge DataFrame (src, dst, w).
 
@@ -1252,9 +1299,9 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     opts = opts or LouvainOptions()
     spark = edges.sparkSession
     if opts.mode == "exact":
-        mem = louvain_exact(edges, opts).persist()
-        q = modularity_op(edges, mem, opts.resolution)
-        return LouvainResult(mem, q, -1, -1, [{"mode": "exact"}])
+        res = _serial_finish(edges, opts)
+        res.membership.persist().count()
+        return res
 
     run = RunDir(opts.run_dir) if opts.run_dir else None
     num_blocks = opts.num_blocks or max(
@@ -1292,134 +1339,40 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         E = opts.tolerance / (opts.tolerance_drop ** p)
         n_edges = edges.count()
         # ---- auto fast path: solve the coarsened remainder in the
-        # driver with the vectorized sequential kernel (reference
-        # semantics; no per-iteration Spark round-trips)
-        if opts.mode == "auto" and n_edges <= opts.small_graph_edges:
-            import numpy as np
-
-            t0 = time.time()
-            # plain Arrow-direct collect (no distributed orderBy: the
-            # range exchange + its sampling pass cost more than the
-            # driver-side O(E) prologue at the ≤4M-edge bound). The
-            # count, not a LIMIT probe, decides: over the bound a probe
-            # would move bound + 1 rows to the driver only to drop them
-            arrs = collect_columns(edges, ["src", "dst", "w"])
-            if n_edges == 0 or float(arrs[2].sum()) <= 0.0:
-                # empty/zero-weight graph: the old m_total <= 0 contract
-                return LouvainResult(
-                    spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
-                )
-            g = edge_csr(*arrs)
-            ids, pos_s, pos_d, w_arr = g.ids, g.src, g.dst, g.w
-            init_arr = None
-            init_aff_arr = None
-            if p == 0 and opts.initial_membership is not None:
-                # warm start collapsing straight into the local finish:
-                # dense-remap provided labels, missing vertices become
-                # fresh singleton labels after the provided range
-                im = opts.initial_membership.select("id", "com").toPandas()
-                prov = (
-                    pd.Series(im["com"].values, index=im["id"].values)
-                    .reindex(ids)
-                    .to_numpy(dtype="float64")
-                )
-                have = ~np.isnan(prov)
-                dense = np.unique(prov[have])
-                init_arr = np.empty(len(ids), dtype=np.int64)
-                init_arr[have] = np.searchsorted(dense, prov[have])
-                init_arr[~have] = len(dense) + np.arange(int((~have).sum()))
-                if opts.affected_vertices is not None:
-                    # frontier-seeded marking: provided ids → dense
-                    # kernel positions; ids outside this graph's vertex
-                    # set are dropped (they cannot be scanned anyway)
-                    av = (
-                        opts.affected_vertices.select("id")
-                        .toPandas()["id"].to_numpy(dtype=np.int64)
-                    )
-                    pos = np.searchsorted(ids, av)
-                    ok = (pos < len(ids)) & (ids[np.minimum(pos, len(ids) - 1)] == av)
-                    init_aff_arr = pos[ok]
-            r = louvain_seq_fast(
-                pos_s,
-                pos_d,
-                w_arr,
-                resolution=opts.resolution, tolerance=E,
-                tolerance_drop=opts.tolerance_drop,
-                max_iterations=opts.max_iterations,
-                max_passes=opts.max_passes - p,
-                aggregation_tolerance=opts.aggregation_tolerance,
-                init_com=init_arr,
-                init_aff=init_aff_arr,
+        # driver with the sequential kernel (reference semantics; no
+        # per-iteration Spark round-trips)
+        if opts.mode == "auto" and n_edges <= serial.SERIAL_EDGES:
+            res = _serial_finish(
+                edges, opts, p, warm=p == 0 and opts.initial_membership is not None
             )
-            mem = spark.createDataFrame(
-                pd.DataFrame(
-                    {"id": ids.astype("int64"),
-                     "com": np.asarray(r.membership, dtype="int64")}
-                ),
-                MEMBERSHIP_SCHEMA,
-            )
-            final_mem = _compose(ucom, mem).persist()
+            if not res.pass_log:
+                return res  # empty/zero-weight graph
+            final_mem = _compose(ucom, res.membership).persist()
             if ucom is None:
                 # the whole solve collapsed into pass 0 over the input
-                # edge table: Q is a driver-side aggregate over the
-                # arrays already in hand (the exact modularity_op
-                # formula; summation-order drift is ~1e-15, six orders
-                # inside the g_louvain twin's 1e-9 gate), replacing the
-                # membership double-join + aggregate job (the function
-                # tail materializes the membership cache instead)
-                com = np.asarray(r.membership, dtype=np.int64)
-                cu_q = com[pos_s]
-                same_q = cu_q == com[pos_d]
-                m0 = float(w_arr.sum()) / 2.0
-                cin_q = np.bincount(
-                    cu_q[same_q], weights=w_arr[same_q], minlength=len(ids)
-                )
-                ctf_q = np.bincount(cu_q, weights=w_arr, minlength=len(ids))
-                q_fast = float(
-                    (
-                        cin_q / (2.0 * m0)
-                        - opts.resolution * (ctf_q / (2.0 * m0)) ** 2
-                    ).sum()
-                )
-            total_iters += r.iterations
-            pass_log.append({
-                "pass": p, "mode": "local_finish", "edges": n_edges,
-                "local_passes": r.passes,
-                # vertex scans actually performed across the serial
-                # passes — the work metric frontier-seeded marking
-                # (affected_vertices) is judged by
-                "processed": sum(
-                    e.get("processed", 0) for e in r.pass_log
-                ),
-                "t_local": round(time.time() - t0, 3),
-            })
-            p += r.passes
+                # edge table: Q over the arrays already in hand
+                q_fast = res.modularity
+            total_iters += res.iterations
+            pass_log += res.pass_log
+            p += res.passes
             break
 
         t0 = time.time()
         vtot = vertex_weights(edges).persist()
         # vertex count + (on the broadcast path) the driver copy of
-        # vtot in ONE job: a LIMIT probe at the gate either returns the
-        # complete frame (≤ gate ⇒ it IS the toPandas the driver rounds
-        # need) or proves V > gate — replacing the separate count() +
-        # toPandas() pair
-        # LIMIT takes a Java int — clamp huge gates (e.g. the forced-
-        # broadcast 1<<40 used by the bigdist evidence runs)
-        _probe_n = min(opts.broadcast_vertices, 2**31 - 2)
-        _vt_probe = vtot.limit(_probe_n + 1).toPandas()
-        if len(_vt_probe) <= _probe_n:
-            gn = len(_vt_probe)
-            vtot_pdf = _vt_probe
-        else:
-            gn = vtot.count()
-            vtot_pdf = None
+        # vtot in ONE job: the bounded collect either returns the
+        # complete frame (≤ gate ⇒ it IS the copy the driver rounds
+        # need) or proves V > gate — replacing a count() + toPandas()
+        vt_arrs = collect_bounded(vtot, ["id", "vtot"], opts.broadcast_vertices)
+        broadcast = vt_arrs is not None
+        gn = len(vt_arrs[0]) if broadcast else vtot.count()
         if m_total is None:
             # M = Σw/2 = Σvtot/2: when the full vtot frame is already on
-            # the driver this is a free pandas sum instead of another
+            # the driver this is a free numpy sum instead of another
             # edge-table aggregate job (contraction preserves Σw, so
             # this equals M of the original graph on any pass).
-            if vtot_pdf is not None:
-                m_total = float(_vt_probe["vtot"].sum()) / 2.0
+            if broadcast:
+                m_total = float(vt_arrs[1].sum()) / 2.0
             else:
                 m_total = total_weight_m(original_edges)
             if m_total <= 0:
@@ -1438,9 +1391,6 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         # a single block with gate=1 IS the sequential reference sweep
         blocks_pass = max(1, min(num_blocks, gn // opts.block_vertices or 1))
         gate = 1 if blocks_pass == 1 else 2
-        # the driver copy must actually exist (the probe clamp can in
-        # principle leave it unset below a huge configured gate)
-        broadcast = vtot_pdf is not None and gn <= opts.broadcast_vertices
         init_mem = (
             opts.initial_membership
             if (p == 0 and opts.initial_membership is not None)
@@ -1465,9 +1415,8 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
             # cluster-shaped path still sorts in the JVM because the
             # per-iteration kernels need the contiguous-adjacency order
             # on every read
-            _local_cache = spark.sparkContext.master.startswith("local")
             eb_ = edges.repartition(blocks_pass, "src")
-            if not _local_cache:
+            if not _block_caches(spark):
                 eb_ = eb_.sortWithinPartitions("src", "dst")
             edges_b = eb_.persist()
             if _probe:
@@ -1482,11 +1431,8 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
             (
                 mem, iters, el_pass, cn, round_times, processed, q_cand,
             ) = _driver_rounds(
-                spark, edges_b, vtot_pdf, init_mem, opts,
-                m_total, E, gate, p, _dbg, blocks_pass=blocks_pass,
-                affected=(
-                    opts.affected_vertices if init_mem is not None else None
-                ),
+                spark, edges_b, *vt_arrs, init_mem is not None, opts,
+                m_total, E, gate, p, _dbg, blocks_pass,
             )
             mem = mem.persist()
             if _probe:
@@ -1539,7 +1485,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
             # state through Arrow (see _routed_state_kernel_factory;
             # same local-only contract as the broadcast path's cache)
             fb_cache: str | None = None
-            if spark.sparkContext.master.startswith("local"):
+            if _block_caches(spark):
                 import tempfile
 
                 fb_cache = tempfile.mkdtemp(prefix="louvain_fbblocks_")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .properties import vertex_weights
+from . import serial
 from .serial import collect_columns, edge_csr
 from .transforms import vertices
 
@@ -160,15 +161,10 @@ def pagerank(
     return PageRankResult(ranks, it, float(err))
 
 
-# directed edges up to which pagerank_fixed finishes on the driver (the
-# bound its serial-finish siblings default to)
-_SERIAL_EDGES = 4_000_000
-
-
 def _pagerank_fixed_local(
     edges: DataFrame, alpha: float, iters: int
 ) -> DataFrame | None:
-    """Driver-side finish under ``_SERIAL_EDGES`` directed edges (the
+    """Driver-side finish under ``serial.SERIAL_EDGES`` directed edges (the
     serial-finish seam, operators/serial.py): the same recurrence as
     the distributed rounds below over numpy arrays. The vertex set is
     the src ids; contributions to dst-only ids are dropped; duplicate
@@ -182,7 +178,7 @@ def _pagerank_fixed_local(
     import pandas as pd
 
     m = edges.count()
-    if m == 0 or m > _SERIAL_EDGES:
+    if m == 0 or m > serial.SERIAL_EDGES:
         return None
     g = edge_csr(*collect_columns(edges, ["src", "dst", "w"]), sort=False)
     n_pos = len(g.ids)

@@ -9,6 +9,9 @@ decides the path, through ``collect_columns`` after the count; it maps
 ids through ``edge_csr``: ``id - lo`` when the ids are contiguous, as the
 engine's tables are, else a sorted-unique map; the (src, dst) order
 comes from an O(E + V) counting sort (oracle/_cmove.py ``csr_order``).
+
+The two size bounds below are read at call time (``serial.SERIAL_EDGES``),
+so a test forces a path by patching one name.
 """
 
 from __future__ import annotations
@@ -17,6 +20,25 @@ from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
+
+# Directed edges up to which Louvain auto, pagerank_fixed, components
+# and labelprop finish on the driver (~50 MB of arrays; triangles take
+# half, in canonical src < dst pairs). Picked by measurement for the
+# Louvain tail (scripts/sweep_small_graph.py, sf0.1 = 2.7M directed
+# edges, interleaved min-of-2, SWEEP_SMALL_GRAPH.json): 4M (all-serial
+# at that size) → 17.3 s total; 2M → 24.4 s; 1M/500k/200k → 33-36 s.
+# The serial kernel runs ~1 µs/edge, so a 4M-edge remainder costs ~4 s
+# on the driver while distributed rounds on it cost ~1-2 s per
+# iteration × tens of iterations. Pass 0 of an at-scale graph stays
+# distributed; only the contracted tail collapses inward, the analog of
+# the reference's representation swap (louvain.hxx:1174-1176).
+SERIAL_EDGES = 4_000_000
+
+# Vertices up to which components and labelprop broadcast their
+# vertex-sized label frame into the per-round edge join (~20 B/row ⇒
+# ≲100 MB); above it they partition the edges on the join key. The
+# default of LouvainOptions.broadcast_vertices.
+BROADCAST_VERTICES = 5_000_000
 
 
 def _numpy_columns(tbl, cols: list[str]) -> list:

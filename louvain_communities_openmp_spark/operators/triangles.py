@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .serial import collect_bounded, edge_csr, pair_order
 from .transforms import vertices
 
@@ -102,7 +103,8 @@ def _triangles(o: DataFrame) -> DataFrame:
 
 def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
     """Serial finish (operators/serial.py) under ``bound`` CANONICAL
-    src<dst pairs ≈ 2·bound directed edges: one numpy orientation pass
+    src<dst pairs ≈ 2·bound directed edges (the caller passes half of
+    ``serial.SERIAL_EDGES``): one numpy orientation pass
     plus a C sorted-merge sweep
     (oracle/_cmove.py triangle_count_csr), the exact transcription of
     the distributed plan (degree-(deg,id) orientation, sorted
@@ -141,13 +143,10 @@ def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
     return triangle_count_csr_c(indptr, v[perm])
 
 
-def triangle_count_total(
-    edges: DataFrame, small_graph_edges: int = 2_000_000
-) -> int:
-    if small_graph_edges > 0:
-        local = _triangle_total_local(edges, small_graph_edges)
-        if local is not None:
-            return local
+def triangle_count_total(edges: DataFrame) -> int:
+    local = _triangle_total_local(edges, serial.SERIAL_EDGES // 2)
+    if local is not None:
+        return local
     o = _oriented(edges).persist()
     try:
         return _triangles(o).count()

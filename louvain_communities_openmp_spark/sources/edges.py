@@ -15,6 +15,9 @@ from ..operators.transforms import symmetricize
 
 EDGE_SCHEMA = "src long, dst long, w double"
 
+# distinct string values up to which dense_ids sorts on the driver
+DENSE_IDS_COLLECT = 2_000_000
+
 
 def edges_from_list(spark: SparkSession, edge_list, n: int | None = None) -> DataFrame:
     """Edge DataFrame from a Python list of (src, dst, w)."""
@@ -24,12 +27,7 @@ def edges_from_list(spark: SparkSession, edge_list, n: int | None = None) -> Dat
     return df
 
 
-def dense_ids(
-    df: DataFrame,
-    col: str = "url",
-    id_col: str = "id",
-    collect_bound: int = 2_000_000,
-) -> DataFrame:
+def dense_ids(df: DataFrame, col: str = "url", id_col: str = "id") -> DataFrame:
     """Assign dense 0..N-1 ids to the distinct values of ``col``.
 
     Scalable dense ranking: range-partition + sort by value, count rows
@@ -40,7 +38,7 @@ def dense_ids(
 
     Deterministic: ids follow the global sort order of ``col``.
 
-    Small-domain fast path (≤ ``collect_bound`` distinct string
+    Small-domain fast path (≤ ``DENSE_IDS_COLLECT`` distinct string
     values, probed via LIMIT): collect + driver sort + local relation —
     one job instead of the five the scalable plan needs, and the
     resulting frame broadcasts into downstream joins for free. Python's
@@ -49,27 +47,26 @@ def dense_ids(
     tests/test_extract_and_edges.py).
     """
     spark = df.sparkSession
-    if collect_bound > 0:
-        probe = (
-            df.select(F.col(col).alias("_v"))
-            .distinct()
-            .limit(collect_bound + 1)
-            .toArrow()
+    probe = (
+        df.select(F.col(col).alias("_v"))
+        .distinct()
+        .limit(DENSE_IDS_COLLECT + 1)
+        .toArrow()
+    )
+    import pyarrow as pa
+
+    if (
+        probe.num_rows <= DENSE_IDS_COLLECT
+        and pa.types.is_string(probe.column("_v").type)
+        and probe.column("_v").null_count == 0
+    ):
+        import pandas as pd
+
+        vals = sorted(probe.column("_v").to_pylist())
+        out = pd.DataFrame({col: vals, id_col: range(len(vals))})
+        return spark.createDataFrame(
+            out, schema=f"{col} string, {id_col} long"
         )
-        import pyarrow as pa
-
-        if (
-            probe.num_rows <= collect_bound
-            and pa.types.is_string(probe.column("_v").type)
-            and probe.column("_v").null_count == 0
-        ):
-            import pandas as pd
-
-            vals = sorted(probe.column("_v").to_pylist())
-            out = pd.DataFrame({col: vals, id_col: range(len(vals))})
-            return spark.createDataFrame(
-                out, schema=f"{col} string, {id_col} long"
-            )
     nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     d = (
         df.select(F.col(col).alias("_v"))

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Measure the auto-mode crossover: small_graph_edges sweep at sf0.1.
+"""Measure the auto-mode crossover: a ``serial.SERIAL_EDGES`` sweep at sf0.1.
 
 The serial local-finish tail was the biggest louvain line item in the
 round-3 canonical bench (22.6s of 54.7s) while distributed rounds cost
@@ -19,6 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from louvain_communities_openmp_spark.operators import serial  # noqa: E402
 from louvain_communities_openmp_spark.operators.louvain import (  # noqa: E402
     LouvainOptions,
     louvain,
@@ -45,10 +46,9 @@ def main():
     best: dict = {}
     for rep in range(k):
         for th in THRESHOLDS:
+            serial.SERIAL_EDGES = th
             t0 = time.time()
-            res = louvain(
-                edges, LouvainOptions(mode="auto", small_graph_edges=th)
-            )
+            res = louvain(edges, LouvainOptions(mode="auto"))
             dt = round(time.time() - t0, 3)
             move = sum(r.get("t_move", 0.0) for r in res.pass_log)
             agg = sum(r.get("t_agg", 0.0) for r in res.pass_log)

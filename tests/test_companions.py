@@ -411,9 +411,13 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
     the cached static edge table) contain broadcast exchanges only —
     no shuffle Exchange. Regressing the partitioning/broadcast layout
     re-introduces an edge-sized per-round shuffle and fails here."""
+    from pyspark.sql import functions as F
+
     from louvain_communities_openmp_spark.operators.labelprop import (
-        label_propagation,
+        _round,
+        _static_edges,
     )
+    from louvain_communities_openmp_spark.operators.transforms import vertices
 
     und = [(i, (i * 3) % 40) for i in range(40)] + [(i, i + 1) for i in range(39)]
     e = spark.createDataFrame(
@@ -425,24 +429,27 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
         ],
         "src long, dst long, w double",
     )
-    plans = []
-    label_propagation(e, max_iter=2, debug_plans=plans)
-    assert plans
-    for plan in plans:
-        lines = plan.splitlines()
-        # the static table appears as a cached scan; everything above
-        # it is this round's own dataflow
-        cut = next(
-            i
-            for i, ln in enumerate(lines)
-            if "InMemoryTableScan" in ln or "TableCacheQueryStage" in ln
-        )
-        bad = [
-            ln
-            for ln in lines[:cut]
-            if "Exchange" in ln and "BroadcastExchange" not in ln
-        ]
-        assert not bad, bad
+    static = _static_edges(e, use_bc=True)
+    labels = (
+        vertices(e).select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
+    )
+    best = _round(static, labels, use_bc=True)
+    best.count()
+    lines = best._jdf.queryExecution().executedPlan().toString().splitlines()
+    static.unpersist()
+    # the static table appears as a cached scan; everything above it
+    # is this round's own dataflow
+    cut = next(
+        i
+        for i, ln in enumerate(lines)
+        if "InMemoryTableScan" in ln or "TableCacheQueryStage" in ln
+    )
+    bad = [
+        ln
+        for ln in lines[:cut]
+        if "Exchange" in ln and "BroadcastExchange" not in ln
+    ]
+    assert not bad, bad
 
 
 def test_hits_allclose_directed_karate(spark):

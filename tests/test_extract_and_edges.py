@@ -7,6 +7,7 @@ from louvain_communities_openmp_spark.functions.extract import (
     extract_text_py,
 )
 from louvain_communities_openmp_spark.oracle import karate, toy5
+from louvain_communities_openmp_spark.sources import edges as edges_mod
 from louvain_communities_openmp_spark.sources.edges import (
     dense_ids,
     edges_from_list,
@@ -46,14 +47,15 @@ def test_dense_ids_are_dense_and_sorted(spark):
     assert [r["url"] for r in ids] == sorted(f"u{i:03d}" for i in range(97))
 
 
-def test_dense_ids_collect_path_matches_scalable_plan(spark):
+def test_dense_ids_collect_path_matches_scalable_plan(spark, monkeypatch):
     # duplicates, non-ASCII code points and a shuffled arrival order:
     # the driver sort must assign exactly the range-partitioned ids
     vals = [f"https://h{i % 13}.example/p{i}" for i in range(300)]
     vals += ["https://ä.example/", "https://Z.example/", "https://a.example/"] * 4
     df = spark.createDataFrame([(v,) for v in vals[::-1]], "url string").repartition(7)
     fast = dense_ids(df, "url")
-    plan = dense_ids(df, "url", collect_bound=0)
+    monkeypatch.setattr(edges_mod, "DENSE_IDS_COLLECT", 0)
+    plan = dense_ids(df, "url")
     rows = sorted(tuple(r) for r in fast.collect())
     assert rows == sorted(tuple(r) for r in plan.collect())
     assert [i for _, i in rows] == list(range(len(set(vals))))

@@ -54,6 +54,10 @@ def test_exact_mode_matches_oracle(spark, name):
     assert got == {i: c for i, c in enumerate(want.membership)}, name
     q = modularity(e, mem)
     assert math.isclose(q, want.modularity, abs_tol=1e-6)
+    # the result also reports the oracle's pass and iteration counts
+    res = louvain(e, LouvainOptions(mode="exact"))
+    assert (res.passes, res.iterations) == (want.passes, want.iterations)
+    assert math.isclose(res.modularity, q, abs_tol=1e-12)
 
 
 def test_dist_mode_quality_two_cliques(spark):
@@ -132,6 +136,28 @@ def test_dist_fallback_matches_broadcast(spark):
         mb = sorted((r["id"], r["com"]) for r in b.membership.collect())
         assert ma == mb
         assert abs(a.modularity - b.modularity) < 1e-12
+
+
+def test_dist_rounds_without_block_caches(spark, monkeypatch):
+    """Both dist gates run the cluster-shaped kernels
+    (_bcast_state_kernel_factory, _cogroup_kernel_factory) when the
+    npz block caches are off, and match the cached local-mode rounds."""
+    from louvain_communities_openmp_spark.operators import louvain as lv
+
+    for fixture in (lambda: ring_of_cliques(8, 6), karate):
+        e = edges_from_list(spark, fixture())
+        for opts in (
+            LouvainOptions(mode="dist", num_blocks=4),
+            LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0),
+        ):
+            cached = louvain(e, opts)
+            with monkeypatch.context() as mp:
+                mp.setattr(lv, "_block_caches", lambda spark: False)
+                plain = louvain(e, opts)
+            ma = sorted((r["id"], r["com"]) for r in cached.membership.collect())
+            mb = sorted((r["id"], r["com"]) for r in plain.membership.collect())
+            assert ma == mb, opts.broadcast_vertices
+            assert abs(cached.modularity - plain.modularity) < 1e-12
 
 
 def test_warm_start_oracle_converged_input(spark):
@@ -272,6 +298,34 @@ def test_warm_start_absent_vertex_label_collision(spark):
         labels = [next(iter(s)) for s in clique_coms]
         assert len(set(labels)) == K, labels
 
+
+
+def test_warm_start_labels_above_2_53_stay_distinct(spark):
+    """Provided labels are int64 values: 2**53 and 2**53 + 1 are one
+    float64, and a float round trip would seed two disconnected cliques
+    as one community."""
+    from louvain_communities_openmp_spark.oracle.graphs import undirected
+
+    c = 6
+    pairs = [
+        (k * c + i, k * c + j)
+        for k in range(2)
+        for i in range(c)
+        for j in range(i + 1, c)
+    ]
+    e = edges_from_list(spark, undirected(pairs)).persist()
+    init = spark.createDataFrame(
+        [(k * c + i, 2**53 + k) for k in range(2) for i in range(c)],
+        "id long, com long",
+    )
+    for mode in ("auto", "dist"):
+        res = louvain(e, LouvainOptions(mode=mode, num_blocks=4, initial_membership=init))
+        mem = {r["id"]: r["com"] for r in res.membership.collect()}
+        assert len({mem[i] for i in range(c)}) == 1, mode
+        assert len({mem[c + i] for i in range(c)}) == 1, mode
+        assert mem[0] != mem[c], mode
+        assert math.isclose(res.modularity, 0.5, abs_tol=1e-9), mode
+    e.unpersist()
 
 
 def test_frontier_seeded_oracle_fewer_scans():

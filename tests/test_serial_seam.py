@@ -174,7 +174,7 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_operators_agree_across_id_sets(spark):
+def test_operators_agree_across_id_sets(spark, monkeypatch):
     base = power_law(300, 4)
     out = {}
     for name, f in RELABEL.items():
@@ -195,10 +195,12 @@ def test_operators_agree_across_id_sets(spark):
             sorted((inv[i], r) for i, r in _rows(pr, ["id", "rank"])),
         )
         # the serial finish equals the forced distributed plan here too
-        assert _rows(cc.components, ["id", "comp"]) == _rows(
-            connected_components(e, small_graph_edges=0).components, ["id", "comp"])
-        assert _rows(lp.labels, ["id", "label"]) == _rows(
-            label_propagation(e, max_iter=5, small_graph_edges=0).labels, ["id", "label"])
+        with monkeypatch.context() as mp:
+            mp.setattr(serial, "SERIAL_EDGES", 0)
+            assert _rows(cc.components, ["id", "comp"]) == _rows(
+                connected_components(e).components, ["id", "comp"])
+            assert _rows(lp.labels, ["id", "label"]) == _rows(
+                label_propagation(e, max_iter=5).labels, ["id", "label"])
         e.unpersist()
     assert out["offset"] == out["contiguous"]
     assert out["gapped"] == out["contiguous"]
