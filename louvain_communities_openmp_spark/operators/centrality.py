@@ -30,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .transforms import vertices
 
 
@@ -159,7 +160,7 @@ def katz_fixed(
     """
     verts = vertices(edges).persist()
     n = verts.count()
-    use_bc = n <= 5_000_000
+    use_bc = n <= serial.BROADCAST_VERTICES
     if exact_int:
         # integer-weight graphs with α = 1/inv: carry K_t = inv^t·k_t as
         # longs (K_{t+1} = inv^{t+1} + Σ w·K_t) — summation-order-exact,
@@ -236,7 +237,7 @@ def absorb_fixed(
     """
     verts = vertices(edges).persist()
     n = verts.count()
-    use_bc = n <= 5_000_000
+    use_bc = n <= serial.BROADCAST_VERTICES
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w")).repartition(
         "src" if use_bc else "dst"
     ).persist()
@@ -335,7 +336,7 @@ def eigenvector_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     """
     verts = vertices(edges).persist()
     n = verts.count()
-    use_bc = n <= 5_000_000
+    use_bc = n <= serial.BROADCAST_VERTICES
     e = edges.select("src", "dst", F.col("w").cast("long").alias("w")).repartition(
         "dst" if use_bc else "src"
     ).persist()

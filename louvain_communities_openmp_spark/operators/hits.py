@@ -31,6 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .transforms import vertices
 
 
@@ -46,7 +47,7 @@ def hits_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     in-edges / authority)."""
     verts = vertices(edges).persist()
     n = verts.count()
-    use_bc = n <= 5_000_000
+    use_bc = n <= serial.BROADCAST_VERTICES
     # e_src: partitioned on src = the HUB aggregation key;
     # e_dst: partitioned on dst = the AUTHORITY aggregation key
     e_src = edges.select("src", "dst", "w").repartition("src").persist()

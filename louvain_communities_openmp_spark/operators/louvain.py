@@ -18,14 +18,20 @@ DataFrame super-steps + a CSR-blocked vectorized kernel. Two modes:
   thread chunk: threads read stale remote state, exactly like
   `schedule(dynamic,2048)` threads do). Two state-distribution
   strategies, switched on vertex count:
-  * V ≤ broadcast_vertices: driver-coordinated — membership/vtot/ctot
-    live as numpy arrays on the driver (≙ the reference's shared
-    arrays) and reach each task as one ~33 B/vertex broadcast per
-    round; an iteration is ONE zero-shuffle Spark job and an O(V)
-    numpy merge.
-  * larger: vertex state is routed to the blocks that reference it
-    and cogrouped against the static edge buckets — per-iteration
-    shuffle is vertex-sized, never edge-sized.
+  * V ≤ broadcast_vertices: driver-coordinated (_driver_rounds) —
+    membership/vtot/ctot live as numpy arrays on the driver (≙ the
+    reference's shared arrays) and reach each task as one ~33 B/vertex
+    broadcast per round; an iteration is ONE zero-shuffle Spark job
+    and an O(V) numpy merge. In local mode the tasks read their blocks
+    from a per-pass npz cache (_file_state_kernel_factory); on a
+    cluster they stream the cached edge partitions
+    (_bcast_state_kernel_factory).
+  * larger: routed (_routed_rounds) — vertex state is routed to the
+    blocks that reference it and cogrouped against the static edge
+    buckets (_cogroup_kernel_factory, in local mode and on a cluster
+    alike) — per-iteration shuffle is vertex-sized, never edge-sized.
+  Both gates run one block body (_sweep_from_positions → _sweep_core)
+  and one round loop with one set of stop rules (_run_rounds).
   Between iterations membership/ctot re-sync globally (≙ the
   reference's atomics). Aggregation phase is a pure DataFrame
   contraction: edges ⋈ membership(src) ⋈ membership(dst) →
@@ -156,88 +162,6 @@ def _mix64(x: int) -> int:
     return x ^ (x >> 31)
 
 
-def _block_sweep(
-    pdf: pd.DataFrame,
-    rnd: int = 0,
-    gate: int = 1,
-    m: float = 1.0,
-    resolution: float = 1.0,
-) -> pd.DataFrame:
-    """Asynchronous local-move sweep within one block (≙ one OpenMP
-    thread chunk, louvain.hxx:594-605).
-
-    Input columns: src, dst, w, dcom, scom, vtot_s, ctot_d, ctot_s,
-    m2, res. Local vertices = distinct src in the block (each vertex's
-    full out-adjacency is present because blocking is by src). Remote
-    community state is the snapshot taken at round start; local moves
-    update the local view immediately (async semantics).
-
-    ``gate`` > 1 makes only vertices with hash(u, rnd) % gate == 0
-    attempt a move this round — the distributed substitute for the
-    reference's atomics: synchronous rounds would otherwise let two
-    neighbors swap communities forever (both compute a gain assuming
-    the other stays put). A round-varying deterministic hash breaks the
-    symmetry while keeping the run reproducible.
-
-    Deterministic: ascending-src sweep, tie-break (max ΔQ, min com).
-
-    Fully vectorized (input_hint mandate: no per-row Python in the hot
-    path). Two phases:
-
-    1. *Proposal* (numpy, C speed): per-(u, neighbor-community) weight
-       sums from the round-start snapshot via lexsort + reduceat, ΔQ
-       for every candidate in one vectorized expression, per-u argmax
-       with (max ΔQ, min com) tie-break via lexsort.
-    2. *Validation* (sequential over PROPOSERS only, ascending id —
-       the async sweep of louvainMoveOmpW, louvain.hxx:587-609): each
-       proposer's gain is recomputed exactly against the *current*
-       in-block state (numpy ops on its adjacency slice), so earlier
-       in-block moves are visible — no intra-block flip-flop, and late
-       rounds validate only a vanishing few vertices.
-
-    Frontier bookkeeping is fused into the kernel (no extra Spark jobs):
-    processing clears a vertex's flag, a move flags all its neighbors —
-    in-block AND out-of-block (emitted as com-null rows) — and gated
-    vertices keep their flag (still unprocessed). The driver just
-    groupBy(id)-merges the emissions.
-    """
-    import numpy as np
-
-    if len(pdf) == 0:
-        return _EMPTY_OWNED.copy(), np.empty(0, dtype=np.int64)
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    # the caller pre-sorts each block by (src, dst) once per pass; only
-    # group srcs contiguously if that invariant ever breaks
-    if len(src) > 1 and not bool(np.all(src[1:] >= src[:-1])):
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["w"].to_numpy(dtype=np.float64)
-
-    # ---- local dense remap of vertex ids and community ids
-    ids = np.unique(np.concatenate([src, dst]))
-    ls = np.searchsorted(ids, src)
-    ld = np.searchsorted(ids, dst)
-    nloc = len(ids)
-    dcom_g = pdf["dcom"].to_numpy(dtype=np.int64)
-    scom_g = pdf["scom"].to_numpy(dtype=np.int64)
-    cids = np.unique(np.concatenate([dcom_g, scom_g]))
-    lc_d = np.searchsorted(cids, dcom_g)
-    lc_s = np.searchsorted(cids, scom_g)
-    ncom = len(cids)
-    comm = np.full(nloc, -1, dtype=np.int64)  # local vertex → local com
-    comm[ld] = lc_d
-    comm[ls] = lc_s
-    ctot = np.zeros(ncom, dtype=np.float64)
-    ctot[lc_d] = pdf["ctot_d"].to_numpy(dtype=np.float64)
-    ctot[lc_s] = pdf["ctot_s"].to_numpy(dtype=np.float64)
-    vtot = np.zeros(nloc, dtype=np.float64)
-    vtot[ls] = pdf["vtot_s"].to_numpy(dtype=np.float64)
-    return _sweep_core(
-        ls, ld, w, ids, cids, comm, ctot, vtot, rnd, gate, m, resolution
-    )
-
-
 def _sweep_core(
     ls,
     ld,
@@ -252,15 +176,46 @@ def _sweep_core(
     m: float,
     resolution: float,
 ):
-    """The sweep itself, on locally dense state (see _block_sweep for
-    semantics). ``ls``/``ld``/``w`` are the block's edges in sorted
-    (src, dst) order as local vertex indices; ``ids``/``cids`` map
-    local vertex/community indices back to global labels; ``comm``,
-    ``ctot``, ``vtot`` are the local round-start snapshot. Taking
-    arrays rather than an annotated frame lets the driver-coordinated
-    kernel skip materializing 8 per-edge float columns (2 full copies
-    of the block) — the kernels are memory-bandwidth-bound, and that
-    traffic is what caps local-mode multi-worker scaling."""
+    """Asynchronous local-move sweep within one block (≙ one OpenMP
+    thread chunk, louvain.hxx:594-605), on locally dense state.
+
+    ``ls``/``ld``/``w`` are the block's edges in sorted (src, dst) order
+    as local vertex indices; ``ids``/``cids`` map local vertex/community
+    indices back to global labels; ``comm``, ``ctot``, ``vtot`` are the
+    local round-start snapshot. Local vertices that own edges = distinct
+    src in the block (each vertex's full out-adjacency is present
+    because blocking is by src). Remote community state is the snapshot
+    taken at round start; local moves update the local view immediately
+    (async semantics).
+
+    ``gate`` > 1 makes only vertices with hash(u, rnd) % gate == 0
+    attempt a move this round — the distributed substitute for the
+    reference's atomics: synchronous rounds would otherwise let two
+    neighbors swap communities forever (both compute a gain assuming
+    the other stays put). A round-varying deterministic hash breaks the
+    symmetry while keeping the run reproducible.
+
+    Deterministic: ascending-src sweep, tie-break (max ΔQ, min com).
+
+    Fully vectorized (no per-row Python in the hot path). Two phases:
+
+    1. *Proposal* (numpy, C speed): per-(u, neighbor-community) weight
+       sums from the round-start snapshot via lexsort + reduceat, ΔQ
+       for every candidate in one vectorized expression, per-u argmax
+       with (max ΔQ, min com) tie-break via lexsort.
+    2. *Validation* (sequential over PROPOSERS only, ascending id —
+       the async sweep of louvainMoveOmpW, louvain.hxx:587-609): each
+       proposer's gain is recomputed exactly against the *current*
+       in-block state (numpy ops on its adjacency slice), so earlier
+       in-block moves are visible — no intra-block flip-flop, and late
+       rounds validate only a vanishing few vertices.
+
+    Frontier bookkeeping is fused into the kernel (no extra Spark jobs):
+    processing clears a vertex's flag, a move flags all its neighbors —
+    in-block AND out-of-block (returned as ``ext_ids``) — and gated
+    vertices keep their flag (still unprocessed). Returns (owned
+    emissions, ext_ids).
+    """
     import numpy as np
 
     nloc = len(ids)
@@ -408,10 +363,8 @@ def _sweep_core(
 
 
 def _cogroup_kernel_factory(rnd: int, gate: int, m: float, resolution: float):
-    """Kernel for the non-broadcast path: one (edge-block, state-block)
-    cogroup → annotate edges from the routed vertex state with numpy
-    searchsorted (the in-kernel equivalent of the five annotation
-    joins), apply frontier pruning, then the shared _block_sweep."""
+    """Kernel for the routed gate: one (edge-block, state-block)
+    cogroup → the shared block body _state_edges_sweep."""
 
     def kernel(_key, epdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -428,138 +381,55 @@ def _cogroup_kernel_factory(rnd: int, gate: int, m: float, resolution: float):
     return kernel
 
 
-def _write_raw_block_cache(edges_b: DataFrame, cache_dir: str) -> None:
-    """One job: dump the bucketed edge table's raw (src, dst, w) arrays
-    to one executor-local ``.npz`` per BLOCK value. LOCAL MODE ONLY —
-    all tasks share one filesystem (same contract as
-    _write_block_cache, which serves the broadcast path).
-
-    This is the scale path's variant: unlike _write_block_cache it
-    stores RAW endpoint ids, not positions into a global id array —
-    the whole point of the cogroup path is that no vertex-sized array
-    ever exists on the driver, so there is no global array to remap
-    against. The per-iteration searchsorted against the routed state
-    (already paid by the cogroup kernel) is unchanged.
-
-    A partition may host several block values (repartition hashes the
-    small block domain — balls-in-bins), so files are keyed by block,
-    not partition id, with a within-partition group-split."""
-
-    def writer(batches):
-        import numpy as np
-
-        chunks = list(batches)
-        if chunks:
-            b = np.concatenate(
-                [c["block"].to_numpy(dtype=np.int64) for c in chunks]
-            )
-            src = np.concatenate(
-                [c["src"].to_numpy(dtype=np.int64) for c in chunks]
-            )
-            dst = np.concatenate(
-                [c["dst"].to_numpy(dtype=np.int64) for c in chunks]
-            )
-            w = np.concatenate(
-                [c["w"].to_numpy(dtype=np.float64) for c in chunks]
-            )
-            # stable sort by block; (src, dst) order within each block
-            # is preserved from sortWithinPartitions
-            o = np.argsort(b, kind="stable")
-            b, src, dst, w = b[o], src[o], dst[o], w[o]
-            vals, starts = np.unique(b, return_index=True)
-            bounds = np.append(starts, len(b))
-            for i, bv in enumerate(vals):
-                lo, hi = bounds[i], bounds[i + 1]
-                np.savez(
-                    os.path.join(cache_dir, f"b{int(bv)}.npz"),
-                    src=src[lo:hi], dst=dst[lo:hi], w=w[lo:hi],
-                )
-        yield pd.DataFrame({"n": pd.Series([len(chunks)], dtype="int64")})
-
-    edges_b.select("block", "src", "dst", "w").mapInPandas(
-        writer, "n long"
-    ).collect()
-
-
-def _routed_state_kernel_factory(
-    cache_dir: str, rnd: int, gate: int, m: float, resolution: float
-):
-    """applyInPandas kernel over the ROUTED STATE only (grouped by
-    block): the block's static edges come from the raw npz cache
-    (page-cache memcpy) instead of crossing JVM→Arrow every iteration.
-
-    LOCAL MODE counterpart of _cogroup_kernel_factory: on one box the
-    per-iteration Arrow re-serialization of all E edge rows is pure
-    shared-memory-bus traffic that dominates the iteration (it is the
-    same cost the broadcast path eliminates with _write_block_cache);
-    on a real cluster the hop is per-executor-constant and the
-    cogroup formulation is used instead. Either way the per-iteration
-    EXCHANGE is only the routed vertex state, O(V·r)."""
-
-    def kernel(key, spdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        path = os.path.join(cache_dir, f"b{int(key[0])}.npz")
-        if len(spdf) == 0 or not os.path.exists(path):
-            return _EMPTY_OWNED.astype({"com": "Int64"})
-        z = np.load(path)
-        return _state_edges_sweep(
-            z["src"], z["dst"], z["w"], spdf, rnd, gate, m, resolution
-        )
-
-    return kernel
-
-
 def _state_edges_sweep(
     src, dst, w, spdf: pd.DataFrame, rnd, gate, m, resolution
 ) -> pd.DataFrame:
-    """Shared non-broadcast block body: annotate the block's static
-    (src, dst, w) arrays from the routed vertex state with numpy
-    searchsorted (the in-kernel equivalent of the five annotation
-    joins), apply frontier pruning, run the shared _block_sweep."""
+    """Routed-gate block body: map the block's static (src, dst, w)
+    arrays to positions in the routed vertex state's sorted ids (the
+    in-kernel equivalent of the five annotation joins) and run the
+    broadcast gate's _sweep_from_positions over the routed rows. Each
+    routed row carries its community's ctot, so the community labels
+    and their ctot come from the first row of each community. Returns
+    the ``_MOVE_SCHEMA`` emissions: owned rows, plus com-null rows for
+    flagged vertices of other blocks."""
     import numpy as np
 
-    empty = _EMPTY_OWNED.astype({"com": "Int64"})
     sid = spdf["id"].to_numpy(dtype=np.int64)
     o = np.argsort(sid, kind="stable")
-    sid_s = sid[o]
+    sid = sid[o]
     com = spdf["com"].to_numpy(dtype=np.int64)[o]
     vt = spdf["vtot"].to_numpy(dtype=np.float64)[o]
-    ct = spdf["ctot"].to_numpy(dtype=np.float64)[o]
     va = spdf["vaff"].to_numpy(dtype=bool)[o]
-    src = np.asarray(src, dtype=np.int64)
-    dst = np.asarray(dst, dtype=np.int64)
-    w = np.asarray(w, dtype=np.float64)
-    si = np.searchsorted(sid_s, src)
-    di = np.searchsorted(sid_s, dst)
+    clab, first = np.unique(com, return_index=True)
+    ctot = spdf["ctot"].to_numpy(dtype=np.float64)[o][first]
+    si = np.searchsorted(sid, src)
+    di = np.searchsorted(sid, dst)
     # routing covers every endpoint in the block by construction;
     # fail loudly if the invariant ever breaks
     if not (
-        bool(np.all(si < len(sid_s)))
-        and bool(np.all(sid_s[si] == src))
-        and bool(np.all(di < len(sid_s)))
-        and bool(np.all(sid_s[di] == dst))
+        bool(np.all(si < len(sid)))
+        and bool(np.all(sid[si] == src))
+        and bool(np.all(di < len(sid)))
+        and bool(np.all(sid[di] == dst))
     ):
         raise RuntimeError(
             "louvain routing invariant violated: edge endpoint "
             "missing from the block's routed vertex state"
         )
-    keep = va[si]  # frontier pruning (vaff semantics, in-kernel)
-    if not bool(keep.any()):
-        return empty
-    pdf = pd.DataFrame(
-        {
-            "src": src[keep],
-            "dst": dst[keep],
-            "w": w[keep],
-            "dcom": com[di[keep]],
-            "scom": com[si[keep]],
-            "vtot_s": vt[si[keep]],
-            "ctot_d": ct[di[keep]],
-            "ctot_s": ct[si[keep]],
-        }
+    # the caller sorts each block by (src, dst) once per pass; the
+    # sweep needs that order (contiguous adjacency), so re-sort only if
+    # the cogroup ever delivers the rows otherwise
+    ds = np.diff(si)
+    if bool(((ds < 0) | ((ds == 0) & (np.diff(di) < 0))).any()):
+        o = np.lexsort((di, si))
+        si, di, w = si[o], di[o], w[o]
+    r = _sweep_from_positions(
+        si, di, w, None, (sid, vt, clab), (com, va, ctot),
+        rnd, gate, m, resolution,
     )
-    owned, ext_ids = _block_sweep(pdf, rnd, gate, m, resolution)
+    if r is None:
+        return _EMPTY_OWNED.astype({"com": "Int64"})
+    owned, ext_ids = r
     owned = owned.astype({"com": "Int64"})
     if len(ext_ids) == 0:
         return owned
@@ -574,39 +444,24 @@ def _state_edges_sweep(
     return pd.concat([owned, extf], ignore_index=True)
 
 
-def _annotate_and_sweep(
-    src, dst, w, bcs, bcv, rnd: int, gate: int, m: float, resolution: float
-):
-    """Driver-coordinated-path block body: annotate (src, dst, w) from
-    the broadcast vertex-state arrays with numpy searchsorted (the
-    in-executor equivalent of the five annotation joins), prune by the
-    frontier flag, run the shared sweep. Returns (owned, ext_ids) or
-    None when the whole block is frontier-pruned. ``bcs`` carries the
-    pass-static arrays (ids, vtot, community labels — broadcast once
-    per pass), ``bcv`` the per-round ones (com, vaff, ctot)."""
-    import numpy as np
-
-    ids, _, _ = bcs.value
-    si = np.searchsorted(ids, src)
-    di = np.searchsorted(ids, dst)
-    return _sweep_from_positions(
-        si, di, w, None, bcs, bcv, rnd, gate, m, resolution
-    )
-
-
 def _sweep_from_positions(
-    si, di, w, remap, bcs, bcv, rnd: int, gate: int, m: float, resolution: float
+    si, di, w, remap, static, state, rnd: int, gate: int, m: float, resolution: float
 ):
-    """Shared tail of the driver-coordinated kernels: ``si``/``di`` are
-    edge endpoints as positions into the global sorted id array.
-    ``remap``, if given, is the precomputed full-block local remap
-    (lids, ls, ld) — valid only when no edge is frontier-pruned, which
-    is the common case in early rounds; a shrunken frontier falls back
-    to recomputing the remap on the pruned subset."""
+    """The block body both gates share: ``si``/``di`` are edge
+    endpoints as positions into the sorted id array of ``static`` =
+    (ids, vtot, community labels); ``state`` = (com, vaff, ctot) is the
+    round-start snapshot, vertex-indexed except ctot, which is indexed
+    like the labels. Prunes by the frontier flag, remaps to locally
+    dense indices and runs _sweep_core. Returns (owned, ext_ids), or
+    None when the whole block is frontier-pruned. ``remap``, if given,
+    is the precomputed full-block local remap (lids, ls, ld) — valid
+    only when no edge is frontier-pruned, which is the common case in
+    early rounds; a shrunken frontier falls back to recomputing the
+    remap on the pruned subset."""
     import numpy as np
 
-    ids, vt_g, clab = bcs.value
-    com_g, vaff_g, ctot_g = bcv.value
+    ids, vt_g, clab = static
+    com_g, vaff_g, ctot_g = state
     keep = vaff_g[si]  # frontier pruning (vaff semantics, in-kernel)
     if not bool(keep.any()):
         return None
@@ -615,10 +470,9 @@ def _sweep_from_positions(
         wk = w
     else:
         sk, dk = si[keep], di[keep]
-        # local dense remap straight from the broadcast arrays — no
-        # 8-float-column annotated frame (2 extra copies of the
-        # block); (src, dst) sort order is preserved by the keep mask,
-        # so the core's contiguous-adjacency invariant holds
+        # local dense remap straight from the state arrays; (src, dst)
+        # sort order is preserved by the keep mask, so the core's
+        # contiguous-adjacency invariant holds
         lids = np.unique(np.concatenate([sk, dk]))  # → global positions
         ls = np.searchsorted(lids, sk)
         ld = np.searchsorted(lids, dk)
@@ -670,7 +524,8 @@ def _bcast_state_kernel_factory(
     """mapInPandas kernel over the bucketed edge DataFrame (the
     cluster-shaped variant of the driver-coordinated round: each
     iteration streams its cached JVM partition through Arrow — a
-    per-executor-constant cost on a real cluster)."""
+    per-executor-constant cost on a real cluster). ``bcs`` broadcasts
+    the pass-static arrays, ``bcv`` the per-round ones."""
 
     def kernel(batches):
         import numpy as np
@@ -688,7 +543,11 @@ def _bcast_state_kernel_factory(
             src = np.concatenate([c["src"].to_numpy(dtype=np.int64) for c in chunks])
             dst = np.concatenate([c["dst"].to_numpy(dtype=np.int64) for c in chunks])
             w = np.concatenate([c["w"].to_numpy(dtype=np.float64) for c in chunks])
-        r = _annotate_and_sweep(src, dst, w, bcs, bcv, rnd, gate, m, resolution)
+        ids = bcs.value[0]
+        r = _sweep_from_positions(
+            np.searchsorted(ids, src), np.searchsorted(ids, dst), w, None,
+            bcs.value, bcv.value, rnd, gate, m, resolution,
+        )
         if r is None:
             return
         yield _pack_emission(*r)
@@ -757,7 +616,7 @@ def _file_state_kernel_factory(
 ):
     """mapInPandas kernel over a block-index frame: each task loads its
     block's arrays from the npz cache (page-cache memcpy) and runs the
-    same annotate+sweep as the DataFrame kernel."""
+    same _sweep_from_positions as the DataFrame kernel."""
 
     def kernel(batches):
         import numpy as np
@@ -771,7 +630,7 @@ def _file_state_kernel_factory(
                 r = _sweep_from_positions(
                     z["si"], z["di"], z["w"],
                     (z["lids"], z["ls"], z["ld"]),
-                    bcs, bcv, rnd, gate, m, resolution,
+                    bcs.value, bcv.value, rnd, gate, m, resolution,
                 )
                 if r is not None:
                     yield _pack_emission(*r)
@@ -780,11 +639,12 @@ def _file_state_kernel_factory(
 
 
 def _block_caches(spark) -> bool:
-    """Whether the dist rounds read their edges from per-pass npz block
-    caches (_write_block_cache, _write_raw_block_cache). Only in local
-    mode, where every task shares the driver's filesystem; a cluster
-    runs the cluster-shaped kernels (_bcast_state_kernel_factory,
-    _cogroup_kernel_factory) instead."""
+    """Whether the broadcast gate's rounds read their edges from a
+    per-pass npz block cache (_write_block_cache). Only in local mode,
+    where every task shares the driver's filesystem; a cluster runs
+    _bcast_state_kernel_factory instead. The routed gate runs
+    _cogroup_kernel_factory everywhere: a raw-edge cache for it did
+    not beat the cogroup in local mode."""
     return spark.sparkContext.master.startswith("local")
 
 
@@ -833,6 +693,37 @@ def _warm_start(ids, opts: LouvainOptions):
     return com, aff
 
 
+def _run_rounds(opts: LouvainOptions, E: float, gate: int, step):
+    """Run local-move rounds ``step(rnd) -> Σ gains`` until a stop rule
+    fires; both dist gates loop here. Returns (iterations, Σ gains,
+    per-round wall times — the localMove phase split, main.cxx:70-76).
+    """
+    el_pass = 0.0
+    round_times: list[float] = []
+    low_rounds = stall_rounds = 0
+    prev_el = float("inf")
+    while len(round_times) < opts.max_iterations:
+        t_it = time.time()
+        el = step(len(round_times))
+        el_pass += el
+        round_times.append(round(time.time() - t_it, 3))
+        # gated rounds: require two consecutive below-tolerance rounds
+        # (each round only half the vertices may move); single-block
+        # sweeps use the reference's single check (louvain.hxx:541)
+        low_rounds = low_rounds + 1 if el <= E else 0
+        if low_rounds >= (1 if gate == 1 else 2) or el == 0.0:
+            break
+        # plateau break: gated synchronous rounds bottom out at a
+        # flip-flop noise floor above tiny tolerances — once el stops
+        # decreasing (<5% improvement twice in a row), more rounds only
+        # burn time without modularity progress
+        stall_rounds = stall_rounds + 1 if el > 0.95 * prev_el else 0
+        prev_el = el
+        if len(round_times) >= 3 and stall_rounds >= 2:
+            break
+    return len(round_times), el_pass, round_times
+
+
 def _driver_rounds(
     spark,
     edges_b: DataFrame,
@@ -843,8 +734,6 @@ def _driver_rounds(
     m_total: float,
     E: float,
     gate: int,
-    p: int,
-    dbg,
     blocks_pass: int,
 ):
     """Local-move iterations with the vertex state held on the DRIVER
@@ -854,23 +743,25 @@ def _driver_rounds(
     same broadcast snapshot).
 
     One Spark job per iteration: the statically bucketed edge table
-    flows through the annotate+sweep kernel and only vertex-sized
-    emissions come back; membership/ctot/frontier merging is O(V)
-    numpy on the driver, not a shuffle. Compared with expressing the
-    same round as broadcast joins + groupBy merge + checkpoint + ctot
-    aggregation, this removes every per-iteration serial cost except
-    one broadcast (~33 B/vertex) and one vertex-sized collect — the
-    costs that otherwise cap N→4N scaling efficiency, because they do
-    not shrink with more cores.
+    flows through the shared block body (_sweep_from_positions) and
+    only vertex-sized emissions come back; membership/ctot/frontier
+    merging is O(V) numpy on the driver, not a shuffle. Compared with
+    expressing the same round as broadcast joins + groupBy merge +
+    checkpoint + ctot aggregation, this removes every per-iteration
+    serial cost except one broadcast (~33 B/vertex) and one
+    vertex-sized collect — the costs that otherwise cap N→4N scaling
+    efficiency, because they do not shrink with more cores.
 
     Only used while V ≤ ``broadcast_vertices`` (default 5M ⇒ ~200 MB
     of driver state — the same bound the broadcast-join formulation
-    had); above that the cogroup/routing path takes over and nothing
-    vertex-sized ever materializes on the driver. ``ids``/``vt`` are
-    the collected vtot frame; ``warm`` seeds pass 0 (_warm_start).
+    had); above that the routed gate (_routed_rounds) takes over and
+    nothing vertex-sized ever materializes on the driver.
+    ``ids``/``vt`` are the collected vtot frame; ``warm`` seeds pass 0
+    (_warm_start).
 
-    Returns (membership DataFrame, iterations, Σ gains, #communities,
-    per-round wall times — the localMove phase split, main.cxx:70-76).
+    Returns (persisted membership DataFrame, iterations, Σ gains,
+    #communities, per-round wall times, vertex scans, driver-side Q of
+    the pass's membership or None).
     """
     import numpy as np
 
@@ -889,11 +780,6 @@ def _driver_rounds(
     if vaff is None:
         vaff = np.ones(n, dtype=bool)  # all marked (static fm)
     processed = 0  # vertex scans performed — DYNAMIC work metric
-    iters = 0
-    low_rounds = stall_rounds = 0
-    prev_el = float("inf")
-    el_pass = 0.0
-    round_times: list[float] = []
     sc = spark.sparkContext
     bcs = sc.broadcast((ids, vt, clab))  # pass-static arrays
     # local mode: Python-side CSR block cache (see _write_block_cache);
@@ -909,81 +795,57 @@ def _driver_rounds(
         # one block id per partition, aligned 1:1 with the cache files
         idx_df = spark.range(0, blocks_pass, 1, blocks_pass)
     bcv = None
+
+    def step(rnd: int) -> float:
+        nonlocal vaff, bcv, processed
+        processed += int(vaff.sum())
+        # fresh ctot per round: deterministic ascending-id
+        # accumulation (bincount), so block-order float
+        # nondeterminism cannot leak into tie-breaks
+        ci = np.searchsorted(clab, com)
+        ctot = np.bincount(ci, weights=vt, minlength=len(clab))
+        bcv = sc.broadcast((com, vaff, ctot))
+        if cache_dir is not None:
+            em = idx_df.mapInPandas(
+                _file_state_kernel_factory(
+                    cache_dir, bcs, bcv, rnd, gate, m_total, opts.resolution
+                ),
+                _MOVE_SCHEMA_B,
+            ).toPandas()
+        else:
+            em = edges_b.mapInPandas(
+                _bcast_state_kernel_factory(
+                    bcs, bcv, rnd, gate, m_total, opts.resolution
+                ),
+                _MOVE_SCHEMA_B,
+            ).toPandas()
+        bcv.destroy()
+        eid = em["id"].to_numpy(dtype=np.int64)
+        owned_m = eid >= 0  # trailer rows carry id = -1 (ext blobs)
+        oid = eid[owned_m]
+        # ownership invariant: each vertex's full out-adjacency lives
+        # in exactly one block (bucketing is by src), so exactly one
+        # block may emit an authoritative com — fail loudly if a plan
+        # change ever splits an adjacency across partitions
+        if len(oid) != len(np.unique(oid)):
+            raise RuntimeError(
+                "louvain block-ownership invariant violated: a vertex "
+                "received authoritative community emissions from more "
+                "than one block (adjacency split across partitions)"
+            )
+        com[np.searchsorted(ids, oid)] = em["com"].to_numpy(dtype=np.int64)[owned_m]
+        vaff = np.zeros(n, dtype=bool)
+        fl = oid[em["vaff"].to_numpy(dtype=bool)[owned_m]]
+        if len(fl):
+            vaff[np.searchsorted(ids, fl)] = True
+        if not owned_m.all():
+            blobs = em["ext"].to_numpy()[~owned_m]
+            ext = np.frombuffer(b"".join(blobs), dtype="<i8")
+            vaff[np.searchsorted(ids, ext)] = True
+        return float(em["gain"].sum())
+
     try:
-        while iters < opts.max_iterations:
-            _t_it = time.time()
-            processed += int(vaff.sum())
-            # fresh ctot per round: deterministic ascending-id
-            # accumulation (bincount), so block-order float
-            # nondeterminism cannot leak into tie-breaks
-            ci = np.searchsorted(clab, com)
-            ctot = np.bincount(ci, weights=vt, minlength=len(clab))
-            _t_bc = time.time()
-            bcv = sc.broadcast((com, vaff, ctot))
-            _t_job = time.time()
-            if cache_dir is not None:
-                em = idx_df.mapInPandas(
-                    _file_state_kernel_factory(
-                        cache_dir, bcs, bcv, iters, gate, m_total, opts.resolution
-                    ),
-                    _MOVE_SCHEMA_B,
-                ).toPandas()
-            else:
-                em = edges_b.mapInPandas(
-                    _bcast_state_kernel_factory(
-                        bcs, bcv, iters, gate, m_total, opts.resolution
-                    ),
-                    _MOVE_SCHEMA_B,
-                ).toPandas()
-            _t_merge = time.time()
-            bcv.destroy()
-            eid = em["id"].to_numpy(dtype=np.int64)
-            owned_m = eid >= 0  # trailer rows carry id = -1 (ext blobs)
-            oid = eid[owned_m]
-            # ownership invariant: each vertex's full out-adjacency lives
-            # in exactly one block (bucketing is by src), so exactly one
-            # block may emit an authoritative com — fail loudly if a plan
-            # change ever splits an adjacency across partitions
-            if len(oid) != len(np.unique(oid)):
-                raise RuntimeError(
-                    "louvain block-ownership invariant violated: a vertex "
-                    "received authoritative community emissions from more "
-                    "than one block (adjacency split across partitions)"
-                )
-            com[np.searchsorted(ids, oid)] = em["com"].to_numpy(dtype=np.int64)[owned_m]
-            el = float(em["gain"].sum())
-            vaff = np.zeros(n, dtype=bool)
-            fl = oid[em["vaff"].to_numpy(dtype=bool)[owned_m]]
-            if len(fl):
-                vaff[np.searchsorted(ids, fl)] = True
-            if not owned_m.all():
-                blobs = em["ext"].to_numpy()[~owned_m]
-                ext = np.frombuffer(b"".join(blobs), dtype="<i8")
-                vaff[np.searchsorted(ids, ext)] = True
-            iters += 1
-            el_pass += el
-            round_times.append(round(time.time() - _t_it, 3))
-            if dbg:
-                print(
-                    f"[louvain] pass={p} it={iters} {time.time() - _t_it:.1f}s "
-                    f"(ctot {_t_bc - _t_it:.2f} bc {_t_job - _t_bc:.2f} "
-                    f"job {_t_merge - _t_job:.2f} merge "
-                    f"{time.time() - _t_merge:.2f}; em_rows {len(em)}) "
-                    f"el={el:.5f} frontier={int(vaff.sum())}",
-                    flush=True,
-                )
-            # gated rounds: require two consecutive below-tolerance rounds
-            # (each round only half the vertices may move); single-block
-            # sweeps use the reference's single check (louvain.hxx:541)
-            low_rounds = low_rounds + 1 if el <= E else 0
-            if low_rounds >= (1 if gate == 1 else 2) or el == 0.0:
-                break
-            # plateau break: gated synchronous rounds bottom out at a
-            # flip-flop noise floor above tiny tolerances
-            stall_rounds = stall_rounds + 1 if el > 0.95 * prev_el else 0
-            prev_el = el
-            if iters >= 3 and stall_rounds >= 2:
-                break
+        iters, el_pass, round_times = _run_rounds(opts, E, gate, step)
         # driver-side modularity of THIS pass's membership over THIS
         # pass's edges, straight from the npz block cache (~0.05s of
         # numpy) — the caller uses it to skip the final membership
@@ -1027,11 +889,132 @@ def _driver_rounds(
             shutil.rmtree(cache_dir, ignore_errors=True)
     mem = spark.createDataFrame(
         pd.DataFrame({"id": ids, "com": com}), MEMBERSHIP_SCHEMA
-    )
+    ).persist()
     return (
         mem, iters, el_pass, int(len(np.unique(com))), round_times,
         processed, q_cand,
     )
+
+
+def _routed_rounds(
+    edges_b: DataFrame,
+    vtot: DataFrame,
+    warm: bool,
+    opts: LouvainOptions,
+    m_total: float,
+    E: float,
+    gate: int,
+    probe,
+):
+    """Local-move iterations with the vertex state kept distributed —
+    the routed gate, for vertex counts above ``broadcast_vertices``.
+    Builds the pass's routing table (vertex → blocks that reference
+    it, over the ``block``-bucketed ``edges_b``) and the initial state,
+    then runs _local_move_round per round. ``warm`` seeds pass 0 from
+    the warm-start fields; ``probe`` (a _ShuffleProbe or None) records
+    the setup and per-round shuffle bytes.
+
+    Same return shape as _driver_rounds; #communities and the
+    driver-side Q are None, and so are the vertex scans unless
+    ``affected_vertices`` seeds a warm pass (counting the frontier
+    costs one job per round).
+    """
+    # eager localCheckpoint rather than persist: it is re-read every
+    # iteration AND it truncates lineage back to edges_b (sharing
+    # lineage would make the per-iteration cogroup an ambiguous
+    # self-join on `block`)
+    # repartition("id") BEFORE the checkpoint: the per-iteration
+    # state⋈routing join is on id, and the checkpoint pins this
+    # partitioning — without it the (block,id)-partitioned distinct()
+    # output re-exchanges all V·r routing rows by id EVERY iteration;
+    # with it only the vertex-sized state side moves (the routing side
+    # is the big one: hubs appear in up to num_blocks blocks)
+    routing = (
+        edges_b.select("block", F.col("src").alias("id"))
+        .unionByName(edges_b.select("block", F.col("dst").alias("id")))
+        .distinct()
+        .repartition("id")
+        .localCheckpoint(eager=True)
+    )
+    if probe:
+        # routing rows = V·r (r = mean blocks per vertex) — the row
+        # count each iteration's exchange is proportional to. Emitted
+        # so the shuffle-byte evidence can be tied to routed-state
+        # volume, not edge volume: bytes per routed row should be
+        # constant across fixtures while bytes per edge varies with
+        # density.
+        probe.routing_rows = routing.count()
+    if warm:
+        # warm start (louvainInitializeFromW): provided membership;
+        # absent vertices get FRESH singleton labels base+id OUTSIDE
+        # the provided (dense 0..C-1) range — own-id labels would
+        # collide with provided labels and silently merge into
+        # unrelated communities. base+id is unique, zero-shuffle, and
+        # order-isomorphic to the driver path's base+arange, so
+        # tie-breaks ((maxΔQ, min c)) agree across modes. ctot is
+        # re-accumulated from the CURRENT vtot
+        # (louvainUpdateWeightsFromU)
+        # base from initial_membership rows MATCHED to the graph's
+        # vertex set — the driver path derives its base from matched
+        # rows only, so computing it over ALL provided rows here would
+        # make fresh labels value-divergent across modes whenever the
+        # membership mentions vertices absent from the graph
+        # (order-isomorphism held, value parity did not)
+        init_mem = opts.initial_membership
+        mx = (
+            init_mem.join(vtot.select("id"), "id")
+            .agg(F.max("com").alias("m"))
+            .first()["m"]
+        )
+        base = int(mx) + 1 if mx is not None else 0
+        mem = (
+            vtot.select("id")
+            .join(init_mem.select("id", "com"), "id", "left")
+            .select(
+                "id",
+                F.coalesce("com", F.col("id") + F.lit(base)).alias("com"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        ctot = vtot.join(mem, "id").groupBy("com").agg(F.sum("vtot").alias("ctot"))
+    else:
+        mem = vtot.select("id", F.col("id").alias("com")).localCheckpoint(eager=True)
+        ctot = vtot.select(F.col("id").alias("com"), F.col("vtot").alias("ctot"))
+    frontier: DataFrame | None = None  # None ≙ all marked
+    processed: int | None = None
+    # frontier-seeded DYNAMIC marking (louvain.hxx:305-389): with a
+    # warm start + affected set, round 0 scans only the changed-edge
+    # endpoints; moves re-flag neighbors in-kernel
+    if warm and opts.affected_vertices is not None:
+        frontier = (
+            opts.affected_vertices.select("id")
+            .join(vtot.select("id"), "id")  # drop out-of-graph ids
+            .localCheckpoint(eager=True)
+        )
+        processed = 0
+    if probe:
+        # setup = edge bucketing + routing build (edge-sized, once per
+        # pass); everything after is per-iteration
+        probe.mark_setup()
+
+    def step(rnd: int) -> float:
+        nonlocal mem, frontier, ctot, processed
+        if processed is not None:
+            processed += frontier.count()
+        state, el = _local_move_round(
+            edges_b, mem, vtot, ctot, m_total, opts.resolution,
+            rnd=rnd, gate=gate, frontier=frontier, routing=routing,
+        )
+        # state is checkpointed: these are zero-cost projections
+        mem = state.select("id", "com")
+        frontier = state.where("vaff").select("id")
+        ctot = vtot.join(mem, "id").groupBy("com").agg(F.sum("vtot").alias("ctot"))
+        if probe:
+            probe.mark_round()
+        return el
+
+    iters, el_pass, round_times = _run_rounds(opts, E, gate, step)
+    return mem, iters, el_pass, None, round_times, processed, None
 
 
 def _local_move_round(
@@ -1045,7 +1028,6 @@ def _local_move_round(
     gate: int = 1,
     frontier: DataFrame | None = None,
     routing: DataFrame | None = None,
-    cache_dir: str | None = None,
 ):
     """One distributed local-move iteration → (state, Σ gains) — the
     100×-scale (non-broadcast) path, for vertex counts too large to
@@ -1095,23 +1077,14 @@ def _local_move_round(
         "id", "com", "vtot", "ctot", "vaff"
     )
     routed = state_v.join(routing, "id")
-    if cache_dir is not None:
-        # local mode: the block's edges come from the per-pass npz
-        # cache, so the iteration ships ONLY the routed vertex state
-        # (see _routed_state_kernel_factory)
-        emitted = routed.groupby("block").applyInPandas(
-            _routed_state_kernel_factory(cache_dir, rnd, gate, m, resolution),
+    emitted = (
+        edges.groupby("block")
+        .cogroup(routed.groupby("block"))
+        .applyInPandas(
+            _cogroup_kernel_factory(rnd, gate, m, resolution),
             _MOVE_SCHEMA,
         )
-    else:
-        emitted = (
-            edges.groupby("block")
-            .cogroup(routed.groupby("block"))
-            .applyInPandas(
-                _cogroup_kernel_factory(rnd, gate, m, resolution),
-                _MOVE_SCHEMA,
-            )
-        )
+    )
     # merge kernel emissions: authoritative com from the owning block
     # (max over exactly one non-null), vaff = any block flagged it
     agg = emitted.groupBy("id").agg(
@@ -1181,13 +1154,14 @@ def _shuffle_totals(spark) -> tuple[int, int]:
     """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all
     completed stages, read from the local UI REST API.
 
-    Evidence hook for the scale claim in _local_move_round: sampling
-    this before/after an iteration measures the iteration's actual
-    exchange volume, proving per-iteration shuffle is O(V·r)
+    Evidence hook for the routed gate's scale claim (_local_move_round):
+    sampled before/after an iteration it measures the iteration's
+    actual exchange volume, showing per-iteration shuffle is O(V·r)
     (vertex-sized routed state), not O(E) (the bucketed edges), at
     BIGDIST scale. Returns (0, 0) when the UI is disabled (the default
-    session config) or unreachable — callers gate on
-    LOUVAIN_SHUFFLE_PROBE and enable the UI for probe runs.
+    session config) or unreachable — louvain() samples it through
+    _ShuffleProbe only under LOUVAIN_SHUFFLE_PROBE, and probe runs
+    enable the UI.
     """
     import json as _json
     import urllib.request
@@ -1207,6 +1181,32 @@ def _shuffle_totals(spark) -> tuple[int, int]:
         )
     except Exception:
         return (0, 0)
+
+
+class _ShuffleProbe:
+    """One dist pass's shuffle bytes (LOUVAIN_SHUFFLE_PROBE): the
+    one-time setup, then one entry per ``mark_round`` — the
+    ``shuffle_probe`` record of ``pass_log``."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.last = _shuffle_totals(spark)
+        self.setup: tuple | None = None
+        self.rounds: list = []
+        self.routing_rows: int | None = None
+
+    def _delta(self) -> tuple[int, int]:
+        cur = _shuffle_totals(self.spark)
+        d = (cur[0] - self.last[0], cur[1] - self.last[1])
+        self.last = cur
+        return d
+
+    def mark_setup(self) -> None:
+        self.setup = self._delta()
+
+    def mark_round(self, **extra) -> None:
+        read, write = self._delta()
+        self.rounds.append({**extra, "read": read, "write": write})
 
 
 def _compose(ucom: DataFrame | None, mem: DataFrame) -> DataFrame:
@@ -1379,25 +1379,17 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
                 return LouvainResult(
                     spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
                 )
-        _dbg = os.environ.get("LOUVAIN_DEBUG_TIMING")
         # evidence probe (see _shuffle_totals): per-pass setup vs
         # per-iteration shuffle volume, recorded into pass_log
-        _probe = os.environ.get("LOUVAIN_SHUFFLE_PROBE")
-        _sh0 = _shuffle_totals(spark) if _probe else (0, 0)
-        shuffle_setup: tuple | None = None
-        shuffle_rounds: list = []
-        routing_rows: int | None = None
+        probe = (
+            _ShuffleProbe(spark)
+            if os.environ.get("LOUVAIN_SHUFFLE_PROBE") else None
+        )
         # blocks sized by vertex count (reference chunk geometry);
         # a single block with gate=1 IS the sequential reference sweep
         blocks_pass = max(1, min(num_blocks, gn // opts.block_vertices or 1))
         gate = 1 if blocks_pass == 1 else 2
-        init_mem = (
-            opts.initial_membership
-            if (p == 0 and opts.initial_membership is not None)
-            else None
-        )
-        cn: int | None = None
-        q_cand: float | None = None  # driver-computed Q (broadcast path)
+        warm = p == 0 and opts.initial_membership is not None
         # partition + sort the edge table by kernel block ONCE per
         # pass (the analog of the reference's per-pass CSR rebuild,
         # louvain.hxx:1174-1176): no iteration ever shuffles or
@@ -1419,40 +1411,27 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
             if not _block_caches(spark):
                 eb_ = eb_.sortWithinPartitions("src", "dst")
             edges_b = eb_.persist()
-            if _probe:
+            if probe:
                 # force the shuffle here only when measuring, so the
                 # setup-bytes attribution stays exact; otherwise the
                 # first consumer (block-cache writer / round 0)
                 # materializes the persist without an extra scan
                 edges_b.count()
-                _s1 = _shuffle_totals(spark)
-                shuffle_setup = (_s1[0] - _sh0[0], _s1[1] - _sh0[1])
-                _sh0 = _s1
-            (
-                mem, iters, el_pass, cn, round_times, processed, q_cand,
-            ) = _driver_rounds(
-                spark, edges_b, *vt_arrs, init_mem is not None, opts,
-                m_total, E, gate, p, _dbg, blocks_pass,
+                probe.mark_setup()
+            rounds = _driver_rounds(
+                spark, edges_b, *vt_arrs, warm, opts, m_total, E, gate,
+                blocks_pass,
             )
-            mem = mem.persist()
-            if _probe:
+            if probe:
                 # driver-coordinated rounds are zero-shuffle by design:
                 # one total across ALL iterations, expected ≈ 0
-                _s1 = _shuffle_totals(spark)
-                shuffle_rounds.append(
-                    {"iters": iters, "read": _s1[0] - _sh0[0],
-                     "write": _s1[1] - _sh0[1]}
-                )
-                _sh0 = _s1
+                probe.mark_round(iters=rounds[1])
         else:
-            # scale path: explicit block column so the per-iteration
+            # routed gate: explicit block column so the per-iteration
             # cogroup can align routed vertex state with the static
-            # edge buckets. The routing table (vertex → blocks that
-            # reference it) is built once per pass; after this, an
-            # iteration moves only vertex-sized frames. (At this
-            # vertex count blocks_pass ≫ shuffle partitions, so the
-            # pmod→murmur3 balls-in-bins skew of a small block domain
-            # doesn't apply.)
+            # edge buckets. (At this vertex count blocks_pass ≫
+            # shuffle partitions, so the pmod→murmur3 balls-in-bins
+            # skew of a small block domain doesn't apply.)
             edges_b = (
                 edges.withColumn(
                     "block", F.pmod(F.hash("src"), F.lit(blocks_pass))
@@ -1462,166 +1441,10 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
                 .persist()
             )
             edges_b.count()
-            # eager localCheckpoint rather than persist: it is re-read
-            # every iteration AND it truncates lineage back to edges_b
-            # (sharing lineage would make the per-iteration cogroup an
-            # ambiguous self-join on `block`)
-            # repartition("id") BEFORE the checkpoint: the per-iteration
-            # state⋈routing join is on id, and the checkpoint pins this
-            # partitioning — without it the (block,id)-partitioned
-            # distinct() output re-exchanges all V·r routing rows by id
-            # EVERY iteration; with it only the vertex-sized state side
-            # moves (the routing side is the big one: hubs appear in
-            # up to num_blocks blocks)
-            routing = (
-                edges_b.select("block", F.col("src").alias("id"))
-                .unionByName(edges_b.select("block", F.col("dst").alias("id")))
-                .distinct()
-                .repartition("id")
-                .localCheckpoint(eager=True)
+            rounds = _routed_rounds(
+                edges_b, vtot, warm, opts, m_total, E, gate, probe
             )
-            # local mode: raw per-block npz edge cache, written once
-            # per pass — iterations then ship ONLY the routed vertex
-            # state through Arrow (see _routed_state_kernel_factory;
-            # same local-only contract as the broadcast path's cache)
-            fb_cache: str | None = None
-            if _block_caches(spark):
-                import tempfile
-
-                fb_cache = tempfile.mkdtemp(prefix="louvain_fbblocks_")
-                _write_raw_block_cache(edges_b, fb_cache)
-            if _probe:
-                # routing rows = V·r (r = mean blocks per vertex) — the
-                # row count each iteration's exchange is proportional
-                # to. Emitted so the shuffle-byte evidence can be tied
-                # to routed-state volume, not edge volume: bytes per
-                # routed row should be constant across fixtures while
-                # bytes per edge varies with density.
-                routing_rows = routing.count()
-            if init_mem is not None:
-                # warm start (louvainInitializeFromW): provided
-                # membership; absent vertices get FRESH singleton
-                # labels base+id OUTSIDE the provided (dense 0..C-1)
-                # range — own-id labels would collide with provided
-                # labels and silently merge into unrelated communities.
-                # base+id is unique, zero-shuffle, and order-isomorphic
-                # to the driver path's base+arange, so tie-breaks
-                # ((maxΔQ, min c)) agree across modes. ctot is
-                # re-accumulated from the CURRENT vtot
-                # (louvainUpdateWeightsFromU)
-                # base from init_mem rows MATCHED to the graph's vertex
-                # set — the driver path derives its base from matched
-                # rows only, so computing it over ALL provided rows here
-                # would make fresh labels value-divergent across modes
-                # whenever init_mem mentions vertices absent from the
-                # graph (order-isomorphism held, value parity did not)
-                mx = (
-                    init_mem.join(vtot.select("id"), "id")
-                    .agg(F.max("com").alias("m"))
-                    .first()["m"]
-                )
-                base = int(mx) + 1 if mx is not None else 0
-                mem = (
-                    vtot.select("id")
-                    .join(init_mem.select("id", "com"), "id", "left")
-                    .select(
-                        "id",
-                        F.coalesce(
-                            "com", F.col("id") + F.lit(base)
-                        ).alias("com"),
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                ctot = (
-                    vtot.join(mem, "id")
-                    .groupBy("com")
-                    .agg(F.sum("vtot").alias("ctot"))
-                )
-            else:
-                mem = vtot.select("id", F.col("id").alias("com")).localCheckpoint(eager=True)
-                ctot = vtot.select(F.col("id").alias("com"), F.col("vtot").alias("ctot"))
-            iters = 0
-            low_rounds = 0
-            stall_rounds = 0
-            prev_el = float("inf")
-            el_pass = 0.0
-            round_times = []
-            frontier: DataFrame | None = None  # None ≙ all marked
-            # frontier-seeded DYNAMIC marking (louvain.hxx:305-389):
-            # with a warm start + affected set, round 0 scans only the
-            # changed-edge endpoints; moves re-flag neighbors in-kernel
-            track_work = False
-            processed: int | None = None
-            if init_mem is not None and opts.affected_vertices is not None:
-                frontier = (
-                    opts.affected_vertices.select("id")
-                    .join(vtot.select("id"), "id")  # drop out-of-graph ids
-                    .localCheckpoint(eager=True)
-                )
-                track_work = True
-            if _probe:
-                # setup = edge bucketing + routing build (edge-sized,
-                # once per pass); everything after is per-iteration
-                _s1 = _shuffle_totals(spark)
-                shuffle_setup = (_s1[0] - _sh0[0], _s1[1] - _sh0[1])
-                _sh0 = _s1
-            try:
-                while iters < opts.max_iterations:
-                    _t_it = time.time()
-                    if track_work:
-                        # work metric only when DYNAMIC seeding is active —
-                        # an extra vertex-sized count job per round is not
-                        # paid on the static path
-                        processed = (processed or 0) + (
-                            frontier.count() if frontier is not None else gn
-                        )
-                    state, el = _local_move_round(
-                        edges_b, mem, vtot, ctot, m_total, opts.resolution,
-                        rnd=iters, gate=gate, frontier=frontier,
-                        routing=routing, cache_dir=fb_cache,
-                    )
-                    # state is checkpointed: these are zero-cost projections
-                    mem = state.select("id", "com")
-                    frontier = state.where("vaff").select("id")
-                    ctot = vtot.join(mem, "id").groupBy("com").agg(F.sum("vtot").alias("ctot"))
-                    iters += 1
-                    el_pass += el
-                    round_times.append(round(time.time() - _t_it, 3))
-                    if _probe:
-                        _s1 = _shuffle_totals(spark)
-                        shuffle_rounds.append(
-                            {"read": _s1[0] - _sh0[0], "write": _s1[1] - _sh0[1]}
-                        )
-                        _sh0 = _s1
-                    if _dbg:
-                        nf = state.where("vaff").count()
-                        print(
-                            f"[louvain] pass={p} it={iters} {time.time() - _t_it:.1f}s "
-                            f"el={el:.5f} frontier={nf}",
-                            flush=True,
-                        )
-                    # gated rounds: require two consecutive below-tolerance
-                    # rounds (each round only half the vertices may move);
-                    # single-block sweeps use the reference's single check
-                    # (louvain.hxx:541)
-                    low_rounds = low_rounds + 1 if el <= E else 0
-                    if low_rounds >= (1 if gate == 1 else 2) or el == 0.0:
-                        break
-                    # plateau break: gated synchronous rounds bottom out at
-                    # a flip-flop noise floor above tiny tolerances — once
-                    # el stops decreasing (<5% improvement twice in a row),
-                    # more rounds only burn time without modularity progress
-                    stall_rounds = stall_rounds + 1 if el > 0.95 * prev_el else 0
-                    prev_el = el
-                    if iters >= 3 and stall_rounds >= 2:
-                        break
-            finally:
-                # cleanup on ALL paths — a mid-loop exception must
-                # not leak the per-pass temp block cache
-                if fb_cache is not None:
-                    import shutil
-
-                    shutil.rmtree(fb_cache, ignore_errors=True)
+        mem, iters, el_pass, cn, round_times, processed, q_cand = rounds
         edges_b.unpersist()
         t_move = time.time() - t0
         total_iters += iters
@@ -1634,11 +1457,11 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
                # main.cxx:70-76); t_move additionally includes the
                # one-time pass setup (bucketing ≙ CSR rebuild, vtot)
                "t_rounds": round_times}
-        if _probe:
+        if probe:
             rec["shuffle_probe"] = {
-                "setup_bytes": shuffle_setup,
-                "round_bytes": shuffle_rounds,
-                "routing_rows": routing_rows,
+                "setup_bytes": probe.setup,
+                "round_bytes": probe.rounds,
+                "routing_rows": probe.routing_rows,
                 "blocks": blocks_pass,
             }
         p += 1

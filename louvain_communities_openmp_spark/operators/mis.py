@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .transforms import vertices
 
 UNDECIDED, IN_SET, EXCLUDED = 0, 1, 2
@@ -62,10 +63,10 @@ def mis_rounds(edges: DataFrame, rounds: int = 3) -> DataFrame:
         F.lit(UNDECIDED).alias("status"),
         _priority(F.col("id")).alias("p"),
     ).localCheckpoint(eager=True)
-    # vertex-sized state broadcasts into the edge join under the same
-    # 5M gate as pagerank/labelprop; above it the join keys on the
-    # pre-partitioned src
-    use_bc = verts.count() <= 5_000_000
+    # vertex-sized state broadcasts into the edge join under the bound
+    # every operator shares (serial.BROADCAST_VERTICES); above it the
+    # join keys on the pre-partitioned src
+    use_bc = verts.count() <= serial.BROADCAST_VERTICES
     for _ in range(rounds):
         und = state.where(F.col("status") == UNDECIDED).select("id", "p")
         und_src = und.select(F.col("id").alias("src"))

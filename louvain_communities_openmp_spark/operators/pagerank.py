@@ -100,65 +100,71 @@ def pagerank(
     """
     spark = edges.sparkSession
     verts = vertices(edges).persist()
-    n = verts.count()
-    if n == 0:
-        return PageRankResult(spark.createDataFrame([], "id long, rank double"), 0, 0.0)
-    vt = vertex_weights(edges)
-    use_bc = n <= 5_000_000
-    trans = _transitions(edges, vt, use_bc)
-    trans.count()
-    # static marker of vertices WITH out-edges; dangling mass at t is
-    # then an aggregate over ranks_t alone — fused below into the same
-    # action as the error norm (one aggregate pass per iteration
-    # instead of a separate anti-join job, halving driver round-trips)
-    has_out = _has_out(trans)
-    # dangling mass of the uniform start vector: (n − |src|)/n · 1/n
-    # (recomputed below from the seeded vector when warm-starting)
-    dangling = (n - has_out.count()) / n
-    # eager localCheckpoint per round: truncates lineage and avoids the
-    # unpersist-cascade recompute (see labelprop.py)
-    if initial_ranks is not None:
-        seeded = verts.join(
-            initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-        ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
-        total = seeded.agg(F.sum("rank")).first()[0] or 1.0
-        ranks = seeded.select(
-            "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-        ).localCheckpoint(eager=True)
-        dangling = _dangling_mass(ranks, has_out)
-    else:
-        ranks = verts.select(
-            "id", F.lit(1.0 / n).alias("rank")
-        ).localCheckpoint(eager=True)
-    it, err = 0, float("inf")
-    while it < max_iter and err >= tol:
-        contrib = _contributions(trans, ranks, use_bc)
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        new_ranks = (
-            verts.join(contrib, "id", "left")
-            .select(
-                "id",
-                (F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("rank"),
+    trans = has_out = None
+    try:
+        n = verts.count()
+        if n == 0:
+            return PageRankResult(spark.createDataFrame([], "id long, rank double"), 0, 0.0)
+        vt = vertex_weights(edges)
+        use_bc = n <= serial.BROADCAST_VERTICES
+        trans = _transitions(edges, vt, use_bc)
+        trans.count()
+        # static marker of vertices WITH out-edges; dangling mass at t is
+        # then an aggregate over ranks_t alone — fused below into the same
+        # action as the error norm (one aggregate pass per iteration
+        # instead of a separate anti-join job, halving driver round-trips)
+        has_out = _has_out(trans)
+        # dangling mass of the uniform start vector: (n − |src|)/n · 1/n
+        # (recomputed below from the seeded vector when warm-starting)
+        dangling = (n - has_out.count()) / n
+        # eager localCheckpoint per round: truncates lineage and avoids the
+        # unpersist-cascade recompute (see labelprop.py)
+        if initial_ranks is not None:
+            seeded = verts.join(
+                initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
+            ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
+            total = seeded.agg(F.sum("rank")).first()[0] or 1.0
+            ranks = seeded.select(
+                "id", (F.col("rank") / F.lit(float(total))).alias("rank")
+            ).localCheckpoint(eager=True)
+            dangling = _dangling_mass(ranks, has_out)
+        else:
+            ranks = verts.select(
+                "id", F.lit(1.0 / n).alias("rank")
+            ).localCheckpoint(eager=True)
+        it, err = 0, float("inf")
+        while it < max_iter and err >= tol:
+            contrib = _contributions(trans, ranks, use_bc)
+            base = (1.0 - alpha) / n + alpha * dangling / n
+            new_ranks = (
+                verts.join(contrib, "id", "left")
+                .select(
+                    "id",
+                    (F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("rank"),
+                )
+            ).localCheckpoint(eager=True)
+            row = (
+                new_ranks.join(ranks.withColumnRenamed("rank", "old"), "id")
+                .join(has_out, "id", "left")
+                .agg(
+                    F.sum(F.abs(F.col("rank") - F.col("old"))).alias("err"),
+                    F.sum(
+                        F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)
+                    ).alias("dangling"),
+                )
+                .collect()[0]
             )
-        ).localCheckpoint(eager=True)
-        row = (
-            new_ranks.join(ranks.withColumnRenamed("rank", "old"), "id")
-            .join(has_out, "id", "left")
-            .agg(
-                F.sum(F.abs(F.col("rank") - F.col("old"))).alias("err"),
-                F.sum(
-                    F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)
-                ).alias("dangling"),
-            )
-            .collect()[0]
-        )
-        err = float(row["err"] or 0.0)
-        dangling = float(row["dangling"] or 0.0)
-        ranks = new_ranks
-        it += 1
-    trans.unpersist()
-    has_out.unpersist()
-    return PageRankResult(ranks, it, float(err))
+            err = float(row["err"] or 0.0)
+            dangling = float(row["dangling"] or 0.0)
+            ranks = new_ranks
+            it += 1
+        return PageRankResult(ranks, it, float(err))
+    finally:
+        # a refresh per graph version (DynamicPageRank) must not leave
+        # a vertex-sized frame cached per call
+        for cached in (trans, has_out, verts):
+            if cached is not None:
+                cached.unpersist()
 
 
 def _pagerank_fixed_local(
@@ -215,7 +221,7 @@ def pagerank_fixed(
 def _pagerank_fixed_dist(edges: DataFrame, alpha: float, iters: int) -> DataFrame:
     vt = vertex_weights(edges).persist()
     n = vt.count()
-    use_bc = n <= 5_000_000
+    use_bc = n <= serial.BROADCAST_VERTICES
     trans = _transitions(edges, vt, use_bc)
     ranks = vt.select("id", F.lit(1.0 / n).alias("rank"))
     for _ in range(iters):
@@ -255,29 +261,33 @@ def personalized_pagerank_fixed(
     (a broadcast-sized left join when |seeds| ≪ V).
     """
     vt = vertex_weights(edges).persist()
-    use_bc = vt.count() <= 5_000_000
-    trans = _transitions(edges, vt, use_bc)
-    s = seeds.select("id").distinct()
-    n_seeds = s.count()
-    if n_seeds == 0:
-        raise ValueError("personalized pagerank needs a non-empty seed set")
-    sv = s.withColumn("s", F.lit(1.0 / n_seeds))
-    base = vt.select("id").join(sv, "id", "left").select(
-        "id", F.coalesce("s", F.lit(0.0)).alias("s")
-    ).persist()
-    ranks = base.select("id", F.col("s").alias("rank"))
-    for _ in range(iters):
-        contrib = _contributions(trans, ranks, use_bc)
-        ranks = base.join(contrib, "id", "left").select(
-            "id",
-            (
-                F.lit(1.0 - alpha) * F.col("s")
-                + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
-            ).alias("rank"),
-        )
-    ranks = ranks.localCheckpoint(eager=True)
-    for cached in (trans, base, vt):
-        cached.unpersist()
+    trans = base = None
+    try:
+        use_bc = vt.count() <= serial.BROADCAST_VERTICES
+        trans = _transitions(edges, vt, use_bc)
+        s = seeds.select("id").distinct()
+        n_seeds = s.count()
+        if n_seeds == 0:
+            raise ValueError("personalized pagerank needs a non-empty seed set")
+        sv = s.withColumn("s", F.lit(1.0 / n_seeds))
+        base = vt.select("id").join(sv, "id", "left").select(
+            "id", F.coalesce("s", F.lit(0.0)).alias("s")
+        ).persist()
+        ranks = base.select("id", F.col("s").alias("rank"))
+        for _ in range(iters):
+            contrib = _contributions(trans, ranks, use_bc)
+            ranks = base.join(contrib, "id", "left").select(
+                "id",
+                (
+                    F.lit(1.0 - alpha) * F.col("s")
+                    + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
+                ).alias("rank"),
+            )
+        ranks = ranks.localCheckpoint(eager=True)
+    finally:
+        for cached in (trans, base, vt):
+            if cached is not None:
+                cached.unpersist()
     return ranks.select("id", F.round("rank", 7).alias("rank"))
 
 
@@ -302,33 +312,36 @@ def pagerank_dangling_fixed(
     iteration share one materialization instead of forking lineage.
     """
     verts = vertices(edges).persist()
-    n = verts.count()
-    if n == 0:
-        return edges.sparkSession.createDataFrame([], "id long, rank double")
-    vt = vertex_weights(edges)
-    use_bc = n <= 5_000_000
-    trans = _transitions(edges, vt, use_bc)
-    has_out = _has_out(trans)
-    dangling = (n - has_out.count()) / n
-    ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=True
-    )
-    for it in range(iters):
-        contrib = _contributions(trans, ranks, use_bc)
-        base = (1.0 - alpha) / n + alpha * dangling / n
-        ranks = (
-            verts.join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+    trans = has_out = None
+    try:
+        n = verts.count()
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], "id long, rank double")
+        vt = vertex_weights(edges)
+        use_bc = n <= serial.BROADCAST_VERTICES
+        trans = _transitions(edges, vt, use_bc)
+        has_out = _has_out(trans)
+        dangling = (n - has_out.count()) / n
+        ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
+            eager=True
         )
-        if it < iters - 1:
-            dangling = _dangling_mass(ranks, has_out)
-    trans.unpersist()
-    has_out.unpersist()
-    verts.unpersist()
+        for it in range(iters):
+            contrib = _contributions(trans, ranks, use_bc)
+            base = (1.0 - alpha) / n + alpha * dangling / n
+            ranks = (
+                verts.join(contrib, "id", "left")
+                .select(
+                    "id",
+                    (
+                        F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            if it < iters - 1:
+                dangling = _dangling_mass(ranks, has_out)
+    finally:
+        for cached in (trans, has_out, verts):
+            if cached is not None:
+                cached.unpersist()
     return ranks.select("id", F.round("rank", 7).alias("rank"))

@@ -64,6 +64,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
 from .transforms import vertices
 
 
@@ -124,7 +125,6 @@ def strongly_connected_components(
     edges: DataFrame,
     max_iter: int = 200,
     max_outer: int = 64,
-    broadcast_vertices: int = 5_000_000,
 ) -> SCCResult:
     """Exact SCC labels (id, scc) with scc = min vertex id per SCC.
 
@@ -133,7 +133,7 @@ def strongly_connected_components(
     plain connected components).
     """
     verts = vertices(edges)
-    use_bc = verts.count() <= broadcast_vertices
+    use_bc = verts.count() <= serial.BROADCAST_VERTICES
     active_v = verts.localCheckpoint(eager=True)
     active_e = (
         edges.select("src", "dst")
@@ -274,7 +274,6 @@ def _reachable_set(
 def bowtie_classes(
     edges: DataFrame,
     components: DataFrame | None = None,
-    broadcast_vertices: int = 5_000_000,
 ) -> DataFrame:
     """Broder bow-tie macro-structure of a directed graph
     (Broder et al. 2000, "Graph structure in the web"): every vertex
@@ -296,11 +295,9 @@ def bowtie_classes(
     web-shaped graphs (periphery depth, not diameter).
     """
     if components is None:
-        components = strongly_connected_components(
-            edges, broadcast_vertices=broadcast_vertices
-        ).components
+        components = strongly_connected_components(edges).components
     comp = components.localCheckpoint(eager=True)
-    use_bc = comp.count() <= broadcast_vertices
+    use_bc = comp.count() <= serial.BROADCAST_VERTICES
     core_lab = (
         comp.groupBy("scc")
         .agg(F.count("*").alias("n"))

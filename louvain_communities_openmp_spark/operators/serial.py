@@ -34,10 +34,11 @@ from pyspark.sql import DataFrame
 # the reference's representation swap (louvain.hxx:1174-1176).
 SERIAL_EDGES = 4_000_000
 
-# Vertices up to which components and labelprop broadcast their
-# vertex-sized label frame into the per-round edge join (~20 B/row ⇒
-# ≲100 MB); above it they partition the edges on the join key. The
-# default of LouvainOptions.broadcast_vertices.
+# Vertices up to which the iterative operators (components, labelprop,
+# the PageRank family, HITS, SALSA, Katz, absorb, eigenvector, MIS, SCC
+# and bow-tie) broadcast their vertex-sized state into the per-round
+# edge join (~20 B/row ⇒ ≲100 MB); above it they partition the edges on
+# the join key. The default of LouvainOptions.broadcast_vertices.
 BROADCAST_VERTICES = 5_000_000
 
 

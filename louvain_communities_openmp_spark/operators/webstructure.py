@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import serial
+
 
 def _directed_simple(edges: DataFrame) -> DataFrame:
     """Directed simple edge set: self-loops dropped, duplicates
@@ -152,7 +154,7 @@ def salsa_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
         .persist()
     )
     n = verts.count()
-    use_bc = n <= 5_000_000  # same vector-broadcast gate as hits.py
+    use_bc = n <= serial.BROADCAST_VERTICES
     # walk matrix rows, normalized both ways, materialized once and
     # partitioned on each half-step's aggregation key (hits.py plan)
     wm = de.join(win.withColumnRenamed("id", "dst"), "dst").join(

@@ -291,6 +291,41 @@ def test_personalized_pagerank(spark):
     assert got[0] > got[5] and got[1] > got[4]
 
 
+def _cached_rdds(spark) -> int:
+    """Persisted RDDs that are not local checkpoints: the frames an
+    operator cached and did not release (the eager local checkpoints
+    hold its results and round states, so they are not counted)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(1 for r in rdds.values() if not r.rdd().isCheckpointed())
+
+
+def test_pagerank_operators_release_caches(spark):
+    """The PageRank operators release every frame they cache, also on
+    the empty-graph return and the empty-seed ValueError:
+    DynamicPageRank calls pagerank once per graph version."""
+    import pytest
+
+    from louvain_communities_openmp_spark.operators.pagerank import (
+        pagerank_dangling_fixed,
+        personalized_pagerank_fixed,
+    )
+
+    e = edges_from_list(spark, karate())
+    empty = e.limit(0)
+    no_seeds = spark.createDataFrame([], "id long")
+    cached = _cached_rdds(spark)
+    for run in (
+        lambda: pagerank(e, max_iter=3),
+        lambda: pagerank(empty),
+        lambda: pagerank_dangling_fixed(empty),
+    ):
+        run()
+        assert _cached_rdds(spark) == cached
+    with pytest.raises(ValueError):
+        personalized_pagerank_fixed(e, no_seeds)
+    assert _cached_rdds(spark) == cached
+
+
 def test_degree_assortativity(spark):
     from louvain_communities_openmp_spark.operators.linkpred import (
         degree_assortativity,

@@ -160,6 +160,38 @@ def test_dist_rounds_without_block_caches(spark, monkeypatch):
             assert abs(cached.modularity - plain.modularity) < 1e-12
 
 
+def test_block_body_resorts_unordered_rows():
+    """The routed gate's block body (_state_edges_sweep) needs each
+    block's rows in (src, dst) order; rows that arrive shuffled are
+    re-sorted, so the emissions match the ordered run exactly."""
+    import numpy as np
+    import pandas as pd
+
+    from louvain_communities_openmp_spark.operators.louvain import (
+        _state_edges_sweep,
+    )
+
+    src, dst, w = (np.array(c) for c in zip(*karate()))
+    src, dst, w = src.astype(np.int64), dst.astype(np.int64), w.astype(np.float64)
+    block = src % 2 == 0  # one block: the even-id sources
+    o = np.lexsort((dst[block], src[block]))
+    bs, bd, bw = src[block][o], dst[block][o], w[block][o]
+    ids = np.unique(np.concatenate([bs, bd]))
+    vtot = np.bincount(src, weights=w)
+    com = ids // 3  # communities of up to three consecutive ids
+    ctot = pd.Series(vtot[ids]).groupby(com).transform("sum").to_numpy()
+    spdf = pd.DataFrame(
+        {"id": ids, "com": com, "vtot": vtot[ids], "ctot": ctot,
+         "vaff": ids % 5 != 0}
+    )
+    m = float(w.sum()) / 2.0
+    want = _state_edges_sweep(bs, bd, bw, spdf, 0, 1, m, 1.0)
+    assert len(want) > 0
+    p = np.random.default_rng(7).permutation(len(bs))
+    got = _state_edges_sweep(bs[p], bd[p], bw[p], spdf.iloc[::-1], 0, 1, m, 1.0)
+    pd.testing.assert_frame_equal(got, want)
+
+
 def test_warm_start_oracle_converged_input(spark):
     """Seeding louvain_seq_fast with its own converged membership makes
     the next run converge immediately (louvainInitializeFromW)."""
