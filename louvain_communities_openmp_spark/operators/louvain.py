@@ -1125,16 +1125,18 @@ def _local_move_round(
     return state, float(row["el"] or 0.0)
 
 
-def _renumber(membership: DataFrame) -> DataFrame:
+def _renumber(membership: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     """Dense renumber, ascending old community id — the same order as
     the reference's exclusive scan over the existence bitmap
-    (louvain.hxx:923-928)."""
-    from ..sources.edges import dense_ids
+    (louvain.hxx:923-928). Returns the renumbered membership and the
+    cache the id assignment holds (dense_ids_cached), to be released
+    once the membership is materialized."""
+    from ..sources.edges import dense_ids_cached
 
-    mapping = dense_ids(membership.select("com"), "com", "new_com")
+    mapping, cache = dense_ids_cached(membership.select("com"), "com", "new_com")
     return membership.join(mapping, "com").select(
         "id", F.col("new_com").alias("com")
-    )
+    ), cache
 
 
 def _contract(edges: DataFrame, membership: DataFrame) -> DataFrame:
@@ -1228,7 +1230,12 @@ def _serial_finish(
     ``serial.SERIAL_EDGES``. ``warm`` seeds pass 0 from the warm-start
     fields (_warm_start). The membership is over the ids of ``edges``
     and the modularity is its Q over ``edges``; an empty or zero-weight
-    graph returns an empty result with an empty pass_log."""
+    graph returns an empty result with an empty pass_log.
+
+    The pass_log record splits ``t_local`` into its phases, like the
+    reference's phase report (main.cxx:70-76): ``t_collect`` (edge
+    collect), ``t_csr`` (CSR prologue and warm start), ``t_solve``
+    (louvain_seq_fast) and ``t_q`` (membership frame and Q)."""
     import numpy as np
 
     t0 = time.time()
@@ -1237,6 +1244,7 @@ def _serial_finish(
     # exchange + its sampling pass cost more than the driver-side O(E)
     # prologue at the ≤4M-edge bound)
     arrs = collect_columns(edges, ["src", "dst", "w"])
+    t_collect = time.time()
     if len(arrs[0]) == 0 or float(arrs[2].sum()) <= 0.0:
         return LouvainResult(
             spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
@@ -1250,6 +1258,7 @@ def _serial_finish(
         init_com = np.unique(com, return_inverse=True)[1]
         if aff is not None:
             init_aff = np.flatnonzero(aff)
+    t_csr = time.time()
     r = louvain_seq_fast(
         g.src,
         g.dst,
@@ -1263,6 +1272,7 @@ def _serial_finish(
         init_com=init_com,
         init_aff=init_aff,
     )
+    t_solve = time.time()
     com = np.asarray(r.membership, dtype=np.int64)
     mem = spark.createDataFrame(
         pd.DataFrame({"id": g.ids, "com": com}), MEMBERSHIP_SCHEMA
@@ -1277,6 +1287,7 @@ def _serial_finish(
     cin = np.bincount(cu[same], weights=g.w[same], minlength=len(g.ids))
     ctot = np.bincount(cu, weights=g.w, minlength=len(g.ids))
     q = float((cin / two_m - opts.resolution * (ctot / two_m) ** 2).sum())
+    t_end = time.time()
     return LouvainResult(mem, q, r.passes, r.iterations, [{
         "pass": p, "mode": "local_finish", "edges": len(arrs[0]),
         "local_passes": r.passes,
@@ -1284,7 +1295,11 @@ def _serial_finish(
         # the work metric frontier-seeded marking (affected_vertices)
         # is judged by
         "processed": sum(e.get("processed", 0) for e in r.pass_log),
-        "t_local": round(time.time() - t0, 3),
+        "t_local": round(t_end - t0, 3),
+        "t_collect": round(t_collect - t0, 3),
+        "t_csr": round(t_csr - t_collect, 3),
+        "t_solve": round(t_solve - t_csr, 3),
+        "t_q": round(t_end - t_solve, 3),
     }])
 
 
@@ -1335,6 +1350,9 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     total_iters = 0
     final_mem: DataFrame | None = None
     q_fast: float | None = None  # driver-computed Q (pure-serial solve)
+    # the breaking dist pass's vtot and membership: final_mem is built
+    # from them, so they are released once it is materialized
+    held: tuple = ()
     while p < opts.max_passes:
         E = opts.tolerance / (opts.tolerance_drop ** p)
         n_edges = edges.count()
@@ -1469,6 +1487,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         # louvain.hxx:1186, adapted to gated rounds)
         if el_pass <= E or p >= opts.max_passes:
             final_mem = _compose(ucom, mem).persist()
+            held = (vtot, mem)
             if ucom is None:
                 q_fast = q_cand  # this pass IS the whole solve
             pass_log.append(rec)
@@ -1479,11 +1498,13 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         pass_log.append(rec)
         if cn / gn >= opts.aggregation_tolerance:
             final_mem = _compose(ucom, mem).persist()
+            held = (vtot, mem)
             if ucom is None:
                 q_fast = q_cand
             break
         t1 = time.time()
-        mem_r = _renumber(mem).persist()
+        mem_r, ranks = _renumber(mem)
+        mem_r = mem_r.persist()
         # eager localCheckpoints: truncate cross-pass lineage (the
         # DataFrame analog of the reference's per-pass CSR rebuild,
         # louvain.hxx:1174-1176)
@@ -1500,17 +1521,24 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         ucom = new_ucom
         edges = new_edges
         vtot.unpersist()
+        mem.unpersist()
         mem_r.unpersist()
+        if ranks is not None:
+            ranks.unpersist()
 
     if final_mem is None:
         final_mem = (ucom if ucom is not None else edges.sparkSession.createDataFrame([], MEMBERSHIP_SCHEMA)).persist()
     if run is not None:
         run.save_pass(p - 1, edges, final_mem, {"done": True, "total_iterations": total_iters})
-    if q_fast is not None:
-        # materialize the persisted membership (modularity_op used to
-        # force it as a side effect of the skipped join job)
-        final_mem.count()
-        q = q_fast
-    else:
-        q = modularity_op(original_edges, final_mem, opts.resolution)
+    try:
+        if q_fast is not None:
+            # materialize the persisted membership (modularity_op used
+            # to force it as a side effect of the skipped join job)
+            final_mem.count()
+            q = q_fast
+        else:
+            q = modularity_op(original_edges, final_mem, opts.resolution)
+    finally:
+        for df in held:
+            df.unpersist()
     return LouvainResult(final_mem, q, p, total_iters, pass_log)

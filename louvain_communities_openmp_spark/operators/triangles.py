@@ -104,18 +104,16 @@ def _triangles(o: DataFrame) -> DataFrame:
 def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
     """Serial finish (operators/serial.py) under ``bound`` CANONICAL
     src<dst pairs ≈ 2·bound directed edges (the caller passes half of
-    ``serial.SERIAL_EDGES``): one numpy orientation pass
-    plus a C sorted-merge sweep
-    (oracle/_cmove.py triangle_count_csr), the exact transcription of
-    the distributed plan (degree-(deg,id) orientation, sorted
-    adjacency, per-edge intersection), so the total is identical —
-    pinned by tests/test_components_fastpath.py.
+    ``serial.SERIAL_EDGES``): one numpy orientation pass plus the C
+    marker-array sweep (oracle/_cmove.py triangle_count_csr, OpenMP
+    over vertices). It counts what the distributed plan counts
+    (degree-(deg,id) orientation, per-edge common out-neighbors), so
+    the total is identical — pinned by
+    tests/test_components_fastpath.py.
 
     Returns None above the bound or when no native kernel is available.
     """
-    import numpy as np
-
-    from ..oracle._cmove import get_local_move, triangle_count_csr_c
+    from ..oracle._cmove import get_local_move
 
     if get_local_move() is None:
         return None
@@ -124,9 +122,19 @@ def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
     )
     if arrs is None:
         return None
-    if len(arrs[0]) == 0:
+    return _triangle_total_arrays(*arrs)
+
+
+def _triangle_total_arrays(src, dst) -> int | None:
+    """Triangle total of the canonical rows ``src < dst`` (repeats
+    allowed) by the native kernel, or None when it is unavailable."""
+    import numpy as np
+
+    from ..oracle._cmove import triangle_count_csr_c
+
+    if len(src) == 0:
         return 0
-    g = edge_csr(*arrs)
+    g = edge_csr(src, dst)
     V = len(g.ids)
     # the _canonical distinct: drop repeats of a (src, dst) row, which
     # the (src, dst) order makes adjacent
@@ -138,7 +146,7 @@ def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
     fwd = (deg[sp] < deg[dp]) | (deg[sp] == deg[dp])
     u = np.where(fwd, sp, dp)
     v = np.where(fwd, dp, sp)
-    # distinct by construction → sorted adjacency per u
+    # distinct by construction → duplicate-free adjacency per u
     perm, indptr = pair_order(u, v, V)
     return triangle_count_csr_c(indptr, v[perm])
 

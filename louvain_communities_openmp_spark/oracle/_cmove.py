@@ -1,14 +1,23 @@
-"""Native (C) local-move sweep for the sequential Louvain kernel.
+"""Native (C) kernels for the driver-side serial finishes.
+
+One C source, compiled at first use and loaded via ctypes:
+
+- ``louvain_local_move``: the sequential Louvain local-move sweep;
+- ``louvain_contract``: the contraction to the coarse graph between
+  Louvain passes;
+- ``labelprop_rounds``: synchronous label-propagation rounds;
+- ``triangle_count_csr``: the marker-array triangle count, the only
+  parallel kernel (OpenMP over vertices);
+- ``csr_order``: the O(E + V) counting sort of the serial-finish seam.
 
 The local-move phase of ``louvain_seq_fast`` is an inherently
 sequential sweep (asynchronous vcom/ctot updates in ascending vertex
 order — louvain.hxx:527-545), so it cannot be vectorized with numpy
 without changing semantics. The Python dict-walk costs ~0.1 µs/edge;
-this module compiles the *identical* sweep to native code at first use
-(~10× less per-edge cost) and loads it via ctypes.
+the C sweep is the *identical* walk at ~10× less per-edge cost.
 
-Bit-identity contract (the same one the numpy hub path already meets,
-pinned by tests/test_oracle.py):
+Bit-identity contract of the sweep (the same one the numpy hub path
+already meets, pinned by tests/test_oracle.py):
 
 - per-vertex community accumulation in ADJACENCY ORDER via an
   insertion-ordered (stamp-array) table — float adds happen in exactly
@@ -22,11 +31,25 @@ pinned by tests/test_oracle.py):
 - compiled with ``-ffp-contract=off`` so the compiler cannot fuse
   multiply-adds into FMAs (which would change the bit pattern).
 
+The contraction scans communities, members and adjacency in the
+reference's order (louvain.hxx:865-912) and sums each coarse entry the
+way ``np.add.reduceat`` does (the first weight plus numpy's pairwise
+sum of the rest), so its arrays are bit-identical to
+``louvain_seq._contract_fast``'s (pinned by tests/test_cmove.py). The
+triangle total is an integer sum, so it is the same for every thread
+count.
+
+Build: ``-fopenmp`` is on; when the compiler or loader rejects it, the
+same source is built without it, the pragmas are ignored and the
+triangle kernel runs on one thread. The thread count is libgomp's
+default (``OMP_NUM_THREADS``, else the process's CPU affinity).
+
 Fallback: if no C compiler is available (or ``LOUVAIN_NO_CKERNEL`` is
-set) the caller keeps using the pure-Python sweep — same answer,
-slower. The shared object is built once into a content-addressed temp
-dir and atomically renamed, so concurrent tasks (executor-side
-``louvain_exact`` kernels) race safely.
+set) every wrapper returns None and the caller keeps its numpy or
+pure-Python path — same answer, slower. The shared object is built
+once into a content-addressed temp dir and atomically renamed, so
+concurrent tasks (executor-side ``louvain_exact`` kernels) race
+safely.
 """
 
 from __future__ import annotations
@@ -40,6 +63,9 @@ import tempfile
 _SRC = r"""
 #include <stdint.h>
 #include <stdlib.h>
+#ifdef _OPENMP
+#include <omp.h>
+#endif
 
 /* Sequential Louvain local-move sweep; semantics bit-identical to the
    Python oracle (_local_move / _local_move_fast in louvain_seq.py).
@@ -176,30 +202,152 @@ int64_t labelprop_rounds(
 }
 
 /* Edge-iterator triangle count over a degree-ordered oriented CSR
-   (out-adjacency sorted ascending, duplicate-free): for every oriented
-   edge (u, a), count |N(u) ∩ N(a)| by sorted-merge — the native
-   transcription of triangles.py's array_intersect plan. The oriented
-   outdeg ≤ O(√E) bound caps per-edge cost exactly as it caps the
-   distributed plan's array widths. */
+   (duplicate-free out-adjacency N+). Every triangle has exactly one
+   lowest-rank corner u, and is found once, at its u -> a edge, as a
+   common out-neighbor of u and a. For each u, N+(u) is marked in a
+   byte map, each N+(a) for a in N+(u) is scanned against the marks,
+   and N+(u) is unmarked again; the oriented outdeg <= O(sqrt E) bound
+   caps the scan per edge. Vertices run in parallel, one byte map per
+   thread (the reference's per-thread scratch and dynamic schedule,
+   louvain.hxx:159-181, 594); the total is an integer sum, so every
+   thread count gives the same answer. Returns the total, or -1 on
+   allocation failure. */
 int64_t triangle_count_csr(
     const int64_t *indptr, const int64_t *indices, int64_t n)
 {
+#ifdef _OPENMP
+    const int64_t T = omp_get_max_threads();
+#else
+    const int64_t T = 1;
+#endif
+    uint8_t *marks = (uint8_t *) calloc((size_t) (T * (n ? n : 1)), 1);
+    if (!marks) return -1;
     int64_t total = 0;
-    for (int64_t u = 0; u < n; u++) {
-        const int64_t ue = indptr[u + 1];
-        for (int64_t j = indptr[u]; j < ue; j++) {
-            const int64_t a = indices[j];
-            int64_t i1 = indptr[u], i2 = indptr[a];
-            const int64_t e1 = ue, e2 = indptr[a + 1];
-            while (i1 < e1 && i2 < e2) {
-                const int64_t x = indices[i1], y = indices[i2];
-                if (x < y) i1++;
-                else if (y < x) i2++;
-                else { total++; i1++; i2++; }
+#pragma omp parallel
+    {
+#ifdef _OPENMP
+        uint8_t *mark = marks + (size_t) omp_get_thread_num() * (size_t) n;
+#else
+        uint8_t *mark = marks;
+#endif
+#pragma omp for schedule(dynamic, 256) reduction(+:total)
+        for (int64_t u = 0; u < n; u++) {
+            const int64_t lo = indptr[u], hi = indptr[u + 1];
+            if (hi - lo < 2) continue;  /* a corner needs two out-edges */
+            for (int64_t j = lo; j < hi; j++) mark[indices[j]] = 1;
+            int64_t t = 0;
+            for (int64_t j = lo; j < hi; j++) {
+                const int64_t a = indices[j];
+                for (int64_t i = indptr[a]; i < indptr[a + 1]; i++)
+                    t += mark[indices[i]];
             }
+            for (int64_t j = lo; j < hi; j++) mark[indices[j]] = 0;
+            total += t;
         }
     }
+    free(marks);
     return total;
+}
+
+/* numpy's pairwise float64 sum (np.add.reduce and reduceat use it):
+   plain adds below 8 terms, 8 interleaved partial sums up to 128 terms,
+   and halving, at a multiple of 8, above that. */
+static double pairwise_sum(const double *a, int64_t n)
+{
+    if (n < 8) {
+        double res = -0.0;  /* x + -0.0 == x for every x, -0.0 included */
+        for (int64_t i = 0; i < n; i++) res += a[i];
+        return res;
+    }
+    if (n <= 128) {
+        double r[8];
+        for (int j = 0; j < 8; j++) r[j] = a[j];
+        int64_t i;
+        for (i = 8; i < n - (n % 8); i += 8)
+            for (int j = 0; j < 8; j++) r[j] += a[i + j];
+        double res = ((r[0] + r[1]) + (r[2] + r[3]))
+                   + ((r[4] + r[5]) + (r[6] + r[7]));
+        for (; i < n; i++) res += a[i];
+        return res;
+    }
+    int64_t n2 = n / 2;
+    n2 -= n2 % 8;
+    return pairwise_sum(a, n2) + pairwise_sum(a + n2, n - n2);
+}
+
+/* Louvain contraction in the reference's shape (louvainAggregateEdgesW,
+   louvain.hxx:865-912): communities ascending; within one, its members
+   ascending and each member's adjacency in CSR order (self-loops
+   kept). A destination community becomes an entry of the coarse row at
+   its first encounter; pos[dc] holds its entry index, and
+   pos[dc] < row start means "not in this row yet", so the scratch is
+   never cleared. An entry's weight is its edges' weights in scan order,
+   summed as np.add.reduceat sums a group (the first weight plus the
+   pairwise sum of the rest), so the coarse graph is bit-identical to
+   the numpy contraction's. cur holds dense labels in [0, C). Writes
+   out_indptr (C + 1) and, per entry, out_cv (destination), out_w
+   (weight) and out_cu (source community), each with room for
+   indptr[n] entries. Returns the entry count, or -1 on allocation
+   failure. */
+int64_t louvain_contract(
+    const int64_t *indptr, const int64_t *indices, const double *weights,
+    int64_t n, const int64_t *cur, int64_t C,
+    int64_t *out_indptr, int64_t *out_cv, double *out_w, int64_t *out_cu)
+{
+    const int64_t m = indptr[n];
+    int64_t *mptr    = (int64_t *) calloc((size_t) C + 1, sizeof(int64_t));
+    int64_t *members = (int64_t *) malloc((size_t) (n ? n : 1) * sizeof(int64_t));
+    int64_t *pos     = (int64_t *) malloc((size_t) (C ? C : 1) * sizeof(int64_t));
+    int64_t *cnt     = (int64_t *) malloc((size_t) (m ? m : 1) * sizeof(int64_t));
+    double  *buf     = (double *)  malloc((size_t) (m ? m : 1) * sizeof(double));
+    if (!mptr || !members || !pos || !cnt || !buf) {
+        free(mptr); free(members); free(pos); free(cnt); free(buf);
+        return -1;
+    }
+    /* members of each community, ascending (stable counting sort) */
+    for (int64_t u = 0; u < n; u++) mptr[cur[u] + 1]++;
+    for (int64_t c = 0; c < C; c++) mptr[c + 1] += mptr[c];
+    for (int64_t c = 0; c < C; c++) pos[c] = mptr[c];
+    for (int64_t u = 0; u < n; u++) members[pos[cur[u]]++] = u;
+    for (int64_t c = 0; c < C; c++) pos[c] = -1;
+    int64_t k = 0;
+    for (int64_t c = 0; c < C; c++) {
+        const int64_t row = k;
+        out_indptr[c] = row;
+        /* entries in first-encounter order, and their edge counts */
+        for (int64_t q = mptr[c]; q < mptr[c + 1]; q++) {
+            const int64_t u = members[q];
+            for (int64_t i = indptr[u]; i < indptr[u + 1]; i++) {
+                const int64_t dc = cur[indices[i]];
+                if (pos[dc] < row) {
+                    pos[dc] = k;
+                    out_cv[k] = dc; out_cu[k] = c; cnt[k] = 0; k++;
+                }
+                cnt[pos[dc]]++;
+            }
+        }
+        /* counts -> each entry's start in buf */
+        int64_t off = 0;
+        for (int64_t j = row; j < k; j++) {
+            const int64_t d = cnt[j];
+            cnt[j] = off; off += d;
+        }
+        /* each entry's weights, contiguous and in scan order; cnt[j]
+           ends as entry j's end, which is entry j + 1's start */
+        for (int64_t q = mptr[c]; q < mptr[c + 1]; q++) {
+            const int64_t u = members[q];
+            for (int64_t i = indptr[u]; i < indptr[u + 1]; i++)
+                buf[cnt[pos[cur[indices[i]]]]++] = weights[i];
+        }
+        int64_t start = 0;
+        for (int64_t j = row; j < k; j++) {
+            out_w[j] = buf[start] + pairwise_sum(buf + start + 1, cnt[j] - start - 1);
+            start = cnt[j];
+        }
+    }
+    out_indptr[C] = k;
+    free(mptr); free(members); free(pos); free(cnt); free(buf);
+    return k;
 }
 
 /* Stable counting sort of m edge rows by (src, dst), both positions in
@@ -230,17 +378,43 @@ int64_t csr_order(
 }
 """
 
-_CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off"]
+# -fopenmp only changes the triangle kernel: its pragmas are the only
+# OpenMP in the source
+_CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off", "-fopenmp"]
+_CFLAGS_SERIAL = [f for f in _CFLAGS if f != "-fopenmp"]
 
 _lib = None
 _tried = False
 
 
-def _build_dir() -> str:
-    tag = hashlib.sha1(
-        (_SRC + " ".join(_CFLAGS)).encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"louvain_ck_{tag}")
+def _build(flags: list) -> str:
+    """Path of the shared object built from ``_SRC`` with ``flags``,
+    compiled on first use into a content-addressed temp dir."""
+    tag = hashlib.sha1((_SRC + " ".join(flags)).encode()).hexdigest()[:16]
+    d = os.path.join(tempfile.gettempdir(), f"louvain_ck_{tag}")
+    so = os.path.join(d, "move.so")
+    if not os.path.exists(so):
+        os.makedirs(d, exist_ok=True)
+        src = os.path.join(d, "move.c")
+        with open(src, "w") as f:
+            f.write(_SRC)
+        tmp = os.path.join(d, f"move.{os.getpid()}.tmp.so")
+        cc = os.environ.get("CC", "cc")
+        subprocess.run(
+            [cc, *flags, "-o", tmp, src],
+            check=True, capture_output=True, timeout=120,
+        )
+        os.rename(tmp, so)  # atomic: concurrent builders race safely
+    return so
+
+
+def _load():
+    """The library built with OpenMP, or, when the compiler or the
+    loader rejects that, the same source built without it."""
+    try:
+        return ctypes.CDLL(_build(_CFLAGS))
+    except (OSError, subprocess.SubprocessError):
+        return ctypes.CDLL(_build(_CFLAGS_SERIAL))
 
 
 def get_local_move():
@@ -252,21 +426,7 @@ def get_local_move():
         return None
     _tried = True
     try:
-        d = _build_dir()
-        so = os.path.join(d, "move.so")
-        if not os.path.exists(so):
-            os.makedirs(d, exist_ok=True)
-            src = os.path.join(d, "move.c")
-            with open(src, "w") as f:
-                f.write(_SRC)
-            tmp = os.path.join(d, f"move.{os.getpid()}.tmp.so")
-            cc = os.environ.get("CC", "cc")
-            subprocess.run(
-                [cc, *_CFLAGS, "-o", tmp, src],
-                check=True, capture_output=True, timeout=120,
-            )
-            os.rename(tmp, so)  # atomic: concurrent builders race safely
-        lib = ctypes.CDLL(so)
+        lib = _load()
         fn = lib.louvain_local_move
         fn.restype = ctypes.c_int64
         fn.argtypes = [
@@ -300,6 +460,20 @@ def get_local_move():
             ctypes.POINTER(ctypes.c_int64),   # indptr
             ctypes.POINTER(ctypes.c_int64),   # indices
             ctypes.c_int64,                   # n
+        ]
+        lc = lib.louvain_contract
+        lc.restype = ctypes.c_int64
+        lc.argtypes = [
+            ctypes.POINTER(ctypes.c_int64),   # indptr
+            ctypes.POINTER(ctypes.c_int64),   # indices
+            ctypes.POINTER(ctypes.c_double),  # weights
+            ctypes.c_int64,                   # n
+            ctypes.POINTER(ctypes.c_int64),   # cur
+            ctypes.c_int64,                   # C
+            ctypes.POINTER(ctypes.c_int64),   # out_indptr
+            ctypes.POINTER(ctypes.c_int64),   # out_cv
+            ctypes.POINTER(ctypes.c_double),  # out_w
+            ctypes.POINTER(ctypes.c_int64),   # out_cu
         ]
         co = lib.csr_order
         co.restype = ctypes.c_int64
@@ -352,9 +526,19 @@ def local_move_c(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
     return int(iters), int(processed.value)
 
 
+def _check_csr(indptr, indices):
+    """Raise unless ``indices`` has ``indptr[-1]`` entries, all in
+    [0, n): the kernels index their per-vertex arrays with them."""
+    n = len(indptr) - 1
+    if n < 0 or indptr[-1] != len(indices) or (
+        len(indices) and (indices.min() < 0 or indices.max() >= n)
+    ):
+        raise ValueError(f"not a CSR over {n} vertices")
+
+
 def triangle_count_csr_c(indptr, indices):
-    """Count triangles over a degree-ordered oriented CSR (sorted,
-    duplicate-free out-adjacency). Returns the total, or None when the
+    """Count triangles over a degree-ordered oriented CSR
+    (duplicate-free out-adjacency). Returns the total, or None when the
     native kernel is unavailable."""
     import numpy as np
 
@@ -364,8 +548,48 @@ def triangle_count_csr_c(indptr, indices):
         if a.dtype != np.int64 or not a.flags["C_CONTIGUOUS"]:
             return None
     n = len(indptr) - 1
+    _check_csr(indptr, indices)
     p = lambda a: a.ctypes.data_as(ctypes.POINTER(ctypes.c_int64))  # noqa: E731
-    return int(_lib.triangle_count_csr(p(indptr), p(indices), ctypes.c_int64(n)))
+    total = _lib.triangle_count_csr(p(indptr), p(indices), ctypes.c_int64(n))
+    if total < 0:
+        return None
+    return int(total)
+
+
+def contract_c(indptr, indices, weights, cur, CN):
+    """Contract a CSR by the dense membership ``cur`` (labels in
+    [0, CN)) natively. Returns (indptr, indices, weights, source
+    community per entry) of the coarse CSR, the arrays
+    ``louvain_seq._contract_fast`` returns, or None when the native
+    kernel is unavailable (caller falls back to that function)."""
+    import numpy as np
+
+    if get_local_move() is None or _lib is None:
+        return None
+    for a, dt in ((indptr, np.int64), (indices, np.int64),
+                  (weights, np.float64), (cur, np.int64)):
+        if a.dtype != dt or not a.flags["C_CONTIGUOUS"]:
+            return None
+    n = len(indptr) - 1
+    _check_csr(indptr, indices)
+    if len(cur) != n or (n and (cur.min() < 0 or cur.max() >= CN)):
+        raise ValueError(f"need {n} community labels in [0, {CN})")
+    m = len(indices)
+    out_indptr = np.empty(CN + 1, dtype=np.int64)
+    out_cv = np.empty(m, dtype=np.int64)
+    out_w = np.empty(m, dtype=np.float64)
+    out_cu = np.empty(m, dtype=np.int64)
+    p = lambda a, t: a.ctypes.data_as(ctypes.POINTER(t))  # noqa: E731
+    k = _lib.louvain_contract(
+        p(indptr, ctypes.c_int64), p(indices, ctypes.c_int64),
+        p(weights, ctypes.c_double), ctypes.c_int64(n),
+        p(cur, ctypes.c_int64), ctypes.c_int64(CN),
+        p(out_indptr, ctypes.c_int64), p(out_cv, ctypes.c_int64),
+        p(out_w, ctypes.c_double), p(out_cu, ctypes.c_int64),
+    )
+    if k < 0:
+        return None
+    return out_indptr, out_cv[:k].copy(), out_w[:k].copy(), out_cu[:k].copy()
 
 
 def labelprop_rounds_c(indptr, indices, weights, lab, max_iter):

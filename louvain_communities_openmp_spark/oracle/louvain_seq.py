@@ -42,7 +42,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from ._cmove import local_move_c
+from ._cmove import contract_c, local_move_c
 
 
 @dataclass
@@ -319,7 +319,11 @@ def _local_move_fast(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, 
 def _contract_fast(indptr, indices, weights, cur, CN, src_idx):
     """Vectorized contraction preserving the reference's coarse-row
     insertion order (members ascending, adjacency order within member,
-    first-encounter order of destination communities).
+    first-encounter order of destination communities). The fallback
+    when no C compiler is available: ``louvain_seq_fast`` uses the
+    native ``contract_c`` (oracle/_cmove.py), which returns the same
+    arrays bit for bit, including reduceat's summation order (numpy's
+    pairwise sum), pinned by tests/test_cmove.py.
 
     One stable lexsort by (cu, cv) replaces the previous
     sort-by-(cu, member) + np.unique-over-composite-key double sort:
@@ -511,9 +515,13 @@ def louvain_seq_fast(
             first = False
         else:
             ucom = cur_r[ucom]
-        indptr, indices, weights, src_arr = _contract_fast(
-            indptr, indices, weights, cur_r, CN, src_arr
-        )
+        # native contraction when available (oracle/_cmove.py
+        # louvain_contract: bit-identical arrays, pinned by
+        # tests/test_cmove.py)
+        coarse = contract_c(indptr, indices, weights, cur_r, CN)
+        if coarse is None:
+            coarse = _contract_fast(indptr, indices, weights, cur_r, CN, src_arr)
+        indptr, indices, weights, src_arr = coarse
         # src_arr (g_cu) is sorted by source community, so this is the
         # same array np.repeat(arange(CN), diff(indptr)) produced —
         # identical bincount accumulation, no O(E) repeat

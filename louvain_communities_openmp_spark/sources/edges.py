@@ -28,7 +28,18 @@ def edges_from_list(spark: SparkSession, edge_list, n: int | None = None) -> Dat
 
 
 def dense_ids(df: DataFrame, col: str = "url", id_col: str = "id") -> DataFrame:
+    """Assign dense 0..N-1 ids to the distinct values of ``col``
+    (``dense_ids_cached`` without the handle on its cache)."""
+    return dense_ids_cached(df, col, id_col)[0]
+
+
+def dense_ids_cached(
+    df: DataFrame, col: str = "url", id_col: str = "id"
+) -> tuple[DataFrame, DataFrame | None]:
     """Assign dense 0..N-1 ids to the distinct values of ``col``.
+    Returns the id frame and the distinct-value frame the scalable path
+    persisted (None on the collect path), which the caller may release
+    once the id frame is materialized.
 
     Scalable dense ranking: range-partition + sort by value, count rows
     per partition, cumulative offsets joined back (broadcast — one row
@@ -66,7 +77,7 @@ def dense_ids(df: DataFrame, col: str = "url", id_col: str = "id") -> DataFrame:
         out = pd.DataFrame({col: vals, id_col: range(len(vals))})
         return spark.createDataFrame(
             out, schema=f"{col} string, {id_col} long"
-        )
+        ), None
     nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
     d = (
         df.select(F.col(col).alias("_v"))
@@ -90,7 +101,7 @@ def dense_ids(df: DataFrame, col: str = "url", id_col: str = "id") -> DataFrame:
         .withColumn(id_col, F.row_number().over(w) - 1 + F.col("_off"))
         .select(F.col("_v").alias(col), id_col)
     )
-    return out
+    return out, d
 
 
 def edges_from_pages(

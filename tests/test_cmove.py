@@ -121,3 +121,226 @@ def test_ckernel_vs_slow_reference_oracle():
     r_slow = ls.louvain_seq(adj)
     assert list(r_slow.membership) == list(r_c.membership)
     assert r_slow.passes == r_c.passes
+
+
+# -- native contraction: per-call identity with _contract_fast ---------
+
+
+def _csr(s2, d2, w2):
+    """CSR of (src, dst)-sorted rows over vertices 0..max id."""
+    o = np.lexsort((d2, s2))
+    s, d, w = s2[o], d2[o], w2[o]
+    n = int(max(s.max(), d.max())) + 1
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    indptr[1:] = np.cumsum(np.bincount(s, minlength=n))
+    return indptr, d, w, s
+
+
+def _assert_same_contraction(indptr, indices, weights, cur, CN, src_idx):
+    ref = _ls._contract_fast(indptr, indices, weights, cur, CN, src_idx)
+    out = _cm.contract_c(indptr, indices, weights, cur, CN)
+    assert out is not None
+    for a, b in zip(ref, out):
+        assert a.dtype == b.dtype
+        assert a.tobytes() == b.tobytes()  # equal bit patterns
+    return out
+
+
+def _native_or_skip():
+    importlib.reload(_cm)
+    importlib.reload(_ls)
+    if _cm.get_local_move() is None:
+        pytest.skip("no C compiler available in this environment")
+
+
+def _float_graph(seed, n, m):
+    rs = np.random.RandomState(seed)
+    src = rs.randint(0, n, m)
+    dst = rs.randint(0, n, m)
+    keep = src != dst
+    w = rs.rand(int(keep.sum())) * 10.0 ** rs.uniform(-3, 3, int(keep.sum()))
+    return _sym(src[keep], dst[keep], w)
+
+
+def _spy_contractions(monkeypatch):
+    """Route louvain_seq_fast's contractions through an identity check;
+    returns the list of checked calls."""
+    calls = []
+
+    def both(indptr, indices, weights, cur, CN):
+        src_idx = np.repeat(np.arange(len(indptr) - 1), np.diff(indptr))
+        calls.append(CN)
+        return _assert_same_contraction(
+            indptr, indices, weights, cur, CN, src_idx
+        )
+
+    monkeypatch.setattr(_ls, "contract_c", both)
+    return calls
+
+
+def test_contract_c_matches_numpy_random_float_weights(monkeypatch):
+    # float weights spread over six decades: a different summation
+    # order shows up in the low bits
+    _native_or_skip()
+    calls = _spy_contractions(monkeypatch)
+    _ls.louvain_seq_fast(*_float_graph(13, 3000, 60000))
+    assert calls
+
+
+def test_contract_c_matches_numpy_hub(monkeypatch):
+    # a hub above _SMALL_DEG: its coarse entries sum thousands of
+    # weights, through every branch of the pairwise sum
+    _native_or_skip()
+    rs = np.random.RandomState(17)
+    deg = _ls._SMALL_DEG + 1500
+    hub_d = np.arange(1, deg + 1, dtype=np.int64)
+    rest_s = rs.randint(1, deg + 1, 30000)
+    rest_d = rs.randint(1, deg + 1, 30000)
+    keep = rest_s != rest_d
+    src = np.concatenate([np.zeros(deg, dtype=np.int64), rest_s[keep]])
+    dst = np.concatenate([hub_d, rest_d[keep]])
+    w = rs.rand(len(src)) * 3 + 0.1
+    calls = _spy_contractions(monkeypatch)
+    _ls.louvain_seq_fast(*_sym(src, dst, w))
+    assert calls
+    # and one call that folds the hub's whole row into one entry
+    indptr, d, w2, s = _csr(*_sym(src, dst, w))
+    cur = np.zeros(len(indptr) - 1, dtype=np.int64)
+    cur[0] = 1
+    _assert_same_contraction(indptr, d, w2, cur, 2, s)
+
+
+def test_contract_c_matches_numpy_warm_start_frontier(monkeypatch):
+    _native_or_skip()
+    s2, d2, w2 = _float_graph(19, 2000, 30000)
+    S = int(max(s2.max(), d2.max())) + 1
+    rs = np.random.RandomState(23)
+    init = rs.randint(0, 40, S).astype(np.int64)
+    aff = rs.choice(S, 200, replace=False).astype(np.int64)
+    calls = _spy_contractions(monkeypatch)
+    _ls.louvain_seq_fast(s2, d2, w2, init_com=init, init_aff=aff)
+    assert calls
+
+
+def test_contract_c_single_community_and_empty_row():
+    _native_or_skip()
+    s2, d2, w2 = _float_graph(29, 500, 8000)
+    # vertex 500 has no edges at all: an empty CSR row
+    indptr, d, w, s = _csr(s2, d2, w2)
+    indptr = np.r_[indptr, indptr[-1]]
+    n = len(indptr) - 1
+    one = _assert_same_contraction(
+        indptr, d, w, np.zeros(n, dtype=np.int64), 1, s
+    )
+    assert one[0].tolist() == [0, 1]
+    # the empty row alone in its community gives an empty coarse row
+    cur = np.zeros(n, dtype=np.int64)
+    cur[-1] = 1
+    two = _assert_same_contraction(indptr, d, w, cur, 2, s)
+    assert two[0].tolist() == [0, 1, 1]
+    # singletons: one coarse entry per distinct (src, dst) pair
+    ident = _assert_same_contraction(
+        indptr, d, w, np.arange(n, dtype=np.int64), n, s
+    )
+    assert len(ident[1]) == len(np.unique(s * n + d))
+
+
+# -- marker-array triangle kernel --------------------------------------
+
+
+def _hub_graph(seed):
+    """Canonical (src < dst) rows of a hub-heavy graph with repeated
+    rows; the symmetric rows with self-loops come back as well."""
+    rs = np.random.RandomState(seed)
+    n = 1500
+    hubs = rs.randint(0, n, 6000) % 7  # five hubs of degree ~1k
+    src = np.concatenate([hubs, rs.randint(0, n, 12000)])
+    dst = np.concatenate([rs.randint(0, n, 6000), rs.randint(0, n, 12000)])
+    loops = rs.randint(0, n, 50)
+    src = np.concatenate([src, loops, src[:3000]])  # self-loops, repeats
+    dst = np.concatenate([dst, loops, dst[:3000]])
+    sym_s = np.concatenate([src, dst])
+    sym_d = np.concatenate([dst, src])
+    keep = sym_s < sym_d
+    return sym_s, sym_d, sym_s[keep], sym_d[keep]
+
+
+def test_triangle_kernel_matches_oracle():
+    from louvain_communities_openmp_spark.operators.triangles import (
+        _triangle_total_arrays,
+    )
+    from louvain_communities_openmp_spark.oracle.simple import (
+        triangle_count_seq,
+    )
+
+    _native_or_skip()
+    sym_s, sym_d, cs, cd = _hub_graph(31)
+    adj = [[] for _ in range(int(sym_s.max()) + 1)]
+    for u, v in zip(sym_s.tolist(), sym_d.tolist()):
+        adj[u].append((v, 1.0))
+    expected = triangle_count_seq(adj)[1]
+    assert expected > 0
+    assert _triangle_total_arrays(cs, cd) == expected
+
+
+def test_triangle_kernel_thread_count_independent():
+    """The same total on one thread and on four, each in a fresh
+    process so libgomp reads OMP_NUM_THREADS at start-up."""
+    import subprocess
+    import sys
+
+    _native_or_skip()
+    code = (
+        "import numpy as np, tests.test_cmove as t\n"
+        "from louvain_communities_openmp_spark.oracle import _cmove as cm\n"
+        "from louvain_communities_openmp_spark.operators.triangles import "
+        "_triangle_total_arrays\n"
+        "_, _, s, d = t._hub_graph(37)\n"
+        "total = _triangle_total_arrays(s, d)\n"
+        "threads = getattr(cm._lib, 'omp_get_max_threads', lambda: 1)()\n"
+        "print(total, threads)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = {}
+    for t in ("1", "4"):
+        r = subprocess.run(
+            [sys.executable, "-c", code], cwd=root, capture_output=True,
+            text=True, timeout=300, env={**os.environ, "OMP_NUM_THREADS": t},
+        )
+        assert r.returncode == 0, r.stderr
+        total, threads = r.stdout.split()
+        out[t] = int(total)
+        if _cm._lib is not None and hasattr(_cm._lib, "omp_get_max_threads"):
+            assert threads == t
+    assert out["1"] == out["4"] > 0
+
+
+def test_triangle_kernel_without_openmp(monkeypatch):
+    """The build without -fopenmp (a compiler that rejects the flag)
+    compiles the same source and counts the same total."""
+    import ctypes
+
+    from louvain_communities_openmp_spark.operators.triangles import (
+        _triangle_total_arrays,
+    )
+
+    _native_or_skip()
+    seen = []
+    real = _cm.triangle_count_csr_c
+    monkeypatch.setattr(
+        _cm, "triangle_count_csr_c",
+        lambda ip, ix: seen.append((ip, ix)) or real(ip, ix),
+    )
+    _, _, s, d = _hub_graph(41)
+    total = _triangle_total_arrays(s, d)
+    lib = ctypes.CDLL(_cm._build(_cm._CFLAGS_SERIAL))
+    assert not hasattr(lib, "omp_get_max_threads")
+    fn = lib.triangle_count_csr
+    fn.restype = ctypes.c_int64
+    p = ctypes.POINTER(ctypes.c_int64)
+    fn.argtypes = [p, p, ctypes.c_int64]
+    indptr, indices = seen[0]
+    assert fn(
+        indptr.ctypes.data_as(p), indices.ctypes.data_as(p),
+        len(indptr) - 1,
+    ) == total > 0

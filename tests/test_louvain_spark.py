@@ -96,6 +96,12 @@ def test_auto_mode_small_graph_equals_exact(spark):
     got = {r["id"]: r["com"] for r in res.membership.collect()}
     assert got == {i: c for i, c in enumerate(want.membership)}
     assert math.isclose(res.modularity, want.modularity, abs_tol=1e-6)
+    # the serial finish's phase split adds up to its total (each part
+    # is rounded to 1 ms)
+    rec = res.pass_log[0]
+    assert rec["mode"] == "local_finish"
+    parts = [rec[k] for k in ("t_collect", "t_csr", "t_solve", "t_q")]
+    assert abs(sum(parts) - rec["t_local"]) <= 0.05 * rec["t_local"] + 0.002
 
 
 def test_dist_multipass_ring(spark):
@@ -139,25 +145,48 @@ def test_dist_fallback_matches_broadcast(spark):
 
 
 def test_dist_rounds_without_block_caches(spark, monkeypatch):
-    """Both dist gates run the cluster-shaped kernels
-    (_bcast_state_kernel_factory, _cogroup_kernel_factory) when the
-    npz block caches are off, and match the cached local-mode rounds."""
+    """With the npz block caches off, the broadcast gate runs the
+    cluster-shaped kernel (_bcast_state_kernel_factory) and matches the
+    cached local-mode rounds. _block_caches only switches the broadcast
+    gate; the routed gate (broadcast_vertices=0) is pinned against it
+    by test_dist_fallback_matches_broadcast."""
     from louvain_communities_openmp_spark.operators import louvain as lv
 
     for fixture in (lambda: ring_of_cliques(8, 6), karate):
         e = edges_from_list(spark, fixture())
-        for opts in (
-            LouvainOptions(mode="dist", num_blocks=4),
-            LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0),
-        ):
-            cached = louvain(e, opts)
-            with monkeypatch.context() as mp:
-                mp.setattr(lv, "_block_caches", lambda spark: False)
-                plain = louvain(e, opts)
-            ma = sorted((r["id"], r["com"]) for r in cached.membership.collect())
-            mb = sorted((r["id"], r["com"]) for r in plain.membership.collect())
-            assert ma == mb, opts.broadcast_vertices
-            assert abs(cached.modularity - plain.modularity) < 1e-12
+        opts = LouvainOptions(mode="dist", num_blocks=4)
+        cached = louvain(e, opts)
+        with monkeypatch.context() as mp:
+            mp.setattr(lv, "_block_caches", lambda spark: False)
+            plain = louvain(e, opts)
+        ma = sorted((r["id"], r["com"]) for r in cached.membership.collect())
+        mb = sorted((r["id"], r["com"]) for r in plain.membership.collect())
+        assert ma == mb
+        assert abs(cached.modularity - plain.modularity) < 1e-12
+
+
+def _cached_rdds(spark) -> int:
+    """Persisted RDDs that are not local checkpoints (the eager local
+    checkpoints hold round states, so they are not counted)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(1 for r in rdds.values() if not r.rdd().isCheckpointed())
+
+
+def test_dist_louvain_releases_caches(spark):
+    """Repeated dist runs cache nothing beyond their result membership,
+    on both gates: the breaking pass releases its vertex weights and
+    the driver gate's round membership once the result is built."""
+    e = edges_from_list(spark, ring_of_cliques(8, 6))
+    for opts in (
+        LouvainOptions(mode="dist", num_blocks=4),
+        LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0),
+    ):
+        cached = _cached_rdds(spark)
+        for _ in range(2):
+            res = louvain(e, opts)
+            assert res.membership.count() == 48
+            res.membership.unpersist()
+            assert _cached_rdds(spark) == cached, opts.broadcast_vertices
 
 
 def test_block_body_resorts_unordered_rows():
