@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import serial
-from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
 
@@ -39,11 +38,10 @@ class ComponentsResult:
     iterations: int
 
 
-def _components_local(
-    edges: DataFrame, bound: int, max_iter: int = 200
-) -> ComponentsResult | None:
-    """Serial finish (operators/serial.py) under ``bound`` directed
-    edges. The iteration body is the EXACT numpy transcription of the
+def _components_local(edges: DataFrame, max_iter: int = 200) -> ComponentsResult | None:
+    """Serial finish (operators/serial.py) under ``serial.SERIAL_EDGES``
+    directed edges, over the resident graph with self-loops masked out.
+    The iteration body is the EXACT numpy transcription of the
     distributed round (hash-min over src→dst followed by one pointer
     jump, labels compared to the round's starting labels), so the
     per-round label states — and therefore the final components frame
@@ -55,11 +53,12 @@ def _components_local(
     import numpy as np
     import pandas as pd
 
-    arrs = collect_bounded(edges, ["src", "dst"], bound)
-    if arrs is None or len(arrs[0]) == 0:
+    g = serial.local_graph(edges, serial.SERIAL_EDGES)
+    if g is None or len(g.src) == 0:
         return None
-    g = edge_csr(*arrs, sort=False, drop_loops=True)
-    ids, sp, dp = g.ids, g.src, g.dst
+    # every endpoint stays a vertex, loop-only ones included
+    keep = g.src != g.dst
+    ids, sp, dp = g.ids, g.src[keep], g.dst[keep]
     comp = np.arange(len(ids), dtype=np.int64)
     it = 0
     while it < max_iter:
@@ -97,7 +96,7 @@ def connected_components(
     # serial finish under the bound (operators/serial.py); above it
     # the distributed rounds below run unchanged
     if initial_components is None:
-        local = _components_local(edges, serial.SERIAL_EDGES, max_iter)
+        local = _components_local(edges, max_iter)
         if local is not None:
             return local
     # Two regimes, same answer (see labelprop.py for the full rationale):

@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import serial
-from .serial import collect_bounded, edge_csr
 from .transforms import vertices
 
 
@@ -29,12 +28,11 @@ class LabelPropResult:
     iterations: int
 
 
-def _labelprop_local(
-    edges: DataFrame, bound: int, max_iter: int
-) -> LabelPropResult | None:
-    """Serial finish (operators/serial.py) under ``bound`` directed
-    edges. The round body is the exact transcription of the distributed
-    round (per-src Σw by neighbor label, argmax with (max wt, min label)
+def _labelprop_local(edges: DataFrame, max_iter: int) -> LabelPropResult | None:
+    """Serial finish (operators/serial.py) under ``serial.SERIAL_EDGES``
+    directed edges, over the resident graph with self-loops masked out.
+    The round body is the exact transcription of the distributed round
+    (per-src Σw by neighbor label, argmax with (max wt, min label)
     tie-break, isolated vertices keep their own label), so per-round
     label states, the final frame, and the iteration count are identical
     to the distributed path's (pinned by
@@ -51,16 +49,19 @@ def _labelprop_local(
 
     from ..oracle._cmove import labelprop_rounds_c
 
-    arrs = collect_bounded(edges, ["src", "dst", "w"], bound)
-    if arrs is None or len(arrs[0]) == 0:
+    g = serial.local_graph(edges, serial.SERIAL_EDGES)
+    if g is None or len(g.src) == 0:
         return None
-    # self-loops ignored (matches the e filter)
-    g = edge_csr(*arrs, drop_loops=True)
-    ids, sp, dp, w = g.ids, g.src, g.dst, g.w
+    # self-loops ignored (matches the e filter); the kept rows stay in
+    # (src, dst, w) order, so only the row offsets change
+    keep = g.src != g.dst
+    ids, sp, dp, w = g.ids, g.src[keep], g.dst[keep], g.w[keep]
+    indptr = np.zeros(len(ids) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(sp, minlength=len(ids)), out=indptr[1:])
     lab = np.arange(len(ids), dtype=np.int64)  # label positions == value order
     # native rounds (oracle/_cmove.py labelprop_rounds): each
     # synchronous round is a single O(E) stamp-walk over the CSR
-    it = labelprop_rounds_c(g.indptr, dp, w, lab, max_iter)
+    it = labelprop_rounds_c(indptr, dp, w, lab, max_iter)
     if it is None:
         it = _labelprop_rounds_numpy(sp, dp, w, lab, max_iter)
     out = pd.DataFrame({"id": ids, "label": ids[lab]})
@@ -162,7 +163,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 10) -> LabelPropResult:
     #
     # Before either: the measured-optimal serial finish under the same
     # edge bound as louvain.py (operators/serial.py).
-    local = _labelprop_local(edges, serial.SERIAL_EDGES, max_iter)
+    local = _labelprop_local(edges, max_iter)
     if local is not None:
         return local
     verts = vertices(edges)

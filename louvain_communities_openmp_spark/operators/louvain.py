@@ -62,8 +62,8 @@ from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
 from . import serial
 from .properties import modularity as modularity_op
-from .properties import total_weight_m, vertex_weights
-from .serial import collect_bounded, collect_columns, edge_csr
+from .properties import modularity_arrays, total_weight_m, vertex_weights
+from .serial import EdgeCSR, collect_bounded
 
 
 @dataclass
@@ -1221,35 +1221,31 @@ def _compose(ucom: DataFrame | None, mem: DataFrame) -> DataFrame:
 
 
 def _serial_finish(
-    edges: DataFrame, opts: LouvainOptions, p: int = 0, warm: bool = False
+    spark, g: EdgeCSR, t0: float, opts: LouvainOptions, p: int = 0, warm: bool = False
 ) -> LouvainResult:
-    """Solve ``edges`` on the driver with the sequential kernel from
-    pass ``p`` on — the analog of the reference's representation swap
+    """Solve the edge frame whose resident graph (serial.local_graph)
+    is ``g`` on the driver with the sequential kernel from pass ``p``
+    on — the analog of the reference's representation swap
     (louvain.hxx:1174-1176). ``mode="exact"`` runs it on the whole
     input; auto runs it once a pass's graph is within
     ``serial.SERIAL_EDGES``. ``warm`` seeds pass 0 from the warm-start
-    fields (_warm_start). The membership is over the ids of ``edges``
-    and the modularity is its Q over ``edges``; an empty or zero-weight
-    graph returns an empty result with an empty pass_log.
+    fields (_warm_start). The membership is over the ids of ``g`` and
+    the modularity is its Q over ``g``; an empty or zero-weight graph
+    returns an empty result with an empty pass_log.
 
     The pass_log record splits ``t_local`` into its phases, like the
-    reference's phase report (main.cxx:70-76): ``t_collect`` (edge
-    collect), ``t_csr`` (CSR prologue and warm start), ``t_solve``
-    (louvain_seq_fast) and ``t_q`` (membership frame and Q)."""
+    reference's phase report (main.cxx:70-76): ``t_collect`` (from
+    ``t0``, taken before the caller's ``local_graph``: the edge collect
+    and CSR prologue, 0 when the graph was resident), ``t_csr`` (warm
+    start), ``t_solve`` (louvain_seq_fast) and ``t_q`` (membership
+    frame and Q)."""
     import numpy as np
 
-    t0 = time.time()
-    spark = edges.sparkSession
-    # plain Arrow-direct collect (no distributed orderBy: the range
-    # exchange + its sampling pass cost more than the driver-side O(E)
-    # prologue at the ≤4M-edge bound)
-    arrs = collect_columns(edges, ["src", "dst", "w"])
     t_collect = time.time()
-    if len(arrs[0]) == 0 or float(arrs[2].sum()) <= 0.0:
+    if len(g.src) == 0 or float(g.w.sum()) <= 0.0:
         return LouvainResult(
             spark.createDataFrame([], MEMBERSHIP_SCHEMA), 0.0, 0, 0, []
         )
-    g = edge_csr(*arrs)
     init_com = init_aff = None
     if warm:
         com, aff = _warm_start(g.ids, opts)
@@ -1277,19 +1273,12 @@ def _serial_finish(
     mem = spark.createDataFrame(
         pd.DataFrame({"id": g.ids, "com": com}), MEMBERSHIP_SCHEMA
     )
-    # Q as a driver-side aggregate over the arrays already in hand (the
-    # modularity_op formula; summation-order drift is ~1e-15, six orders
-    # inside the g_louvain twin's 1e-9 gate), instead of the membership
+    # Q over the arrays already in hand, instead of the membership
     # double-join + aggregate job
-    cu = com[g.src]
-    same = cu == com[g.dst]
-    two_m = float(g.w.sum())
-    cin = np.bincount(cu[same], weights=g.w[same], minlength=len(g.ids))
-    ctot = np.bincount(cu, weights=g.w, minlength=len(g.ids))
-    q = float((cin / two_m - opts.resolution * (ctot / two_m) ** 2).sum())
+    q = modularity_arrays(g.src, g.dst, g.w, com, opts.resolution)
     t_end = time.time()
     return LouvainResult(mem, q, r.passes, r.iterations, [{
-        "pass": p, "mode": "local_finish", "edges": len(arrs[0]),
+        "pass": p, "mode": "local_finish", "edges": len(g.src),
         "local_passes": r.passes,
         # vertex scans actually performed across the serial passes —
         # the work metric frontier-seeded marking (affected_vertices)
@@ -1314,7 +1303,8 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     opts = opts or LouvainOptions()
     spark = edges.sparkSession
     if opts.mode == "exact":
-        res = _serial_finish(edges, opts)
+        t0 = time.time()
+        res = _serial_finish(spark, serial.local_graph(edges, None), t0, opts)
         res.membership.persist().count()
         return res
 
@@ -1355,13 +1345,19 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     held: tuple = ()
     while p < opts.max_passes:
         E = opts.tolerance / (opts.tolerance_drop ** p)
-        n_edges = edges.count()
         # ---- auto fast path: solve the coarsened remainder in the
         # driver with the sequential kernel (reference semantics; no
-        # per-iteration Spark round-trips)
-        if opts.mode == "auto" and n_edges <= serial.SERIAL_EDGES:
+        # per-iteration Spark round-trips). The graph is collected
+        # once and handed on; over the bound, the count that decided
+        # is the pass's edge count.
+        t0 = time.time()
+        if opts.mode == "auto":
+            g, n_edges = serial.graph_or_count(edges, serial.SERIAL_EDGES)
+        else:
+            g, n_edges = None, edges.count()
+        if g is not None:
             res = _serial_finish(
-                edges, opts, p, warm=p == 0 and opts.initial_membership is not None
+                spark, g, t0, opts, p, warm=p == 0 and opts.initial_membership is not None
             )
             if not res.pass_log:
                 return res  # empty/zero-weight graph

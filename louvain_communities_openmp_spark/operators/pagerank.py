@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from .properties import vertex_weights
 from . import serial
-from .serial import collect_columns, edge_csr
 from .transforms import vertices
 
 
@@ -178,15 +177,15 @@ def _pagerank_fixed_local(
     Spark's partial aggregates (drift ~1e-16, far inside the 7dp
     rounding, which Spark still applies). Returns None above the bound,
     and on an empty graph or a zero out-weight, which the distributed
-    plan reports as it always has. An edge count decides, so a graph
-    over the bound pays one count job, not a discarded collect."""
+    plan reports as it always has. The rows are the resident graph's
+    (serial.local_graph), so a graph over the bound pays one count
+    job, not a discarded collect."""
     import numpy as np
     import pandas as pd
 
-    m = edges.count()
-    if m == 0 or m > serial.SERIAL_EDGES:
+    g = serial.local_graph(edges, serial.SERIAL_EDGES)
+    if g is None or len(g.src) == 0:
         return None
-    g = edge_csr(*collect_columns(edges, ["src", "dst", "w"]), sort=False)
     n_pos = len(g.ids)
     vtot = np.bincount(g.src, weights=g.w, minlength=n_pos)
     is_v = np.bincount(g.src, minlength=n_pos) > 0

@@ -62,6 +62,55 @@ def community_count(membership: DataFrame) -> int:
     return membership.select("com").distinct().count()
 
 
+def modularity_arrays(src_pos, dst_pos, w, com, resolution: float = 1.0, m: float | None = None) -> float:
+    """Q = Σ_c [cin_c/(2M) − R·(ctot_c/(2M))²] of the edge rows
+    ``(src_pos, dst_pos, w)`` over vertex positions, ``com[p]`` being
+    the community of position p; M is Σw/2 unless ``m`` is given. A
+    zero or negative total scores 0. The driver-side twin of
+    ``modularity``'s plan (summation-order drift ~1e-15)."""
+    import numpy as np
+
+    two_m = float(w.sum()) if m is None else 2.0 * m
+    if two_m <= 0.0:
+        return 0.0
+    k = len(com)
+    if k and (int(com.min()) < 0 or int(com.max()) >= k):
+        com = np.unique(com, return_inverse=True)[1]
+    cu = com[src_pos]
+    same = cu == com[dst_pos]
+    cin = np.bincount(cu[same], weights=w[same], minlength=k)
+    ctot = np.bincount(cu, weights=w, minlength=k)
+    return float((cin / two_m - resolution * (ctot / two_m) ** 2).sum())
+
+
+def _modularity_resident(g, membership: DataFrame, resolution: float, m: float | None) -> float | None:
+    """``modularity`` over the resident graph ``g`` of the edge frame
+    (operators/serial.py), or None when the membership is over
+    ``serial.BROADCAST_VERTICES`` rows or repeats an id (the plan's
+    joins would then count an edge once per pair of matches)."""
+    import numpy as np
+
+    from . import serial
+
+    arrs = serial.collect_bounded(membership, ["id", "com"], serial.BROADCAST_VERTICES)
+    if arrs is None:
+        return None
+    mid, mcom = arrs
+    if len(np.unique(mid)) != len(mid):
+        return None
+    # the plan's inner joins: an edge whose src or dst has no
+    # membership row drops out
+    n = len(g.ids)
+    pos = np.minimum(np.searchsorted(g.ids, mid), max(n - 1, 0))
+    hit = (g.ids[pos] == mid) if n else np.zeros(len(mid), dtype=bool)
+    has = np.zeros(n, dtype=bool)
+    has[pos[hit]] = True
+    com = np.zeros(n, dtype=np.int64)
+    com[pos[hit]] = mcom[hit]
+    keep = has[g.src] & has[g.dst]
+    return modularity_arrays(g.src[keep], g.dst[keep], g.w[keep], com, resolution, m)
+
+
 def modularity(
     edges: DataFrame,
     membership: DataFrame,
@@ -79,7 +128,20 @@ def modularity(
     dst has no membership row drops out of cin and ctot. Without an
     explicit ``m``, M is then the join-surviving weight (Σctot/2), not
     the full edge weight; pass ``m`` to score against the whole graph.
+
+    When a driver-resident graph is held for ``edges``
+    (serial.local_graph, e.g. after a serial Louvain finish), Q is
+    ``modularity_arrays`` over it with the same semantics, and the only
+    Spark job is the bounded membership collect. It never collects the
+    edges itself.
     """
+    from . import serial
+
+    g = serial.held_graph(edges)
+    if g is not None and g.w is not None:
+        q = _modularity_resident(g, membership, resolution, m)
+        if q is not None:
+            return q
     ms = membership.select(F.col("id").alias("src"), F.col("com").alias("csrc"))
     md = membership.select(F.col("id").alias("dst"), F.col("com").alias("cdst"))
     per_com = (

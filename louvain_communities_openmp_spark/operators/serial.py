@@ -1,14 +1,32 @@
-"""The serial-finish seam: one bounded driver collect and one CSR prologue.
+"""The serial-finish seam: one driver-resident graph per persisted edge frame.
 
 Under an operator's edge bound the whole computation is cheaper on the
 driver than one distributed round — the reference's representation
-swap to a CSR rebuilt per pass (louvain.hxx:1174-1176). A serial finish
-collects through ``collect_bounded`` (a LIMIT probe that IS the collect
-under the bound and short-circuits over it) or, where an edge count
-decides the path, through ``collect_columns`` after the count; it maps
-ids through ``edge_csr``: ``id - lo`` when the ids are contiguous, as the
-engine's tables are, else a sorted-unique map; the (src, dst) order
-comes from an O(E + V) counting sort (oracle/_cmove.py ``csr_order``).
+swap to a CSR rebuilt per pass (louvain.hxx:1174-1176). ``local_graph``
+collects a frame's ``(src, dst[, w])`` rows once, as the sorted
+``EdgeCSR`` with self-loops kept, and each serial finish derives its
+own view from it in numpy: Louvain and PageRank read the rows as they
+are, components and label propagation mask out self-loops, triangles
+keep ``src < dst``. ``edge_csr`` maps ids to positions: ``id - lo``
+when the ids are contiguous, as the engine's tables are, else a
+sorted-unique map; the (src, dst) order comes from an O(E + V)
+counting sort (oracle/_cmove.py ``csr_order``).
+
+Memo rule. One graph is held, at most: the one of the last persisted
+frame collected. It is keyed by Spark's cache entry, not by the Python
+object: the id of the cached RDD behind the frame (``_cache_key``). A
+frame that is not persisted has no key and is collected on every call;
+``unpersist()`` + ``persist()`` gives a new id, so a re-persisted frame
+over changed files is collected again; frames with identical plans
+share Spark's cache and so share the entry. The old entry is dropped
+before a new one is collected, and when the frame object it came from
+is garbage-collected. Where the lookup raises (Spark Connect) nothing
+is held.
+
+Decision rule. On a hit, the held row count decides against the bound
+and no Spark job runs. On a miss, one ``count()`` decides, then
+``collect_columns`` under the bound, so a frame over the bound moves
+no rows to the driver.
 
 The two size bounds below are read at call time (``serial.SERIAL_EDGES``),
 so a test forces a path by patching one name.
@@ -16,14 +34,14 @@ so a test forces a path by patching one name.
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
 
-# Directed edges up to which Louvain auto, pagerank_fixed, components
-# and labelprop finish on the driver (~50 MB of arrays; triangles take
-# half, in canonical src < dst pairs). Picked by measurement for the
+# Directed edges up to which Louvain auto, pagerank_fixed, components,
+# labelprop and triangles finish on the driver (~100 MB of arrays). Picked by measurement for the
 # Louvain tail (scripts/sweep_small_graph.py, sf0.1 = 2.7M directed
 # edges, interleaved min-of-2, SWEEP_SMALL_GRAPH.json): 4M (all-serial
 # at that size) → 17.3 s total; 2M → 24.4 s; 1M/500k/200k → 33-36 s.
@@ -69,14 +87,14 @@ def collect_bounded(df: DataFrame, cols: list[str], bound: int) -> list | None:
 class EdgeCSR:
     """Edge rows over dense vertex positions 0..n-1, where ``ids[p]`` is
     the id at position p (ascending, so position order is id order).
-    When sorted, rows are in (src, dst, w) order and ``indptr`` holds
-    the row offsets of each src position."""
+    Rows are in (src, dst, w) order and ``indptr`` holds the row offsets
+    of each src position."""
 
     ids: np.ndarray
     src: np.ndarray
     dst: np.ndarray
     w: np.ndarray | None
-    indptr: np.ndarray | None
+    indptr: np.ndarray
 
 
 def _positions(src: np.ndarray, dst: np.ndarray):
@@ -117,25 +135,16 @@ def pair_order(src: np.ndarray, dst: np.ndarray, n: int):
     return perm, indptr
 
 
-def edge_csr(
-    src: np.ndarray,
-    dst: np.ndarray,
-    w: np.ndarray | None = None,
-    sort: bool = True,
-    drop_loops: bool = False,
-) -> EdgeCSR:
-    """Dense-position edge rows of a non-empty edge list. Every endpoint
-    is a vertex, including endpoints of self-loops dropped by
-    ``drop_loops``. Rows sharing (src, dst) are ordered by ascending w,
-    so the order never depends on the order the rows were collected in
-    (the sequential Louvain kernel keeps the max-w duplicate)."""
+def edge_csr(src: np.ndarray, dst: np.ndarray, w: np.ndarray | None = None) -> EdgeCSR:
+    """Dense-position edge rows of an edge list, in (src, dst) order.
+    Every endpoint is a vertex, including endpoints of self-loops. Rows
+    sharing (src, dst) are ordered by ascending w, so the order never
+    depends on the order the rows were collected in (the sequential
+    Louvain kernel keeps the max-w duplicate)."""
+    if len(src) == 0:
+        e = np.empty(0, dtype=np.int64)
+        return EdgeCSR(e, e, e, w, np.zeros(1, dtype=np.int64))
     ids, s, d = _positions(src, dst)
-    if drop_loops:
-        keep = s != d
-        s, d = s[keep], d[keep]
-        w = None if w is None else w[keep]
-    if not sort:
-        return EdgeCSR(ids, s, d, w, None)
     perm, indptr = pair_order(np.ascontiguousarray(s), np.ascontiguousarray(d), len(ids))
     ss, ds = s[perm], d[perm]
     if w is not None:
@@ -144,3 +153,77 @@ def edge_csr(
             ss, ds = s[perm], d[perm]
         w = w[perm]
     return EdgeCSR(ids, ss, ds, w, indptr)
+
+
+def _cache_key(df: DataFrame):
+    """(application id, id of the cached RDD behind ``df``), or None
+    when ``df`` is not persisted. Raises where the JVM is out of reach
+    (Spark Connect)."""
+    spark = df.sparkSession
+    hit = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if hit.isEmpty():
+        return None
+    rdd = hit.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+    return spark.sparkContext.applicationId, int(rdd.id())
+
+
+# the memo: (key, graph, finalizer of the frame it came from), or None
+_held = None
+
+
+def _drop(key=None) -> None:
+    """Release the held graph (only if it is ``key``'s, when given)."""
+    global _held
+    if _held is not None and (key is None or _held[0] == key):
+        _held[2].detach()
+        _held = None
+
+
+def _lookup(df: DataFrame):
+    """(key, held graph or None); the key is None when nothing can be
+    held for ``df``."""
+    try:
+        key = _cache_key(df)
+    except Exception:
+        return None, None
+    held = _held
+    return key, (held[1] if key is not None and held is not None and held[0] == key else None)
+
+
+def held_graph(edges: DataFrame) -> EdgeCSR | None:
+    """The resident graph of ``edges`` if one is held; never collects."""
+    return _lookup(edges)[1]
+
+
+def graph_or_count(edges: DataFrame, bound: int | None) -> tuple[EdgeCSR | None, int]:
+    """(``local_graph(edges, bound)``, the row count of ``edges``); the
+    count is the one that decided, so a caller over the bound need not
+    count again. ``bound=None`` collects without a count."""
+    global _held
+    key, g = _lookup(edges)
+    if g is not None:
+        n = len(g.src)
+        return (g if bound is None or n <= bound else None), n
+    if bound is not None:
+        n = edges.count()
+        if n > bound:
+            return None, n
+    cols = ["src", "dst", "w"] if "w" in edges.columns else ["src", "dst"]
+    if key is not None:
+        _drop()
+    arrs = collect_columns(edges, cols)
+    g = edge_csr(*arrs)
+    for a in (g.ids, g.src, g.dst, g.w, g.indptr):
+        if a is not None:
+            a.flags.writeable = False
+    if key is not None:
+        _held = (key, g, weakref.finalize(edges, _drop, key))
+    return g, len(g.src)
+
+
+def local_graph(edges: DataFrame, bound: int | None) -> EdgeCSR | None:
+    """The sorted ``EdgeCSR`` of the ``(src, dst[, w])`` rows of
+    ``edges``, self-loops kept, or None when ``edges`` has more than
+    ``bound`` rows (``bound=None``: no bound). Held for one persisted
+    frame (see the module docstring); callers must not write to it."""
+    return graph_or_count(edges, bound)[0]

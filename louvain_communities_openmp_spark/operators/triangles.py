@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import serial
-from .serial import collect_bounded, edge_csr, pair_order
+from .serial import edge_csr, pair_order
 from .transforms import vertices
 
 
@@ -101,14 +101,13 @@ def _triangles(o: DataFrame) -> DataFrame:
     )
 
 
-def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
-    """Serial finish (operators/serial.py) under ``bound`` CANONICAL
-    src<dst pairs ≈ 2·bound directed edges (the caller passes half of
-    ``serial.SERIAL_EDGES``): one numpy orientation pass plus the C
-    marker-array sweep (oracle/_cmove.py triangle_count_csr, OpenMP
-    over vertices). It counts what the distributed plan counts
-    (degree-(deg,id) orientation, per-edge common out-neighbors), so
-    the total is identical — pinned by
+def _triangle_total_local(edges: DataFrame) -> int | None:
+    """Serial finish (operators/serial.py) under ``serial.SERIAL_EDGES``
+    directed edges: the resident graph's ``src < dst`` rows, one numpy
+    orientation pass and the C marker-array sweep (oracle/_cmove.py
+    triangle_count_csr, OpenMP over vertices). It counts what the
+    distributed plan counts (degree-(deg,id) orientation, per-edge
+    common out-neighbors), so the total is identical — pinned by
     tests/test_components_fastpath.py.
 
     Returns None above the bound or when no native kernel is available.
@@ -117,29 +116,33 @@ def _triangle_total_local(edges: DataFrame, bound: int) -> int | None:
 
     if get_local_move() is None:
         return None
-    arrs = collect_bounded(
-        edges.where(F.col("src") < F.col("dst")), ["src", "dst"], bound
-    )
-    if arrs is None:
+    g = serial.local_graph(edges, serial.SERIAL_EDGES)
+    if g is None:
         return None
-    return _triangle_total_arrays(*arrs)
+    keep = g.src < g.dst
+    return _triangle_total_positions(g.src[keep], g.dst[keep], len(g.ids))
 
 
 def _triangle_total_arrays(src, dst) -> int | None:
     """Triangle total of the canonical rows ``src < dst`` (repeats
     allowed) by the native kernel, or None when it is unavailable."""
+    g = edge_csr(src, dst)
+    return _triangle_total_positions(g.src, g.dst, len(g.ids))
+
+
+def _triangle_total_positions(sp, dp, V: int) -> int | None:
+    """``_triangle_total_arrays`` over vertex positions 0..V-1 in id
+    order, with the rows already in (src, dst) order."""
     import numpy as np
 
     from ..oracle._cmove import triangle_count_csr_c
 
-    if len(src) == 0:
+    if len(sp) == 0:
         return 0
-    g = edge_csr(src, dst)
-    V = len(g.ids)
     # the _canonical distinct: drop repeats of a (src, dst) row, which
     # the (src, dst) order makes adjacent
-    first = np.r_[True, (g.src[1:] != g.src[:-1]) | (g.dst[1:] != g.dst[:-1])]
-    sp, dp = g.src[first], g.dst[first]
+    first = np.r_[True, (sp[1:] != sp[:-1]) | (dp[1:] != dp[:-1])]
+    sp, dp = sp[first], dp[first]
     deg = np.bincount(sp, minlength=V) + np.bincount(dp, minlength=V)
     # orient low-(deg, id) → high; position order == id order, and
     # sp < dp already holds, so the deg-tie case keeps fwd
@@ -152,7 +155,7 @@ def _triangle_total_arrays(src, dst) -> int | None:
 
 
 def triangle_count_total(edges: DataFrame) -> int:
-    local = _triangle_total_local(edges, serial.SERIAL_EDGES // 2)
+    local = _triangle_total_local(edges)
     if local is not None:
         return local
     o = _oriented(edges).persist()

@@ -42,8 +42,8 @@ def get_spark(
         # optimizer fast and the UI quiet
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # the serial-finish LIMIT probes (components/labelprop/triangles/
-        # modularity/dense_ids) expect to SUCCEED on bounded inputs;
+        # the bounded LIMIT collects (serial.collect_bounded: membership,
+        # vtot and warm-start frames; dense_ids) expect to SUCCEED;
         # default CollectLimit starts at 1 partition and rescans at 1,
         # 4, 16, ... — starting at the session's partition count makes
         # the common successful probe ONE job while still bounding the

@@ -123,7 +123,13 @@ def edges_from_pages(
         pages.select(F.col("url").alias("src_url"), extract_links_once("html").alias("ls"))
         .select("src_url", F.explode("ls").alias("dst_url"))
     )
-    ids = dense_ids(pages.select("url"), "url").persist()
+    ids, cache = dense_ids_cached(pages.select("url"), "url")
+    ids = ids.persist()
+    if cache is not None:
+        # the scalable path's distinct-value cache is only needed until
+        # the id frame is materialized
+        ids.count()
+        cache.unpersist()
     e = (
         links.join(ids.withColumnRenamed("id", "src"), links.src_url == ids.url)
         .drop("url")

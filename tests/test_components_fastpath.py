@@ -1,8 +1,7 @@
 """Serial-finish parity: components, label propagation and triangles.
 
 Under ``serial.SERIAL_EDGES`` directed edges (the bound Louvain auto
-also uses; triangles take half of it) these operators finish on the
-driver. Each test forces the distributed rounds by patching that
+also uses) these operators finish on the driver. Each test forces the distributed rounds by patching that
 constant and pins that both paths give IDENTICAL result frames and
 iteration counts, that the gate falls through to the distributed path
 when the bound is exceeded, and that the regime above

@@ -61,6 +61,24 @@ def test_dense_ids_collect_path_matches_scalable_plan(spark, monkeypatch):
     assert [i for _, i in rows] == list(range(len(set(vals))))
 
 
+def _cached_rdds(spark) -> int:
+    """Persisted RDDs that are not local checkpoints."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return sum(1 for r in rdds.values() if not r.rdd().isCheckpointed())
+
+
+def test_edges_from_pages_releases_distinct_value_cache(spark, monkeypatch):
+    # the scalable dense_ids path persists its distinct-value frame;
+    # once the id frame is materialized, only the id frame stays cached
+    pages = make_pages(spark, edges_from_list(spark, karate()), n=34)
+    monkeypatch.setattr(edges_mod, "DENSE_IDS_COLLECT", 0)
+    before = _cached_rdds(spark)
+    edges, ids = edges_from_pages(pages, symmetric=True)
+    assert edges.count() == 156
+    ids.unpersist(blocking=True)
+    assert _cached_rdds(spark) == before
+
+
 def test_pages_roundtrip_recovers_graph(spark):
     """pages built from karate edges → extraction → same edge set."""
     planted = edges_from_list(spark, karate())

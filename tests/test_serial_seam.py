@@ -87,10 +87,6 @@ def test_edge_csr_matches_general_map(name):
     ids, s, d, ww, indptr = _general(src, dst, w)
     for got, want in ((g.ids, ids), (g.src, s), (g.dst, d), (g.w, ww), (g.indptr, indptr)):
         np.testing.assert_array_equal(got, want)
-    u = serial.edge_csr(src, dst, w, sort=False)
-    np.testing.assert_array_equal(u.ids, ids)
-    np.testing.assert_array_equal(u.ids[u.src], src)
-    np.testing.assert_array_equal(u.ids[u.dst], dst)
 
 
 def test_edge_csr_duplicates_take_the_max_w_order():
@@ -109,14 +105,19 @@ def test_edge_csr_duplicates_take_the_max_w_order():
         np.testing.assert_array_equal(g.w, ww)
 
 
-def test_edge_csr_drop_loops_keeps_loop_only_vertices():
-    src = np.array([0, 1, 5, 5], dtype=np.int64)
-    dst = np.array([1, 0, 5, 5], dtype=np.int64)
-    g = serial.edge_csr(src, dst, drop_loops=True)
+def test_edge_csr_keeps_loops_and_loop_only_vertices():
+    # the serial finishes that ignore self-loops mask them out of these
+    # rows and keep the vertex set
+    src = np.array([5, 0, 1, 5], dtype=np.int64)
+    dst = np.array([5, 1, 0, 5], dtype=np.int64)
+    g = serial.edge_csr(src, dst)
     np.testing.assert_array_equal(g.ids, [0, 1, 5])
-    np.testing.assert_array_equal(g.src, [0, 1])
-    np.testing.assert_array_equal(g.dst, [1, 0])
-    np.testing.assert_array_equal(g.indptr, [0, 1, 2, 2])
+    np.testing.assert_array_equal(g.src, [0, 1, 2, 2])
+    np.testing.assert_array_equal(g.dst, [1, 0, 2, 2])
+    np.testing.assert_array_equal(g.indptr, [0, 1, 2, 4])
+    empty = serial.edge_csr(src[:0], dst[:0])
+    assert len(empty.ids) == len(empty.src) == 0
+    np.testing.assert_array_equal(empty.indptr, [0])
 
 
 def _pair_order_both(src, dst, n):
@@ -156,7 +157,8 @@ def test_labelprop_numpy_rounds_match_native():
     src, dst, _ = _arrays(power_law(400, 5))
     # non-integer weights: the two add in the same (row) order
     w = np.random.default_rng(3).uniform(0.1, 2.0, len(src))
-    g = serial.edge_csr(src, dst, w, drop_loops=True)
+    keep = src != dst
+    g = serial.edge_csr(src[keep], dst[keep], w[keep])
     for max_iter in (1, 3, 50):
         lab_c = np.arange(len(g.ids), dtype=np.int64)
         lab_np = lab_c.copy()
