@@ -1349,12 +1349,15 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         # driver with the sequential kernel (reference semantics; no
         # per-iteration Spark round-trips). The graph is collected
         # once and handed on; over the bound, the count that decided
-        # is the pass's edge count.
+        # is the pass's edge count (an unpersisted frame's bounded
+        # collect does not count it, so it is counted here).
         t0 = time.time()
-        if opts.mode == "auto":
-            g, n_edges = serial.graph_or_count(edges, serial.SERIAL_EDGES)
-        else:
-            g, n_edges = None, edges.count()
+        g, n_edges = (
+            serial.graph_or_count(edges, serial.SERIAL_EDGES)
+            if opts.mode == "auto" else (None, None)
+        )
+        if n_edges is None:
+            n_edges = edges.count()
         if g is not None:
             res = _serial_finish(
                 spark, g, t0, opts, p, warm=p == 0 and opts.initial_membership is not None

@@ -13,20 +13,26 @@ sorted-unique map; the (src, dst) order comes from an O(E + V)
 counting sort (oracle/_cmove.py ``csr_order``).
 
 Memo rule. One graph is held, at most: the one of the last persisted
-frame collected. It is keyed by Spark's cache entry, not by the Python
-object: the id of the cached RDD behind the frame (``_cache_key``). A
-frame that is not persisted has no key and is collected on every call;
-``unpersist()`` + ``persist()`` gives a new id, so a re-persisted frame
-over changed files is collected again; frames with identical plans
-share Spark's cache and so share the entry. The old entry is dropped
-before a new one is collected, and when the frame object it came from
-is garbage-collected. Where the lookup raises (Spark Connect) nothing
-is held.
+frame collected, or handed over with ``hold``. It is keyed by Spark's
+cache entry, not by the Python object: the id of the cached RDD behind
+the frame (``_cache_key``). A frame that is not persisted has no key
+and is collected on every call; ``unpersist()`` + ``persist()`` gives
+a new id, so a re-persisted frame over changed files is collected
+again; frames with identical plans share Spark's cache and so share
+the entry. The old entry is dropped before a new one is collected or
+held, and when the frame object it came from is garbage-collected.
+``hold`` is for a writer that built the graph of a persisted frame
+from the rows it wrote (the edge store's driver-side apply,
+streaming/edge_stream.py): the graph must equal ``edge_csr`` of the
+frame's rows. Where the lookup raises (Spark Connect) nothing is held.
 
 Decision rule. On a hit, the held row count decides against the bound
-and no Spark job runs. On a miss, one ``count()`` decides, then
-``collect_columns`` under the bound, so a frame over the bound moves
-no rows to the driver.
+and no Spark job runs. On a miss of a persisted frame, one ``count()``
+decides (it fills the cache the collect then reads), then
+``collect_columns`` under the bound, so a frame over the bound moves no
+rows to the driver. A frame with no cache key decides and collects in
+one ``LIMIT bound+1`` job, so its plan runs once; over the bound it
+moves at most bound+1 rows.
 
 The two size bounds below are read at call time (``serial.SERIAL_EDGES``),
 so a test forces a path by patching one name.
@@ -65,16 +71,19 @@ def _numpy_columns(tbl, cols: list[str]) -> list:
     return [a.astype(np.float64 if a.dtype.kind == "f" else np.int64, copy=False) for a in arrs]
 
 
-def collect_columns(df: DataFrame, cols: list[str]) -> list:
+def collect_columns(df: DataFrame, cols: list[str], bound: int | None = None) -> list | None:
     """The columns ``cols`` of ``df`` as numpy arrays (int64, or float64
     for floating columns). Arrow-direct: no pandas block consolidation.
-    Only for a frame already known to be under a bound."""
+    With no ``bound``, only for a frame already known to be under one;
+    with one, ``collect_bounded``. The serial finishes' edge collect."""
+    if bound is not None:
+        return collect_bounded(df, cols, bound)
     return _numpy_columns(df.select(*cols).toArrow(), cols)
 
 
 def collect_bounded(df: DataFrame, cols: list[str], bound: int) -> list | None:
-    """``collect_columns`` of ``df``, or None when ``df`` has more than
-    ``bound`` rows."""
+    """The columns ``cols`` of ``df`` in one ``LIMIT bound+1`` job, or
+    None when ``df`` has more than ``bound`` rows."""
     # LIMIT takes a Java int
     bound = min(bound, 2**31 - 2)
     tbl = df.select(*cols).limit(bound + 1).toArrow()
@@ -195,29 +204,49 @@ def held_graph(edges: DataFrame) -> EdgeCSR | None:
     return _lookup(edges)[1]
 
 
-def graph_or_count(edges: DataFrame, bound: int | None) -> tuple[EdgeCSR | None, int]:
-    """(``local_graph(edges, bound)``, the row count of ``edges``); the
-    count is the one that decided, so a caller over the bound need not
-    count again. ``bound=None`` collects without a count."""
+def _keep(key, edges: DataFrame, g: EdgeCSR) -> EdgeCSR:
+    """Hold the read-only ``g`` as the graph of ``edges`` under ``key``."""
     global _held
-    key, g = _lookup(edges)
-    if g is not None:
-        n = len(g.src)
-        return (g if bound is None or n <= bound else None), n
-    if bound is not None:
-        n = edges.count()
-        if n > bound:
-            return None, n
-    cols = ["src", "dst", "w"] if "w" in edges.columns else ["src", "dst"]
-    if key is not None:
-        _drop()
-    arrs = collect_columns(edges, cols)
-    g = edge_csr(*arrs)
     for a in (g.ids, g.src, g.dst, g.w, g.indptr):
         if a is not None:
             a.flags.writeable = False
     if key is not None:
+        _drop()
         _held = (key, g, weakref.finalize(edges, _drop, key))
+    return g
+
+
+def hold(edges: DataFrame, g: EdgeCSR) -> None:
+    """Hold ``g`` as the resident graph of the persisted frame ``edges``
+    without collecting it; ``g`` must equal ``edge_csr`` of the frame's
+    rows and is not written to afterwards. Nothing is held for a frame
+    that is not persisted, or under Spark Connect."""
+    _keep(_lookup(edges)[0], edges, g)
+
+
+def graph_or_count(edges: DataFrame, bound: int | None) -> tuple[EdgeCSR | None, int | None]:
+    """(``local_graph(edges, bound)``, the row count of ``edges``); the
+    count is the one that decided, so a caller over the bound need not
+    count again. It is None for a frame with no cache key found over
+    the bound, whose bounded collect does not count it. ``bound=None``
+    collects without a count."""
+    key, g = _lookup(edges)
+    if g is not None:
+        n = len(g.src)
+        return (g if bound is None or n <= bound else None), n
+    cols = ["src", "dst", "w"] if "w" in edges.columns else ["src", "dst"]
+    if key is None:
+        arrs = collect_columns(edges, cols, bound)
+        if arrs is None:
+            return None, None
+    else:
+        if bound is not None:
+            n = edges.count()
+            if n > bound:
+                return None, n
+        _drop()
+        arrs = collect_columns(edges, cols)
+    g = _keep(key, edges, edge_csr(*arrs))
     return g, len(g.src)
 
 

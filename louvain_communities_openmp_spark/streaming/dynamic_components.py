@@ -86,14 +86,8 @@ class DynamicComponents:
         mode = "warm" if init is not None else "cold"
         t0 = time.time()
         d = self._vdir(v)
-        edges = self.store.load(v).persist()
-        try:
-            res = connected_components(edges, initial_components=init)
-            res.components.write.mode("overwrite").parquet(
-                os.path.join(d, "components")
-            )
-        finally:
-            edges.unpersist()
+        res = connected_components(self.store.resident(v), initial_components=init)
+        res.components.write.mode("overwrite").parquet(os.path.join(d, "components"))
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {

@@ -94,14 +94,8 @@ class DynamicLouvain:
         )
         t0 = time.time()
         d = self._vdir(v)
-        edges = self.store.load(v).persist()
-        try:
-            res = louvain(edges, opts)
-            res.membership.write.mode("overwrite").parquet(
-                os.path.join(d, "membership")
-            )
-        finally:
-            edges.unpersist()
+        res = louvain(self.store.resident(v), opts)
+        res.membership.write.mode("overwrite").parquet(os.path.join(d, "membership"))
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {

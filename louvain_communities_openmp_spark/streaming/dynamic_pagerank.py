@@ -82,18 +82,14 @@ class DynamicPageRank:
         init = self.load_ranks(rv) if rv is not None else None
         t0 = time.time()
         d = self._vdir(v)
-        edges = self.store.load(v).persist()
-        try:
-            res = pagerank(
-                edges,
-                alpha=self.alpha,
-                tol=self.tol,
-                max_iter=self.max_iter,
-                initial_ranks=init,
-            )
-            res.ranks.write.mode("overwrite").parquet(os.path.join(d, "ranks"))
-        finally:
-            edges.unpersist()
+        res = pagerank(
+            self.store.resident(v),
+            alpha=self.alpha,
+            tol=self.tol,
+            max_iter=self.max_iter,
+            initial_ranks=init,
+        )
+        res.ranks.write.mode("overwrite").parquet(os.path.join(d, "ranks"))
         with open(os.path.join(d, "_COMMIT.json"), "w") as f:
             json.dump(
                 {

@@ -1,7 +1,8 @@
 """The driver-resident graph (``serial.local_graph``) and its memo.
 
 Pins that the serial finishes share one collect of a persisted edge
-frame; that an unpersisted frame, a re-persisted frame over rewritten
+frame; that an unpersisted frame is evaluated once per call; that an
+unpersisted frame, a re-persisted frame over rewritten
 files and a derived frame are collected again and give the new answer;
 that a patched bound is honoured on a hit; that the entry goes with the
 last reference to its frame; and that ``modularity``'s resident path
@@ -49,11 +50,19 @@ def _collect_garbage(spark):
 
 @pytest.fixture
 def collects(monkeypatch):
-    """Counts calls of ``serial.collect_columns``, the edge collect."""
+    """Counts the edge collects (``serial.collect_columns``) that
+    returned rows: a bounded one over its bound moves at most bound+1
+    rows and returns None."""
     calls = []
     real = serial.collect_columns
-    monkeypatch.setattr(
-        serial, "collect_columns", lambda df, cols: calls.append(cols) or real(df, cols))
+
+    def counted(df, cols, bound=None):
+        out = real(df, cols, bound)
+        if out is not None:
+            calls.append(cols)
+        return out
+
+    monkeypatch.setattr(serial, "collect_columns", counted)
     return calls
 
 
@@ -99,6 +108,21 @@ def test_unpersisted_frame_collects_once_per_call(spark, collects):
     assert len(collects) == 1
     triangle_count_total(e)
     assert len(collects) == 2
+
+
+def test_unpersisted_frame_plan_runs_once(spark):
+    """A frame with no cache key decides and collects in one bounded
+    job: its filter sees every row once, not once per count and once
+    per collect."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def passes(src):
+        seen.add(1)
+        return True
+
+    e = edges_from_list(spark, karate()).where(F.udf(passes, "boolean")("src"))
+    assert triangle_count_total(e) == 45
+    assert seen.value == 156
 
 
 def test_over_the_bound_nothing_is_collected(spark, collects, monkeypatch):

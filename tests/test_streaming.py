@@ -1,12 +1,15 @@
 """Structured-Streaming edge-delta ingestion (dynamic-graph analog)."""
 
+import gc
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from louvain_communities_openmp_spark.operators import serial
 from louvain_communities_openmp_spark.operators.transforms import apply_batch
-from louvain_communities_openmp_spark.oracle import toy5
+from louvain_communities_openmp_spark.oracle import karate, toy5
 from louvain_communities_openmp_spark.sources.edges import edges_from_list
 from louvain_communities_openmp_spark.streaming.edge_stream import (
     DELTA_SCHEMA,
@@ -76,32 +79,73 @@ def _apply_by_snapshot_plan(store, batch, batch_id):
     )
 
 
-def test_apply_delta_batch_matches_snapshot_plan_and_releases_caches(spark, tmp_path):
-    # toy5 plus a duplicate 2->3 row, which the apply's sum collapses
-    e0 = edges_from_list(spark, toy5() + [(2, 3, 0.5)])
-    batch = spark.createDataFrame(
-        [
-            ("ins", 0, 1, 9.0),  # existing pair, other weight: old weight stays
-            ("ins", 3, 4, 7.0),  # insert + delete of an existing pair
-            ("del", 4, 3, 1.0),
-            ("ins", 1, 3, 2.0),  # insert + delete of a new pair: deletes
-            ("del", 1, 3, 1.0),  # apply first, so the insert lands
-            ("ins", 0, 4, 2.0),  # duplicate inserts, both directions: max wins
-            ("ins", 4, 0, 3.0),
-            ("ins", 0, 4, 1.5),
-            ("del", 0, 3, 1.0),  # delete of an absent pair
-        ],
-        DELTA_SCHEMA,
-    )
+# toy5 plus a duplicate 2->3 row, which the apply's sum collapses
+DUP_V0 = toy5() + [(2, 3, 0.5)]
+MIXED = [
+    ("ins", 0, 1, 9.0),  # existing pair, other weight: old weight stays
+    ("ins", 3, 4, 7.0),  # insert + delete of an existing pair
+    ("del", 4, 3, 1.0),
+    ("ins", 1, 3, 2.0),  # insert + delete of a new pair: deletes
+    ("del", 1, 3, 1.0),  # apply first, so the insert lands
+    ("ins", 0, 4, 2.0),  # duplicate inserts, both directions: max wins
+    ("ins", 4, 0, 3.0),
+    ("ins", 0, 4, 1.5),
+    ("del", 0, 3, 1.0),  # delete of an absent pair
+]
+APPLY_CASES = {
+    "mixed": (DUP_V0, MIXED),
+    # ids below, between and above the parent's; an unknown op is ignored
+    "new_ids": (toy5(), [("ins", 4, 7, 1.0), ("ins", 7, 9, 2.5), ("ins", -2, 1, 1.0),
+                         ("del", 3, 4, 1.0), ("del", 9, 8, 1.0), ("upd", 0, 1, 5.0)]),
+    # vertex 0 loses every edge, and vertex 1 its self-loop
+    "isolated": (toy5() + [(1, 1, 2.0)], [("del", 0, 1, 1.0), ("del", 2, 0, 1.0),
+                                          ("del", 1, 1, 1.0), ("ins", 3, 1, 2.0)]),
+    "empty": (DUP_V0, []),
+    # a raw v0: duplicate rows summed, a duplicated pair deleted whole,
+    # an insert of a duplicated self-loop dropped
+    "raw_dups": (toy5() + [(2, 3, 0.5), (2, 3, 0.25), (3, 4, 2.0), (4, 4, 1.0), (4, 4, 1.0)],
+                 [("del", 3, 4, 1.0), ("ins", 4, 4, 5.0), ("ins", 0, 3, 0.5)]),
+}
+
+
+def _same_graph(got, want):
+    """Bit-identical ``EdgeCSR``s."""
+    for f in ("ids", "src", "dst", "w", "indptr"):
+        a, b = getattr(got, f), getattr(want, f)
+        assert (a.dtype, a.tobytes()) == (b.dtype, b.tobytes()), f
+
+
+def _persisted(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _apply_against_snapshot_plan(spark, tmp_path, case, memo):
+    """Apply ``APPLY_CASES[case]`` to a store whose v0 has ``memo``
+    "none" (nothing resident: the Spark path), "held" (v0's graph held:
+    the resident path) or "evicted" (v0 resident, its graph evicted from
+    the memo: the Spark path), and check it against the multi-pass
+    composition. Returns the snapshot rows and n_dels."""
+    v0, deltas = APPLY_CASES[case]
+    e0 = edges_from_list(spark, v0)
+    batch = spark.createDataFrame(deltas, DELTA_SCHEMA)
     stores = []
     for name in ("one_pass", "snapshot_plan"):
         store = EdgeStateStore(spark, str(tmp_path / name))
-        store.commit(e0, 0, {"edges": 13})
+        store.commit(e0, 0, {"edges": len(v0)})
         stores.append(store)
-    cached = spark.sparkContext._jsc.getPersistentRDDs().size()
-    v = apply_delta_batch(stores[0], batch, 1)
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached
-    assert _apply_by_snapshot_plan(stores[1], batch, 1) == v == 1
+    got, want = stores
+    if memo != "none":
+        assert serial.local_graph(got.resident(0), None) is not None
+    if memo == "evicted":
+        other = edges_from_list(spark, karate()).persist()
+        serial.local_graph(other, None)
+    assert (got._held_parent() is not None) == (memo == "held")
+    cached = _persisted(spark)
+    v = apply_delta_batch(got, batch, 1)
+    # the resident path persists v1 as it releases v0; the Spark path
+    # releases v0, if resident, and leaves v1 to its first reader
+    assert _persisted(spark) == cached - (memo == "evicted")
+    assert _apply_by_snapshot_plan(want, batch, 1) == v == 1
 
     def rows(store):
         return sorted(tuple(r) for r in store.load(v).collect())
@@ -113,16 +157,140 @@ def test_apply_delta_batch_matches_snapshot_plan_and_releases_caches(spark, tmp_
         m = store.commit_meta(v)
         return m["edges"], m["n_dels"]
 
-    got, want = stores
     assert rows(got) == rows(want)
     assert affected(got) == affected(want)
-    assert meta(got) == meta(want) == (got.load(v).count(), 6)
-    snap = {(s, d): w for s, d, w in rows(got)}
+    assert meta(got) == meta(want)
+    assert meta(got)[0] == got.load(v).count()
+    # only the resident path holds the new version's graph, and it is
+    # bit-identical to a collect of the snapshot
+    held = serial.held_graph(got.load(v))
+    assert (held is not None) == (memo == "held")
+    if held is not None:
+        fresh = serial.edge_csr(*serial.collect_columns(got.load(v), ["src", "dst", "w"]))
+        _same_graph(held, fresh)
+    if memo == "evicted":
+        other.unpersist()
+    got.close()
+    return rows(want), meta(want)[1]
+
+
+def test_apply_delta_batch_matches_snapshot_plan_and_releases_caches(spark, tmp_path):
+    rows, n_dels = _apply_against_snapshot_plan(spark, tmp_path, "mixed", "none")
+    assert n_dels == 6
+    snap = {(s, d): w for s, d, w in rows}
     assert snap[(0, 1)] == snap[(1, 0)] == 1.0
     assert snap[(0, 4)] == snap[(4, 0)] == 3.0
     assert snap[(2, 3)] == 1.5
     assert snap[(1, 3)] == snap[(3, 1)] == 2.0
     assert (3, 4) not in snap and (4, 3) not in snap
+
+
+@pytest.mark.parametrize("case", APPLY_CASES)
+def test_resident_apply_matches_snapshot_plan(spark, tmp_path, case):
+    _apply_against_snapshot_plan(spark, tmp_path, case, "held")
+
+
+def test_apply_with_the_memo_evicted_takes_the_spark_path(spark, tmp_path):
+    _apply_against_snapshot_plan(spark, tmp_path, "mixed", "evicted")
+
+
+def test_every_version_matches_the_spark_path(spark, tmp_path):
+    """A chain of batches through the resident path and through the
+    Spark path gives the same snapshot and the same refreshed
+    membership at every version."""
+    import numpy as np
+
+    from louvain_communities_openmp_spark.oracle import ring_of_cliques
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+
+    v0 = ring_of_cliques(8, 6)
+    rng = np.random.default_rng(7)
+    stores, dyns = [], []
+    for name in ("resident", "spark"):
+        store = EdgeStateStore(spark, str(tmp_path / name))
+        store.commit(edges_from_list(spark, v0), 0, {})
+        stores.append(store)
+        dyns.append(DynamicLouvain(store))
+    stores[1]._held_parent = lambda: None
+    pairs = sorted({(min(u, v), max(u, v)) for u, v, _ in v0})
+    for b in range(1, 4):
+        # one graph is held at a time: the resident store's refresh last
+        for dyn in reversed(dyns):
+            dyn.update_to_latest()
+        dels = [pairs[i] for i in rng.choice(len(pairs), 4, replace=False)]
+        ins = rng.integers(0, 52, size=(6, 2))
+        deltas = spark.createDataFrame(
+            [("del", int(u), int(v), 1.0) for u, v in dels]
+            + [("ins", int(u), int(v), float(w)) for (u, v), w in zip(ins, rng.integers(1, 4, 6))],
+            DELTA_SCHEMA,
+        )
+        assert serial.held_graph(stores[0].resident()) is not None
+        assert [apply_delta_batch(st, deltas, b) for st in stores] == [b, b]
+        assert serial.held_graph(stores[0].load(b)) is not None
+        got, want = (sorted(tuple(r) for r in st.load(b).collect()) for st in stores)
+        assert got == want
+        pairs = sorted({(min(u, v), max(u, v)) for u, v, _ in got})
+    mems = []
+    for dyn in dyns:
+        dyn.update_to_latest()
+        mems.append([sorted(tuple(r) for r in dyn.load_membership(v).collect()) for v in range(4)])
+    assert mems[0] == mems[1]
+    for st in stores:
+        st.close()
+
+
+def test_resident_version_is_released_at_the_next_version_and_at_close(spark, tmp_path):
+    store = EdgeStateStore(spark, str(tmp_path / "state"))
+    store.commit(edges_from_list(spark, toy5()), 0, {})
+    serial.local_graph(store.resident(0), None)
+    assert serial._cache_key(store.load(0)) is not None
+    deltas = spark.createDataFrame([("ins", 0, 3, 1.0)], DELTA_SCHEMA)
+    v1 = apply_delta_batch(store, deltas, 1)
+    assert serial._cache_key(store.load(0)) is None
+    assert serial._cache_key(store.load(v1)) is not None
+    assert serial.held_graph(store.load(v1)) is not None
+    # a commit through Spark releases it too; the next version is
+    # persisted when a reader asks for it
+    store.commit(store.load(v1), 2, {})
+    assert serial._cache_key(store.load(v1)) is None
+    assert serial._cache_key(store.load(2)) is None
+    store.resident()
+    assert serial._cache_key(store.load(2)) is not None
+    store.close()
+    assert serial._cache_key(store.load(2)) is None
+    gc.collect()
+    assert serial._held is None
+
+
+def test_maintainers_share_one_resident_graph(spark, tmp_path, monkeypatch):
+    """The three maintainers chained on one store read the resident
+    version: one edge collect for v0, none after a resident-path apply,
+    and no refresh uncaches the store's entry."""
+    from louvain_communities_openmp_spark.streaming.dynamic_components import DynamicComponents
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+    from louvain_communities_openmp_spark.streaming.dynamic_pagerank import DynamicPageRank
+
+    collects = []
+    real = serial.collect_columns
+    monkeypatch.setattr(
+        serial, "collect_columns",
+        lambda df, cols, *bound: collects.append(cols) or real(df, cols, *bound))
+    store = EdgeStateStore(spark, str(tmp_path / "state"))
+    store.commit(edges_from_list(spark, karate()), 0, {})
+    maintainers = [DynamicLouvain(store), DynamicPageRank(store), DynamicComponents(store)]
+    deltas = spark.createDataFrame([("ins", 0, 9, 1.0), ("ins", 4, 30, 2.0)], DELTA_SCHEMA)
+    for v in (0, 1):
+        if v:
+            assert apply_delta_batch(store, deltas, 1) == v
+        frame = store.resident(v)
+        key = serial._cache_key(frame)
+        for m in maintainers:
+            assert m.update_to_latest()[0] == v
+            assert store.resident(v) is frame
+            assert serial._cache_key(store.load(v)) == key
+            assert serial.held_graph(store.load(v)) is not None
+        assert len(collects) == 1
+    store.close()
 
 
 def test_streaming_drain(spark, tmp_path):
@@ -200,6 +368,7 @@ def test_dynamic_louvain_warm_start_over_versions(spark, tmp_path):
     assert meta0["frontier_seeded"] is False
     assert meta1["frontier_seeded"] is True
     assert 0 < meta1["processed"] < meta0["processed"]
+    store.close()
 
 
 def test_doc_ingest_stream_dedup_and_parity(spark, tmp_path):
@@ -318,6 +487,7 @@ def test_dynamic_pagerank_warm_start_over_versions(spark, tmp_path):
         assert abs(got[r["id"]] - r["rank"]) < 1e-6, r["id"]
     # rank snapshots are probability vectors
     assert abs(sum(got.values()) - 1.0) < 1e-6
+    store.close()
 
 
 def test_dynamic_components_warm_and_cold(spark, tmp_path):
@@ -370,6 +540,7 @@ def test_dynamic_components_warm_and_cold(spark, tmp_path):
     }
     assert got2 == exp2
     assert set(got2.values()) == {0, 10}
+    store.close()
 
 
 def test_stateful_sessionize_stream(spark, tmp_path):
