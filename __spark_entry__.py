@@ -3014,6 +3014,7 @@ def _louvain_exact_sql(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
         import duckdb
         import numpy as np
 
+        from louvain_communities_openmp_spark.operators.serial import edge_csr
         from louvain_communities_openmp_spark.oracle.louvain_seq import (
             louvain_seq_fast,
         )
@@ -3029,16 +3030,14 @@ def _louvain_exact_sql(sf_dir: str = "/root/testdata/sf0.01") -> str | None:
             " ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey"
             " GROUP BY a.l_partkey, b.l_partkey"
         ).fetchnumpy().values()
-        src = np.asarray(src, dtype=np.int64)
-        dst = np.asarray(dst, dtype=np.int64)
-        ids = np.unique(np.concatenate([src, dst]))
-        r = louvain_seq_fast(
-            np.searchsorted(ids, src),
-            np.searchsorted(ids, dst),
+        g = edge_csr(
+            np.asarray(src, dtype=np.int64),
+            np.asarray(dst, dtype=np.int64),
             np.asarray(w, dtype=np.float64),
         )
+        r = louvain_seq_fast(g)
         rows = ",".join(
-            f"({int(i)},{int(c)})" for i, c in zip(ids, r.membership)
+            f"({int(i)},{int(c)})" for i, c in zip(g.ids, r.membership)
         )
         sql = (
             "SELECT CAST(id AS BIGINT) AS id, CAST(com AS BIGINT) AS com "

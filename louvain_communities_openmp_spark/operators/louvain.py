@@ -62,7 +62,7 @@ from ..oracle.louvain_seq import louvain_seq_fast
 from ..plans.run import RunDir
 from . import serial
 from .properties import modularity as modularity_op
-from .properties import modularity_arrays, total_weight_m, vertex_weights
+from .properties import total_weight_m, vertex_weights
 from .serial import EdgeCSR, collect_bounded
 
 
@@ -1237,8 +1237,8 @@ def _serial_finish(
     reference's phase report (main.cxx:70-76): ``t_collect`` (from
     ``t0``, taken before the caller's ``local_graph``: the edge collect
     and CSR prologue, 0 when the graph was resident), ``t_csr`` (warm
-    start), ``t_solve`` (louvain_seq_fast) and ``t_q`` (membership
-    frame and Q)."""
+    start), ``t_solve`` (louvain_seq_fast, which also scores Q) and
+    ``t_q`` (the membership frame)."""
     import numpy as np
 
     t_collect = time.time()
@@ -1256,9 +1256,7 @@ def _serial_finish(
             init_aff = np.flatnonzero(aff)
     t_csr = time.time()
     r = louvain_seq_fast(
-        g.src,
-        g.dst,
-        g.w,
+        g,
         resolution=opts.resolution,
         tolerance=opts.tolerance / (opts.tolerance_drop ** p),
         tolerance_drop=opts.tolerance_drop,
@@ -1269,15 +1267,11 @@ def _serial_finish(
         init_aff=init_aff,
     )
     t_solve = time.time()
-    com = np.asarray(r.membership, dtype=np.int64)
     mem = spark.createDataFrame(
-        pd.DataFrame({"id": g.ids, "com": com}), MEMBERSHIP_SCHEMA
+        pd.DataFrame({"id": g.ids, "com": r.membership}), MEMBERSHIP_SCHEMA
     )
-    # Q over the arrays already in hand, instead of the membership
-    # double-join + aggregate job
-    q = modularity_arrays(g.src, g.dst, g.w, com, opts.resolution)
     t_end = time.time()
-    return LouvainResult(mem, q, r.passes, r.iterations, [{
+    return LouvainResult(mem, r.modularity, r.passes, r.iterations, [{
         "pass": p, "mode": "local_finish", "edges": len(g.src),
         "local_passes": r.passes,
         # vertex scans actually performed across the serial passes —

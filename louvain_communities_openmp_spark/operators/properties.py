@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..oracle.louvain_seq import modularity_arrays
+
 
 def edge_weight(edges: DataFrame) -> float:
     """Σw over the digraph. → properties.hxx:69-106 (edgeWeight)."""
@@ -60,27 +62,6 @@ def community_sizes(membership: DataFrame) -> DataFrame:
 def community_count(membership: DataFrame) -> int:
     """→ louvain.hxx:646-683 (louvainCommunityExistsW). Exact count."""
     return membership.select("com").distinct().count()
-
-
-def modularity_arrays(src_pos, dst_pos, w, com, resolution: float = 1.0, m: float | None = None) -> float:
-    """Q = Σ_c [cin_c/(2M) − R·(ctot_c/(2M))²] of the edge rows
-    ``(src_pos, dst_pos, w)`` over vertex positions, ``com[p]`` being
-    the community of position p; M is Σw/2 unless ``m`` is given. A
-    zero or negative total scores 0. The driver-side twin of
-    ``modularity``'s plan (summation-order drift ~1e-15)."""
-    import numpy as np
-
-    two_m = float(w.sum()) if m is None else 2.0 * m
-    if two_m <= 0.0:
-        return 0.0
-    k = len(com)
-    if k and (int(com.min()) < 0 or int(com.max()) >= k):
-        com = np.unique(com, return_inverse=True)[1]
-    cu = com[src_pos]
-    same = cu == com[dst_pos]
-    cin = np.bincount(cu[same], weights=w[same], minlength=k)
-    ctot = np.bincount(cu, weights=w, minlength=k)
-    return float((cin / two_m - resolution * (ctot / two_m) ** 2).sum())
 
 
 def _modularity_resident(g, membership: DataFrame, resolution: float, m: float | None) -> float | None:

@@ -16,8 +16,8 @@ order — louvain.hxx:527-545), so it cannot be vectorized with numpy
 without changing semantics. The Python dict-walk costs ~0.1 µs/edge;
 the C sweep is the *identical* walk at ~10× less per-edge cost.
 
-Bit-identity contract of the sweep (the same one the numpy hub path
-already meets, pinned by tests/test_oracle.py):
+Bit-identity contract of the sweep (the same one the pure-Python
+fallback meets, pinned by tests/test_oracle.py):
 
 - per-vertex community accumulation in ADJACENCY ORDER via an
   insertion-ordered (stamp-array) table — float adds happen in exactly
@@ -32,10 +32,11 @@ already meets, pinned by tests/test_oracle.py):
   multiply-adds into FMAs (which would change the bit pattern).
 
 The contraction scans communities, members and adjacency in the
-reference's order (louvain.hxx:865-912) and sums each coarse entry the
-way ``np.add.reduceat`` does (the first weight plus numpy's pairwise
-sum of the rest), so its arrays are bit-identical to
-``louvain_seq._contract_fast``'s (pinned by tests/test_cmove.py). The
+reference's order (louvain.hxx:865-912) and sums each coarse entry left
+to right in that scan order, as the reference's
+``louvainAggregateEdgesW`` and the slow oracle's contraction do, so its
+arrays are bit-identical to ``louvain_seq._contract_fast``'s and its
+weights to the slow oracle's (pinned by tests/test_cmove.py). The
 triangle total is an integer sum, so it is the same for every thread
 count.
 
@@ -249,59 +250,29 @@ int64_t triangle_count_csr(
     return total;
 }
 
-/* numpy's pairwise float64 sum (np.add.reduce and reduceat use it):
-   plain adds below 8 terms, 8 interleaved partial sums up to 128 terms,
-   and halving, at a multiple of 8, above that. */
-static double pairwise_sum(const double *a, int64_t n)
-{
-    if (n < 8) {
-        double res = -0.0;  /* x + -0.0 == x for every x, -0.0 included */
-        for (int64_t i = 0; i < n; i++) res += a[i];
-        return res;
-    }
-    if (n <= 128) {
-        double r[8];
-        for (int j = 0; j < 8; j++) r[j] = a[j];
-        int64_t i;
-        for (i = 8; i < n - (n % 8); i += 8)
-            for (int j = 0; j < 8; j++) r[j] += a[i + j];
-        double res = ((r[0] + r[1]) + (r[2] + r[3]))
-                   + ((r[4] + r[5]) + (r[6] + r[7]));
-        for (; i < n; i++) res += a[i];
-        return res;
-    }
-    int64_t n2 = n / 2;
-    n2 -= n2 % 8;
-    return pairwise_sum(a, n2) + pairwise_sum(a + n2, n - n2);
-}
-
 /* Louvain contraction in the reference's shape (louvainAggregateEdgesW,
    louvain.hxx:865-912): communities ascending; within one, its members
    ascending and each member's adjacency in CSR order (self-loops
    kept). A destination community becomes an entry of the coarse row at
-   its first encounter; pos[dc] holds its entry index, and
-   pos[dc] < row start means "not in this row yet", so the scratch is
-   never cleared. An entry's weight is its edges' weights in scan order,
-   summed as np.add.reduceat sums a group (the first weight plus the
-   pairwise sum of the rest), so the coarse graph is bit-identical to
-   the numpy contraction's. cur holds dense labels in [0, C). Writes
-   out_indptr (C + 1) and, per entry, out_cv (destination), out_w
-   (weight) and out_cu (source community), each with room for
-   indptr[n] entries. Returns the entry count, or -1 on allocation
-   failure. */
+   its first encounter, which writes the edge's weight; each later edge
+   to it adds its weight, so every entry is summed left to right in
+   scan order, as the reference and the slow oracle sum it. pos[dc]
+   holds the entry index, and pos[dc] < row start means "not in this
+   row yet", so the scratch is never cleared. cur holds dense labels in
+   [0, C). Writes out_indptr (C + 1) and, per entry, out_cv
+   (destination), out_w (weight) and out_cu (source community), each
+   with room for indptr[n] entries. Returns the entry count, or -1 on
+   allocation failure. */
 int64_t louvain_contract(
     const int64_t *indptr, const int64_t *indices, const double *weights,
     int64_t n, const int64_t *cur, int64_t C,
     int64_t *out_indptr, int64_t *out_cv, double *out_w, int64_t *out_cu)
 {
-    const int64_t m = indptr[n];
     int64_t *mptr    = (int64_t *) calloc((size_t) C + 1, sizeof(int64_t));
     int64_t *members = (int64_t *) malloc((size_t) (n ? n : 1) * sizeof(int64_t));
     int64_t *pos     = (int64_t *) malloc((size_t) (C ? C : 1) * sizeof(int64_t));
-    int64_t *cnt     = (int64_t *) malloc((size_t) (m ? m : 1) * sizeof(int64_t));
-    double  *buf     = (double *)  malloc((size_t) (m ? m : 1) * sizeof(double));
-    if (!mptr || !members || !pos || !cnt || !buf) {
-        free(mptr); free(members); free(pos); free(cnt); free(buf);
+    if (!mptr || !members || !pos) {
+        free(mptr); free(members); free(pos);
         return -1;
     }
     /* members of each community, ascending (stable counting sort) */
@@ -314,39 +285,21 @@ int64_t louvain_contract(
     for (int64_t c = 0; c < C; c++) {
         const int64_t row = k;
         out_indptr[c] = row;
-        /* entries in first-encounter order, and their edge counts */
         for (int64_t q = mptr[c]; q < mptr[c + 1]; q++) {
             const int64_t u = members[q];
             for (int64_t i = indptr[u]; i < indptr[u + 1]; i++) {
                 const int64_t dc = cur[indices[i]];
                 if (pos[dc] < row) {
                     pos[dc] = k;
-                    out_cv[k] = dc; out_cu[k] = c; cnt[k] = 0; k++;
+                    out_cv[k] = dc; out_cu[k] = c; out_w[k] = weights[i]; k++;
+                } else {
+                    out_w[pos[dc]] += weights[i];
                 }
-                cnt[pos[dc]]++;
             }
-        }
-        /* counts -> each entry's start in buf */
-        int64_t off = 0;
-        for (int64_t j = row; j < k; j++) {
-            const int64_t d = cnt[j];
-            cnt[j] = off; off += d;
-        }
-        /* each entry's weights, contiguous and in scan order; cnt[j]
-           ends as entry j's end, which is entry j + 1's start */
-        for (int64_t q = mptr[c]; q < mptr[c + 1]; q++) {
-            const int64_t u = members[q];
-            for (int64_t i = indptr[u]; i < indptr[u + 1]; i++)
-                buf[cnt[pos[cur[indices[i]]]]++] = weights[i];
-        }
-        int64_t start = 0;
-        for (int64_t j = row; j < k; j++) {
-            out_w[j] = buf[start] + pairwise_sum(buf + start + 1, cnt[j] - start - 1);
-            start = cnt[j];
         }
     }
     out_indptr[C] = k;
-    free(mptr); free(members); free(pos); free(cnt); free(buf);
+    free(mptr); free(members); free(pos);
     return k;
 }
 

@@ -49,6 +49,7 @@ from ._cmove import contract_c, local_move_c
 class LouvainSeqResult:
     membership: list          # ucom — final per-vertex community
     vertex_weight: list       # utot — Σ out-edge weight per vertex (pass 0)
+    # (both are numpy arrays from louvain_seq_fast)
     iterations: int           # total local-move iterations across passes
     passes: int               # passes performed
     modularity: float         # re-scored vs the ORIGINAL graph
@@ -175,171 +176,94 @@ def louvain_seq(
     return LouvainSeqResult(ucom, utot, l_total, p, q, pass_log)
 
 
-# degree cutoff between the dict-walk and numpy-grouping paths of
-# _local_move_fast. The walk is O(deg) with ~0.1µs/edge constants; the
-# numpy grouping is O(deg·log deg) with ~2µs fixed overhead — the walk
-# wins everywhere except mega-hubs, where the two roughly tie (zipf
-# fixture with a 296k-degree hub: walk-only ≈ numpy-at-hubs within
-# noise). Both paths are bit-identical, so this is purely a speed knob.
-_SMALL_DEG = 4096
-
-
 def _local_move_fast(indptr, indices, weights, vcom, ctot, vaff, vtot, M, R, L, E):
-    """Vectorized-per-vertex _local_move: same sweep order, same
-    immediate updates, same first-max/insertion-order tie-break and
-    community-0 quirk — bit-identical membership. Returns
-    (iterations, processed) where ``processed`` counts vertex scans
-    actually performed (vaff-marked) — the work metric frontier-seeded
-    dynamic marking (louvain.hxx:305-389 DYNAMIC) is judged by.
-
-    Two per-vertex paths, chosen by degree:
-
-    - deg ≤ _SMALL_DEG: a plain dict walk over Python-list mirrors of
-      the CSR. This IS the slow oracle's accumulation (_local_move,
-      above) verbatim — insertion-ordered dict, adjacency-order float
-      adds, the same ΔQ expression tree — so it is bit-identical by
-      construction, and ~5× faster than the numpy grouping at the
-      power-law-typical degree ~10, where per-call numpy overhead
-      (≈10 array ops on 10-element arrays) dominates.
-    - deg > _SMALL_DEG (hubs): the numpy grouping, whose bincount
-      accumulates k_uc in the same adjacency order (proven identical
-      on every fixture in tests/test_oracle.py).
-
-    vcom/ctot live in BOTH a numpy array (the hub path's fancy
-    indexing, and the caller's contract step) and a Python-list mirror
-    (the walk path's reads); every move writes both.
-    """
-    import numpy as np
-
+    """The sweep of ``louvain_seq_fast`` when the native kernel is
+    unavailable (``local_move_c`` returned None): the slow oracle's
+    dict walk (_local_move, above) over Python-list mirrors of the CSR
+    arrays — insertion-ordered dict, adjacency-order float adds, the
+    same ΔQ expression tree — so it is bit-identical by construction.
+    Mutates ``vcom``/``ctot``/``vaff`` in place, like the native sweep.
+    Returns (iterations, processed), where ``processed`` counts vertex
+    scans actually performed (vaff-marked) — the work metric
+    frontier-seeded dynamic marking (louvain.hxx:305-389 DYNAMIC) is
+    judged by."""
     n = len(indptr) - 1
     ptr = indptr.tolist()
     idx = indices.tolist()
     wts = weights.tolist()
     vcom_l = vcom.tolist()
     ctot_l = ctot.tolist()
+    vaff_l = vaff.tolist()
     vtot_l = vtot.tolist()
     M22 = 2.0 * M * M  # same association as the inline (2.0 * M * M)
     l = 0
     el = 0.0
-    processed = 0  # vertices actually scanned (vaff-marked) — the
-    # work metric frontier-seeded dynamic marking is judged by
+    processed = 0
     while l < L:
         el = 0.0
         for u in range(n):
-            if not vaff[u]:
+            if not vaff_l[u]:
                 continue
             processed += 1
+            vaff_l[u] = 0
             lo, hi = ptr[u], ptr[u + 1]
-            if hi - lo <= _SMALL_DEG:
-                vaff[u] = 0
-                d = vcom_l[u]
-                vcout: dict = {}  # insertion-ordered == reference vcs
-                for v, wt in zip(idx[lo:hi], wts[lo:hi]):
-                    if v == u:
-                        continue  # SELF=false scan (louvain.hxx:407)
-                    c = vcom_l[v]
-                    vcout[c] = vcout.get(c, 0.0) + wt
-                if not vcout:
+            d = vcom_l[u]
+            vcout: dict = {}  # insertion-ordered == reference vcs
+            for v, wt in zip(idx[lo:hi], wts[lo:hi]):
+                if v == u:
+                    continue  # SELF=false scan (louvain.hxx:407)
+                c = vcom_l[v]
+                vcout[c] = vcout.get(c, 0.0) + wt
+            if not vcout:
+                continue
+            kud = vcout.get(d, 0.0)
+            vt = vtot_l[u]
+            cd = ctot_l[d]
+            cmax, emax = 0, 0.0
+            for c, kuc in vcout.items():
+                if c == d:
                     continue
-                kud = vcout.get(d, 0.0)
-                vt = vtot_l[u]
-                cd = ctot_l[d]
-                cmax, emax = 0, 0.0
-                for c, kuc in vcout.items():
-                    if c == d:
-                        continue
-                    e = (kuc - kud) / M - R * vt * (vt + ctot_l[c] - cd) / M22
-                    if e > emax:
-                        emax, cmax = e, c
-                el += emax
-                if cmax:  # the reference's `if (c)` community-0 quirk
-                    ctot[d] -= vt
-                    ctot[cmax] += vt
-                    ctot_l[d] -= vt
-                    ctot_l[cmax] += vt
-                    vcom[u] = cmax
-                    vcom_l[u] = cmax
-                    vaff[indices[lo:hi]] = 1
-                    vaff[u] = 0
-                continue
-            nb = indices[lo:hi]
-            ws = weights[lo:hi]
-            mask = nb != u  # SELF=false scan (louvain.hxx:407)
-            ncs = vcom[nb[mask]]
-            d = vcom[u]
-            vaff[u] = 0
-            if len(ncs) == 0:
-                continue
-            # exact replica of np.unique(return_index, return_inverse)
-            # with ~30% less per-call overhead: stable argsort ⇒ first
-            # occurrence per group; inverse scattered back so bincount
-            # accumulates the k_uc sums in ORIGINAL adjacency order —
-            # bit-identical floats to the slow oracle's dict walk
-            o = np.argsort(ncs, kind="stable")
-            sn = ncs[o]
-            grp = np.empty(len(sn), dtype=bool)
-            grp[0] = True
-            np.not_equal(sn[1:], sn[:-1], out=grp[1:])
-            starts = np.flatnonzero(grp)
-            uniq = sn[starts]
-            first_idx = o[starts]
-            inv = np.empty(len(sn), dtype=np.int64)
-            inv[o] = np.cumsum(grp) - 1
-            sums = np.bincount(inv, weights=ws[mask])
-            ins = np.argsort(first_idx, kind="stable")  # insertion order
-            cs = uniq[ins]
-            k = sums[ins]
-            dpos = np.flatnonzero(cs == d)
-            kud = k[dpos[0]] if len(dpos) else 0.0
-            e = (k - kud) / M - R * vtot[u] * (
-                vtot[u] + ctot[cs] - ctot[d]
-            ) / (2.0 * M * M)
-            if len(dpos):
-                e[dpos[0]] = -np.inf
-            bi = int(np.argmax(e))  # first max in insertion order
-            emax = float(e[bi])
-            if emax > 0.0:
-                el += emax
-                cmax = int(cs[bi])
-                if cmax:  # the reference's `if (c)` community-0 quirk
-                    ctot[d] -= vtot[u]
-                    ctot[cmax] += vtot[u]
-                    ctot_l[d] = float(ctot[d])
-                    ctot_l[cmax] = float(ctot[cmax])
-                    vcom[u] = cmax
-                    vcom_l[u] = cmax
-                    vaff[nb] = 1
-                    vaff[u] = 0
+                e = (kuc - kud) / M - R * vt * (vt + ctot_l[c] - cd) / M22
+                if e > emax:
+                    emax, cmax = e, c
+            el += emax
+            if cmax:  # the reference's `if (c)` community-0 quirk
+                ctot_l[d] -= vt
+                ctot_l[cmax] += vt
+                vcom_l[u] = cmax
+                for v in idx[lo:hi]:
+                    vaff_l[v] = 1
+                vaff_l[u] = 0
         l += 1
         if el <= E:
             break
+    vcom[:] = vcom_l
+    ctot[:] = ctot_l
+    vaff[:] = vaff_l
     return (l if (l > 1 or el != 0.0) else 0), processed
 
 
 def _contract_fast(indptr, indices, weights, cur, CN, src_idx):
-    """Vectorized contraction preserving the reference's coarse-row
-    insertion order (members ascending, adjacency order within member,
-    first-encounter order of destination communities). The fallback
-    when no C compiler is available: ``louvain_seq_fast`` uses the
-    native ``contract_c`` (oracle/_cmove.py), which returns the same
-    arrays bit for bit, including reduceat's summation order (numpy's
-    pairwise sum), pinned by tests/test_cmove.py.
+    """Contract the CSR ``(indptr, indices, weights)`` by the dense
+    membership ``cur`` (labels in [0, CN)). The fallback when no C
+    compiler is available: ``louvain_seq_fast`` uses the native
+    ``contract_c`` (oracle/_cmove.py), which returns the same arrays
+    bit for bit (pinned by tests/test_cmove.py).
 
-    One stable lexsort by (cu, cv) replaces the previous
-    sort-by-(cu, member) + np.unique-over-composite-key double sort:
-    stability keeps ascending ORIGINAL position within each (cu, cv)
-    group, so (a) reduceat accumulates each group's weights in exactly
-    the order bincount did (bit-identical float sums), and (b) the
-    group's first element carries the minimum original position, which
-    reproduces the first-encounter row order (original CSR position
-    order == (member ascending, adjacency within member)).
+    Coarse rows follow the reference's scan (louvainAggregateEdgesW,
+    louvain.hxx:865-912): communities ascending, members ascending,
+    each member's adjacency in CSR order; a destination community
+    becomes an entry of the row at its first encounter. Within one
+    source community that scan is CSR position order, so
+    ``np.bincount`` over each edge's entry index, which adds element
+    by element, sums every entry left to right in scan order — the
+    reference's and the slow oracle's ``acc[dc] += w``.
 
-    ``src_idx`` is the per-edge source-vertex array aligned with
-    ``indices`` (the caller carries it across passes — the previous
-    pass's g_cu IS the next pass's src_idx), replacing a per-call
-    O(E) ``np.repeat`` materialization. Returns
-    (new_indptr, g_cv, sums, g_cu); g_cu doubles as the coarse graph's
-    src_idx for the next contraction."""
+    ``src_idx`` is the source vertex of each entry of ``indices``
+    (the caller carries it across passes: one contraction's g_cu is
+    the next one's src_idx). Returns the coarse CSR as arrays
+    (new_indptr, g_cv, sums, g_cu), g_cu being each entry's source
+    community."""
     import numpy as np
 
     cu = cur[src_idx]  # community of each edge's source
@@ -347,28 +271,23 @@ def _contract_fast(indptr, indices, weights, cur, CN, src_idx):
     E = len(cv)
     if E == 0:
         return np.zeros(CN + 1, dtype=np.int64), cv, weights, cu
-    # packed single int64 key (cu major, cv minor) + stable argsort:
-    # numpy's stable sort on integers is a radix sort, ~5× cheaper than
-    # the equivalent two-key lexsort at these sizes, and yields the
-    # IDENTICAL permutation (same key order, same stability), so the
-    # reduceat sums below are bit-for-bit the lexsort path's. cu,cv <
-    # CN, so the key fits int64 for any CN < 3e9.
-    order = np.argsort(cu * np.int64(CN) + cv, kind="stable")
-    cu_s, cv_s, w_s = cu[order], cv[order], weights[order]
+    # stable radix sort on the packed (cu, cv) key: it groups each
+    # entry's edges, so a group's first element is its first
+    # encounter. cu, cv < CN, so the key fits int64 for any CN < 3e9.
+    key = cu * np.int64(CN) + cv
+    order = np.argsort(key, kind="stable")
     grp = np.empty(E, dtype=bool)
     grp[0] = True
-    grp[1:] = (cu_s[1:] != cu_s[:-1]) | (cv_s[1:] != cv_s[:-1])
-    starts = np.flatnonzero(grp)
-    sums = np.add.reduceat(w_s, starts)
-    g_cu = cu_s[starts]
-    g_cv = cv_s[starts]
-    first_pos = order[starts]  # min original position of each group
+    key = key[order]
+    np.not_equal(key[1:], key[:-1], out=grp[1:])
+    entry = np.empty(E, dtype=np.int64)
+    entry[order] = np.cumsum(grp) - 1
+    sums = np.bincount(entry, weights=weights)
+    first_pos = order[grp]  # each entry's first edge position
+    g_cu, g_cv = cu[first_pos], cv[first_pos]
     # first-encounter order within each coarse row: stable radix on the
-    # packed (g_cu, first_pos) key — identical to
-    # np.lexsort((first_pos, g_cu)); first_pos < E+1 bounds the minor
-    g_order = np.argsort(
-        g_cu * np.int64(E + 1) + first_pos, kind="stable"
-    )
+    # packed (g_cu, first_pos) key; first_pos < E + 1 bounds the minor
+    g_order = np.argsort(g_cu * np.int64(E + 1) + first_pos, kind="stable")
     g_cu, g_cv, sums = g_cu[g_order], g_cv[g_order], sums[g_order]
     new_indptr = np.zeros(CN + 1, dtype=np.int64)
     new_indptr[1:] = np.cumsum(np.bincount(g_cu, minlength=CN))
@@ -376,9 +295,7 @@ def _contract_fast(indptr, indices, weights, cur, CN, src_idx):
 
 
 def louvain_seq_fast(
-    src,
-    dst,
-    w,
+    g,
     resolution: float = 1.0,
     tolerance: float = 1e-2,
     tolerance_drop: float = 10.0,
@@ -388,22 +305,34 @@ def louvain_seq_fast(
     init_com=None,
     init_aff=None,
 ) -> LouvainSeqResult:
-    """Numpy implementation of louvain_seq with identical semantics
-    (asserted equal on every fixture in tests/test_oracle.py).
+    """Numpy implementation of louvain_seq with identical semantics:
+    membership, passes, iterations and pass log bit-identical on every
+    fixture in tests/test_oracle.py, float-weighted ones included.
 
-    Input: parallel edge arrays of the symmetric digraph, sorted by
-    (src, dst) — matching oracle.graphs.adjacency row order. Vertices
-    are dense 0..max id.
+    Input: ``g``, the ``EdgeCSR`` of the symmetric digraph
+    (operators/serial.py: ``edge_csr``, or the resident graph of
+    ``serial.local_graph``), whose rows are sorted by (src, dst, w)
+    over dense vertex positions 0..n-1 — oracle.graphs.adjacency's row
+    order. Rows sharing (src, dst) collapse to the max-w one, the last
+    of them in that order, so the result never depends on the order
+    the rows were collected in (sources/mtx.py's policy; it coincides
+    with the reference's addEdge overwrite on its own equal-weight
+    corpus, Graph.hxx LazyBitset). ``g`` is only read.
 
-    ``init_com`` (optional, len S, values in [0, S)): warm-start
+    Output: ``membership`` (int64) and ``vertex_weight`` (float64) are
+    arrays over the positions of ``g``; ``modularity`` is
+    ``modularity_arrays`` of the membership over the rows of ``g`` as
+    given.
+
+    ``init_com`` (optional, len n, values in [0, n)): warm-start
     membership — the DYNAMIC path's louvainInitializeFromW
     (louvain.hxx:305-318): vcom seeded from the previous run, ctot
     accumulated from it (louvainCommunityWeightsW semantics) instead of
     singleton initialization.
 
-    ``init_aff`` (optional, vertex-id array): frontier-seeded DYNAMIC
-    marking — only these vertices start vaff-marked in pass 0 (the
-    reference's affected-vertex seeding after a batch update,
+    ``init_aff`` (optional, vertex-position array): frontier-seeded
+    DYNAMIC marking — only these vertices start vaff-marked in pass 0
+    (the reference's affected-vertex seeding after a batch update,
     louvain.hxx:305-389 + DYNAMIC louvain.hxx:1009: endpoints of
     changed edges; any move still flags all its neighbors, so the
     frontier grows exactly where communities actually shift). Requires
@@ -413,49 +342,20 @@ def louvain_seq_fast(
     """
     import numpy as np
 
-    src = np.asarray(src, dtype=np.int64)
-    dst = np.asarray(dst, dtype=np.int64)
-    w = np.asarray(w, dtype=np.float64)
-    # sort with w as the minor key so the max-w duplicate of each
-    # (src, dst) lands last: the collapse below is then ORDER-INDEPENDENT
-    # (callers reach here through repartition/concat paths whose row
-    # order is partition-arrival dependent; a stable "keep last input
-    # row" would make exact mode nondeterministic when duplicate keys
-    # carry unequal weights). Policy matches sources/mtx.py: max(w) —
-    # coincides with the reference's addEdge overwrite on its own
-    # equal-weight corpus (Graph.hxx LazyBitset).
-    if len(src) > 1:
-        # skip the single-threaded O(E log E) lexsort when the caller
-        # already delivered (src, dst, w)-lex-sorted rows (the Spark
-        # local-finish path sorts distributed before collecting) — the
-        # check is three vectorized passes
-        eq_s = src[1:] == src[:-1]
-        eq_d = dst[1:] == dst[:-1]
-        presorted = bool(
-            (
-                (src[1:] > src[:-1])
-                | (eq_s & (dst[1:] > dst[:-1]))
-                | (eq_s & eq_d & (w[1:] >= w[:-1]))
-            ).all()
-        )
-        if not presorted:
-            order = np.lexsort((w, dst, src))
-            src, dst, w = src[order], dst[order], w[order]
-            eq_s = src[1:] == src[:-1]
-            eq_d = dst[1:] == dst[:-1]
-        dup = eq_s & eq_d
-        if bool(dup.any()):
-            keep = np.r_[~dup, True]  # max-w occurrence of each key
-            src, dst, w = src[keep], dst[keep], w[keep]
-    S = int(max(src.max(), dst.max())) + 1 if len(src) else 0
-    if S == 0:
-        return LouvainSeqResult([], [], 0, 0, 0.0, [])
-    indptr = np.zeros(S + 1, dtype=np.int64)
-    indptr[1:] = np.cumsum(np.bincount(src, minlength=S))
-    indices, weights = dst, w
+    S = len(g.indptr) - 1
+    src, indices, weights, indptr = g.src, g.dst, g.w, g.indptr
+    # edge_csr orders rows sharing (src, dst) by ascending w: the last
+    # row of each run is its max-w duplicate
+    dup = (src[1:] == src[:-1]) & (indices[1:] == indices[:-1])
+    if dup.any():
+        keep = np.r_[~dup, True]
+        src, indices, weights = src[keep], indices[keep], weights[keep]
+        indptr = np.zeros(S + 1, dtype=np.int64)
+        indptr[1:] = np.cumsum(np.bincount(src, minlength=S))
     R = resolution
-    utot = np.bincount(src, weights=w, minlength=S)
-    M = float(utot.sum()) / 2.0
+    utot = np.bincount(src, weights=weights, minlength=S)
+    # cumsum adds left to right, as the slow oracle's sum(utot)
+    M = float(np.cumsum(utot)[-1]) / 2.0 if S else 0.0
     if init_com is not None:
         ucom = np.asarray(init_com, dtype=np.int64).copy()
         if len(ucom) != S:
@@ -479,24 +379,19 @@ def louvain_seq_fast(
     l_total, p = 0, 0
     cur = ucom  # membership at the current coarse level
     src_arr = src  # per-edge source vertex, carried across contractions
-    first = True
     while M > 0 and max_passes > 0:
         # native sweep when available (oracle/_cmove.py: the identical
-        # insertion-ordered walk compiled to C, ~10× less per-edge cost;
-        # bit-identity pinned by tests/test_oracle.py) — falls back to
-        # the pure-Python sweep on any unavailability
+        # insertion-ordered walk compiled to C, ~10× less per-edge cost)
         moved = local_move_c(
-            indptr, np.ascontiguousarray(indices),
-            np.ascontiguousarray(weights), cur, ctot, vaff, vtot,
+            indptr, indices, weights, cur, ctot, vaff, vtot,
             M, R, max_iterations, E,
         )
-        if moved is not None:
-            m, scanned = moved
-        else:
-            m, scanned = _local_move_fast(
+        if moved is None:
+            moved = _local_move_fast(
                 indptr, indices, weights, cur, ctot, vaff, vtot, M, R,
                 max_iterations, E,
             )
+        m, scanned = moved
         l_total += max(m, 1)
         p += 1
         GN = len(indptr) - 1
@@ -510,44 +405,45 @@ def louvain_seq_fast(
         if CN / GN >= aggregation_tolerance:
             break
         cur_r = np.searchsorted(coms, cur)  # dense renumber, ascending
-        if first:
-            ucom = cur_r.copy()
-            first = False
-        else:
-            ucom = cur_r[ucom]
-        # native contraction when available (oracle/_cmove.py
-        # louvain_contract: bit-identical arrays, pinned by
-        # tests/test_cmove.py)
+        ucom = cur_r if p == 1 else cur_r[ucom]
         coarse = contract_c(indptr, indices, weights, cur_r, CN)
         if coarse is None:
             coarse = _contract_fast(indptr, indices, weights, cur_r, CN, src_arr)
         indptr, indices, weights, src_arr = coarse
-        # src_arr (g_cu) is sorted by source community, so this is the
-        # same array np.repeat(arange(CN), diff(indptr)) produced —
-        # identical bincount accumulation, no O(E) repeat
+        # src_arr (g_cu) is sorted by source community, so this adds
+        # each coarse row's weights left to right, as the slow oracle
         vtot = np.bincount(src_arr, weights=weights, minlength=CN)
         cur = np.arange(CN, dtype=np.int64)
         ctot = vtot.copy()
         vaff = np.ones(CN, dtype=np.int8)
         E /= tolerance_drop
 
-    if first:
-        ucom = cur.copy()
-    elif p > 1:
+    if p > 1:  # flatten through the last coarse level
         ucom = cur[ucom]
+    q = modularity_arrays(g.src, g.dst, g.w, ucom, R)
+    return LouvainSeqResult(ucom, utot, l_total, p, q, pass_log)
 
-    # re-score vs original graph
-    cin_mask = ucom[src] == ucom[dst]
-    M0 = float(w.sum()) / 2.0
-    cin = np.bincount(ucom[src][cin_mask], weights=w[cin_mask])
-    ctot_f = np.bincount(ucom[src], weights=w)
-    ncf = max(len(cin), len(ctot_f))
-    cin = np.pad(cin, (0, ncf - len(cin)))
-    ctot_f = np.pad(ctot_f, (0, ncf - len(ctot_f)))
-    q = float((cin / (2.0 * M0) - R * (ctot_f / (2.0 * M0)) ** 2).sum())
-    return LouvainSeqResult(
-        ucom.tolist(), utot.tolist(), l_total, p, q, pass_log
-    )
+
+def modularity_arrays(src_pos, dst_pos, w, com, resolution: float = 1.0, m: float | None = None) -> float:
+    """Q = Σ_c [cin_c/(2M) − R·(ctot_c/(2M))²] of the edge rows
+    ``(src_pos, dst_pos, w)`` over vertex positions, ``com[p]`` being
+    the community of position p; M is Σw/2 unless ``m`` is given. A
+    zero or negative total scores 0. The driver-side twin of
+    ``operators.properties.modularity``'s plan (summation-order drift
+    ~1e-15)."""
+    import numpy as np
+
+    two_m = float(w.sum()) if m is None else 2.0 * m
+    if two_m <= 0.0:
+        return 0.0
+    k = len(com)
+    if k and (int(com.min()) < 0 or int(com.max()) >= k):
+        com = np.unique(com, return_inverse=True)[1]
+    cu = com[src_pos]
+    same = cu == com[dst_pos]
+    cin = np.bincount(cu[same], weights=w[same], minlength=k)
+    ctot = np.bincount(cu, weights=w, minlength=k)
+    return float((cin / two_m - resolution * (ctot / two_m) ** 2).sum())
 
 
 def modularity(adj, com, M: float | None = None, R: float = 1.0) -> float:

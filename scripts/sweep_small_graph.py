@@ -47,6 +47,10 @@ def main():
     for rep in range(k):
         for th in THRESHOLDS:
             serial.SERIAL_EDGES = th
+            # re-persist so the call times its own edge collect, not the
+            # graph the previous call left resident (serial.local_graph)
+            edges.unpersist(blocking=True)
+            edges.persist().count()
             t0 = time.time()
             res = louvain(edges, LouvainOptions(mode="auto"))
             dt = round(time.time() - t0, 3)

@@ -1,12 +1,13 @@
 """Native (C) local-move kernel: bit-identity vs the pure-Python sweep.
 
-The r6 optimization compiles the sequential local-move sweep to native
-code (oracle/_cmove.py). These tests pin the contract: identical
-membership, modularity, iteration counts, and pass logs vs the
-pure-Python path (which itself is pinned against the slow reference
-oracle in test_oracle.py), on fixtures covering the hub path boundary,
+The sequential local-move sweep and the contraction between passes are
+compiled to native code (oracle/_cmove.py). These tests pin the
+contract: identical membership, modularity, iteration counts, and pass
+logs vs the pure-Python path (which itself is pinned against the slow
+reference oracle in test_oracle.py), on fixtures covering a hub,
 non-uniform float weights (summation-order sensitivity), warm starts,
-and frontier seeding.
+and frontier seeding; and coarse weights summed left to right in the
+reference's scan order.
 """
 
 from __future__ import annotations
@@ -23,27 +24,29 @@ _cm = importlib.import_module(
 _ls = importlib.import_module(
     "louvain_communities_openmp_spark.oracle.louvain_seq"
 )
+from louvain_communities_openmp_spark.operators.serial import edge_csr  # noqa: E402
 
 
 def _both(s2, d2, w2, **kw):
     """Run louvain_seq_fast with the Python sweep and the C sweep."""
+    g = edge_csr(s2, d2, w2)
     os.environ["LOUVAIN_NO_CKERNEL"] = "1"
     try:
         cm = importlib.reload(_cm)
         ls = importlib.reload(_ls)
-        r_py = ls.louvain_seq_fast(s2.copy(), d2.copy(), w2.copy(), **kw)
+        r_py = ls.louvain_seq_fast(g, **kw)
     finally:
         del os.environ["LOUVAIN_NO_CKERNEL"]
     cm = importlib.reload(_cm)
     ls = importlib.reload(_ls)
     if cm.get_local_move() is None:
         pytest.skip("no C compiler available in this environment")
-    r_c = ls.louvain_seq_fast(s2.copy(), d2.copy(), w2.copy(), **kw)
+    r_c = ls.louvain_seq_fast(g, **kw)
     return r_py, r_c
 
 
 def _assert_identical(r_py, r_c):
-    assert r_py.membership == r_c.membership
+    assert np.array_equal(r_py.membership, r_c.membership)
     assert r_py.modularity == r_c.modularity  # exact float equality
     assert r_py.iterations == r_c.iterations
     assert r_py.passes == r_c.passes
@@ -68,9 +71,8 @@ def test_ckernel_random_graph_bit_identical():
 
 
 def test_ckernel_hub_and_float_weights_bit_identical():
-    # a 6000-degree hub crosses the Python path's _SMALL_DEG=4096
-    # boundary; non-uniform float weights make accumulation order
-    # observable in the low bits
+    # a 6000-degree hub; non-uniform float weights make accumulation
+    # order observable in the low bits
     rs = np.random.RandomState(7)
     hub_d = (np.arange(1, 6001) % 8000).astype(np.int64)
     hub_s = np.zeros(6000, dtype=np.int64)
@@ -107,8 +109,10 @@ def test_ckernel_vs_slow_reference_oracle():
     ls = importlib.reload(_ls)
     if cm.get_local_move() is None:
         pytest.skip("no C compiler available in this environment")
-    r_c = ls.louvain_seq_fast(s2.copy(), d2.copy(), w2.copy())
+    g = edge_csr(s2, d2, w2)
+    r_c = ls.louvain_seq_fast(g)
     S = int(max(s2.max(), d2.max())) + 1
+    assert np.array_equal(g.ids, np.arange(S))  # positions are ids
     adj = [[] for _ in range(S)]
     order = np.lexsort((d2, s2))
     seen = set()
@@ -119,7 +123,7 @@ def test_ckernel_vs_slow_reference_oracle():
         seen.add(k)
         adj[int(s2[i])].append((int(d2[i]), float(w2[i])))
     r_slow = ls.louvain_seq(adj)
-    assert list(r_slow.membership) == list(r_c.membership)
+    assert r_slow.membership == r_c.membership.tolist()
     assert r_slow.passes == r_c.passes
 
 
@@ -183,16 +187,15 @@ def test_contract_c_matches_numpy_random_float_weights(monkeypatch):
     # order shows up in the low bits
     _native_or_skip()
     calls = _spy_contractions(monkeypatch)
-    _ls.louvain_seq_fast(*_float_graph(13, 3000, 60000))
+    _ls.louvain_seq_fast(edge_csr(*_float_graph(13, 3000, 60000)))
     assert calls
 
 
 def test_contract_c_matches_numpy_hub(monkeypatch):
-    # a hub above _SMALL_DEG: its coarse entries sum thousands of
-    # weights, through every branch of the pairwise sum
+    # a 5596-degree hub: its coarse entries sum thousands of weights
     _native_or_skip()
     rs = np.random.RandomState(17)
-    deg = _ls._SMALL_DEG + 1500
+    deg = 5596
     hub_d = np.arange(1, deg + 1, dtype=np.int64)
     rest_s = rs.randint(1, deg + 1, 30000)
     rest_d = rs.randint(1, deg + 1, 30000)
@@ -201,7 +204,7 @@ def test_contract_c_matches_numpy_hub(monkeypatch):
     dst = np.concatenate([hub_d, rest_d[keep]])
     w = rs.rand(len(src)) * 3 + 0.1
     calls = _spy_contractions(monkeypatch)
-    _ls.louvain_seq_fast(*_sym(src, dst, w))
+    _ls.louvain_seq_fast(edge_csr(*_sym(src, dst, w)))
     assert calls
     # and one call that folds the hub's whole row into one entry
     indptr, d, w2, s = _csr(*_sym(src, dst, w))
@@ -218,7 +221,7 @@ def test_contract_c_matches_numpy_warm_start_frontier(monkeypatch):
     init = rs.randint(0, 40, S).astype(np.int64)
     aff = rs.choice(S, 200, replace=False).astype(np.int64)
     calls = _spy_contractions(monkeypatch)
-    _ls.louvain_seq_fast(s2, d2, w2, init_com=init, init_aff=aff)
+    _ls.louvain_seq_fast(edge_csr(s2, d2, w2), init_com=init, init_aff=aff)
     assert calls
 
 
@@ -344,3 +347,51 @@ def test_triangle_kernel_without_openmp(monkeypatch):
         indptr.ctypes.data_as(p), indices.ctypes.data_as(p),
         len(indptr) - 1,
     ) == total > 0
+
+
+def test_contraction_sums_left_to_right_in_scan_order():
+    # 400 coarse entries of 2-300 edges each, with float weights over
+    # six decades: every entry's weight must be the slow oracle's
+    # left-to-right ``acc.get(dc, 0.0) + w`` over the reference's scan
+    # (communities ascending, members ascending, adjacency in CSR order)
+    rs = np.random.RandomState(31)
+    C, per = 40, 5  # communities of 5 members each
+    n = C * per
+    cur = rs.permutation(np.repeat(np.arange(C), per)).astype(np.int64)
+    members = [np.flatnonzero(cur == c) for c in range(C)]
+    pairs = rs.choice(C * C, 400, replace=False)
+    src, dst = [], []
+    for pair in pairs:
+        cu, cv = divmod(int(pair), C)
+        k = rs.randint(2, 301)
+        src.append(rs.choice(members[cu], k))
+        dst.append(rs.choice(members[cv], k))
+    src, dst = np.concatenate(src), np.concatenate(dst)
+    w = rs.rand(len(src)) * 10.0 ** rs.uniform(-3, 3, len(src))
+    order = np.argsort(src, kind="stable")  # CSR rows, adjacency unsorted
+    src, indices, weights = src[order], dst[order], w[order]
+    indptr = np.zeros(n + 1, dtype=np.int64)
+    indptr[1:] = np.cumsum(np.bincount(src, minlength=n))
+    want_ptr, want_cv, want_w, pairwise = [0], [], [], []
+    for c in range(C):
+        acc: dict = {}
+        grp: dict = {}
+        for u in members[c]:
+            for i in range(indptr[u], indptr[u + 1]):
+                dc = int(cur[indices[i]])
+                acc[dc] = acc.get(dc, 0.0) + float(weights[i])
+                grp.setdefault(dc, []).append(weights[i])
+        want_cv += list(acc)
+        want_w += list(acc.values())
+        pairwise += [np.sum(v) for v in grp.values()]
+        want_ptr.append(len(want_cv))
+    want_w = np.array(want_w)
+    # numpy's pairwise sum differs from it here, so the check has teeth
+    assert (np.array(pairwise) != want_w).sum() > 100
+    outs = [_ls._contract_fast(indptr, indices, weights, cur, C, src)]
+    _native_or_skip()
+    outs.append(_cm.contract_c(indptr, indices, weights, cur, C))
+    for new_ptr, g_cv, sums, _ in outs:
+        assert new_ptr.tolist() == want_ptr
+        assert g_cv.tolist() == want_cv
+        assert sums.tobytes() == want_w.tobytes()  # equal bit patterns

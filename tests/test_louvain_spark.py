@@ -226,17 +226,18 @@ def test_warm_start_oracle_converged_input(spark):
     the next run converge immediately (louvainInitializeFromW)."""
     import numpy as np
 
-    edge_list = ring_of_cliques(8, 6)
-    src, dst, w = zip(*edge_list)
+    from louvain_communities_openmp_spark.operators.serial import edge_csr
     from louvain_communities_openmp_spark.oracle.louvain_seq import (
         louvain_seq_fast,
     )
 
-    cold = louvain_seq_fast(src, dst, w)
+    src, dst, w = (np.array(c) for c in zip(*ring_of_cliques(8, 6)))
+    g = edge_csr(src, dst, w)
+    cold = louvain_seq_fast(g)
     # remap membership to dense labels for init
-    mem = np.asarray(cold.membership)
+    mem = cold.membership
     dense = np.searchsorted(np.unique(mem), mem)
-    warm = louvain_seq_fast(src, dst, w, init_com=dense)
+    warm = louvain_seq_fast(g, init_com=dense)
     assert warm.iterations < cold.iterations
     assert warm.modularity >= cold.modularity - 1e-9
 
@@ -396,14 +397,18 @@ def test_frontier_seeded_oracle_fewer_scans():
     scanning strictly fewer vertices in pass 0."""
     import numpy as np
 
+    from louvain_communities_openmp_spark.operators.serial import edge_csr
     from louvain_communities_openmp_spark.oracle.graphs import undirected
     from louvain_communities_openmp_spark.oracle.louvain_seq import (
         louvain_seq_fast,
     )
 
+    def csr(el):
+        return edge_csr(*(np.array(c) for c in zip(*el)))
+
     base = ring_of_cliques(8, 6)
-    cold = louvain_seq_fast(*zip(*base))
-    mem = np.asarray(cold.membership)
+    cold = louvain_seq_fast(csr(base))
+    mem = cold.membership
     dense = np.searchsorted(np.unique(mem), mem)
 
     # delta batch: drop one intra-clique edge, add one cross-ring edge
@@ -411,15 +416,13 @@ def test_frontier_seeded_oracle_fewer_scans():
     pairs = sorted(
         {(s, d) for s, d, _ in base if s < d and (s, d) != (0, 1)} | {(2, 27)}
     )
-    e1 = undirected(pairs)
-    src, dst, w = zip(*e1)
+    g1 = csr(undirected(pairs))
+    assert g1.ids.tolist() == list(range(48))  # positions are ids
 
-    flood = louvain_seq_fast(src, dst, w, init_com=dense.copy())
+    flood = louvain_seq_fast(g1, init_com=dense.copy())
     aff = np.unique([v for p in changed for v in p])
-    seeded = louvain_seq_fast(
-        src, dst, w, init_com=dense.copy(), init_aff=aff
-    )
-    assert seeded.membership == flood.membership
+    seeded = louvain_seq_fast(g1, init_com=dense.copy(), init_aff=aff)
+    assert seeded.membership.tolist() == flood.membership.tolist()
     p_flood = flood.pass_log[0]["processed"]
     p_seed = seeded.pass_log[0]["processed"]
     assert 0 < p_seed < p_flood, (p_seed, p_flood)

@@ -180,6 +180,7 @@ def test_mtx_midsize_end_to_end_auto(spark, tmp_path):
         LouvainOptions,
         louvain,
     )
+    from louvain_communities_openmp_spark.operators.serial import edge_csr
 
     fix = power_law(12_000, 4)  # ≈48k undirected entries, deterministic
     und = sorted({(max(u, v), min(u, v)) for u, v, _ in fix})
@@ -199,8 +200,9 @@ def test_mtx_midsize_end_to_end_auto(spark, tmp_path):
     src = np.array([u for u, _, _ in sorted(fix)], dtype=np.int64)
     dst = np.array([v for _, v, _ in sorted(fix)], dtype=np.int64)
     w = np.array([wt for _, _, wt in sorted(fix)], dtype=np.float64)
-    want = louvain_seq_fast(src, dst, w)
-    assert got == {i: c for i, c in enumerate(want.membership)}
+    g = edge_csr(src, dst, w)
+    want = louvain_seq_fast(g)
+    assert got == dict(zip(g.ids.tolist(), want.membership.tolist()))
     assert abs(res.modularity - want.modularity) <= 1e-9
     assert res.modularity > 0.3  # power-law graph clusters well
 

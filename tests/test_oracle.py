@@ -19,6 +19,7 @@ from louvain_communities_openmp_spark.oracle.graphs import (
     power_law,
     toy5_selfloops,
     toy5_weighted,
+    undirected,
 )
 from louvain_communities_openmp_spark.oracle.louvain_seq import modularity
 
@@ -136,18 +137,15 @@ def test_power_law_deterministic_and_skewed():
     assert res.modularity > 0.1
 
 
-def test_fast_oracle_parity():
-    """louvain_seq_fast must be bit-identical to the faithful port on
-    every fixture (membership AND modularity)."""
-    from louvain_communities_openmp_spark.oracle.graphs import (
-        disconnected,
-        power_law,
-        toy5_selfloops,
-        toy5_weighted,
-    )
-    from louvain_communities_openmp_spark.oracle.louvain_seq import louvain_seq_fast
+def _parity_fixtures():
+    """Edge lists of the fast-oracle parity tests. ``toy5_weighted``
+    and ``power_law400_rand`` carry non-integer weights, so a sum in
+    another order than the slow oracle's shows in the low bits."""
+    import random
 
-    fixtures = {
+    rng = random.Random(5)
+    pairs = sorted({(min(u, v), max(u, v)) for u, v, _ in power_law(400, 3)})
+    return {
         "toy5": toy5(),
         "toy5_selfloops": toy5_selfloops(),
         "toy5_weighted": toy5_weighted(),
@@ -155,45 +153,59 @@ def test_fast_oracle_parity():
         "karate": karate(),
         "ring16x8": ring_of_cliques(16, 8),
         "power_law400": power_law(400, 3),
+        "power_law400_rand": undirected([(u, v, rng.random()) for u, v in pairs]),
         "disc8": disconnected(8, 0)[0],
     }
-    for name, el in fixtures.items():
+
+
+def _assert_fast_matches_slow(louvain_seq_fast):
+    """louvain_seq_fast over each fixture's EdgeCSR equals the slow
+    oracle: membership, passes, iterations and every pass's graph
+    order and community count; modularity within 1e-12 (the two score
+    Q with different summation orders)."""
+    import numpy as np
+
+    from louvain_communities_openmp_spark.operators.serial import edge_csr
+
+    for name, el in _parity_fixtures().items():
         slow = louvain_seq(adjacency(el))
-        fast = louvain_seq_fast(
-            [e[0] for e in el], [e[1] for e in el], [e[2] for e in el]
-        )
-        assert fast.membership == slow.membership, name
+        src, dst, w = (np.array(c) for c in zip(*el))
+        g = edge_csr(src.astype(np.int64), dst.astype(np.int64), w.astype(np.float64))
+        fast = louvain_seq_fast(g)
+        assert fast.membership.tolist() == slow.membership, name
         assert abs(fast.modularity - slow.modularity) < 1e-12, name
         assert (fast.passes, fast.iterations) == (slow.passes, slow.iterations), name
+        shape = [(e["graph_order"], e.get("communities")) for e in fast.pass_log]
+        assert shape == [(e["graph_order"], e.get("communities")) for e in slow.pass_log], name
 
 
-def test_fast_oracle_degree_paths_identical(monkeypatch):
-    """_local_move_fast picks between a dict-walk and a numpy-grouping
-    path per vertex by degree (_SMALL_DEG). Both must be bit-identical
-    to the slow oracle: force walk-only, numpy-only, and a mixed cutoff
-    that splits the hubby power-law fixture across both paths."""
+def test_fast_oracle_parity():
+    """louvain_seq_fast (native kernels where a compiler is available)
+    must be bit-identical to the faithful port on every fixture."""
+    from louvain_communities_openmp_spark.oracle.louvain_seq import louvain_seq_fast
+
+    _assert_fast_matches_slow(louvain_seq_fast)
+
+
+def test_fast_oracle_no_ckernel_parity():
+    """The no-compiler path (pure-Python sweep, numpy contraction) must
+    be bit-identical to the faithful port on every fixture as well.
+    LOUVAIN_NO_CKERNEL is read when the kernel module loads, so both
+    modules are reloaded with it set, and again after."""
     import importlib
-
-    from louvain_communities_openmp_spark.oracle.graphs import power_law
+    import os
 
     # importlib: the oracle package re-exports the louvain_seq FUNCTION,
     # shadowing the module attribute of the same name
-    mod = importlib.import_module(
-        "louvain_communities_openmp_spark.oracle.louvain_seq"
-    )
-
-    el = power_law(400, 3)
-    slow = louvain_seq(adjacency(el))
-    src = [e[0] for e in el]
-    dst = [e[1] for e in el]
-    w = [e[2] for e in el]
-    deg: dict = {}
-    for u in src:
-        deg[u] = deg.get(u, 0) + 1
-    mid = sorted(deg.values())[len(deg) // 2]
-    for cut in (0, mid, 1 << 30):
-        monkeypatch.setattr(mod, "_SMALL_DEG", cut)
-        fast = mod.louvain_seq_fast(src, dst, w)
-        assert fast.membership == slow.membership, cut
-        assert abs(fast.modularity - slow.modularity) < 1e-12, cut
-        assert (fast.passes, fast.iterations) == (slow.passes, slow.iterations), cut
+    cm = importlib.import_module("louvain_communities_openmp_spark.oracle._cmove")
+    ls = importlib.import_module("louvain_communities_openmp_spark.oracle.louvain_seq")
+    os.environ["LOUVAIN_NO_CKERNEL"] = "1"
+    try:
+        importlib.reload(cm)
+        importlib.reload(ls)
+        assert cm.get_local_move() is None
+        _assert_fast_matches_slow(ls.louvain_seq_fast)
+    finally:
+        del os.environ["LOUVAIN_NO_CKERNEL"]
+        importlib.reload(cm)
+        importlib.reload(ls)
