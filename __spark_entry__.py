@@ -455,41 +455,6 @@ def _q_mutual_triangles(spark, sf):
     return spark.createDataFrame([(n,)], "n_mutual_triangles long")
 
 
-def _q_assortativity(spark, sf):
-    """Degree assortativity of the co-order graph: Pearson correlation
-    of endpoint degrees across directed edge slots, computed from
-    EXACT integer sums (n·Σxy − Σx·Σy over the sqrt product) so both
-    engines evaluate the identical closed form — no accumulation-order
-    float drift. All values < 2^53, so the sums are exact doubles."""
-    e = coorder_edges(spark, sf).select("src", "dst")
-    deg = e.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    j = (
-        e.join(deg.select(F.col("id").alias("src"), F.col("deg").alias("x")), "src")
-        .join(deg.select(F.col("id").alias("dst"), F.col("deg").alias("y")), "dst")
-    )
-    s = j.agg(
-        F.count("*").cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("double").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("double").alias("syy"),
-    )
-    return s.select(
-        F.col("n").cast("long").alias("n_edges"),
-        F.round(
-            (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-            / F.sqrt(
-                (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-                * (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-            ),
-            6,
-        ).alias("assortativity"),
-    )
-
-
 def _q_components(spark, sf):
     return connected_components(coorder_edges(spark, sf)).components
 

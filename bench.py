@@ -202,7 +202,7 @@ def _louvain_pass0_throughput(cpus: int, sf_dir: str) -> dict:  # noqa: ARG001
         louvain(
             edges,
             LouvainOptions(
-                mode="dist", num_blocks=n_blocks, block_vertices=2048,
+                mode="dist", num_blocks=n_blocks,
                 max_iterations=1, max_passes=1, tolerance=0.0,
             ),
         )
@@ -218,7 +218,6 @@ def _louvain_pass0_throughput(cpus: int, sf_dir: str) -> dict:  # noqa: ARG001
             LouvainOptions(
                 mode="dist",
                 num_blocks=n_blocks,
-                block_vertices=2048,
                 max_iterations=3,
                 max_passes=1,
                 tolerance=0.0,
@@ -255,7 +254,8 @@ def _bigdist_run(
     n_gen: int | None = None,
 ) -> dict:
     """One dist-mode Louvain pass-0 on a ≥20M-directed-edge synthetic
-    power-law graph, with the given broadcast threshold.
+    power-law graph, with ``serial.BROADCAST_VERTICES`` set to
+    ``broadcast_vertices`` for the run.
 
     broadcast_vertices=0 forces the non-broadcast scale path (per-pass
     edge bucketing + per-iteration vertex-state routing via cogroup) —
@@ -266,6 +266,7 @@ def _bigdist_run(
     page-cache costs (~1.6× per-iteration, measured) that would
     otherwise be misattributed to whichever variant runs first.
     """
+    from louvain_communities_openmp_spark.operators import serial
     from louvain_communities_openmp_spark.operators.louvain import (
         LouvainOptions,
         louvain,
@@ -289,6 +290,8 @@ def _bigdist_run(
         extra_conf={"spark.ui.enabled": "true"},
     )
     os.environ["LOUVAIN_SHUFFLE_PROBE"] = "1"
+    bound = serial.BROADCAST_VERTICES
+    serial.BROADCAST_VERTICES = broadcast_vertices
     try:
         edges = synthetic_powerlaw_edges(spark, n_vertices, n_gen).persist()
         n = edges.count()
@@ -298,10 +301,8 @@ def _bigdist_run(
             LouvainOptions(
                 mode="dist",
                 num_blocks=cpus,
-                block_vertices=2048,
                 max_iterations=3,
                 max_passes=1,
-                broadcast_vertices=broadcast_vertices,
             ),
         )
         res.membership.count()
@@ -352,6 +353,7 @@ def _bigdist_run(
                 )
         return out
     finally:
+        serial.BROADCAST_VERTICES = bound
         os.environ.pop("LOUVAIN_SHUFFLE_PROBE", None)
         spark.stop()
 

@@ -145,7 +145,7 @@ def _static_edges(edges: DataFrame, use_bc: bool) -> DataFrame:
 
 
 def label_propagation(edges: DataFrame, max_iter: int = 10) -> LabelPropResult:
-    # Two regimes, same answer (gate mirrors Louvain's broadcast_vertices):
+    # Two regimes, same answer (Louvain's gate, serial.BROADCAST_VERTICES):
     #
     # - V ≤ BROADCAST_VERTICES: partition the static edge table on the
     #   AGGREGATION key (src) and BROADCAST the vertex-sized labels

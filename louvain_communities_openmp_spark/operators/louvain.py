@@ -18,7 +18,7 @@ DataFrame super-steps + a CSR-blocked vectorized kernel. Two modes:
   thread chunk: threads read stale remote state, exactly like
   `schedule(dynamic,2048)` threads do). Two state-distribution
   strategies, switched on vertex count:
-  * V ≤ broadcast_vertices: driver-coordinated (_driver_rounds) —
+  * V ≤ serial.BROADCAST_VERTICES: driver-coordinated (_driver_rounds) —
     membership/vtot/ctot live as numpy arrays on the driver (≙ the
     reference's shared arrays) and reach each task as one ~33 B/vertex
     broadcast per round; an iteration is ONE zero-shuffle Spark job
@@ -66,6 +66,15 @@ from .properties import total_weight_m, vertex_weights
 from .serial import EdgeCSR, collect_bounded
 
 
+# target vertices per CSR block — the distributed analog of the
+# reference's `schedule(dynamic, 2048)` chunk (louvain.hxx:594). Actual
+# blocks per pass = min(num_blocks, ceil(vertices/this)): coarsened
+# passes run fewer, larger blocks, whose in-block asynchrony converges
+# like the sequential reference instead of oscillating through gated
+# synchronous rounds.
+BLOCK_VERTICES = 2048
+
+
 @dataclass
 class LouvainOptions:
     """Defaults mirror the reference (louvain.hxx:60-61)."""
@@ -78,19 +87,6 @@ class LouvainOptions:
     aggregation_tolerance: float = 0.8
     mode: str = "auto"  # exact | dist | auto
     num_blocks: int | None = None
-    # target vertices per CSR block — the distributed analog of the
-    # reference's `schedule(dynamic, 2048)` chunk (louvain.hxx:594).
-    # Actual blocks per pass = min(num_blocks, ceil(vertices/this)):
-    # coarsened passes run fewer, larger blocks, whose in-block
-    # asynchrony converges like the sequential reference instead of
-    # oscillating through gated synchronous rounds.
-    block_vertices: int = 2048
-    # broadcast membership/vtot/ctot into the annotation joins while
-    # the vertex count is at most this (~20 bytes/row ⇒ ≲100 MB
-    # broadcast); larger graphs fall back to co-partitioned shuffle
-    # joins. Coarsened passes always qualify. Warm-start frames are
-    # collected under the same bound.
-    broadcast_vertices: int = serial.BROADCAST_VERTICES
     run_dir: str | None = None
     resume: bool = False
     # dynamic/warm-start Louvain (L10): seed pass-0 membership from a
@@ -661,17 +657,17 @@ def _warm_start(ids, opts: LouvainOptions):
     the vertex into an unrelated community. The frontier is a mask of
     the affected ids present here (ids outside the vertex set cannot be
     scanned), or None without ``affected_vertices``. Both frames are
-    collected under ``opts.broadcast_vertices`` rows; over it this
+    collected under ``serial.BROADCAST_VERTICES`` rows; over it this
     raises ValueError."""
     import numpy as np
 
     n = len(ids)
 
     def matched(df, cols):
-        arrs = collect_bounded(df, cols, opts.broadcast_vertices)
+        arrs = collect_bounded(df, cols, serial.BROADCAST_VERTICES)
         if arrs is None:
             raise ValueError(
-                f"louvain warm start: more than {opts.broadcast_vertices} "
+                f"louvain warm start: more than {serial.BROADCAST_VERTICES} "
                 f"rows of ({', '.join(cols)}) to collect"
             )
         pos = np.searchsorted(ids, arrs[0])
@@ -752,7 +748,7 @@ def _driver_rounds(
     vertex-sized collect — the costs that otherwise cap N→4N scaling
     efficiency, because they do not shrink with more cores.
 
-    Only used while V ≤ ``broadcast_vertices`` (default 5M ⇒ ~200 MB
+    Only used while V ≤ ``serial.BROADCAST_VERTICES`` (5M ⇒ ~200 MB
     of driver state — the same bound the broadcast-join formulation
     had); above that the routed gate (_routed_rounds) takes over and
     nothing vertex-sized ever materializes on the driver.
@@ -907,7 +903,7 @@ def _routed_rounds(
     probe,
 ):
     """Local-move iterations with the vertex state kept distributed —
-    the routed gate, for vertex counts above ``broadcast_vertices``.
+    the routed gate, for vertex counts above ``serial.BROADCAST_VERTICES``.
     Builds the pass's routing table (vertex → blocks that reference
     it, over the ``block``-bucketed ``edges_b``) and the initial state,
     then runs _local_move_round per round. ``warm`` seeds pass 0 from
@@ -1374,7 +1370,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         # vtot in ONE job: the bounded collect either returns the
         # complete frame (≤ gate ⇒ it IS the copy the driver rounds
         # need) or proves V > gate — replacing a count() + toPandas()
-        vt_arrs = collect_bounded(vtot, ["id", "vtot"], opts.broadcast_vertices)
+        vt_arrs = collect_bounded(vtot, ["id", "vtot"], serial.BROADCAST_VERTICES)
         broadcast = vt_arrs is not None
         gn = len(vt_arrs[0]) if broadcast else vtot.count()
         if m_total is None:
@@ -1398,7 +1394,7 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
         )
         # blocks sized by vertex count (reference chunk geometry);
         # a single block with gate=1 IS the sequential reference sweep
-        blocks_pass = max(1, min(num_blocks, gn // opts.block_vertices or 1))
+        blocks_pass = max(1, min(num_blocks, gn // BLOCK_VERTICES or 1))
         gate = 1 if blocks_pass == 1 else 2
         warm = p == 0 and opts.initial_membership is not None
         # partition + sort the edge table by kernel block ONCE per

@@ -3,10 +3,10 @@ url ACROSS micro-batches.
 
 A Common-Crawl-style index streams (url, capture, warc_ts) rows as
 fetches happen; downstream consumers (edge building, dedup, profiling)
-want exactly one row per url — the latest. This maintainer mirrors
-EdgeStateStore (edge_stream.py): versioned parquet snapshots with a
-commit-marker-last protocol, so any version is pinnable and a killed
-run never exposes a torn table.
+want exactly one row per url — the latest. Like EdgeStateStore
+(edge_stream.py), the store is a version log (versions.py): versioned
+parquet snapshots whose commit record is written last, so any version
+is pinnable and a killed run never exposes a torn table.
 
 Merge rule per micro-batch: latest_snapshot(previous ∪ batch)
 (sources/pages.py) — an argmax-by-warc_ts fold, which is
@@ -27,57 +27,35 @@ layout-independent.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.pages import latest_snapshot
+from .versions import VersionLog
 
 CAPTURE_SCHEMA = "url string, capture int, warc_ts timestamp"
 
 
-class SnapshotStore:
-    """Versioned freshest-per-url snapshots under a state directory."""
+class SnapshotStore(VersionLog):
+    """A version log of freshest-per-url snapshots under a state
+    directory."""
 
     def __init__(self, spark: SparkSession, state_dir: str):
+        super().__init__(state_dir)
         self.spark = spark
-        self.dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _vdir(self, v: int) -> str:
-        return os.path.join(self.dir, f"v{v:06d}")
-
-    def latest_version(self) -> int | None:
-        vs = [
-            int(d[1:])
-            for d in os.listdir(self.dir)
-            if d.startswith("v")
-            and os.path.exists(os.path.join(self.dir, d, "_COMMIT.json"))
-        ]
-        return max(vs) if vs else None
 
     def load(self, version: int | None = None) -> DataFrame:
         v = self.latest_version() if version is None else version
         if v is None:
             return self.spark.createDataFrame([], CAPTURE_SCHEMA)
-        return self.spark.read.parquet(os.path.join(self._vdir(v), "snapshot"))
-
-    def commit_meta(self, version: int) -> dict:
-        with open(os.path.join(self._vdir(version), "_COMMIT.json")) as f:
-            return json.load(f)
+        return self.spark.read.parquet(self.path(v, "snapshot"))
 
     def commit(self, snapshot: DataFrame, batch_id: int, stats: dict) -> int:
-        last = self.latest_version()
-        v = 0 if last is None else last + 1
-        d = self._vdir(v)
-        snapshot.write.mode("overwrite").parquet(os.path.join(d, "snapshot"))
-        with open(os.path.join(d, "_COMMIT.json"), "w") as f:
-            json.dump(
-                {"version": v, "batch_id": batch_id, "ts": time.time(), **stats},
-                f,
-            )
+        v = self.begin()
+        snapshot.write.mode("overwrite").parquet(self.path(v, "snapshot"))
+        self.seal(v, {"batch_id": batch_id, "ts": time.time(), **stats})
         return v
 
 

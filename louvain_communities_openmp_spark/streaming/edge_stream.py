@@ -28,7 +28,7 @@ a batch to its graph in place (batch.hxx:223-248):
    batch pairs on the sorted ``src*N+dst`` keys, a delete mask and
    ``np.insert``;
 3. write the snapshot and the affected endpoints with pyarrow, the
-   snapshot in row chunks, then ``_COMMIT.json``;
+   snapshot in row chunks, then the commit record;
 4. hold the merged graph for the new version's resident frame, so a
    refresh and ``load(v)`` read it without a collect.
 
@@ -49,20 +49,16 @@ and touches the snapshot only where it must:
 
 Every cached frame is released before it returns, also on error.
 
-On both paths ``_COMMIT.json`` is written last, since it is the commit
-marker, and records ``edges`` and ``n_dels``; the new version releases
-the parent's resident frame. Each micro-batch commits a new immutable
-snapshot directory (never in-place mutation), so downstream algorithms
-can pin a version — the same commit discipline as plans/run.RunDir.
-The store lives on the driver's filesystem: it lists and reads its
-versions with ``os``, and the resident path writes them there.
+The store is a version log (versions.py): each micro-batch commits a
+new immutable snapshot directory (never in-place mutation), so
+downstream algorithms can pin a version. On both paths the commit
+record is written last and records ``edges`` and ``n_dels``, and the
+new version releases the parent's resident frame.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 import time
 
 import numpy as np
@@ -74,6 +70,7 @@ from pyspark.sql import functions as F
 from ..operators import serial
 from ..operators.serial import EdgeCSR
 from ..operators.transforms import apply_batch
+from .versions import VersionLog
 
 DELTA_SCHEMA = "op string, src long, dst long, w double"
 
@@ -85,33 +82,21 @@ _AFFECTED = pa.schema([("id", pa.int64())])
 _CHUNK = 1 << 17
 
 
-class EdgeStateStore:
-    """Versioned edge-table snapshots under a state directory, with the
-    latest version resident (see the module docstring)."""
+class EdgeStateStore(VersionLog):
+    """A version log of edge-table snapshots under a state directory,
+    with the latest version resident (see the module docstring)."""
 
     def __init__(self, spark: SparkSession, state_dir: str):
+        super().__init__(state_dir)
         self.spark = spark
-        self.dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
         # (version, its persisted frame), or None
         self._resident: tuple[int, DataFrame] | None = None
-
-    def _vdir(self, v: int) -> str:
-        return os.path.join(self.dir, f"v{v:06d}")
-
-    def latest_version(self) -> int | None:
-        vs = [
-            int(d[1:])
-            for d in os.listdir(self.dir)
-            if d.startswith("v") and os.path.exists(os.path.join(self.dir, d, "_COMMIT.json"))
-        ]
-        return max(vs) if vs else None
 
     def load(self, version: int | None = None) -> DataFrame:
         v = self.latest_version() if version is None else version
         if v is None:
             return self.spark.createDataFrame([], "src long, dst long, w double")
-        return self.spark.read.parquet(os.path.join(self._vdir(v), "edges"))
+        return self.spark.read.parquet(self.path(v, "edges"))
 
     def resident(self, version: int | None = None) -> DataFrame:
         """The persisted frame of ``version`` (default: the latest). The
@@ -144,11 +129,6 @@ class EdgeStateStore:
             return None
         return serial.held_graph(r[1])
 
-    def commit_meta(self, version: int) -> dict:
-        """The _COMMIT.json record of a committed version."""
-        with open(os.path.join(self._vdir(version), "_COMMIT.json")) as f:
-            return json.load(f)
-
     def commit(
         self,
         edges: DataFrame,
@@ -160,32 +140,23 @@ class EdgeStateStore:
         self._mark(v, batch_id, stats)
         return v
 
-    def _next_version(self) -> int:
-        lv = self.latest_version()
-        return 0 if lv is None else lv + 1
-
     def _write(self, edges: DataFrame, affected: DataFrame | None = None) -> int:
         """Write the next version's data files; it stays invisible to
-        readers until _mark() writes its commit marker."""
-        v = self._next_version()
-        d = self._vdir(v)
-        edges.write.mode("overwrite").parquet(os.path.join(d, "edges"))
+        readers until _mark() commits it."""
+        v = self.begin()
+        edges.write.mode("overwrite").parquet(self.path(v, "edges"))
         if affected is not None:
             # endpoints of this batch's changed edges — the DYNAMIC
             # frontier seed (louvain.hxx:305-389): incremental
             # maintainers mark only these at warm start
-            affected.select("id").write.mode("overwrite").parquet(
-                os.path.join(d, "affected")
-            )
+            affected.select("id").write.mode("overwrite").parquet(self.path(v, "affected"))
         return v
 
     def _write_graph(self, g: EdgeCSR, affected: np.ndarray) -> int:
         """``_write`` of a driver-resident graph and its affected ids."""
-        v = self._next_version()
-        paths = [os.path.join(self._vdir(v), x) for x in ("edges", "affected")]
+        v = self.begin()
+        paths = [self.path(v, x) for x in ("edges", "affected")]
         for path in paths:
-            # as the Spark writer's overwrite mode
-            shutil.rmtree(path, ignore_errors=True)
             os.makedirs(path)
         with pq.ParquetWriter(os.path.join(paths[0], "part-00000.parquet"), _EDGES) as out:
             for i in range(0, len(g.src), _CHUNK):
@@ -199,16 +170,14 @@ class EdgeStateStore:
         return v
 
     def _mark(self, v: int, batch_id: int, stats: dict) -> None:
-        """Write _COMMIT.json, the file that commits version ``v``; the
-        resident version is superseded."""
-        with open(os.path.join(self._vdir(v), "_COMMIT.json"), "w") as f:
-            json.dump({"version": v, "batch_id": batch_id, "ts": time.time(), **stats}, f)
+        """Commit version ``v``; the resident version is superseded."""
+        self.seal(v, {"batch_id": batch_id, "ts": time.time(), **stats})
         self._release()
 
     def load_affected(self, version: int) -> DataFrame | None:
         """Changed-edge endpoints committed with ``version`` (one
         column ``id``), or None for pre-affected-tracking snapshots."""
-        p = os.path.join(self._vdir(version), "affected")
+        p = self.path(version, "affected")
         if not os.path.exists(p):
             return None
         return self.spark.read.parquet(p)

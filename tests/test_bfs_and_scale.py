@@ -8,6 +8,8 @@ from louvain_communities_openmp_spark.oracle import (
     louvain_seq,
     ring_of_cliques,
 )
+from louvain_communities_openmp_spark.operators import serial
+from louvain_communities_openmp_spark.operators import louvain as lv
 from louvain_communities_openmp_spark.operators.bfs import bfs
 from louvain_communities_openmp_spark.operators.louvain import (
     LouvainOptions,
@@ -69,37 +71,32 @@ def test_synthetic_powerlaw_deterministic_and_symmetric(spark):
     assert low > 5 * high
 
 
-def test_dist_multiblock_cross_block_emissions(spark):
+def test_dist_multiblock_cross_block_emissions(spark, monkeypatch):
     """Force multiple kernel blocks on a small graph so the
     cross-block com-null emissions and gating paths are exercised."""
+    monkeypatch.setattr(lv, "BLOCK_VERTICES", 8)
     el = karate()
     e = edges_from_list(spark, el)
-    res = louvain(
-        e, LouvainOptions(mode="dist", num_blocks=4, block_vertices=8)
-    )
+    res = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
     got = {r["id"]: r["com"] for r in res.membership.collect()}
     assert len(got) == 34
     want = louvain_seq(adjacency(el))
     assert res.modularity >= 0.9 * want.modularity
     # deterministic across reruns
-    res2 = louvain(
-        e, LouvainOptions(mode="dist", num_blocks=4, block_vertices=8)
-    )
+    res2 = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
     assert sorted(got.items()) == sorted(
         (r["id"], r["com"]) for r in res2.membership.collect()
     )
 
 
-def test_dist_nonbroadcast_path(spark):
-    """broadcast_vertices=0 forces the shuffle-join groupBy fallback."""
+def test_dist_nonbroadcast_path(spark, monkeypatch):
+    """serial.BROADCAST_VERTICES = 0 forces the shuffle-join groupBy
+    fallback."""
+    monkeypatch.setattr(lv, "BLOCK_VERTICES", 8)
+    monkeypatch.setattr(serial, "BROADCAST_VERTICES", 0)
     el = ring_of_cliques(8, 6)
     e = edges_from_list(spark, el)
-    res = louvain(
-        e,
-        LouvainOptions(
-            mode="dist", num_blocks=4, block_vertices=8, broadcast_vertices=0
-        ),
-    )
+    res = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
     m = {r["id"]: r["com"] for r in res.membership.collect()}
     for q in range(8):
         assert len({m[q * 6 + i] for i in range(6)}) == 1, f"clique {q} split"

@@ -26,6 +26,7 @@ from louvain_communities_openmp_spark.oracle.graphs import (
     toy5_selfloops,
     toy5_weighted,
 )
+from louvain_communities_openmp_spark.operators import serial
 from louvain_communities_openmp_spark.operators.louvain import (
     LouvainOptions,
     louvain,
@@ -125,8 +126,8 @@ def test_dist_powerlaw_quality(spark):
     assert res.modularity >= 0.9 * want.modularity
 
 
-def test_dist_fallback_matches_broadcast(spark):
-    """broadcast_vertices=0 forces the non-broadcast scale path
+def test_dist_fallback_matches_broadcast(spark, monkeypatch):
+    """serial.BROADCAST_VERTICES = 0 forces the non-broadcast scale path
     (per-pass edge bucketing + per-iteration vertex-state routing via
     cogroup). Block assignment, gating and the in-block sweep are
     identical to the broadcast path, so the membership must match
@@ -134,10 +135,9 @@ def test_dist_fallback_matches_broadcast(spark):
     for fixture in (lambda: ring_of_cliques(8, 6), karate):
         e = edges_from_list(spark, fixture())
         a = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
-        b = louvain(
-            e,
-            LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0),
-        )
+        with monkeypatch.context() as mp:
+            mp.setattr(serial, "BROADCAST_VERTICES", 0)
+            b = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
         ma = sorted((r["id"], r["com"]) for r in a.membership.collect())
         mb = sorted((r["id"], r["com"]) for r in b.membership.collect())
         assert ma == mb
@@ -148,7 +148,7 @@ def test_dist_rounds_without_block_caches(spark, monkeypatch):
     """With the npz block caches off, the broadcast gate runs the
     cluster-shaped kernel (_bcast_state_kernel_factory) and matches the
     cached local-mode rounds. _block_caches only switches the broadcast
-    gate; the routed gate (broadcast_vertices=0) is pinned against it
+    gate; the routed gate (BROADCAST_VERTICES = 0) is pinned against it
     by test_dist_fallback_matches_broadcast."""
     from louvain_communities_openmp_spark.operators import louvain as lv
 
@@ -172,21 +172,19 @@ def _cached_rdds(spark) -> int:
     return sum(1 for r in rdds.values() if not r.rdd().isCheckpointed())
 
 
-def test_dist_louvain_releases_caches(spark):
+def test_dist_louvain_releases_caches(spark, monkeypatch):
     """Repeated dist runs cache nothing beyond their result membership,
     on both gates: the breaking pass releases its vertex weights and
     the driver gate's round membership once the result is built."""
     e = edges_from_list(spark, ring_of_cliques(8, 6))
-    for opts in (
-        LouvainOptions(mode="dist", num_blocks=4),
-        LouvainOptions(mode="dist", num_blocks=4, broadcast_vertices=0),
-    ):
+    for bound in (serial.BROADCAST_VERTICES, 0):
+        monkeypatch.setattr(serial, "BROADCAST_VERTICES", bound)
         cached = _cached_rdds(spark)
         for _ in range(2):
-            res = louvain(e, opts)
+            res = louvain(e, LouvainOptions(mode="dist", num_blocks=4))
             assert res.membership.count() == 48
             res.membership.unpersist()
-            assert _cached_rdds(spark) == cached, opts.broadcast_vertices
+            assert _cached_rdds(spark) == cached, bound
 
 
 def test_block_body_resorts_unordered_rows():
@@ -312,7 +310,7 @@ def test_checkpoint_and_resume(spark, tmp_path):
         assert res3.modularity >= 0.95 * res.modularity
 
 
-def test_warm_start_absent_vertex_label_collision(spark):
+def test_warm_start_absent_vertex_label_collision(spark, monkeypatch):
     """Regression (round-3 ADVICE): warm-start membership is
     dense-renumbered 0..C-1, so an absent LOW-ID vertex seeded with
     com = its own id would collide with an existing community label
@@ -338,16 +336,13 @@ def test_warm_start_absent_vertex_label_collision(spark):
         [(k * c + i, k - 1) for k in range(1, K) for i in range(c)],
         "id long, com long",
     )
-    for opts in (
-        LouvainOptions(mode="dist", num_blocks=4, initial_membership=init),
-        LouvainOptions(
-            mode="dist",
-            num_blocks=4,
-            broadcast_vertices=0,  # force the cogroup scale-path init
-            initial_membership=init,
-        ),
-        LouvainOptions(mode="auto", initial_membership=init),
+    dist = LouvainOptions(mode="dist", num_blocks=4, initial_membership=init)
+    for opts, bound in (
+        (dist, serial.BROADCAST_VERTICES),
+        (dist, 0),  # force the cogroup scale-path init
+        (LouvainOptions(mode="auto", initial_membership=init), serial.BROADCAST_VERTICES),
     ):
+        monkeypatch.setattr(serial, "BROADCAST_VERTICES", bound)
         res = louvain(e, opts)
         mem = {r["id"]: r["com"] for r in res.membership.collect()}
         assert len(mem) == K * c
@@ -430,7 +425,7 @@ def test_frontier_seeded_oracle_fewer_scans():
     assert p_seed < 48
 
 
-def test_frontier_seeded_spark_paths(spark):
+def test_frontier_seeded_spark_paths(spark, monkeypatch):
     """affected_vertices through the engine: the auto/local-finish,
     dist/broadcast and dist/cogroup paths all honor the seed — fewer
     vertex scans than a flooded warm start, same-quality partition."""
@@ -457,11 +452,12 @@ def test_frontier_seeded_spark_paths(spark):
             for x in res.pass_log
         )
 
-    for extra in (
-        {"mode": "auto"},
-        {"mode": "dist", "num_blocks": 4},
-        {"mode": "dist", "num_blocks": 4, "broadcast_vertices": 0},
+    for extra, bound in (
+        ({"mode": "auto"}, serial.BROADCAST_VERTICES),
+        ({"mode": "dist", "num_blocks": 4}, serial.BROADCAST_VERTICES),
+        ({"mode": "dist", "num_blocks": 4}, 0),
     ):
+        monkeypatch.setattr(serial, "BROADCAST_VERTICES", bound)
         flood = louvain(
             e1,
             LouvainOptions(initial_membership=cold.membership, **extra),

@@ -1,5 +1,6 @@
 """Structured-Streaming edge-delta ingestion (dynamic-graph analog)."""
 
+import datetime
 import gc
 import json
 import os
@@ -233,7 +234,7 @@ def test_every_version_matches_the_spark_path(spark, tmp_path):
     mems = []
     for dyn in dyns:
         dyn.update_to_latest()
-        mems.append([sorted(tuple(r) for r in dyn.load_membership(v).collect()) for v in range(4)])
+        mems.append([sorted(tuple(r) for r in dyn.load(v).collect()) for v in range(4)])
     assert mems[0] == mems[1]
     for st in stores:
         st.close()
@@ -260,6 +261,106 @@ def test_resident_version_is_released_at_the_next_version_and_at_close(spark, tm
     assert serial._cache_key(store.load(2)) is None
     gc.collect()
     assert serial._held is None
+
+
+def test_a_torn_version_leaks_nothing_into_the_next_commit(spark, tmp_path):
+    """A version whose write never reached its commit record is written
+    again from an empty directory: its leftover affected ids are not
+    part of the next commit, so the refresh floods instead of seeding
+    from them."""
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+
+    store = EdgeStateStore(spark, str(tmp_path / "state"))
+    e = edges_from_list(spark, toy5())
+    store.commit(e, 0, {})
+    dl = DynamicLouvain(store)
+    dl.update_to_latest()
+    # a torn v1: its affected ids were written, its commit record never
+    spark.createDataFrame([(999,)], "id long").write.parquet(
+        os.path.join(store.dir, "v000001", "affected"))
+    assert store.latest_version() == 0
+    assert store.commit(e, 1, {}) == 1
+    assert store.load_affected(1) is None
+    assert dl.update_to_latest()[0] == 1
+    assert dl.commit_meta(1)["frontier_seeded"] is False
+    store.close()
+
+
+_STAMP = datetime.datetime(2025, 1, 1)
+# log under test: (subdirectory, schema, committed rows, torn rows, the
+# commit record's fields beside "version"), with each record's keys as
+# the code before the shared version log wrote them
+LOGS = {
+    "edges": ("edges", "src long, dst long, w double", toy5(), [(999, 998, 1.0)],
+              {"batch_id": 0, "ts": 1.0, "edges": 12}),
+    "snapshot": ("snapshot", "url string, capture int, warc_ts timestamp",
+                 [("u1", 0, _STAMP)], [("torn", 0, _STAMP)],
+                 {"batch_id": 0, "ts": 1.0, "n_batch_rows": 1, "n_urls": 1}),
+    "membership": ("membership", "id long, com long", [(i, 0) for i in range(5)], [(999, 999)],
+                   {"warm_from": None, "modularity": 0.1, "iterations": 2, "passes": 1,
+                    "processed": 10, "frontier_seeded": False, "seconds": 0.5}),
+    "ranks": ("ranks", "id long, rank double", [(i, 0.2) for i in range(5)], [(999, 1.0)],
+              {"warm_from": None, "iterations": 30, "err": 1e-11, "seconds": 0.5}),
+    "components": ("components", "id long, comp long", [(i, 0) for i in range(5)], [(999, 999)],
+                   {"warm_from": None, "mode": "cold", "iterations": 3, "seconds": 0.5}),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(LOGS))
+def test_version_log_protocol(spark, tmp_path, kind):
+    """The edge store, the capture store and the three maintainers keep
+    one protocol: a version without a commit record is not the latest,
+    is not loaded and is not refreshed from; a version written as the
+    code before the shared version log wrote it (raw Spark parquet and a
+    hand-written record) reads back and refreshes; and a store directory
+    that holds the maintainers' directories still resolves its own
+    latest version."""
+    from louvain_communities_openmp_spark.streaming.capture_stream import (
+        SnapshotStore,
+        apply_capture_batch,
+    )
+    from louvain_communities_openmp_spark.streaming.dynamic_components import DynamicComponents
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+    from louvain_communities_openmp_spark.streaming.dynamic_pagerank import DynamicPageRank
+
+    sub, schema, rows, torn, record = LOGS[kind]
+    root = str(tmp_path / "state")
+    if kind == "snapshot":
+        store = log = SnapshotStore(spark, root)
+        for name in ("membership", "pagerank", "components"):
+            os.makedirs(os.path.join(root, name))
+    else:
+        store = EdgeStateStore(spark, root)
+        maintainers = [DynamicLouvain(store), DynamicPageRank(store), DynamicComponents(store)]
+        log = store if kind == "edges" else next(m for m in maintainers if m.frame == kind)
+        if log is not store:
+            store.commit(edges_from_list(spark, toy5()), 0, {"n_dels": 0})
+    for v, data in ((0, rows), (1, torn)):
+        spark.createDataFrame(data, schema).write.parquet(log.path(v, sub))
+    with open(log.path(0, "_COMMIT.json"), "w") as f:
+        json.dump({"version": 0, **record}, f)
+
+    assert log.latest_version() == 0
+    assert store.latest_version() == 0
+    assert log.commit_meta(0) == {"version": 0, **record}
+    assert sorted(tuple(r) for r in log.load().collect()) == sorted(rows)
+    if kind == "snapshot":
+        batch = spark.createDataFrame([("u2", 0, _STAMP)], schema)
+        assert apply_capture_batch(store, batch, 0) == -1  # the record's batch_id
+        assert apply_capture_batch(store, batch, 1) == 1
+        assert sorted(r["url"] for r in store.load().collect()) == ["u1", "u2"]
+        return
+    if kind == "edges":
+        assert maintainers[0].update_to_latest()[0] == 0
+        assert store.commit(store.load(), 1, {"n_dels": 0}) == 1
+        assert sorted(tuple(r) for r in store.load(1).collect()) == sorted(rows)
+    else:
+        assert log.update_to_latest() is None
+        assert store.commit(store.load(), 1, {"n_dels": 0}) == 1
+        assert log.update_to_latest()[0] == 1
+        assert log.commit_meta(1)["warm_from"] == 0
+        assert sorted(r["id"] for r in log.load(1).collect()) == list(range(5))
+    store.close()
 
 
 def test_maintainers_share_one_resident_graph(spark, tmp_path, monkeypatch):
@@ -358,13 +459,12 @@ def test_dynamic_louvain_warm_start_over_versions(spark, tmp_path):
     assert res1.iterations <= res0.iterations
     assert res1.modularity > 0.5
     # membership snapshot persisted and loadable per version
-    m1 = dl.load_membership(1)
+    m1 = dl.load(1)
     assert m1.count() == m1.select("id").distinct().count()
     # frontier-seeded DYNAMIC marking (louvain.hxx:305-389): the warm
     # run was seeded from the batch's affected endpoints and scanned
     # strictly fewer vertices than the cold run
-    meta0 = json.load(open(os.path.join(dl._vdir(0), "_COMMIT.json")))
-    meta1 = json.load(open(os.path.join(dl._vdir(1), "_COMMIT.json")))
+    meta0, meta1 = dl.commit_meta(0), dl.commit_meta(1)
     assert meta0["frontier_seeded"] is False
     assert meta1["frontier_seeded"] is True
     assert 0 < meta1["processed"] < meta0["processed"]
@@ -482,7 +582,7 @@ def test_dynamic_pagerank_warm_start_over_versions(spark, tmp_path):
     # faster than a cold uniform start on the SAME graph
     cold = pagerank(store.load(1), tol=1e-9)
     assert res1.iterations < cold.iterations
-    got = {r["id"]: r["rank"] for r in dp.load_ranks(1).collect()}
+    got = {r["id"]: r["rank"] for r in dp.load(1).collect()}
     for r in cold.ranks.collect():
         assert abs(got[r["id"]] - r["rank"]) < 1e-6, r["id"]
     # rank snapshots are probability vectors
@@ -519,7 +619,7 @@ def test_dynamic_components_warm_and_cold(spark, tmp_path):
     v1, res1, mode1 = dc.update_to_latest()
     assert (v1, mode1) == (1, "warm")
     cold1 = connected_components(store.load(1))
-    got = {r["id"]: r["comp"] for r in dc.load_components(1).collect()}
+    got = {r["id"]: r["comp"] for r in dc.load(1).collect()}
     exp = {r["id"]: r["comp"] for r in cold1.components.collect()}
     assert got == exp                       # exact labels
     assert set(got.values()) == {0}         # merged into one component
@@ -533,7 +633,7 @@ def test_dynamic_components_warm_and_cold(spark, tmp_path):
     apply_delta_batch(store, dels, 2)
     v2, res2, mode2 = dc.update_to_latest()
     assert (v2, mode2) == (2, "cold")
-    got2 = {r["id"]: r["comp"] for r in dc.load_components(2).collect()}
+    got2 = {r["id"]: r["comp"] for r in dc.load(2).collect()}
     exp2 = {
         r["id"]: r["comp"]
         for r in connected_components(store.load(2)).components.collect()
