@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import serial
+from .propagate import Propagation
 from .transforms import vertices
 
 
@@ -148,19 +148,15 @@ def katz_fixed(
     below 1/λ_max for the untruncated series to converge; the truncated
     value is well-defined for any α.
 
-    Plan shape (the pagerank.py dual regime): the static weighted edge
-    table is persisted once, repartitioned on the AGGREGATION key
-    (dst), and the vertex-sized score frame broadcasts into the src
-    join — zero edge exchange per round under the 5M-vertex gate; the
-    contribution sum is a partial+final HashAggregate so hub dsts
-    collapse map-side. Returns (id long, katz double rounded to 6).
+    Plan shape: one propagation step toward dst (operators/propagate.py)
+    over the static weighted edge table; zero edge exchange per round
+    under the broadcast gate, and the contribution sum is a
+    partial+final HashAggregate so hub dsts collapse map-side. Returns
+    (id long, katz double rounded to 6).
 
     Reference analog: none (the reference is Louvain-only) — a
     link-graph companion in the PageRank family (north rule).
     """
-    verts = vertices(edges).persist()
-    n = verts.count()
-    use_bc = n <= serial.BROADCAST_VERTICES
     if exact_int:
         # integer-weight graphs with α = 1/inv: carry K_t = inv^t·k_t as
         # longs (K_{t+1} = inv^{t+1} + Σ w·K_t) — summation-order-exact,
@@ -169,40 +165,25 @@ def katz_fixed(
         inv = round(1.0 / alpha)
         if abs(inv * alpha - 1.0) > 1e-12:
             raise ValueError("exact_int requires alpha = 1/int")
-        w_col = F.col("w").cast("long")
-    e = edges.select("src", "dst", "w").repartition(
-        "dst" if use_bc else "src"
-    ).persist()
-    e.count()
-    if exact_int:
-        scores = verts.select("id", F.lit(1).cast("long").alias("k"))
-    else:
-        scores = verts.select("id", F.lit(1.0).alias("k"))
-    for t in range(iters):
-        contrib = (
-            e.join(
-                F.broadcast(scores) if use_bc else scores,
-                e.src == F.col("id"),
+    with Propagation(vertices(edges)) as prop:
+        step = prop.step(edges, F.col("w").cast("long") if exact_int else F.col("w"))
+        if exact_int:
+            scores = prop.verts.select("id", F.lit(1).cast("long").alias("k"))
+        else:
+            scores = prop.verts.select("id", F.lit(1.0).alias("k"))
+        for t in range(iters):
+            base = (
+                F.lit(int(inv ** (t + 1))).cast("long")
+                if exact_int
+                else F.lit(1.0)
             )
-            .groupBy("dst")
-            .agg(
-                F.sum((w_col if exact_int else F.col("w")) * F.col("k")).alias("s")
+            zero = F.lit(0).cast("long") if exact_int else F.lit(0.0)
+            gain = F.coalesce("s", zero) if exact_int else F.lit(alpha) * F.coalesce("s", zero)
+            scores = (
+                prop.verts.join(step(scores, "k"), "id", "left")
+                .select("id", (base + gain).alias("k"))
+                .localCheckpoint(eager=True)
             )
-        )
-        base = (
-            F.lit(int(inv ** (t + 1))).cast("long")
-            if exact_int
-            else F.lit(1.0)
-        )
-        zero = F.lit(0).cast("long") if exact_int else F.lit(0.0)
-        gain = F.coalesce("s", zero) if exact_int else F.lit(alpha) * F.coalesce("s", zero)
-        scores = (
-            verts.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
-            .select("id", (base + gain).alias("k"))
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    verts.unpersist()
     if exact_int:
         return scores.select(
             "id", F.col("k").alias(f"katz_x{inv ** iters}")
@@ -224,55 +205,38 @@ def absorb_fixed(
     tolerance; normalizing by Σ_t (weighted outdeg)^t would give the
     absorption probability).
 
-    Plan shape (katz_fixed mirrored forward): the static edge table is
-    repartitioned on the AGGREGATION key (src) and the vertex-sized
-    count frame broadcasts into the dst join — zero edge exchange per
-    round under the 5M-vertex gate; above it the table partitions on
-    the JOIN key (dst) so only vertex-sized state moves. Overflow
-    bound: absorb ≤ Σ_t (max weighted outdeg)^t — 64-bit safe for
-    iters=4 up to outdeg ~10^4.
+    Plan shape (katz_fixed mirrored forward): one propagation step
+    toward src (operators/propagate.py). Overflow bound: absorb ≤
+    Σ_t (max weighted outdeg)^t — 64-bit safe for iters=4 up to outdeg
+    ~10^4.
 
     Reference analog: none (the reference is Louvain-only) — a
     link-graph spam/trust companion in the PageRank family (north rule).
     """
-    verts = vertices(edges).persist()
-    n = verts.count()
-    use_bc = n <= serial.BROADCAST_VERTICES
-    e = edges.select("src", "dst", F.col("w").cast("long").alias("w")).repartition(
-        "src" if use_bc else "dst"
-    ).persist()
-    e.count()
     in_t = (F.col("id") % target_mod == 0)
-    f = verts.select("id", F.when(in_t, 1).otherwise(0).cast("long").alias("f"))
-    tot = f.withColumnRenamed("f", "tot").localCheckpoint(eager=True)
-    f = tot.withColumnRenamed("tot", "f")
-    for _ in range(iters):
-        contrib = (
-            e.join(
-                F.broadcast(f) if use_bc else f,
-                e.dst == F.col("id"),
+    with Propagation(vertices(edges)) as prop:
+        step = prop.step(edges, F.col("w").cast("long"), "src")
+        tot = prop.verts.select(
+            "id", F.when(in_t, 1).otherwise(0).cast("long").alias("tot")
+        ).localCheckpoint(eager=True)
+        f = tot.withColumnRenamed("tot", "f")
+        for _ in range(iters):
+            f = (
+                prop.verts.join(step(f, "f"), "id", "left")
+                .select(
+                    "id",
+                    F.when(in_t, F.lit(0))
+                    .otherwise(F.coalesce("s", F.lit(0)))
+                    .cast("long")
+                    .alias("f"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .groupBy("src")
-            .agg(F.sum(F.col("w") * F.col("f")).alias("s"))
-        )
-        f = (
-            verts.join(contrib.withColumnRenamed("src", "id"), "id", "left")
-            .select(
-                "id",
-                F.when(in_t, F.lit(0))
-                .otherwise(F.coalesce("s", F.lit(0)))
-                .cast("long")
-                .alias("f"),
+            tot = (
+                tot.join(f, "id")
+                .select("id", (F.col("tot") + F.col("f")).alias("tot"))
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        tot = (
-            tot.join(f, "id")
-            .select("id", (F.col("tot") + F.col("f")).alias("tot"))
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    verts.unpersist()
     return tot.select("id", F.col("tot").alias(f"absorb{iters}"))
 
 
@@ -326,42 +290,22 @@ def eigenvector_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     int64-safe for iters=4 up to in-degree ~55k; callers at larger
     scale lower iters or pre-normalize weights.
 
-    Plan shape: identical to katz_fixed — pass-static edge table
-    repartitioned on the aggregation key (dst), vertex-sized score
-    frame broadcast under the 5M gate, partial+final HashAggregate
-    collapsing hub dsts map-side, eager localCheckpoint per round.
+    Plan shape: identical to katz_fixed (one propagation step toward
+    dst, operators/propagate.py), eager localCheckpoint per round.
 
     Reference analog: none (the reference is Louvain-only) — a
     PageRank-family link-graph companion (north rule).
     """
-    verts = vertices(edges).persist()
-    n = verts.count()
-    use_bc = n <= serial.BROADCAST_VERTICES
-    e = edges.select("src", "dst", F.col("w").cast("long").alias("w")).repartition(
-        "dst" if use_bc else "src"
-    ).persist()
-    e.count()
-    scores = verts.select("id", F.lit(1).cast("long").alias("p"))
-    for _ in range(iters):
-        contrib = (
-            e.join(
-                F.broadcast(scores) if use_bc else scores,
-                e.src == F.col("id"),
+    with Propagation(vertices(edges)) as prop:
+        step = prop.step(edges, F.col("w").cast("long"))
+        scores = prop.verts.select("id", F.lit(1).cast("long").alias("p"))
+        for _ in range(iters):
+            scores = (
+                prop.verts.join(step(scores, "p"), "id", "left")
+                .select("id", F.coalesce("s", F.lit(0).cast("long")).alias("p"))
+                .localCheckpoint(eager=True)
             )
-            .groupBy("dst")
-            .agg(F.sum(F.col("w") * F.col("p")).alias("s"))
-        )
-        scores = (
-            verts.join(contrib.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("s", F.lit(0).cast("long")).alias("p"),
-            )
-            .localCheckpoint(eager=True)
-        )
     total = scores.agg(F.sum("p").alias("t")).first()["t"] or 1
-    e.unpersist()
-    verts.unpersist()
     return scores.select(
         "id",
         F.col("p").alias(f"paths{iters}"),

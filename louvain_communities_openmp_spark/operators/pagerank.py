@@ -1,17 +1,21 @@
-"""Weighted PageRank over the edge DataFrame (north-rule companion).
+"""The PageRank family over the edge DataFrame (north-rule companion).
 
 Semantics = oracle.simple.pagerank_seq (allclose 1e-6 target):
     r_{t+1}(v) = (1−α)/N + α·(Σ_{u→v} r_t(u)·w(u,v)/vtot(u) + D_t/N)
-with D_t the dangling mass.
+with D_t the dangling mass. The four variants run one loop (_power):
+``pagerank`` and ``pagerank_dangling_fixed`` differ only in the stop
+rule (tolerance or a fixed round count), ``pagerank_fixed``'s
+distributed rounds and ``personalized_pagerank_fixed`` only in the
+teleport term (uniform or the seed vector), and those two drop D_t.
 
 Scale notes:
-- contribution aggregation is groupBy(dst).sum → partial+final
-  HashAggregate, so a hub dst is pre-reduced map-side (no hot-key
-  shuffle blowup; AQE skew handling covers the join side),
-- edge table is persisted once with the precomputed out-weight
-  (w/vtot(src)) folded in, so each iteration is ONE join + ONE
-  aggregation over a static frame,
-- every k iterations the lineage is truncated via localCheckpoint.
+- the transition table (src, dst, w/vtot(src)) is laid out and
+  persisted once by operators/propagate.py, so each round is ONE join
+  + ONE map-side-combined aggregation over a static frame, moving no
+  edge row under the broadcast gate;
+- the variants with D_t checkpoint each round eagerly (lineage
+  truncation, and one materialization for the round's scalar
+  aggregate); the two without it stay lazy until the result.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .properties import vertex_weights
+from .propagate import Propagation
 from . import serial
 from .transforms import vertices
 
@@ -33,41 +38,6 @@ class PageRankResult:
     err: float
 
 
-def _transitions(edges: DataFrame, vt: DataFrame, use_bc: bool) -> DataFrame:
-    """Persisted transition edges src → dst with probability mass
-    p = w/vtot(src). Two regimes, same answer (see labelprop.py): when
-    V fits a broadcast, partitioned on the AGGREGATION key (dst) and
-    ranks broadcast into the src join — zero-exchange iterations; above
-    the gate, on the JOIN key (src) so only the vertex-sized ranks frame
-    and the map-side-combined contribution aggregate move per round."""
-    return (
-        edges.join(vt.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", (F.col("w") / F.col("vtot")).alias("p"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
-
-
-def _contributions(trans: DataFrame, ranks: DataFrame, use_bc: bool) -> DataFrame:
-    """(id, c): Σ rank(src)·p over the in-edges of each dst."""
-    rs = ranks.withColumnRenamed("id", "src")
-    return (
-        trans.join(F.broadcast(rs) if use_bc else rs, "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.sum(F.col("rank") * F.col("p")).alias("c"))
-    )
-
-
-def _has_out(trans: DataFrame) -> DataFrame:
-    """Persisted (id, _h) marker of the vertices WITH out-edges."""
-    return (
-        trans.select("src").distinct()
-        .withColumnRenamed("src", "id")
-        .withColumn("_h", F.lit(True))
-        .persist()
-    )
-
-
 def _dangling_mass(ranks: DataFrame, has_out: DataFrame) -> float:
     """The rank sitting on vertices without out-edges."""
     return float(
@@ -76,6 +46,107 @@ def _dangling_mass(ranks: DataFrame, has_out: DataFrame) -> float:
         .first()[0]
         or 0.0
     )
+
+
+def _power(
+    edges: DataFrame,
+    alpha: float,
+    iters: int,
+    tol: float | None = None,
+    dangling: bool = False,
+    seeds: DataFrame | None = None,
+    initial_ranks: DataFrame | None = None,
+) -> tuple[DataFrame, int, float]:
+    """The one PageRank loop: r ← t + α·Σ_{u→v} r(u)·w(u,v)/vtot(u) for
+    ``iters`` rounds, or fewer once the L1 change is below ``tol``.
+
+    With ``dangling`` the vertex set is vertices(edges), the rank on
+    vertices without out-edges is re-spread uniformly each round and
+    the start is uniform (or ``initial_ranks``); without it the vertex
+    set is the src ids. The teleport t is (1−α)/N, or (1−α)·s(v) with s
+    uniform over ``seeds``, which is also the start. Returns (ranks,
+    rounds, last L1 change); the ranks are materialized before the
+    cached frames are released."""
+    if seeds is not None:
+        seeds = seeds.select("id").distinct()
+        n_seeds = seeds.count()
+        if n_seeds == 0:
+            raise ValueError("personalized pagerank needs a non-empty seed set")
+    vt = vertex_weights(edges)
+    with Propagation(vertices(edges) if dangling else vt) as prop:
+        n = prop.n
+        if n == 0:
+            return edges.sparkSession.createDataFrame([], "id long, rank double"), 0, 0.0
+        step = prop.step(
+            edges.join(vt.withColumnRenamed("id", "src"), "src"),
+            F.col("w") / F.col("vtot"),
+        )
+        rows, mass = prop.verts.select("id"), 0.0
+        if seeds is not None:
+            rows = prop.cache(
+                rows.join(seeds.withColumn("s", F.lit(1.0 / n_seeds)), "id", "left")
+                .select("id", F.coalesce("s", F.lit(0.0)).alias("t"))
+            )
+            ranks = rows.select("id", F.col("t").alias("rank"))
+        elif initial_ranks is not None:
+            # projected onto this vertex set, new vertices at 1/n,
+            # renormalized to sum 1
+            seeded = rows.join(
+                initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
+            ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
+            total = seeded.agg(F.sum("rank")).first()[0] or 1.0
+            ranks = seeded.select(
+                "id", (F.col("rank") / F.lit(float(total))).alias("rank")
+            ).localCheckpoint(eager=True)
+        else:
+            ranks = rows.select("id", F.lit(1.0 / n).alias("rank"))
+            if dangling:
+                ranks = ranks.localCheckpoint(eager=True)
+        if dangling:
+            # the static marker of vertices WITH out-edges: the dangling
+            # mass at t is then an aggregate over ranks_t alone
+            has_out = prop.cache(
+                step.table.select(F.col("src").alias("id")).distinct()
+                .withColumn("_h", F.lit(True))
+            )
+            mass = (n - has_out.count()) / n
+            if initial_ranks is not None:
+                mass = _dangling_mass(ranks, has_out)
+        it, err = 0, float("inf")
+        while it < iters and (tol is None or err >= tol):
+            tele = (
+                F.lit(1.0 - alpha) * F.col("t")
+                if seeds is not None
+                else F.lit((1.0 - alpha) / n + alpha * mass / n)
+            )
+            new = rows.join(step(ranks, "rank"), "id", "left").select(
+                "id", (tele + F.lit(alpha) * F.coalesce("s", F.lit(0.0))).alias("rank")
+            )
+            if dangling:
+                new = new.localCheckpoint(eager=True)
+                if tol is not None:
+                    # the error norm and the next dangling mass in one
+                    # aggregate pass
+                    row = (
+                        new.join(ranks.withColumnRenamed("rank", "old"), "id")
+                        .join(has_out, "id", "left")
+                        .agg(
+                            F.sum(F.abs(F.col("rank") - F.col("old"))).alias("err"),
+                            F.sum(
+                                F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)
+                            ).alias("dangling"),
+                        )
+                        .collect()[0]
+                    )
+                    err = float(row["err"] or 0.0)
+                    mass = float(row["dangling"] or 0.0)
+                elif it < iters - 1:
+                    mass = _dangling_mass(new, has_out)
+            ranks = new
+            it += 1
+        if not dangling:
+            ranks = ranks.localCheckpoint(eager=True)
+        return ranks, it, err
 
 
 def pagerank(
@@ -95,75 +166,12 @@ def pagerank(
     CURRENT vertex set (new vertices seeded at 1/n) and renormalized to
     sum 1, so the input may come from any earlier graph version. The
     fixpoint is start-independent; warm-starting changes iteration
-    count, not the answer.
+    count, not the answer. Every cached frame is released before it
+    returns (DynamicPageRank calls it once per graph version).
     """
-    spark = edges.sparkSession
-    verts = vertices(edges).persist()
-    trans = has_out = None
-    try:
-        n = verts.count()
-        if n == 0:
-            return PageRankResult(spark.createDataFrame([], "id long, rank double"), 0, 0.0)
-        vt = vertex_weights(edges)
-        use_bc = n <= serial.BROADCAST_VERTICES
-        trans = _transitions(edges, vt, use_bc)
-        trans.count()
-        # static marker of vertices WITH out-edges; dangling mass at t is
-        # then an aggregate over ranks_t alone — fused below into the same
-        # action as the error norm (one aggregate pass per iteration
-        # instead of a separate anti-join job, halving driver round-trips)
-        has_out = _has_out(trans)
-        # dangling mass of the uniform start vector: (n − |src|)/n · 1/n
-        # (recomputed below from the seeded vector when warm-starting)
-        dangling = (n - has_out.count()) / n
-        # eager localCheckpoint per round: truncates lineage and avoids the
-        # unpersist-cascade recompute (see labelprop.py)
-        if initial_ranks is not None:
-            seeded = verts.join(
-                initial_ranks.select("id", F.col("rank").alias("r0")), "id", "left"
-            ).select("id", F.coalesce("r0", F.lit(1.0 / n)).alias("rank"))
-            total = seeded.agg(F.sum("rank")).first()[0] or 1.0
-            ranks = seeded.select(
-                "id", (F.col("rank") / F.lit(float(total))).alias("rank")
-            ).localCheckpoint(eager=True)
-            dangling = _dangling_mass(ranks, has_out)
-        else:
-            ranks = verts.select(
-                "id", F.lit(1.0 / n).alias("rank")
-            ).localCheckpoint(eager=True)
-        it, err = 0, float("inf")
-        while it < max_iter and err >= tol:
-            contrib = _contributions(trans, ranks, use_bc)
-            base = (1.0 - alpha) / n + alpha * dangling / n
-            new_ranks = (
-                verts.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("rank"),
-                )
-            ).localCheckpoint(eager=True)
-            row = (
-                new_ranks.join(ranks.withColumnRenamed("rank", "old"), "id")
-                .join(has_out, "id", "left")
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("old"))).alias("err"),
-                    F.sum(
-                        F.when(F.col("_h").isNull(), F.col("rank")).otherwise(0.0)
-                    ).alias("dangling"),
-                )
-                .collect()[0]
-            )
-            err = float(row["err"] or 0.0)
-            dangling = float(row["dangling"] or 0.0)
-            ranks = new_ranks
-            it += 1
-        return PageRankResult(ranks, it, float(err))
-    finally:
-        # a refresh per graph version (DynamicPageRank) must not leave
-        # a vertex-sized frame cached per call
-        for cached in (trans, has_out, verts):
-            if cached is not None:
-                cached.unpersist()
+    return PageRankResult(
+        *_power(edges, alpha, max_iter, tol=tol, dangling=True, initial_ranks=initial_ranks)
+    )
 
 
 def _pagerank_fixed_local(
@@ -218,23 +226,8 @@ def pagerank_fixed(
 
 
 def _pagerank_fixed_dist(edges: DataFrame, alpha: float, iters: int) -> DataFrame:
-    vt = vertex_weights(edges).persist()
-    n = vt.count()
-    use_bc = n <= serial.BROADCAST_VERTICES
-    trans = _transitions(edges, vt, use_bc)
-    ranks = vt.select("id", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
-        contrib = _contributions(trans, ranks, use_bc)
-        ranks = vt.select("id").join(contrib, "id", "left").select(
-            "id",
-            (F.lit((1.0 - alpha) / n) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))).alias("rank"),
-        )
-    # materialize the vertex-sized result before releasing the caches
-    # it reads (as pagerank_dangling_fixed does)
-    ranks = ranks.localCheckpoint(eager=True)
-    trans.unpersist()
-    vt.unpersist()
-    return ranks
+    """pagerank_fixed's distributed rounds, unrounded."""
+    return _power(edges, alpha, iters)[0]
 
 
 def personalized_pagerank_fixed(
@@ -251,42 +244,13 @@ def personalized_pagerank_fixed(
     primitive. No dangling redistribution — intended for sink-free
     (symmetric) graphs, like pagerank_fixed, and for the same reason:
     the computation unrolls to ANSI SQL for cross-engine verification.
-    Returns (id, rank) rounded to 7dp.
+    Returns (id, rank) rounded to 7dp; an empty seed set raises
+    ValueError.
 
-    Scale shape identical to pagerank: the normalized transition table
-    is partitioned on the join key once; each iteration is one
-    vertex-sized join + one map-side-combined aggregation. The seed
-    vector is vertex-sized and enters only the per-iteration base term
-    (a broadcast-sized left join when |seeds| ≪ V).
+    The seed vector is vertex-sized and enters only the per-round
+    teleport term.
     """
-    vt = vertex_weights(edges).persist()
-    trans = base = None
-    try:
-        use_bc = vt.count() <= serial.BROADCAST_VERTICES
-        trans = _transitions(edges, vt, use_bc)
-        s = seeds.select("id").distinct()
-        n_seeds = s.count()
-        if n_seeds == 0:
-            raise ValueError("personalized pagerank needs a non-empty seed set")
-        sv = s.withColumn("s", F.lit(1.0 / n_seeds))
-        base = vt.select("id").join(sv, "id", "left").select(
-            "id", F.coalesce("s", F.lit(0.0)).alias("s")
-        ).persist()
-        ranks = base.select("id", F.col("s").alias("rank"))
-        for _ in range(iters):
-            contrib = _contributions(trans, ranks, use_bc)
-            ranks = base.join(contrib, "id", "left").select(
-                "id",
-                (
-                    F.lit(1.0 - alpha) * F.col("s")
-                    + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
-                ).alias("rank"),
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        for cached in (trans, base, vt):
-            if cached is not None:
-                cached.unpersist()
+    ranks = _power(edges, alpha, iters, seeds=seeds)[0]
     return ranks.select("id", F.round("rank", 7).alias("rank"))
 
 
@@ -302,45 +266,9 @@ def pagerank_dangling_fixed(
     computation unrolls to ANSI SQL for cross-engine verification.
     Returns (id, rank) rounded to 7dp.
 
-    Scale shape matches `pagerank`: the normalized transition table is
-    partitioned once on the join (or aggregation) key; each iteration
-    is one join + one map-side-combined aggregation, plus ONE scalar
-    aggregate over the vertex-sized rank frame for the dangling mass
-    (an 8-byte driver round-trip, not a data collect). Rank frames are
-    eagerly localCheckpoint-ed so the dangling aggregate and the next
-    iteration share one materialization instead of forking lineage.
+    Besides the round's join and aggregation, each round but the last
+    runs ONE scalar aggregate over the vertex-sized rank frame for the
+    dangling mass (an 8-byte driver round-trip, not a data collect).
     """
-    verts = vertices(edges).persist()
-    trans = has_out = None
-    try:
-        n = verts.count()
-        if n == 0:
-            return edges.sparkSession.createDataFrame([], "id long, rank double")
-        vt = vertex_weights(edges)
-        use_bc = n <= serial.BROADCAST_VERTICES
-        trans = _transitions(edges, vt, use_bc)
-        has_out = _has_out(trans)
-        dangling = (n - has_out.count()) / n
-        ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-            eager=True
-        )
-        for it in range(iters):
-            contrib = _contributions(trans, ranks, use_bc)
-            base = (1.0 - alpha) / n + alpha * dangling / n
-            ranks = (
-                verts.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(base) + F.lit(alpha) * F.coalesce("c", F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            if it < iters - 1:
-                dangling = _dangling_mass(ranks, has_out)
-    finally:
-        for cached in (trans, has_out, verts):
-            if cached is not None:
-                cached.unpersist()
+    ranks = _power(edges, alpha, iters, dangling=True)[0]
     return ranks.select("id", F.round("rank", 7).alias("rank"))

@@ -15,9 +15,10 @@ Scale notes:
   shared endpoint; the pivot-degree cap bounds the quadratic exactly
   as linkpred.py's `max_pivot_degree` does (hubs contribute ~zero
   similarity signal at ~cap^2 cost). Top-k is TakeOrderedAndProject.
-- salsa_fixed is per-iteration two hash aggregations keyed by vertex
-  (edge-sized shuffle, map-side combined) + one vertex-sized
-  normalization — same plan shape as hits.py.
+- salsa_fixed runs hits.py's alternation: per iteration one
+  propagation step each way over a static walk-matrix table
+  (operators/propagate.py; no edge row moves under the broadcast
+  gate) + one vertex-sized normalization.
 - hill_alpha / host_contract are single map-side-combined
   aggregations (one shuffle each).
 - khop_reach materializes the exact r-ball pair set — O(Σ|ball_r(v)|)
@@ -34,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import serial
+from .hits import hubs_authorities
+from .propagate import Propagation
 
 
 def _directed_simple(edges: DataFrame) -> DataFrame:
@@ -136,9 +138,10 @@ def salsa_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     a component; a small fixed iteration count from uniform is the
     interesting computation, exactly as hits.py treats HITS).
 
-    Returns (id, hub, authority) rounded to 7 decimals. Per
-    iteration: two edge-sized hash aggregations keyed by vertex +
-    vertex-sized normalization joins; no driver-side state.
+    Returns (id, hub, authority) rounded to 7 decimals; no rows on an
+    empty graph. Per iteration: one propagation step each way
+    (operators/propagate.py) + vertex-sized normalization joins, the
+    alternation hits.py runs; no driver-side state.
     """
     de = _directed_simple(edges)
     win = de.groupBy(F.col("dst").alias("id")).agg(
@@ -151,75 +154,18 @@ def salsa_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
         de.select(F.col("src").alias("id"))
         .unionAll(de.select(F.col("dst").alias("id")))
         .distinct()
-        .persist()
     )
-    n = verts.count()
-    use_bc = n <= serial.BROADCAST_VERTICES
-    # walk matrix rows, normalized both ways, materialized once and
-    # partitioned on each half-step's aggregation key (hits.py plan)
+    # walk matrix rows, normalized both ways
     wm = de.join(win.withColumnRenamed("id", "dst"), "dst").join(
         wout.withColumnRenamed("id", "src"), "src"
-    ).select(
-        "src",
-        "dst",
-        (F.col("w") / F.col("win")).alias("w_back"),
-        (F.col("w") / F.col("wout")).alias("w_fwd"),
     )
-    wm_src = wm.repartition("src").persist()
-    wm_dst = wm.repartition("dst").persist()
-    wm_src.count(), wm_dst.count()
-
-    def _bc(df):
-        return F.broadcast(df) if use_bc else df
-
-    a = verts.select("id", F.lit(1.0 / n).alias("authority"))
-    h = None
-    for _ in range(iters):
-        hr = (
-            wm_src.join(
-                _bc(a.withColumnRenamed("id", "dst")), "dst"
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.col("w_back") * F.col("authority")).alias("s"))
+    with Propagation(verts) as prop:
+        return hubs_authorities(
+            prop,
+            prop.step(wm, F.col("w") / F.col("win"), "src"),
+            prop.step(wm, F.col("w") / F.col("wout"), "dst"),
+            iters,
         )
-        hz = hr.agg(F.sum("s")).first()[0] or 1.0
-        h = (
-            verts.join(hr, "id", "left")
-            .select(
-                "id",
-                (F.coalesce("s", F.lit(0.0)) / F.lit(float(hz))).alias(
-                    "hub"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        ar = (
-            wm_dst.join(
-                _bc(h.withColumnRenamed("id", "src")), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w_fwd") * F.col("hub")).alias("s"))
-        )
-        az = ar.agg(F.sum("s")).first()[0] or 1.0
-        a = (
-            verts.join(ar, "id", "left")
-            .select(
-                "id",
-                (F.coalesce("s", F.lit(0.0)) / F.lit(float(az))).alias(
-                    "authority"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    out = h.join(a, "id").select(
-        "id",
-        F.round("hub", 7).alias("hub"),
-        F.round("authority", 7).alias("authority"),
-    )
-    wm_src.unpersist()
-    wm_dst.unpersist()
-    verts.unpersist()
-    return out
 
 
 def hill_alpha(edges: DataFrame, dmin: int = 5) -> DataFrame:

@@ -50,7 +50,7 @@ class SnapshotStore(VersionLog):
         v = self.latest_version() if version is None else version
         if v is None:
             return self.spark.createDataFrame([], CAPTURE_SCHEMA)
-        return self.spark.read.parquet(self.path(v, "snapshot"))
+        return self.spark.read.parquet(self.committed(v, "snapshot"))
 
     def commit(self, snapshot: DataFrame, batch_id: int, stats: dict) -> int:
         v = self.begin()

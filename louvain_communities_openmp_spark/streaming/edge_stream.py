@@ -96,7 +96,7 @@ class EdgeStateStore(VersionLog):
         v = self.latest_version() if version is None else version
         if v is None:
             return self.spark.createDataFrame([], "src long, dst long, w double")
-        return self.spark.read.parquet(self.path(v, "edges"))
+        return self.spark.read.parquet(self.committed(v, "edges"))
 
     def resident(self, version: int | None = None) -> DataFrame:
         """The persisted frame of ``version`` (default: the latest). The
@@ -177,7 +177,7 @@ class EdgeStateStore(VersionLog):
     def load_affected(self, version: int) -> DataFrame | None:
         """Changed-edge endpoints committed with ``version`` (one
         column ``id``), or None for pre-affected-tracking snapshots."""
-        p = self.path(version, "affected")
+        p = self.committed(version, "affected")
         if not os.path.exists(p):
             return None
         return self.spark.read.parquet(p)
@@ -350,7 +350,9 @@ def _apply_spark(store: EdgeStateStore, batch: DataFrame, batch_id: int) -> int:
         # n_dels in the commit record lets incremental maintainers
         # (DynamicComponents) pick the warm path for insert-only batches —
         # component labels are monotone under insertion but not deletion
-        store._mark(v, batch_id, {"edges": store.load(v).count(), "n_dels": n_dels})
+        # v is not committed yet: count the written snapshot directly
+        n_edges = store.spark.read.parquet(store.path(v, "edges")).count()
+        store._mark(v, batch_id, {"edges": n_edges, "n_dels": n_dels})
         return v
     finally:
         for df in held:

@@ -6,11 +6,11 @@ A log is a directory of immutable versions ``v000000/``,
 and one commit record, ``_COMMIT.json``, written last. A version
 exists for readers once its record does, so any committed version can
 be pinned, and a write that never reached its record (a torn version)
-is never the latest version. The next write of that version starts
-from an empty directory, so nothing the torn write left becomes part
-of it. This is
-the snapshot discipline of an Iceberg-style table (PAPER.md §1.1) and
-of plans/run.RunDir.
+is never the latest version and cannot be read (``committed``). The
+next write of that version starts from an empty directory, so nothing
+the torn write left becomes part of it. This is the snapshot
+discipline of an Iceberg-style table (PAPER.md §1.1) and of
+plans/run.RunDir.
 
 ``EdgeStateStore`` (edge_stream.py) and ``SnapshotStore``
 (capture_stream.py) are logs of their inputs. ``Maintainer`` is a log
@@ -41,6 +41,14 @@ class VersionLog:
     def path(self, v: int, *parts: str) -> str:
         """The directory of version ``v``, or a path under it."""
         return os.path.join(self.dir, f"v{v:06d}", *parts)
+
+    def committed(self, v: int, *parts: str) -> str:
+        """``path(v, *parts)`` of a committed version ``v``; raises
+        FileNotFoundError when ``v`` has no commit record, so a pinned
+        read never sees a torn or unsealed version."""
+        if not os.path.exists(self.path(v, _COMMIT)):
+            raise FileNotFoundError(f"version {v} of {self.dir} is not committed")
+        return self.path(v, *parts)
 
     def latest_version(self) -> int | None:
         """The largest committed version, or None."""
@@ -91,7 +99,7 @@ class Maintainer(VersionLog):
         """The result frame of ``version`` (default: the latest), or
         None when nothing is committed."""
         v = self.latest_version() if version is None else version
-        return None if v is None else self.spark.read.parquet(self.path(v, self.frame))
+        return None if v is None else self.spark.read.parquet(self.committed(v, self.frame))
 
     def _solve(self, edges, v: int, last: int | None) -> tuple[tuple, dict]:
         """The result of store version ``v`` over its resident

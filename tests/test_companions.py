@@ -2,6 +2,8 @@
 
 import math
 
+import pytest
+
 from louvain_communities_openmp_spark.oracle import (
     adjacency,
     connected_components_seq,
@@ -302,13 +304,16 @@ def _cached_rdds(spark) -> int:
 def test_pagerank_operators_release_caches(spark):
     """The PageRank operators release every frame they cache, also on
     the empty-graph return and the empty-seed ValueError:
-    DynamicPageRank calls pagerank once per graph version."""
-    import pytest
-
+    DynamicPageRank calls pagerank once per graph version. HITS and
+    SALSA answer an empty graph with no rows, and katz_fixed rejects
+    an exact_int alpha before it caches anything."""
+    from louvain_communities_openmp_spark.operators.centrality import katz_fixed
+    from louvain_communities_openmp_spark.operators.hits import hits_fixed
     from louvain_communities_openmp_spark.operators.pagerank import (
         pagerank_dangling_fixed,
         personalized_pagerank_fixed,
     )
+    from louvain_communities_openmp_spark.operators.webstructure import salsa_fixed
 
     e = edges_from_list(spark, karate())
     empty = e.limit(0)
@@ -318,11 +323,19 @@ def test_pagerank_operators_release_caches(spark):
         lambda: pagerank(e, max_iter=3),
         lambda: pagerank(empty),
         lambda: pagerank_dangling_fixed(empty),
+        lambda: hits_fixed(empty),
+        lambda: salsa_fixed(empty),
     ):
         run()
         assert _cached_rdds(spark) == cached
+    for op in (hits_fixed, salsa_fixed):
+        out = op(empty)
+        assert out.columns == ["id", "hub", "authority"] and out.collect() == []
     with pytest.raises(ValueError):
         personalized_pagerank_fixed(e, no_seeds)
+    assert _cached_rdds(spark) == cached
+    with pytest.raises(ValueError):
+        katz_fixed(e, alpha=0.3, exact_int=True)
     assert _cached_rdds(spark) == cached
 
 
@@ -485,6 +498,66 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
         if "Exchange" in ln and "BroadcastExchange" not in ln
     ]
     assert not bad, bad
+
+
+def _ancestors(lines: list[str], i: int) -> list[str]:
+    """The lines of the plan nodes above line ``i`` of a plan's tree
+    string, nearest first."""
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    out, d = [], depth(lines[i])
+    for ln in reversed(lines[:i]):
+        if depth(ln) < d:
+            out.append(ln)
+            d = depth(ln)
+    return out
+
+
+@pytest.mark.parametrize("regime", ["broadcast", "partitioned"])
+def test_propagation_step_never_shuffles_the_edge_table(spark, monkeypatch, regime):
+    """The designed layout of the shared propagation step, pinned as a
+    plan assertion for both directions: no shuffle Exchange sits
+    between the cached edge table and the step's join. Under the
+    broadcast gate the table is partitioned on the aggregation key and
+    the round has no shuffle at all; over it the table is partitioned
+    on the join key, so only the vertex-sized x and the partial sums
+    move. A table partitioned on the other endpoint is re-shuffled
+    every round and fails here."""
+    from pyspark.sql import functions as F
+
+    from louvain_communities_openmp_spark.operators import serial
+    from louvain_communities_openmp_spark.operators.propagate import Propagation
+    from louvain_communities_openmp_spark.operators.transforms import vertices
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    if regime == "partitioned":
+        monkeypatch.setattr(serial, "BROADCAST_VERTICES", 0)
+        spark.conf.set(key, "-1")
+    try:
+        e = edges_from_list(spark, karate())
+        with Propagation(vertices(e)) as prop:
+            x = prop.verts.select("id", F.lit(1.0).alias("x")).localCheckpoint(eager=True)
+            for to in ("dst", "src"):
+                s = prop.step(e, F.col("w"), to)(x, "x")
+                assert s.count() == 34
+                lines = s._jdf.queryExecution().executedPlan().toString().splitlines()
+                scan = next(
+                    i
+                    for i, ln in enumerate(lines)
+                    if "InMemoryTableScan" in ln or "TableCacheQueryStage" in ln
+                )
+                above = _ancestors(lines, scan)
+                join = next(i for i, ln in enumerate(above) if "Join" in ln)
+                assert not [ln for ln in above[:join] if "Exchange" in ln], (to, lines)
+                shuffles = [
+                    ln for ln in lines[:scan] if "Exchange" in ln and "BroadcastExchange" not in ln
+                ]
+                assert bool(shuffles) == (regime == "partitioned"), (to, lines)
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_hits_allclose_directed_karate(spark):

@@ -344,6 +344,8 @@ def test_version_log_protocol(spark, tmp_path, kind):
     assert store.latest_version() == 0
     assert log.commit_meta(0) == {"version": 0, **record}
     assert sorted(tuple(r) for r in log.load().collect()) == sorted(rows)
+    with pytest.raises(FileNotFoundError):
+        log.load(1)
     if kind == "snapshot":
         batch = spark.createDataFrame([("u2", 0, _STAMP)], schema)
         assert apply_capture_batch(store, batch, 0) == -1  # the record's batch_id
