@@ -40,10 +40,6 @@ def _count_in(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda x: F.array_contains(arr, x))).cast("long")
 
 
-def stopword_count(col, words=None) -> Column:
-    return _count_in(tokens(col), words or EN_STOPWORDS)
-
-
 def quality_features(col) -> list[Column]:
     """(n_chars, n_tokens, mean_token_len, alpha_ratio, stopword_ratio)
     — each rounded to 6 decimals for cross-engine hash stability."""
@@ -100,24 +96,6 @@ def shingles(col, k: int = 5) -> Column:
                 F.sequence(F.lit(1), n - k + 1),
                 lambda i: F.array_join(F.slice(t, i, k), " "),
             )
-        )
-    )
-
-
-def minhash_hex(shingle_col: Column, seed: int) -> Column:
-    """One 128-bit minhash value over an array of shingles: lexicographic
-    min of md5(seed || ':' || shingle) — fixed-width hex, so string-min
-    == numeric-min; portable to any SQL engine with md5().
-
-    Array-column convenience form. The production signature plan
-    (operators.dedup.minhash_signatures) uses the exploded/codegen
-    formulation instead — this HOF chain is interpreted and re-hashes
-    every shingle once per seed, which is exactly the slow path at
-    corpus scale.
-    """
-    return F.array_min(
-        F.transform(
-            shingle_col, lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
         )
     )
 

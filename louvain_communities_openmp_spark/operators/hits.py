@@ -58,10 +58,19 @@ def hubs_authorities(prop: Propagation, hub: Step, authority: Step, iters: int) 
     )
 
 
+def check_iters(iters: int) -> None:
+    """Reject an ``iters`` under one round, before anything is cached:
+    the hub scores exist only after a round."""
+    if iters < 1:
+        raise ValueError(f"iters must be at least 1, got {iters}")
+
+
 def hits_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     """Fixed-iteration HITS. Returns (id, hub, authority) rounded to
     7dp; vertices with no out-edges have hub 0 after one step (resp.
-    in-edges / authority). An empty graph gives no rows."""
+    in-edges / authority). An empty graph gives no rows; ``iters`` < 1
+    raises ValueError."""
+    check_iters(iters)
     with Propagation(vertices(edges)) as prop:
         w = F.col("w")
         return hubs_authorities(prop, prop.step(edges, w, "src"), prop.step(edges, w, "dst"), iters)

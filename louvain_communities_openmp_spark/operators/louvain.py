@@ -656,15 +656,16 @@ def _warm_start(ids, opts: LouvainOptions):
     own-id labels would collide with provided labels and silently merge
     the vertex into an unrelated community. The frontier is a mask of
     the affected ids present here (ids outside the vertex set cannot be
-    scanned), or None without ``affected_vertices``. Both frames are
-    collected under ``serial.BROADCAST_VERTICES`` rows; over it this
-    raises ValueError."""
+    scanned), or None without ``affected_vertices``; repeated ids do no
+    harm. Both frames are read under ``serial.BROADCAST_VERTICES`` rows
+    (``serial.vertex_columns``: held columns, else a collect); over it
+    this raises ValueError."""
     import numpy as np
 
     n = len(ids)
 
     def matched(df, cols):
-        arrs = collect_bounded(df, cols, serial.BROADCAST_VERTICES)
+        arrs = serial.vertex_columns(df, cols, serial.BROADCAST_VERTICES)
         if arrs is None:
             raise ValueError(
                 f"louvain warm start: more than {serial.BROADCAST_VERTICES} "
@@ -982,9 +983,10 @@ def _routed_rounds(
     # warm start + affected set, round 0 scans only the changed-edge
     # endpoints; moves re-flag neighbors in-kernel
     if warm and opts.affected_vertices is not None:
+        # each graph id once: out-of-graph and repeated ids drop out
         frontier = (
-            opts.affected_vertices.select("id")
-            .join(vtot.select("id"), "id")  # drop out-of-graph ids
+            vtot.select("id")
+            .join(opts.affected_vertices.select("id"), "id", "left_semi")
             .localCheckpoint(eager=True)
         )
         processed = 0
@@ -1225,9 +1227,11 @@ def _serial_finish(
     (louvain.hxx:1174-1176). ``mode="exact"`` runs it on the whole
     input; auto runs it once a pass's graph is within
     ``serial.SERIAL_EDGES``. ``warm`` seeds pass 0 from the warm-start
-    fields (_warm_start). The membership is over the ids of ``g`` and
-    the modularity is its Q over ``g``; an empty or zero-weight graph
-    returns an empty result with an empty pass_log.
+    fields (_warm_start). The membership is over the ids of ``g``,
+    persisted and carrying its ``(id, com)`` arrays
+    (``serial.hold_columns``), and the modularity is its Q over ``g``;
+    an empty or zero-weight graph returns an empty result with an empty
+    pass_log.
 
     The pass_log record splits ``t_local`` into its phases, like the
     reference's phase report (main.cxx:70-76): ``t_collect`` (from
@@ -1265,7 +1269,8 @@ def _serial_finish(
     t_solve = time.time()
     mem = spark.createDataFrame(
         pd.DataFrame({"id": g.ids, "com": r.membership}), MEMBERSHIP_SCHEMA
-    )
+    ).persist()
+    serial.hold_columns(mem, {"id": g.ids, "com": r.membership})
     t_end = time.time()
     return LouvainResult(mem, r.modularity, r.passes, r.iterations, [{
         "pass": p, "mode": "local_finish", "edges": len(g.src),
@@ -1295,7 +1300,8 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     if opts.mode == "exact":
         t0 = time.time()
         res = _serial_finish(spark, serial.local_graph(edges, None), t0, opts)
-        res.membership.persist().count()
+        if not res.pass_log:
+            res.membership.persist().count()
         return res
 
     run = RunDir(opts.run_dir) if opts.run_dir else None
@@ -1354,11 +1360,14 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
             )
             if not res.pass_log:
                 return res  # empty/zero-weight graph
-            final_mem = _compose(ucom, res.membership).persist()
             if ucom is None:
                 # the whole solve collapsed into pass 0 over the input
                 # edge table: Q over the arrays already in hand
+                final_mem = res.membership
                 q_fast = res.modularity
+            else:
+                final_mem = _compose(ucom, res.membership).persist()
+                held = (res.membership,)
             total_iters += res.iterations
             pass_log += res.pass_log
             p += res.passes
@@ -1522,8 +1531,11 @@ def louvain(edges: DataFrame, opts: LouvainOptions | None = None) -> LouvainResu
     try:
         if q_fast is not None:
             # materialize the persisted membership (modularity_op used
-            # to force it as a side effect of the skipped join job)
-            final_mem.count()
+            # to force it as a side effect of the skipped join job);
+            # one that carries its arrays is read from them, so its
+            # cache fills at its first Spark read, if any
+            if serial.held_columns(final_mem) is None:
+                final_mem.count()
             q = q_fast
         else:
             q = modularity_op(original_edges, final_mem, opts.resolution)

@@ -73,7 +73,7 @@ def _modularity_resident(g, membership: DataFrame, resolution: float, m: float |
 
     from . import serial
 
-    arrs = serial.collect_bounded(membership, ["id", "com"], serial.BROADCAST_VERTICES)
+    arrs = serial.vertex_columns(membership, ["id", "com"], serial.BROADCAST_VERTICES)
     if arrs is None:
         return None
     mid, mcom = arrs
@@ -113,8 +113,9 @@ def modularity(
     When a driver-resident graph is held for ``edges``
     (serial.local_graph, e.g. after a serial Louvain finish), Q is
     ``modularity_arrays`` over it with the same semantics, and the only
-    Spark job is the bounded membership collect. It never collects the
-    edges itself.
+    Spark job is the bounded membership collect, none when the
+    membership carries its arrays (``serial.hold_columns``, e.g. a
+    serial Louvain finish's). It never collects the edges itself.
     """
     from . import serial
 
@@ -209,13 +210,6 @@ def community_conductance(
             6,
         ).alias("conductance"),
     )
-
-
-def delta_modularity_col(kuc, kud, vtot_u, ctot_c, ctot_d, m: float, resolution: float = 1.0):
-    """ΔQ column expression. → properties.hxx:253-256 (deltaModularity)."""
-    return (kuc - kud) / F.lit(m) - F.lit(resolution) * vtot_u * (
-        vtot_u + ctot_c - ctot_d
-    ) / F.lit(2.0 * m * m)
 
 
 def partition_similarity(a: DataFrame, b: DataFrame) -> DataFrame:

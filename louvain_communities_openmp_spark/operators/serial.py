@@ -26,6 +26,14 @@ from the rows it wrote (the edge store's driver-side apply,
 streaming/edge_stream.py): the graph must equal ``edge_csr`` of the
 frame's rows. Where the lookup raises (Spark Connect) nothing is held.
 
+Column memo. A vertex-sized frame built from driver arrays (a serial
+Louvain finish's membership, a maintainer's warm-start frames,
+streaming/versions.py) carries them with ``hold_columns``, keyed the
+same way, and ``vertex_columns`` reads them instead of collecting. It
+is apart from the graph memo, so holding columns never evicts the held
+graph; it keeps the columns of up to ``_COLUMN_FRAMES`` cache entries,
+dropping the oldest first.
+
 Decision rule. On a hit, the held row count decides against the bound
 and no Spark job runs. On a miss of a persisted frame, one ``count()``
 decides (it fills the cache the collect then reads), then
@@ -91,6 +99,17 @@ def collect_bounded(df: DataFrame, cols: list[str], bound: int) -> list | None:
     if tbl.num_rows > bound:
         return None
     return _numpy_columns(tbl, cols)
+
+
+def vertex_columns(df: DataFrame, cols: list[str], bound: int) -> list | None:
+    """The columns ``cols`` of ``df``: its held columns (``hold_columns``)
+    without a Spark job, else ``collect_bounded``. None when ``df`` has
+    more than ``bound`` rows."""
+    held = held_columns(df)
+    if held is not None and all(c in held for c in cols):
+        arrs = [held[c] for c in cols]
+        return arrs if len(arrs[0]) <= bound else None
+    return collect_bounded(df, cols, bound)
 
 
 @dataclass
@@ -200,6 +219,12 @@ def _lookup(df: DataFrame):
     return key, (held[1] if key is not None and held is not None and held[0] == key else None)
 
 
+def cache_key(df: DataFrame):
+    """The key of Spark's cache entry for ``df``, or None when it is
+    not persisted or the lookup raises (Spark Connect)."""
+    return _lookup(df)[0]
+
+
 def held_graph(edges: DataFrame) -> EdgeCSR | None:
     """The resident graph of ``edges`` if one is held; never collects."""
     return _lookup(edges)[1]
@@ -223,6 +248,42 @@ def hold(edges: DataFrame, g: EdgeCSR) -> None:
     rows and is not written to afterwards. Nothing is held for a frame
     that is not persisted, or under Spark Connect."""
     _keep(_lookup(edges)[0], edges, g)
+
+
+# the column memo: cache key → (columns, finalizer of the frame they
+# came from), oldest first
+_columns: dict = {}
+_COLUMN_FRAMES = 4
+
+
+def _drop_columns(key) -> None:
+    entry = _columns.pop(key, None)
+    if entry is not None:
+        entry[1].detach()
+
+
+def hold_columns(df: DataFrame, columns: dict) -> None:
+    """Hold ``columns`` (name → array, row-aligned, equal to the rows
+    of the persisted frame ``df``) as the rows of ``df``; they are made
+    read-only. Nothing is held for a frame that is not persisted,
+    or under Spark Connect."""
+    key = cache_key(df)
+    if key is None:
+        return
+    for a in columns.values():
+        a.flags.writeable = False
+    _drop_columns(key)
+    while len(_columns) >= _COLUMN_FRAMES:
+        _drop_columns(next(iter(_columns)))
+    _columns[key] = (columns, weakref.finalize(df, _drop_columns, key))
+
+
+def held_columns(df: DataFrame) -> dict | None:
+    """The columns held for ``df`` (``hold_columns``), or None; never
+    collects."""
+    key = cache_key(df)
+    entry = _columns.get(key) if key is not None else None
+    return None if entry is None else entry[0]
 
 
 def graph_or_count(edges: DataFrame, bound: int | None) -> tuple[EdgeCSR | None, int | None]:

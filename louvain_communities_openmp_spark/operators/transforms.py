@@ -44,18 +44,6 @@ def transpose_with_degree(edges: DataFrame) -> DataFrame:
     ).select("src", "dst", "w", F.coalesce("deg", F.lit(0)).alias("src_outdeg"))
 
 
-def filter_graph(edges: DataFrame, vertex_pred=None, edge_pred=None) -> DataFrame:
-    """duplicateIf analog: keep edges passing predicates.
-    → duplicate.hxx:17-72. ``vertex_pred`` receives a Column of ids and
-    is applied to both endpoints."""
-    e = edges
-    if edge_pred is not None:
-        e = e.where(edge_pred)
-    if vertex_pred is not None:
-        e = e.where(vertex_pred(F.col("src")) & vertex_pred(F.col("dst")))
-    return e
-
-
 def add_self_loops(edges: DataFrame, w: float = 1.0, vertex_pred=None) -> DataFrame:
     """Add (u,u,w) per vertex (optionally passing a predicate).
     → selfLoop.hxx:15-79."""
@@ -81,17 +69,6 @@ def vertices(edges: DataFrame) -> DataFrame:
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
     )
-
-
-def vertices_range(spark, n: int, vertex_pred=None) -> DataFrame:
-    """addVerticesIf analog: vertex frame spanning the dense id range
-    [0, n), optionally filtered by a predicate over the id Column.
-    → Graph.hxx addVerticesU / mtx.hxx:214 (the reference spans
-    1..rows from the header even for isolated vertices)."""
-    v = spark.range(n).select(F.col("id"))
-    if vertex_pred is not None:
-        v = v.where(vertex_pred(F.col("id")))
-    return v
 
 
 def degrees(edges: DataFrame) -> DataFrame:

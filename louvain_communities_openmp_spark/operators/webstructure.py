@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .hits import hubs_authorities
+from .hits import check_iters, hubs_authorities
 from .propagate import Propagation
 
 
@@ -139,10 +139,12 @@ def salsa_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
     interesting computation, exactly as hits.py treats HITS).
 
     Returns (id, hub, authority) rounded to 7 decimals; no rows on an
-    empty graph. Per iteration: one propagation step each way
-    (operators/propagate.py) + vertex-sized normalization joins, the
-    alternation hits.py runs; no driver-side state.
+    empty graph; ``iters`` < 1 raises ValueError. Per iteration: one
+    propagation step each way (operators/propagate.py) + vertex-sized
+    normalization joins, the alternation hits.py runs; no driver-side
+    state.
     """
+    check_iters(iters)
     de = _directed_simple(edges)
     win = de.groupBy(F.col("dst").alias("id")).agg(
         F.sum("w").alias("win")

@@ -11,7 +11,10 @@ earlier membership.
 
 The memberships are a version log (versions.py), like the edge store,
 so any (edges, membership) version pair is pinnable and the maintainer
-is resumable.
+is resumable. Within one process the refresh is resident: it warm
+starts from the membership arrays it kept and the store's affected ids,
+as the reference keeps ``vcom``/``vaff`` in memory between batches
+(versions.py, edge_stream.py).
 """
 
 from __future__ import annotations
@@ -44,15 +47,19 @@ class DynamicLouvain(Maintainer):
     def _solve(self, edges, v, last):
         init = aff = None
         if last is not None:
-            init = self.load(last)
-            # frontier-seeded DYNAMIC marking: union the changed-edge
+            init = self.carried(self.load(last), self.held(last))
+            # frontier-seeded DYNAMIC marking: the changed-edge
             # endpoints of every store version since the warm snapshot
-            # (louvain.hxx:305-389 + DYNAMIC louvain.hxx:1009). Any
-            # version without a committed affected set forces a flood
-            # (pre-tracking snapshots) — correctness over savings.
+            # (louvain.hxx:305-389 + DYNAMIC louvain.hxx:1009); repeats
+            # do no harm. Any version without a committed affected set
+            # forces a flood (pre-tracking snapshots) — correctness
+            # over savings.
             parts = [self.store.load_affected(i) for i in range(last + 1, v + 1)]
             if all(x is not None for x in parts):
-                aff = reduce(DataFrame.unionByName, parts).distinct()
+                ids = self.store.affected_ids(v) if len(parts) == 1 else None
+                aff = self.carried(
+                    reduce(DataFrame.unionByName, parts), None if ids is None else {"id": ids}
+                )
         res = louvain(edges, replace(self.opts, initial_membership=init, affected_vertices=aff))
         return (res,), {
             "warm_from": last,

@@ -30,7 +30,14 @@ a batch to its graph in place (batch.hxx:223-248):
 3. write the snapshot and the affected endpoints with pyarrow, the
    snapshot in row chunks, then the commit record;
 4. hold the merged graph for the new version's resident frame, so a
-   refresh and ``load(v)`` read it without a collect.
+   refresh and ``load(v)`` read it without a collect, and keep the
+   affected ids next to it (``affected_ids``), so the refresh's
+   frontier needs no collect either.
+
+With the refresh's warm start read from the maintainer's arrays
+(versions.py), a warm refresh over a held version and the
+``modularity`` of its result run without a collect: the resident warm
+refresh.
 
 Spark path. With nothing held, with parent rows plus batch rows over
 ``serial.SERIAL_EDGES``, with a graph that has no weights, or with a
@@ -91,12 +98,21 @@ class EdgeStateStore(VersionLog):
         self.spark = spark
         # (version, its persisted frame), or None
         self._resident: tuple[int, DataFrame] | None = None
+        # (the resident version, its affected ids) when the resident
+        # path wrote that version, or None
+        self._affected: tuple[int, np.ndarray] | None = None
 
     def load(self, version: int | None = None) -> DataFrame:
         v = self.latest_version() if version is None else version
         if v is None:
             return self.spark.createDataFrame([], "src long, dst long, w double")
-        return self.spark.read.parquet(self.committed(v, "edges"))
+        read = self.spark.read
+        r = self._resident
+        if r is not None and r[0] == v:
+            # the resident frame's schema: no inference job, and the
+            # same plan, so the same cache entry
+            read = read.schema(r[1].schema)
+        return read.parquet(self.committed(v, "edges"))
 
     def resident(self, version: int | None = None) -> DataFrame:
         """The persisted frame of ``version`` (default: the latest). The
@@ -116,6 +132,7 @@ class EdgeStateStore(VersionLog):
         if self._resident is not None:
             self._resident[1].unpersist()
             self._resident = None
+        self._affected = None
 
     def close(self) -> None:
         """Release the resident version."""
@@ -180,7 +197,16 @@ class EdgeStateStore(VersionLog):
         p = self.committed(version, "affected")
         if not os.path.exists(p):
             return None
-        return self.spark.read.parquet(p)
+        read = self.spark.read
+        if self.affected_ids(version) is not None:
+            read = read.schema("id long")
+        return read.parquet(p)
+
+    def affected_ids(self, version: int) -> np.ndarray | None:
+        """The ids ``load_affected(version)`` reads, when ``version`` is
+        resident and the resident path wrote it; else None."""
+        a = self._affected
+        return a[1] if a is not None and a[0] == version else None
 
 
 def _held(df: DataFrame, held: list[DataFrame]) -> DataFrame:
@@ -298,9 +324,11 @@ def _apply_resident(store: EdgeStateStore, g: EdgeCSR, batch: DataFrame, batch_i
     np.cumsum(np.bincount(src, minlength=len(ids)), out=indptr[1:])
     new = EdgeCSR(ids, src, dst, w, indptr)
     # the tidy deletions are symmetric: their srcs are every endpoint
-    v = store._write_graph(new, np.union1d(ds, is_))
+    affected = np.union1d(ds, is_)
+    v = store._write_graph(new, affected)
     store._mark(v, batch_id, {"edges": len(src), "n_dels": len(ds)})
     serial.hold(store.resident(v), new)
+    store._affected = (v, affected)
     return v
 
 

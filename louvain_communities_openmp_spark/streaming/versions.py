@@ -17,6 +17,20 @@ plans/run.RunDir.
 of one result per edge-store version, refreshed by one loop; the three
 dynamic maintainers give only their warm-start rule and their operator
 call. Logs live on the driver's filesystem and are read with ``os``.
+
+Resident warm refresh. When a result frame carries its columns as
+driver arrays (operators/serial.py ``hold_columns``, e.g. a serial
+Louvain finish's membership), the maintainer writes them with pyarrow,
+no Spark job, and keeps them tagged with their version: the reference
+keeps its membership in memory from one batch to the next
+(louvain.hxx:305-389, DYNAMIC louvain.hxx:1009). The next refresh warm
+starts from them (``carried``) without collecting, and the edge store
+holds the resident version's affected ids the same way. A maintainer
+in a fresh process, or one warm-starting from a version it did not
+write, reads the committed parquet instead. The kept columns are the
+maintainer's own: a caller may unpersist the returned frame. Frames
+persisted to carry them are released when the solve returns or raises,
+and a plan a caller already holds is never persisted or released here.
 """
 
 from __future__ import annotations
@@ -26,6 +40,11 @@ import os
 import re
 import shutil
 import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from ..operators import serial
 
 _COMMIT = "_COMMIT.json"
 _VERSION = re.compile(r"v\d+")
@@ -94,12 +113,40 @@ class Maintainer(VersionLog):
         super().__init__(out_dir or os.path.join(store.dir, self.name))
         self.store = store
         self.spark = store.spark
+        # (version, schema, columns) of the latest result written from
+        # held columns (see the module docstring), or None
+        self._latest = None
+        # frames persisted by ``carried`` during the running solve
+        self._carried: list = []
 
     def load(self, version: int | None = None):
         """The result frame of ``version`` (default: the latest), or
         None when nothing is committed."""
         v = self.latest_version() if version is None else version
-        return None if v is None else self.spark.read.parquet(self.committed(v, self.frame))
+        if v is None:
+            return None
+        read = self.spark.read
+        if self.held(v) is not None:
+            # its schema is known: no inference job
+            read = read.schema(self._latest[1])
+        return read.parquet(self.committed(v, self.frame))
+
+    def held(self, version: int) -> dict | None:
+        """The columns of result ``version`` when this maintainer wrote
+        them from held columns, else None."""
+        h = self._latest
+        return h[2] if h is not None and h[0] == version else None
+
+    def carried(self, df, columns: dict | None):
+        """``df`` carrying ``columns`` as its rows (serial.hold_columns);
+        persisted for the running solve unless a frame with its plan
+        already is. ``df`` as it is when ``columns`` is None."""
+        if columns is not None:
+            if serial.cache_key(df) is None:
+                df = df.persist()
+                self._carried.append(df)
+            serial.hold_columns(df, columns)
+        return df
 
     def _solve(self, edges, v: int, last: int | None) -> tuple[tuple, dict]:
         """The result of store version ``v`` over its resident
@@ -117,8 +164,28 @@ class Maintainer(VersionLog):
         if v is None or (last is not None and last >= v):
             return None
         t0 = time.time()
-        out, record = self._solve(self.store.resident(v), v, last)
+        try:
+            out, record = self._solve(self.store.resident(v), v, last)
+        finally:
+            for df in self._carried:
+                df.unpersist()
+            self._carried = []
+        frame = getattr(out[0], self.frame)
+        cols = serial.held_columns(frame)
+        if cols is not None and not all(c in cols for c in frame.columns):
+            cols = None
+        self._latest = None
         self.begin(v)
-        getattr(out[0], self.frame).write.mode("overwrite").parquet(self.path(v, self.frame))
+        path = self.path(v, self.frame)
+        if cols is None:
+            frame.write.mode("overwrite").parquet(path)
+        else:
+            os.makedirs(path)
+            pq.write_table(
+                pa.Table.from_arrays([cols[c] for c in frame.columns], names=frame.columns),
+                os.path.join(path, "part-00000.parquet"),
+            )
         self.seal(v, {**record, "seconds": round(time.time() - t0, 3)})
+        if cols is not None:
+            self._latest = (v, frame.schema, cols)
         return (v, *out)

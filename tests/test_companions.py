@@ -305,8 +305,9 @@ def test_pagerank_operators_release_caches(spark):
     """The PageRank operators release every frame they cache, also on
     the empty-graph return and the empty-seed ValueError:
     DynamicPageRank calls pagerank once per graph version. HITS and
-    SALSA answer an empty graph with no rows, and katz_fixed rejects
-    an exact_int alpha before it caches anything."""
+    SALSA answer an empty graph with no rows and reject ``iters=0``,
+    and katz_fixed rejects an exact_int alpha, before they cache
+    anything."""
     from louvain_communities_openmp_spark.operators.centrality import katz_fixed
     from louvain_communities_openmp_spark.operators.hits import hits_fixed
     from louvain_communities_openmp_spark.operators.pagerank import (
@@ -331,6 +332,9 @@ def test_pagerank_operators_release_caches(spark):
     for op in (hits_fixed, salsa_fixed):
         out = op(empty)
         assert out.columns == ["id", "hub", "authority"] and out.collect() == []
+        with pytest.raises(ValueError):
+            op(e, iters=0)
+        assert _cached_rdds(spark) == cached
     with pytest.raises(ValueError):
         personalized_pagerank_fixed(e, no_seeds)
     assert _cached_rdds(spark) == cached

@@ -211,6 +211,32 @@ def test_entry_goes_with_the_last_reference(spark):
     assert serial._held is None
 
 
+def test_held_columns_keep_the_graph_and_go_with_the_cache_entry(spark, collects, monkeypatch):
+    """A serial Louvain finish's membership carries its (id, com)
+    arrays: ``modularity`` reads them beside the held graph, which
+    holding them does not evict. Once the membership is unpersisted
+    nothing is held for it and it is collected again."""
+    e = edges_from_list(spark, karate()).persist()
+    res = louvain(e, LouvainOptions(mode="auto"))
+    g = serial.held_graph(e)
+    held = serial.held_columns(res.membership)
+    assert g is not None and held is not None
+    assert _rows(res.membership, ["id", "com"]) == sorted(zip(held["id"].tolist(), held["com"].tolist()))
+    bounded = []
+    real = serial.collect_bounded
+    monkeypatch.setattr(
+        serial, "collect_bounded", lambda df, cols, bound: bounded.append(cols) or real(df, cols, bound))
+    assert modularity(e, res.membership) == pytest.approx(res.modularity, abs=1e-12)
+    assert not bounded and serial.held_graph(e) is g
+    # the held row count decides against the bound
+    assert serial.vertex_columns(res.membership, ["com"], 33) is None
+    res.membership.unpersist()
+    assert serial.held_columns(res.membership) is None
+    assert modularity(e, res.membership) == pytest.approx(res.modularity, abs=1e-12)
+    assert bounded == [["id", "com"]] and len(collects) == 1
+    e.unpersist()
+
+
 def _spark_q(monkeypatch, edges, membership, **kw):
     """``modularity`` by its Spark plan: nothing resident for this call."""
     with monkeypatch.context() as mp:

@@ -2,6 +2,7 @@
 
 import datetime
 import gc
+import itertools
 import json
 import os
 
@@ -238,6 +239,102 @@ def test_every_version_matches_the_spark_path(spark, tmp_path):
     assert mems[0] == mems[1]
     for st in stores:
         st.close()
+
+
+def _jobs(spark, fn):
+    """(``fn()``, the number of Spark jobs it ran), by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_GROUPS = itertools.count()
+
+
+def test_warm_refresh_over_a_held_store_runs_no_spark_job(spark, tmp_path):
+    """A warm refresh of a resident-path version starts from the
+    maintainer's membership arrays and the store's affected ids, and
+    writes its result with pyarrow; ``modularity`` of the result over
+    ``store.load(v)`` reads the held graph and the result's arrays.
+    Neither runs a Spark job, also after the caller unpersisted the
+    previous result, and the refresh leaves nothing persisted."""
+    from louvain_communities_openmp_spark.operators.properties import modularity
+    from louvain_communities_openmp_spark.oracle import ring_of_cliques
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+
+    store = EdgeStateStore(spark, str(tmp_path / "state"))
+    store.commit(edges_from_list(spark, ring_of_cliques(8, 6)), 0, {})
+    dyn = DynamicLouvain(store)
+    dyn.update_to_latest()[1].membership.unpersist()
+    for b, (u, v) in enumerate([(0, 24), (6, 30), (12, 40)], start=1):
+        deltas = spark.createDataFrame([("ins", u, v, 1.0), ("del", u, u + 1, 1.0)], DELTA_SCHEMA)
+        assert apply_delta_batch(store, deltas, b) == b
+        persisted = _persisted(spark)
+        (version, res), jobs = _jobs(spark, dyn.update_to_latest)
+        assert (version, jobs) == (b, 0)
+        assert dyn.commit_meta(b)["frontier_seeded"] is True
+        q, jobs = _jobs(spark, lambda: modularity(store.load(b), res.membership))
+        assert jobs == 0
+        assert q == pytest.approx(res.modularity, abs=1e-12)
+        res.membership.unpersist()
+        assert _persisted(spark) == persisted
+    store.close()
+
+
+def test_a_resumed_chain_matches_the_resident_chain(spark, tmp_path):
+    """New store and maintainer objects on the directories of a chain
+    continue it from disk (the written memberships and affected ids,
+    a collected graph) and give, at every version, the memberships and
+    the commit records (apart from times) of the resident chain and of
+    the Spark path."""
+    import numpy as np
+
+    from louvain_communities_openmp_spark.oracle import ring_of_cliques
+    from louvain_communities_openmp_spark.streaming.dynamic_louvain import DynamicLouvain
+
+    v0 = ring_of_cliques(8, 6)
+    rng = np.random.default_rng(11)
+    chains = {}
+    for name in ("resident", "spark", "resumed"):
+        store = EdgeStateStore(spark, str(tmp_path / name))
+        store.commit(edges_from_list(spark, v0), 0, {})
+        chains[name] = [store, DynamicLouvain(store)]
+    chains["spark"][0]._held_parent = lambda: None
+    pairs = sorted({(min(u, v), max(u, v)) for u, v, _ in v0})
+    for b in range(1, 5):
+        dels = [pairs[i] for i in rng.choice(len(pairs), 4, replace=False)]
+        ins = rng.integers(0, 52, size=(6, 2))
+        deltas = spark.createDataFrame(
+            [("del", int(u), int(v), 1.0) for u, v in dels]
+            + [("ins", int(u), int(v), float(w)) for (u, v), w in zip(ins, rng.integers(1, 4, 6))],
+            DELTA_SCHEMA,
+        )
+        for name, chain in chains.items():
+            if name == "resumed" and b == 3:
+                chain[0].close()
+                store = EdgeStateStore(spark, chain[0].dir)
+                chain[:] = [store, DynamicLouvain(store)]
+            store, dyn = chain
+            assert dyn.update_to_latest()[0] == b - 1
+            assert apply_delta_batch(store, deltas, b) == b
+        pairs = sorted({(min(u, v), max(u, v)) for u, v, _ in chains["resident"][0].load(b).collect()})
+    got = {}
+    for name, (store, dyn) in chains.items():
+        assert dyn.update_to_latest()[0] == 4
+        got[name] = [
+            (sorted(tuple(r) for r in dyn.load(v).collect()),
+             {k: x for k, x in dyn.commit_meta(v).items() if k != "seconds"},
+             {k: x for k, x in store.commit_meta(v).items() if k != "ts"})
+            for v in range(5)
+        ]
+        assert all(meta["frontier_seeded"] for _, meta, _ in got[name][1:])
+        store.close()
+    assert got["resumed"] == got["resident"] == got["spark"]
 
 
 def test_resident_version_is_released_at_the_next_version_and_at_close(spark, tmp_path):
