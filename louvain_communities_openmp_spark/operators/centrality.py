@@ -180,7 +180,7 @@ def katz_fixed(
             zero = F.lit(0).cast("long") if exact_int else F.lit(0.0)
             gain = F.coalesce("s", zero) if exact_int else F.lit(alpha) * F.coalesce("s", zero)
             scores = (
-                prop.verts.join(step(scores, "k"), "id", "left")
+                prop.verts.join(step(scores, F.sum(F.col("w") * F.col("k"))), "id", "left")
                 .select("id", (base + gain).alias("k"))
                 .localCheckpoint(eager=True)
             )
@@ -222,7 +222,7 @@ def absorb_fixed(
         f = tot.withColumnRenamed("tot", "f")
         for _ in range(iters):
             f = (
-                prop.verts.join(step(f, "f"), "id", "left")
+                prop.verts.join(step(f, F.sum(F.col("w") * F.col("f"))), "id", "left")
                 .select(
                     "id",
                     F.when(in_t, F.lit(0))
@@ -301,7 +301,7 @@ def eigenvector_fixed(edges: DataFrame, iters: int = 4) -> DataFrame:
         scores = prop.verts.select("id", F.lit(1).cast("long").alias("p"))
         for _ in range(iters):
             scores = (
-                prop.verts.join(step(scores, "p"), "id", "left")
+                prop.verts.join(step(scores, F.sum(F.col("w") * F.col("p"))), "id", "left")
                 .select("id", F.coalesce("s", F.lit(0).cast("long")).alias("p"))
                 .localCheckpoint(eager=True)
             )

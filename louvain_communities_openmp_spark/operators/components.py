@@ -5,9 +5,8 @@ oracle.simple.connected_components_seq. Each round does two label
 moves:
 
 1. hash-min over edges: comp(v) ← min(comp(v), min over frontier
-   in-neighbors u of comp(u)) — one edge⋈frontier join, edges
-   pre-partitioned on the join key so only the vertex-sized frontier
-   moves;
+   in-neighbors u of comp(u)) — the min step of operators/propagate.py,
+   whose docstring gives the edge table's layout in both regimes;
 2. pointer jump: comp(u) ← comp(comp(u)) — a vertex-sized self-join.
    Labels are vertex ids, so comp(comp(u)) is always defined and
    ≤ comp(u) (labels only decrease).
@@ -29,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import serial
+from .propagate import Propagation
 from .transforms import vertices
 
 
@@ -99,82 +99,64 @@ def connected_components(
         local = _components_local(edges, max_iter)
         if local is not None:
             return local
-    # Two regimes, same answer (see labelprop.py for the full rationale):
-    # - V small: e partitioned on the AGGREGATION key (dst), frontier
-    #   BROADCAST into the src join → the hash-min phase runs with zero
-    #   exchange over e;
-    # - V large (100 TB regime): e partitioned on the JOIN key (src) so
-    #   only the vertex-sized frontier and the map-side-combined min
-    #   aggregate move per round.
-    verts = vertices(edges)
-    use_bc = verts.count() <= serial.BROADCAST_VERTICES
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .repartition("dst" if use_bc else "src")
-        .persist()
-    )
-    # eager localCheckpoint per round: truncates lineage and avoids the
-    # unpersist-cascade recompute (see labelprop.py)
-    if initial_components is not None:
-        comp = (
-            verts.join(
-                initial_components.select("id", F.col("comp").alias("c0")),
-                "id",
-                "left",
+    # the distributed rounds: the hash-min phase is the min step of
+    # operators/propagate.py, which lays out and releases the edge table
+    with Propagation(vertices(edges)) as prop:
+        step = prop.step(edges, to="dst", loops=False)
+        # eager localCheckpoint per round: truncates lineage and avoids
+        # the unpersist-cascade recompute
+        if initial_components is not None:
+            comp = (
+                prop.verts.join(
+                    initial_components.select("id", F.col("comp").alias("c0")),
+                    "id",
+                    "left",
+                )
+                .select("id", F.coalesce("c0", F.col("id")).alias("comp"))
+                .localCheckpoint(eager=True)
             )
-            .select("id", F.coalesce("c0", F.col("id")).alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        comp = (
-            verts
-            .select("id", F.col("id").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-    # frontier: vertices whose label may still shrink (all, initially)
-    frontier = comp
-    it = 0
-    while it < max_iter:
-        # phase 1 — hash-min: candidate labels flowing over edges out
-        # of the frontier (vertex-sized exchange; edges stay put)
-        fr = frontier.withColumnRenamed("id", "src")
-        cand = (
-            e.join(F.broadcast(fr) if use_bc else fr, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("new_comp"))
-        )
-        # checkpointed so the phase-2 self-join below reads it once
-        # instead of recomputing the edge join on both sides
-        m1 = (
-            comp.join(cand, "id", "left")
-            .select(
-                "id",
-                F.col("comp").alias("old"),
-                F.least(
-                    F.col("comp"), F.coalesce("new_comp", F.col("comp"))
-                ).alias("c1"),
+        else:
+            comp = (
+                prop.verts
+                .select("id", F.col("id").alias("comp"))
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        # phase 2 — pointer jump: comp(u) ← comp(comp(u)). Labels are
-        # vertex ids, so the lookup always resolves; labels only ever
-        # decrease, so coalesce+direct assignment is the full least().
-        lut = m1.select(F.col("id").alias("c1"), F.col("c1").alias("_c2"))
-        merged = (
-            m1.join(lut, "c1", "left")
-            .select(
-                "id",
-                F.coalesce("_c2", "c1").alias("comp"),
-                (F.coalesce("_c2", "c1") < F.col("old")).alias("changed"),
+        # frontier: vertices whose label may still shrink (all, initially)
+        frontier = comp
+        it = 0
+        while it < max_iter:
+            # phase 1 — hash-min: candidate labels flowing over edges out
+            # of the frontier (vertex-sized exchange; edges stay put),
+            # checkpointed so the phase-2 self-join below reads it once
+            # instead of recomputing the edge join on both sides
+            m1 = (
+                comp.join(step(frontier, F.min("comp")), "id", "left")
+                .select(
+                    "id",
+                    F.col("comp").alias("old"),
+                    F.least(
+                        F.col("comp"), F.coalesce("s", F.col("comp"))
+                    ).alias("c1"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = merged.where("changed").count()
-        comp = merged.select("id", "comp")
-        frontier = merged.where("changed").select("id", "comp")
-        it += 1
-        if changed == 0:
-            break
-    e.unpersist()
+            # phase 2 — pointer jump: comp(u) ← comp(comp(u)). Labels are
+            # vertex ids, so the lookup always resolves; labels only ever
+            # decrease, so coalesce+direct assignment is the full least().
+            lut = m1.select(F.col("id").alias("c1"), F.col("c1").alias("_c2"))
+            merged = (
+                m1.join(lut, "c1", "left")
+                .select(
+                    "id",
+                    F.coalesce("_c2", "c1").alias("comp"),
+                    (F.coalesce("_c2", "c1") < F.col("old")).alias("changed"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = merged.where("changed").count()
+            comp = merged.select("id", "comp")
+            frontier = merged.where("changed").select("id", "comp")
+            it += 1
+            if changed == 0:
+                break
     return ComponentsResult(comp, it)

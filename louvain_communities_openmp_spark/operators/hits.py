@@ -44,7 +44,7 @@ def hubs_authorities(prop: Propagation, hub: Step, authority: Step, iters: int) 
     scores = {"authority": prop.verts.select("id", F.lit(1.0 / prop.n).alias("authority"))}
     for _ in range(iters):
         for name, step, x in (("hub", hub, "authority"), ("authority", authority, "hub")):
-            raw = step(scores[x], x)
+            raw = step(scores[x], F.sum(F.col("w") * F.col(x)))
             total = raw.agg(F.sum("s")).first()[0] or 1.0
             scores[name] = (
                 prop.verts.join(raw, "id", "left")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import serial
+from .propagate import Propagation, Step
 from .transforms import vertices
 
 
@@ -113,15 +114,14 @@ def _labelprop_rounds_numpy(sp, dp, w, lab, max_iter: int) -> int:
     return it
 
 
-def _round(e: DataFrame, labels: DataFrame, use_bc: bool) -> DataFrame:
+def _best_labels(step: Step, labels: DataFrame) -> DataFrame:
     """One synchronous round's new labels (id, new_label) for every
-    vertex with a non-loop out-edge in ``e``, the static edge table
-    ``label_propagation`` partitions and caches once."""
-    nbr = labels.select(
-        F.col("id").alias("dst"), F.col("label").alias("nl")
-    )
+    vertex with a non-loop out-edge in the table of ``step``, toward
+    src: the step's joined rows grouped by (src, neighbor label), then
+    by src. Both groupings include the step's aggregation key, so the
+    table's layout (operators/propagate.py) satisfies them."""
     scored = (
-        e.join(F.broadcast(nbr) if use_bc else nbr, "dst")
+        step.joined(labels.select("id", F.col("label").alias("nl")))
         .groupBy("src", "nl")
         .agg(F.sum("w").alias("wt"))
     )
@@ -133,66 +133,39 @@ def _round(e: DataFrame, labels: DataFrame, use_bc: bool) -> DataFrame:
     )
 
 
-def _static_edges(edges: DataFrame, use_bc: bool) -> DataFrame:
-    """The per-round edge table, self-loops dropped, partitioned for
-    the regime (see label_propagation) and persisted."""
-    return (
-        edges.select("src", "dst", "w")
-        .where(F.col("src") != F.col("dst"))
-        .repartition("src" if use_bc else "dst")
-        .persist()
-    )
-
-
 def label_propagation(edges: DataFrame, max_iter: int = 10) -> LabelPropResult:
-    # Two regimes, same answer (Louvain's gate, serial.BROADCAST_VERTICES):
-    #
-    # - V ≤ BROADCAST_VERTICES: partition the static edge table on the
-    #   AGGREGATION key (src) and BROADCAST the vertex-sized labels
-    #   frame into the dst join. The round is then exchange-FREE: the
-    #   broadcast join preserves e's src partitioning, which satisfies
-    #   both groupBy(src, nl) and groupBy(src) downstream — without the
-    #   broadcast, the post-join groupBy(src, nl) re-shuffles the
-    #   edge-sized scored table every round (map-side combine can't
-    #   collapse it while neighbor labels are still diverse). Pinned by
-    #   tests/test_companions.py over ``_round``.
-    # - V > BROADCAST_VERTICES (the 100 TB regime): labels can't ship
-    #   to every executor; partition e on the JOIN key (dst) so the
-    #   per-round exchange is the vertex-sized labels frame plus the
-    #   map-side-combined scored aggregate.
-    #
-    # Before either: the measured-optimal serial finish under the same
-    # edge bound as louvain.py (operators/serial.py).
+    # the measured-optimal serial finish under the same edge bound as
+    # louvain.py (operators/serial.py); above it, rounds over the step
+    # of operators/propagate.py, whose docstring gives the edge table's
+    # layout in both regimes (pinned by tests/test_companions.py)
     local = _labelprop_local(edges, max_iter)
     if local is not None:
         return local
-    verts = vertices(edges)
-    use_bc = verts.count() <= serial.BROADCAST_VERTICES
-    e = _static_edges(edges, use_bc)
-    # eager localCheckpoint per round: truncates lineage AND avoids the
-    # unpersist-cascade (unpersisting a parent invalidates caches built
-    # on it, which silently re-runs the whole chain on later rounds)
-    labels = (
-        verts
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    it = 0
-    while it < max_iter:
-        best = _round(e, labels, use_bc)
-        merged = (
-            labels.join(best, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-            )
+    with Propagation(vertices(edges)) as prop:
+        step = prop.step(edges, F.col("w"), to="src", loops=False)
+        # eager localCheckpoint per round: truncates lineage AND avoids
+        # the unpersist-cascade (unpersisting a parent invalidates caches
+        # built on it, which silently re-runs the whole chain on later
+        # rounds)
+        labels = (
+            prop.verts
+            .select("id", F.col("id").alias("label"))
             .localCheckpoint(eager=True)
         )
-        changed = merged.where("changed").count()
-        labels = merged.select("id", "label")
-        it += 1
-        if changed == 0:
-            break
-    e.unpersist()
+        it = 0
+        while it < max_iter:
+            merged = (
+                labels.join(_best_labels(step, labels), "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("new_label", "label").alias("label"),
+                    (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = merged.where("changed").count()
+            labels = merged.select("id", "label")
+            it += 1
+            if changed == 0:
+                break
     return LabelPropResult(labels, it)

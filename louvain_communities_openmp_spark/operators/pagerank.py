@@ -119,7 +119,8 @@ def _power(
                 if seeds is not None
                 else F.lit((1.0 - alpha) / n + alpha * mass / n)
             )
-            new = rows.join(step(ranks, "rank"), "id", "left").select(
+            s = step(ranks, F.sum(F.col("w") * F.col("rank")))
+            new = rows.join(s, "id", "left").select(
                 "id", (tele + F.lit(alpha) * F.coalesce("s", F.lit(0.0))).alias("rank")
             )
             if dangling:

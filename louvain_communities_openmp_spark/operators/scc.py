@@ -35,14 +35,13 @@ directed reachability without squaring the edge set); web graphs keep
 this small, and ``max_iter`` fails loudly rather than returning an
 unconverged labeling.
 
-Scale notes (the components.py two-regime pattern, applied twice per
-closure because forward and backward aggregate on opposite keys):
-- two static copies of the active edge set, persisted per outer round:
-  one partitioned on src (the forward aggregation key), one on dst
-  (the backward key). Each closure round is ONE join + ONE
-  map-side-combined min-aggregate over a table already partitioned on
-  its aggregation key; only the changed-label frontier (vertex-sized,
-  broadcast under the 5M gate) moves.
+Scale notes:
+- two min steps of operators/propagate.py per outer round, forward
+  (toward src) and backward (toward dst), each over a table of the
+  round's active edges laid out by that module's one rule and released
+  before the next round. Each closure round is ONE join + ONE
+  map-side-combined min-aggregate; only the changed-label frontier
+  (vertex-sized) moves.
 - the active graph SHRINKS monotonically: settled vertices and
   cross-class edges drop out each outer round, so later rounds touch
   the residual periphery only — on bow-tie graphs the giant SCC
@@ -64,7 +63,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import serial
+from .propagate import Propagation, Step
 from .transforms import vertices
 
 
@@ -76,17 +75,14 @@ class SCCResult:
 
 
 def _min_closure(
-    labels: DataFrame,
-    e: DataFrame,
-    use_bc: bool,
-    max_rounds: int,
+    labels: DataFrame, step: Step, max_rounds: int
 ) -> tuple[DataFrame, int]:
-    """Fixpoint of label(a) <- min(label(a), label(b)) over edges (a,b).
+    """Fixpoint of label(v) <- min(label(v), label(u)) over the edges
+    of ``step`` read toward v: the min step, frontier by frontier.
 
-    ``labels`` is (id, lab) with lab == id initially; ``e`` is (a, b)
-    pre-partitioned on ``a`` (the aggregation key) when ``use_bc``,
-    else on ``b`` (the join key). Returns the converged labels and the
-    round count; raises if ``max_rounds`` is hit while still changing.
+    ``labels`` is (id, lab) with lab == id initially. Returns the
+    converged labels and the round count; raises if ``max_rounds`` is
+    hit while still changing.
     """
     lab = labels.localCheckpoint(eager=True)
     frontier = lab
@@ -96,18 +92,12 @@ def _min_closure(
             raise RuntimeError(
                 f"scc min-closure did not converge in {max_rounds} rounds"
             )
-        fr = frontier.select(F.col("id").alias("b"), F.col("lab").alias("flab"))
-        cand = (
-            e.join(F.broadcast(fr) if use_bc else fr, "b")
-            .groupBy(F.col("a").alias("id"))
-            .agg(F.min("flab").alias("cand"))
-        )
         merged = (
-            lab.join(cand, "id", "left")
+            lab.join(step(frontier, F.min("lab")), "id", "left")
             .select(
                 "id",
-                F.least(F.col("lab"), F.coalesce("cand", "lab")).alias("lab"),
-                (F.coalesce("cand", F.col("lab")) < F.col("lab")).alias(
+                F.least(F.col("lab"), F.coalesce("s", "lab")).alias("lab"),
+                (F.coalesce("s", F.col("lab")) < F.col("lab")).alias(
                     "changed"
                 ),
             )
@@ -132,85 +122,74 @@ def strongly_connected_components(
     semantic here — do NOT symmetricize first (that would compute
     plain connected components).
     """
-    verts = vertices(edges)
-    use_bc = verts.count() <= serial.BROADCAST_VERTICES
-    active_v = verts.localCheckpoint(eager=True)
-    active_e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    settled = None
-    outer = 0
-    closure_rounds = 0
-    while active_v.limit(1).count() > 0:
-        if outer >= max_outer:
-            raise RuntimeError(
-                f"scc refinement did not settle in {max_outer} outer rounds"
-            )
-        # forward: label flows src <- dst (min id reachable from v);
-        # backward: label flows dst <- src (min id reaching v).
-        # Each copy partitioned for its closure's zero-exchange regime.
-        e_fwd = (
-            active_e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .repartition("a" if use_bc else "b")
-            .persist()
-        )
-        e_bwd = (
-            active_e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-            .repartition("a" if use_bc else "b")
-            .persist()
-        )
-        init = active_v.select("id", F.col("id").alias("lab"))
-        f, rf = _min_closure(init, e_fwd, use_bc, max_iter)
-        b, rb = _min_closure(init, e_bwd, use_bc, max_iter)
-        closure_rounds += rf + rb
-        sig = (
-            f.select("id", F.col("lab").alias("f"))
-            .join(b.select("id", F.col("lab").alias("b")), "id")
-            .localCheckpoint(eager=True)
-        )
-        done = sig.where(F.col("f") == F.col("b")).select(
-            "id", F.col("f").alias("scc")
-        )
-        settled = (
-            done if settled is None else settled.unionByName(done)
-        ).localCheckpoint(eager=True)
-        active_v = (
-            sig.where(F.col("f") != F.col("b"))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
-        # keep only same-signature edges between unsettled endpoints
-        s_src = sig.select(
-            F.col("id").alias("src"),
-            F.col("f").alias("fs"),
-            F.col("b").alias("bs"),
-        )
-        s_dst = sig.select(
-            F.col("id").alias("dst"),
-            F.col("f").alias("fd"),
-            F.col("b").alias("bd"),
-        )
+    with Propagation(vertices(edges)) as prop:
+        active_v = prop.verts.localCheckpoint(eager=True)
         active_e = (
-            active_e.join(
-                F.broadcast(s_src) if use_bc else s_src, "src"
-            )
-            .join(F.broadcast(s_dst) if use_bc else s_dst, "dst")
-            .where(
-                (F.col("fs") == F.col("fd"))
-                & (F.col("bs") == F.col("bd"))
-                & (F.col("fs") != F.col("bs"))
-            )
-            .select("src", "dst")
+            edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .distinct()
             .localCheckpoint(eager=True)
         )
-        e_fwd.unpersist()
-        e_bwd.unpersist()
-        outer += 1
-    if settled is None:  # edgeless input: no vertices at all
-        settled = verts.select("id", F.col("id").alias("scc")).where(F.lit(False))
+        settled = None
+        outer = 0
+        closure_rounds = 0
+        while active_v.limit(1).count() > 0:
+            if outer >= max_outer:
+                raise RuntimeError(
+                    f"scc refinement did not settle in {max_outer} outer rounds"
+                )
+            # forward: label flows src <- dst (min id reachable from v);
+            # backward: label flows dst <- src (min id reaching v). The
+            # two tables hold this round's active edges only, so they
+            # are released before the next round lays out its own.
+            fwd = prop.step(active_e, to="src")
+            bwd = prop.step(active_e, to="dst")
+            init = active_v.select("id", F.col("id").alias("lab"))
+            f, rf = _min_closure(init, fwd, max_iter)
+            b, rb = _min_closure(init, bwd, max_iter)
+            prop.release(fwd.table, bwd.table)
+            closure_rounds += rf + rb
+            sig = (
+                f.select("id", F.col("lab").alias("f"))
+                .join(b.select("id", F.col("lab").alias("b")), "id")
+                .localCheckpoint(eager=True)
+            )
+            done = sig.where(F.col("f") == F.col("b")).select(
+                "id", F.col("f").alias("scc")
+            )
+            settled = (
+                done if settled is None else settled.unionByName(done)
+            ).localCheckpoint(eager=True)
+            active_v = (
+                sig.where(F.col("f") != F.col("b"))
+                .select("id")
+                .localCheckpoint(eager=True)
+            )
+            # keep only same-signature edges between unsettled endpoints
+            s_src = sig.select(
+                F.col("id").alias("src"),
+                F.col("f").alias("fs"),
+                F.col("b").alias("bs"),
+            )
+            s_dst = sig.select(
+                F.col("id").alias("dst"),
+                F.col("f").alias("fd"),
+                F.col("b").alias("bd"),
+            )
+            active_e = (
+                active_e.join(prop.ship(s_src), "src")
+                .join(prop.ship(s_dst), "dst")
+                .where(
+                    (F.col("fs") == F.col("fd"))
+                    & (F.col("bs") == F.col("bd"))
+                    & (F.col("fs") != F.col("bs"))
+                )
+                .select("src", "dst")
+                .localCheckpoint(eager=True)
+            )
+            outer += 1
+        if settled is None:  # edgeless input: no vertices at all
+            settled = prop.verts.select("id", F.col("id").alias("scc")).where(F.lit(False))
     return SCCResult(settled, outer, closure_rounds)
 
 
@@ -240,14 +219,12 @@ def condensation(edges: DataFrame, components: DataFrame) -> DataFrame:
     )
 
 
-def _reachable_set(
-    seed: DataFrame, e: DataFrame, use_bc: bool, max_rounds: int = 200
-) -> DataFrame:
-    """Vertices with a path TO the seed set along edges (a, b) read as
-    "a steps to b" — frontier BFS with a visited set, the directed
-    sibling of operators/bfs.py. ``e`` is (a, b) pre-partitioned on
-    the join key; only the (shrinking) frontier moves per round.
-    Returns a one-column (id) frame including the seed itself."""
+def _reachable_set(seed: DataFrame, step: Step, max_rounds: int = 200) -> DataFrame:
+    """Vertices with a path to the seed set along the edges of ``step``
+    read toward its ``to`` endpoint — frontier BFS with a visited set,
+    the directed sibling of operators/bfs.py; only the (shrinking)
+    frontier moves per round. Returns a one-column (id) frame including
+    the seed itself."""
     visited = seed.select("id").distinct().localCheckpoint(eager=True)
     frontier = visited
     rounds = 0
@@ -256,11 +233,8 @@ def _reachable_set(
             raise RuntimeError(
                 f"reachability did not converge in {max_rounds} rounds"
             )
-        fr = frontier.select(F.col("id").alias("b"))
         new = (
-            e.join(F.broadcast(fr) if use_bc else fr, "b")
-            .select(F.col("a").alias("id"))
-            .distinct()
+            step(frontier)
             .join(visited, "id", "left_anti")
             .localCheckpoint(eager=True)
         )
@@ -296,47 +270,31 @@ def bowtie_classes(
     """
     if components is None:
         components = strongly_connected_components(edges).components
-    comp = components.localCheckpoint(eager=True)
-    use_bc = comp.count() <= serial.BROADCAST_VERTICES
-    core_lab = (
-        comp.groupBy("scc")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.col("n").desc(), F.col("scc").asc())
-        .limit(1)
-        .collect()[0]["scc"]
-    )
-    core = comp.where(F.col("scc") == F.lit(core_lab)).select("id")
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    # reaches-core: src learns from dst → (a=src, b=dst)
-    e_up = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .repartition("b")
-        .persist()
-    )
-    # reached-from-core: dst learns from src → (a=dst, b=src)
-    e_dn = (
-        e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-        .repartition("b")
-        .persist()
-    )
-    reaches = _reachable_set(core, e_up, use_bc).select(
-        "id", F.lit(1).alias("up")
-    )
-    reached = _reachable_set(core, e_dn, use_bc).select(
-        "id", F.lit(1).alias("dn")
-    )
-    out = (
-        comp.join(F.broadcast(reaches) if use_bc else reaches, "id", "left")
-        .join(F.broadcast(reached) if use_bc else reached, "id", "left")
-        .select(
-            "id",
-            F.when(F.col("scc") == F.lit(core_lab), F.lit("CORE"))
-            .when(F.col("up").isNotNull(), F.lit("IN"))
-            .when(F.col("dn").isNotNull(), F.lit("OUT"))
-            .otherwise(F.lit("OTHER"))
-            .alias("cls"),
+    with Propagation(components.localCheckpoint(eager=True)) as prop:
+        comp = prop.verts
+        core_lab = (
+            comp.groupBy("scc")
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.col("n").desc(), F.col("scc").asc())
+            .limit(1)
+            .collect()[0]["scc"]
         )
-    )
-    e_up.unpersist()
-    e_dn.unpersist()
-    return out
+        core = comp.where(F.col("scc") == F.lit(core_lab)).select("id")
+        # reaches-core: src learns from dst; reached-from-core: dst
+        # learns from src
+        up = prop.step(edges, to="src", loops=False)
+        dn = prop.step(edges, to="dst", loops=False)
+        reaches = _reachable_set(core, up).select("id", F.lit(1).alias("up"))
+        reached = _reachable_set(core, dn).select("id", F.lit(1).alias("dn"))
+        return (
+            comp.join(prop.ship(reaches), "id", "left")
+            .join(prop.ship(reached), "id", "left")
+            .select(
+                "id",
+                F.when(F.col("scc") == F.lit(core_lab), F.lit("CORE"))
+                .when(F.col("up").isNotNull(), F.lit("IN"))
+                .when(F.col("dn").isNotNull(), F.lit("OUT"))
+                .otherwise(F.lit("OTHER"))
+                .alias("cls"),
+            )
+        )

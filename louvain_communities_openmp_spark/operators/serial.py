@@ -70,8 +70,8 @@ SERIAL_EDGES = 4_000_000
 # the PageRank family, HITS, SALSA, Katz, absorb, eigenvector, MIS, SCC
 # and bow-tie) broadcast their vertex-sized state into the per-round
 # edge join (~20 B/row ⇒ ≲100 MB); above it they partition the edges on
-# the join key. Louvain's broadcast gate and warm-start collects read it
-# too.
+# the join key. They read it in one place, operators/propagate.py.
+# Louvain's broadcast gate and warm-start collects read it too.
 BROADCAST_VERTICES = 5_000_000
 
 

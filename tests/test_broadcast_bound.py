@@ -16,6 +16,7 @@ from louvain_communities_openmp_spark.operators.centrality import (
     eigenvector_fixed,
     katz_fixed,
 )
+from louvain_communities_openmp_spark.operators.components import connected_components
 from louvain_communities_openmp_spark.operators.hits import hits_fixed
 from louvain_communities_openmp_spark.operators.mis import mis_rounds
 from louvain_communities_openmp_spark.operators.pagerank import (
@@ -24,7 +25,10 @@ from louvain_communities_openmp_spark.operators.pagerank import (
     pagerank_fixed,
     personalized_pagerank_fixed,
 )
-from louvain_communities_openmp_spark.operators.scc import bowtie_classes
+from louvain_communities_openmp_spark.operators.scc import (
+    bowtie_classes,
+    strongly_connected_components,
+)
 from louvain_communities_openmp_spark.operators.webstructure import salsa_fixed
 from louvain_communities_openmp_spark.sources.edges import edges_from_list
 
@@ -35,6 +39,26 @@ _EDGES = [
     (4, 7, 2.0), (3, 64, 1.0), (5, 0, 1.0), (6, 5, 2.0), (8, 9, 1.0),
     (9, 8, 1.0), (4, 1, 1.0),
 ]
+
+
+def _warm_components(e):
+    """Warm-started components (they skip the serial finish), with the
+    iteration count as a column."""
+    seed = e.sparkSession.createDataFrame([(1, 0), (2, 0), (9, 8)], "id long, comp long")
+    res = connected_components(e, initial_components=seed)
+    return res.components.withColumn("iterations", F.lit(res.iterations))
+
+
+def _scc(e):
+    """SCC labels with both round counts as columns."""
+    res = strongly_connected_components(e)
+    return res.components.select(
+        "id",
+        "scc",
+        F.lit(res.outer_rounds).alias("outer"),
+        F.lit(res.closure_rounds).alias("closure"),
+    )
+
 
 OPS = {
     "pagerank": lambda e: pagerank(e, max_iter=2).ranks.select(
@@ -51,6 +75,8 @@ OPS = {
     "absorb_fixed": absorb_fixed,
     "eigenvector_fixed": eigenvector_fixed,
     "mis_rounds": mis_rounds,
+    "connected_components_warm": _warm_components,
+    "strongly_connected_components": _scc,
     # runs strongly_connected_components under the same bound first
     "bowtie_classes": bowtie_classes,
 }

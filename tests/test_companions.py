@@ -15,13 +15,26 @@ from louvain_communities_openmp_spark.oracle import (
     two_cliques,
 )
 from louvain_communities_openmp_spark.oracle.graphs import power_law
+from louvain_communities_openmp_spark.operators.centrality import (
+    absorb_fixed,
+    eigenvector_fixed,
+    katz_fixed,
+)
 from louvain_communities_openmp_spark.operators.components import connected_components
+from louvain_communities_openmp_spark.operators.hits import hits_fixed
 from louvain_communities_openmp_spark.operators.labelprop import label_propagation
-from louvain_communities_openmp_spark.operators.pagerank import pagerank
+from louvain_communities_openmp_spark.operators.mis import mis_rounds
+from louvain_communities_openmp_spark.operators.pagerank import (
+    pagerank,
+    pagerank_dangling_fixed,
+    pagerank_fixed,
+    personalized_pagerank_fixed,
+)
 from louvain_communities_openmp_spark.operators.triangles import (
     triangle_count,
     triangle_count_total,
 )
+from louvain_communities_openmp_spark.operators.webstructure import salsa_fixed
 from louvain_communities_openmp_spark.sources.edges import edges_from_list
 
 
@@ -293,12 +306,14 @@ def test_personalized_pagerank(spark):
     assert got[0] > got[5] and got[1] > got[4]
 
 
-def _cached_rdds(spark) -> int:
-    """Persisted RDDs that are not local checkpoints: the frames an
-    operator cached and did not release (the eager local checkpoints
-    hold its results and round states, so they are not counted)."""
+def _cached_rdds(spark) -> set[int]:
+    """Ids of the persisted RDDs that are not local checkpoints: the
+    frames an operator cached and did not release (the eager local
+    checkpoints hold its results and round states, so they are not
+    counted). A window compares the ids it adds, so an earlier test's
+    RDD that leaves the list inside it does not count."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
-    return sum(1 for r in rdds.values() if not r.rdd().isCheckpointed())
+    return {int(k) for k, r in rdds.items() if not r.rdd().isCheckpointed()}
 
 
 def test_pagerank_operators_release_caches(spark):
@@ -328,19 +343,110 @@ def test_pagerank_operators_release_caches(spark):
         lambda: salsa_fixed(empty),
     ):
         run()
-        assert _cached_rdds(spark) == cached
+        assert _cached_rdds(spark) - cached == set()
     for op in (hits_fixed, salsa_fixed):
         out = op(empty)
         assert out.columns == ["id", "hub", "authority"] and out.collect() == []
         with pytest.raises(ValueError):
             op(e, iters=0)
-        assert _cached_rdds(spark) == cached
+        assert _cached_rdds(spark) - cached == set()
     with pytest.raises(ValueError):
         personalized_pagerank_fixed(e, no_seeds)
-    assert _cached_rdds(spark) == cached
+    assert _cached_rdds(spark) - cached == set()
     with pytest.raises(ValueError):
         katz_fixed(e, alpha=0.3, exact_int=True)
-    assert _cached_rdds(spark) == cached
+    assert _cached_rdds(spark) - cached == set()
+
+
+_RAISE_OPS = {
+    "pagerank": lambda e: pagerank(e, max_iter=4),
+    "pagerank_fixed": pagerank_fixed,
+    "personalized_pagerank_fixed": lambda e: personalized_pagerank_fixed(
+        e, e.sparkSession.createDataFrame([(0,), (33,)], "id long")
+    ),
+    "pagerank_dangling_fixed": pagerank_dangling_fixed,
+    "hits_fixed": hits_fixed,
+    "salsa_fixed": salsa_fixed,
+    "katz_fixed": katz_fixed,
+    "absorb_fixed": absorb_fixed,
+    "eigenvector_fixed": eigenvector_fixed,
+    "connected_components": connected_components,
+    "label_propagation": lambda e: label_propagation(e, max_iter=4),
+    "mis_rounds": mis_rounds,
+}
+
+
+def _raise_on_join(monkeypatch, cls) -> dict:
+    """Count ``cls.join`` calls from now on in ``["calls"]``, raising
+    RuntimeError on call number ``["at"]`` (0: never)."""
+    join, state = cls.join, {"calls": 0, "at": 0}
+
+    def counted(self, *args, **kwargs):
+        state["calls"] += 1
+        if state["calls"] == state["at"]:
+            raise RuntimeError("injected mid-round failure")
+        return join(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "join", counted)
+    return state
+
+
+@pytest.mark.parametrize("regime", ["broadcast", "partitioned"])
+@pytest.mark.parametrize(
+    "name", [*_RAISE_OPS, "strongly_connected_components", "bowtie_classes"]
+)
+def test_a_raise_mid_round_keeps_the_callers_caches_and_leaks_none(
+    spark, monkeypatch, name, regime
+):
+    """Each of the 14 iterative operators, raising mid-round in either
+    regime (serial finishes off), leaves the caller's cache entries of
+    ``e``, ``vertices(e)`` and ``vertex_weights(e)`` in place (Spark
+    caches by plan, so an operator that unpersists its own equal frame
+    drops the caller's entry) and leaves no entry of its own. SCC and
+    bow-tie raise their non-convergence RuntimeError on a path; the
+    others raise at the middle DataFrame.join of a clean run."""
+    import functools
+
+    from louvain_communities_openmp_spark.operators import scc, serial
+    from louvain_communities_openmp_spark.operators.properties import vertex_weights
+    from louvain_communities_openmp_spark.operators.transforms import vertices
+
+    monkeypatch.setattr(serial, "SERIAL_EDGES", 0)
+    if regime == "partitioned":
+        monkeypatch.setattr(serial, "BROADCAST_VERTICES", 0)
+    path = [(i, i + 1, 1.0) for i in range(30)]
+    if name == "strongly_connected_components":
+        e = edges_from_list(spark, path)
+        run = lambda: scc.strongly_connected_components(e, max_iter=2)  # noqa: E731
+    elif name == "bowtie_classes":
+        e = edges_from_list(spark, path)
+        # every vertex of a path is its own SCC: the core is {0}, and
+        # reaching the 30 vertices after it takes 30 rounds
+        comps = spark.createDataFrame([(i, i) for i in range(31)], "id long, scc long")
+        monkeypatch.setattr(
+            scc, "_reachable_set", functools.partial(scc._reachable_set, max_rounds=2)
+        )
+        run = lambda: scc.bowtie_classes(e, comps)  # noqa: E731
+    else:
+        e = edges_from_list(spark, karate())
+        joins = _raise_on_join(monkeypatch, type(e))
+        _RAISE_OPS[name](e)
+        joins.update(at=joins["calls"] // 2 + 1, calls=0)
+        run = lambda: _RAISE_OPS[name](e)  # noqa: E731
+    mine = [e, vertices(e), vertex_weights(e)]
+    for df in mine:
+        df.persist()
+    try:
+        keys = [serial.cache_key(df) for df in mine]
+        assert None not in keys
+        cached = _cached_rdds(spark)
+        with pytest.raises(RuntimeError):
+            run()
+        assert [serial.cache_key(df) for df in mine] == keys
+        assert _cached_rdds(spark) - cached == set()
+    finally:
+        for df in mine:
+            df.unpersist()
 
 
 def test_degree_assortativity(spark):
@@ -465,10 +571,8 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
     re-introduces an edge-sized per-round shuffle and fails here."""
     from pyspark.sql import functions as F
 
-    from louvain_communities_openmp_spark.operators.labelprop import (
-        _round,
-        _static_edges,
-    )
+    from louvain_communities_openmp_spark.operators.labelprop import _best_labels
+    from louvain_communities_openmp_spark.operators.propagate import Propagation
     from louvain_communities_openmp_spark.operators.transforms import vertices
 
     und = [(i, (i * 3) % 40) for i in range(40)] + [(i, i + 1) for i in range(39)]
@@ -481,14 +585,14 @@ def test_labelprop_broadcast_round_is_exchange_free(spark):
         ],
         "src long, dst long, w double",
     )
-    static = _static_edges(e, use_bc=True)
-    labels = (
-        vertices(e).select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-    )
-    best = _round(static, labels, use_bc=True)
-    best.count()
-    lines = best._jdf.queryExecution().executedPlan().toString().splitlines()
-    static.unpersist()
+    with Propagation(vertices(e)) as prop:
+        step = prop.step(e, F.col("w"), to="src", loops=False)
+        labels = (
+            prop.verts.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
+        )
+        best = _best_labels(step, labels)
+        best.count()
+        lines = best._jdf.queryExecution().executedPlan().toString().splitlines()
     # the static table appears as a cached scan; everything above it
     # is this round's own dataflow
     cut = next(
@@ -519,10 +623,19 @@ def _ancestors(lines: list[str], i: int) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("regime", ["broadcast", "partitioned"])
-def test_propagation_step_never_shuffles_the_edge_table(spark, monkeypatch, regime):
+@pytest.mark.parametrize(
+    "regime, agg",
+    [
+        pytest.param("broadcast", "sum", id="broadcast"),
+        pytest.param("partitioned", "sum", id="partitioned"),
+        pytest.param("broadcast", "min", id="broadcast-min"),
+        pytest.param("partitioned", "min", id="partitioned-min"),
+    ],
+)
+def test_propagation_step_never_shuffles_the_edge_table(spark, monkeypatch, regime, agg):
     """The designed layout of the shared propagation step, pinned as a
-    plan assertion for both directions: no shuffle Exchange sits
+    plan assertion for both directions and for the Σ w·x and min
+    aggregates: no shuffle Exchange sits
     between the cached edge table and the step's join. Under the
     broadcast gate the table is partitioned on the aggregation key and
     the round has no shuffle at all; over it the table is partitioned
@@ -544,8 +657,9 @@ def test_propagation_step_never_shuffles_the_edge_table(spark, monkeypatch, regi
         e = edges_from_list(spark, karate())
         with Propagation(vertices(e)) as prop:
             x = prop.verts.select("id", F.lit(1.0).alias("x")).localCheckpoint(eager=True)
+            total = F.sum(F.col("w") * F.col("x")) if agg == "sum" else F.min("x")
             for to in ("dst", "src"):
-                s = prop.step(e, F.col("w"), to)(x, "x")
+                s = prop.step(e, F.col("w"), to)(x, total)
                 assert s.count() == 34
                 lines = s._jdf.queryExecution().executedPlan().toString().splitlines()
                 scan = next(

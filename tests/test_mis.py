@@ -4,7 +4,6 @@ from louvain_communities_openmp_spark.operators.mis import (
     EXCLUDED,
     IN_SET,
     UNDECIDED,
-    mis_converged,
     mis_rounds,
 )
 from louvain_communities_openmp_spark.oracle import karate, two_cliques
@@ -40,7 +39,7 @@ def test_mis_converged_karate(spark):
     el = karate()
     st = {
         r["id"]: r["status"]
-        for r in mis_converged(edges_from_list(spark, el)).collect()
+        for r in mis_rounds(edges_from_list(spark, el), rounds=64).collect()
     }
     _check_mis(el, st, require_maximal=True)
 
@@ -49,7 +48,7 @@ def test_mis_converged_power_law(spark):
     el = power_law(n=300)
     st = {
         r["id"]: r["status"]
-        for r in mis_converged(edges_from_list(spark, el)).collect()
+        for r in mis_rounds(edges_from_list(spark, el), rounds=64).collect()
     }
     _check_mis(el, st, require_maximal=True)
 
@@ -60,7 +59,7 @@ def test_mis_bounded_rounds_monotone(spark):
     el = two_cliques()
     e = edges_from_list(spark, el)
     one = {r["id"]: r["status"] for r in mis_rounds(e, rounds=1).collect()}
-    full = {r["id"]: r["status"] for r in mis_converged(e).collect()}
+    full = {r["id"]: r["status"] for r in mis_rounds(e, rounds=64).collect()}
     _check_mis(el, one, require_maximal=False)
     for v, s in one.items():
         if s != UNDECIDED:
